@@ -67,7 +67,9 @@ def bbox_intersects(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 # ---------------------------------------------------------------------------
 
 def _close_ring(xs: np.ndarray, ys: np.ndarray):
-    if xs[0] != xs[-1] or ys[0] != ys[-1]:
+    # an empty ring stays empty: it has no edges, so it contains no
+    # point (the packed-edge kernels' semantics)
+    if len(xs) and (xs[0] != xs[-1] or ys[0] != ys[-1]):
         xs = np.append(xs, xs[0])
         ys = np.append(ys, ys[0])
     return xs, ys

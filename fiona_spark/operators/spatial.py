@@ -4,26 +4,30 @@ The reference's spatial machinery is a per-feature envelope filter pushed
 into OGR (`fiona/ogrext.pyx:1818-1825`); its mask filter is documented as
 envelope-accurate only (`fiona/collection.py:416-417`).  These operators
 are the scale-out generalization required by BASELINE.json north_rule:
-the bbox test becomes a cell-id equi-join that Catalyst executes as a
-broadcast/shuffled hash join, and the exact point-in-polygon residual
-runs as a vectorized numpy pandas UDF over Arrow batches (zero per-row
-Python).
+the bbox test becomes a cell-id probe, and the exact point-in-polygon
+residual runs as a vectorized numpy kernel over Arrow batches (zero
+per-row Python).
 
 Scale design notes (10^12-row table, 1000 executors):
- * candidate generation is an equi-join on int64 ``cell`` — shuffle is
-   hash-partitioned on the cell id; the polygon side is broadcast when
-   small (the common case: zones << images).
- * skewed cells (dense polygon stacks / the fixture's hot cell) are
-   salted EXPLICITLY: replicate hot zone-cell rows S ways, give the
-   image side a deterministic salt — see :func:`salt_plan` /
-   :func:`pip_join` ``salt=``.  AQE skew-join stays on as backstop.
+ * each spatial join has exactly two lanes, chosen by one row guard
+   (``max_broadcast_zones``): at or under it the zone layer is collected
+   once and shipped by torrent broadcast, and one Arrow pass per point
+   probes and refines (the common case: zones << images); past it the
+   zone side stays distributed and candidates come from a shuffled
+   equi-join on the int64 ``cell``.
+ * skewed cells (dense polygon stacks / the fixture's hot cell) on the
+   shuffled lane are salted EXPLICITLY: replicate hot zone-cell rows S
+   ways, give the image side a deterministic salt — see
+   :func:`salt_sides` / :func:`pip_join` ``salt=``.  AQE skew-join
+   stays on as backstop.
  * dedup of multi-cell candidates uses the reference-point trick (the
    pair is kept only in the cell containing the intersection's
    lower-left corner) — no ``distinct`` shuffle.
- * kNN is two-phase: a disk join at a density-chosen resolution
-   answers ~all images in one shuffle; the provably-unfinished
-   remainder (cell-ring bound: kth-distance <= r * cell_height) falls
-   back to an exact join against the full zone set.
+ * kNN is a multi-resolution cell-disk cascade: a disk probe at a
+   density-chosen resolution answers ~all images; the provably
+   unfinished remainder (cell-ring bound: kth-distance <= r *
+   cell_height) retries coarser and finally falls back to an exact
+   scan of the full zone set.
 """
 
 from __future__ import annotations
@@ -53,70 +57,36 @@ def with_point_cell(df: DataFrame, res: int, lng: str = "lng", lat: str = "lat",
 
 
 def with_covering_cells(df: DataFrame, res: int, out: str = "cell",
-                        bbox_cols=("xmin", "ymin", "xmax", "ymax"),
-                        jvm: bool = True) -> DataFrame:
+                        bbox_cols=("xmin", "ymin", "xmax", "ymax")) -> DataFrame:
     """Explode each bbox row into its covering cells at ``res``.
 
-    r8 default (``jvm=True``): pure Catalyst — two nested
-    explode(sequence(...)) generators over the grid ranges, with the
-    antimeridian handled by an UNCLAMPED x range + pmod (the pmod of
-    the raw index range enumerates exactly the east+west split boxes
-    of the python path; a least() span clamp keeps full-circle boxes
-    distinct).  No Python worker, no Arrow transfer; codegen end to
-    end.  Differentially tested against the UDF path on boundary and
-    stradder boxes (test_spatial_ops).
-
-    ``jvm=False`` keeps the r1-r7 vectorized pandas-UDF enumeration
-    (one array column + one explode).
+    Pure Catalyst: two nested explode(sequence(...)) generators over the
+    grid ranges, with the antimeridian handled by an UNCLAMPED x range +
+    pmod (the pmod of the raw index range enumerates exactly the
+    east+west split boxes; a least() span clamp keeps full-circle boxes
+    distinct).  No Python worker, no Arrow transfer; codegen end to end.
+    Differentially tested against a plain-numpy enumeration on boundary,
+    stradder, polar and full-circle boxes (test_spatial_ops).
     """
     x0, y0, x1, y1 = bbox_cols
-    if jvm:
-        n = 1 << res
-        base = res * cells.RES_SHIFT
-        xi0u = f"CAST(floor(({x0} + 180.0D) / 360.0D * {n}) AS BIGINT)"
-        xi1u = f"CAST(floor(({x1} + 180.0D) / 360.0D * {n}) AS BIGINT)"
-        xi0 = (f"(CASE WHEN {x0} < -180.0D THEN {xi0u} "
-               f"ELSE least(greatest({xi0u}, 0L), {n - 1}L) END)")
-        xi1 = (f"(CASE WHEN {x1} > 180.0D THEN {xi1u} "
-               f"ELSE least(greatest({xi1u}, 0L), {n - 1}L) END)")
-        xhi = f"least({xi1}, {xi0} + {n - 1}L)"
-        yi0 = cells.grid_y_sql(y0, res)
-        yi1 = cells.grid_y_sql(y1, res)
-        return (df.withColumn("_cov_yi", F.explode(F.expr(
-                    f"sequence({yi0}, {yi1})")))
-                .withColumn("_cov_xi", F.explode(F.expr(
-                    f"sequence({xi0}, {xhi})")))
-                .withColumn(out, F.expr(
-                    f"{base}L + _cov_yi * {n}L + pmod(_cov_xi, {n}L)"))
-                .drop("_cov_yi", "_cov_xi"))
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def covering(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series, ymax: pd.Series) -> pd.Series:
-        xminv, yminv = xmin.to_numpy(np.float64), ymin.to_numpy(np.float64)
-        xmaxv, ymaxv = xmax.to_numpy(np.float64), ymax.to_numpy(np.float64)
-        wrap = (xmaxv > 180.0) | (xminv < -180.0)
-        result = np.empty(len(xminv), dtype=object)
-        if (~wrap).any():
-            idx = np.flatnonzero(~wrap)
-            parts = cells.cells_covering(xminv[idx], yminv[idx],
-                                         xmaxv[idx], ymaxv[idx], res)
-            for j, i in enumerate(idx):
-                result[i] = parts[j]
-        # antimeridian stradders (rare): per-row two-box union
-        for i in np.flatnonzero(wrap):
-            if xmaxv[i] > 180.0:
-                boxes = [(xminv[i], yminv[i], 180.0, ymaxv[i]),
-                         (-180.0, yminv[i], xmaxv[i] - 360.0, ymaxv[i])]
-            else:
-                boxes = [(xminv[i] + 360.0, yminv[i], 180.0, ymaxv[i]),
-                         (-180.0, yminv[i], xmaxv[i], ymaxv[i])]
-            parts = [cells.cells_covering(np.array([b[0]]), np.array([b[1]]),
-                                          np.array([b[2]]), np.array([b[3]]), res)[0]
-                     for b in boxes]
-            result[i] = np.unique(np.concatenate(parts))
-        return pd.Series(list(result))
-
-    return df.withColumn(out, F.explode(covering(x0, y0, x1, y1)))
+    n = 1 << res
+    base = res * cells.RES_SHIFT
+    xi0u = f"CAST(floor(({x0} + 180.0D) / 360.0D * {n}) AS BIGINT)"
+    xi1u = f"CAST(floor(({x1} + 180.0D) / 360.0D * {n}) AS BIGINT)"
+    xi0 = (f"(CASE WHEN {x0} < -180.0D THEN {xi0u} "
+           f"ELSE least(greatest({xi0u}, 0L), {n - 1}L) END)")
+    xi1 = (f"(CASE WHEN {x1} > 180.0D THEN {xi1u} "
+           f"ELSE least(greatest({xi1u}, 0L), {n - 1}L) END)")
+    xhi = f"least({xi1}, {xi0} + {n - 1}L)"
+    yi0 = cells.grid_y_sql(y0, res)
+    yi1 = cells.grid_y_sql(y1, res)
+    return (df.withColumn("_cov_yi", F.explode(F.expr(
+                f"sequence({yi0}, {yi1})")))
+            .withColumn("_cov_xi", F.explode(F.expr(
+                f"sequence({xi0}, {xhi})")))
+            .withColumn(out, F.expr(
+                f"{base}L + _cov_yi * {n}L + pmod(_cov_xi, {n}L)"))
+            .drop("_cov_yi", "_cov_xi"))
 
 
 # ---------------------------------------------------------------------------
@@ -158,44 +128,13 @@ def salt_sides(probe: DataFrame, build: DataFrame, hot: DataFrame,
 # PIP join (point-in-polygon)
 # ---------------------------------------------------------------------------
 
-def _pip_residual_packed_udf(poly_bc):
-    """Residual PIP against packed feature edges from a Spark broadcast.
-
-    Candidate rows carry only (_zidx int, lng, lat); each executor gets
-    every edge exactly once (flat arrays — pickles in one memcpy), and
-    the kernel is the fully-vectorized ragged pairwise even-odd
-    ray-cast (no per-polygon Python, immune to group-size collapse on
-    large zone layers; holes/MultiPolygon parts handled by parity).
-    Antimeridian-straddling features re-test their misses with
-    +/-360-shifted points.
-    """
-    @F.pandas_udf(T.BooleanType())
-    def pip(zidx: pd.Series, px: pd.Series, py: pd.Series) -> pd.Series:
-        edge_offs, ex0, ey0, ex1, ey1, wrap = poly_bc.value
-        zi = zidx.to_numpy(np.int64)
-        pxv = px.to_numpy(np.float64)
-        pyv = py.to_numpy(np.float64)
-        out = geom.points_in_edges_packed(pxv, pyv, zi, edge_offs,
-                                          ex0, ey0, ex1, ey1)
-        pend = np.flatnonzero(wrap[zi] & ~out)
-        for shift in (360.0, -360.0):
-            if not len(pend):
-                break
-            hit = geom.points_in_edges_packed(
-                pxv[pend] + shift, pyv[pend], zi[pend], edge_offs,
-                ex0, ey0, ex1, ey1)
-            out[pend] |= hit
-            pend = pend[~hit]
-        return pd.Series(out)
-    return pip
-
-
 def _pip_cogroup_fn(lng, lat, ring_cols, multi, out_cols):
     """Per-zone residual for the cogrouped shuffled lane: one vectorized
     (points x rings) even-odd ray-cast per cogroup (multi-ring: holes and
     MultiPolygon parts XOR per ring); antimeridian zones re-test misses
-    with +/-360-shifted points.  Never per-row Python — the whole
-    candidate block of a zone is one numpy call."""
+    with +/-360-shifted points; an empty ring contains no point, as on
+    the fused lane.  Never per-row Python — the whole candidate block
+    of a zone is one numpy call."""
     rx_col, ry_col = ring_cols
 
     def fn(cpdf: pd.DataFrame, zpdf: pd.DataFrame) -> pd.DataFrame:
@@ -210,9 +149,9 @@ def _pip_cogroup_fn(lng, lat, ring_cols, multi, out_cols):
         px = cpdf[lng].to_numpy(np.float64)
         py = cpdf[lat].to_numpy(np.float64)
         hit = geom.points_in_rings(px, py, rings_x, rings_y)
-        gmax = max(float(np.max(r)) for r in rings_x)
-        gmin = min(float(np.min(r)) for r in rings_x)
-        if gmax > 180.0 or gmin < -180.0:       # antimeridian stradder
+        allx = np.concatenate([np.empty(0), *rings_x])
+        if len(allx) and (allx.max() > 180.0
+                          or allx.min() < -180.0):  # antimeridian stradder
             for shift in (360.0, -360.0):
                 pend = np.flatnonzero(~hit)
                 if not len(pend):
@@ -260,27 +199,12 @@ def _res_from_stats(n: int, w: float, h: float,
     return best
 
 
-def _convex_pip_sql(lng: str, lat: str, shift: float) -> str:
-    """Point-in-CONVEX-polygon as a pure Spark SQL predicate over ring
-    arrays (xs, ys): inside iff no edge cross-product is negative
-    (CCW rings).  Runs entirely inside whole-stage codegen — no Python
-    worker, no Arrow transfer — which on the sf0.5 benchmark removed the
-    dominant cost of the join (~15s of Arrow for 10.7M candidates)."""
-    px = f"({lng} + {shift}D)"
-    i1 = "CAST(i AS INT) + 1"
-    i2 = "CAST((i + 1) % size(xs) AS INT) + 1"
-    cross = (f"(element_at(xs, {i2}) - element_at(xs, {i1})) * ({lat} - element_at(ys, {i1})) "
-             f"- ({px} - element_at(xs, {i1})) * (element_at(ys, {i2}) - element_at(ys, {i1}))")
-    return (f"size(filter(sequence(0, size(xs) - 1), "
-            f"i -> ({cross}) < 0D)) = 0")
-
-
 MAX_BROADCAST_ZONES = 2_000_000
 
 
 def _zone_prep(zones: DataFrame, zone_cols, res: int | None,
                row_guard: int | None = None):
-    """Driver-side zone preparation shared by the PIP plans: collect the
+    """Driver-side zone preparation for the fused PIP lane: collect the
     (small) zone layer once, enumerate covering cells (antimeridian wrap
     included), pack rings into flat edge arrays.
 
@@ -412,14 +336,14 @@ def _pip_fused_udf(bc, res: int):
     to the SQL form), searchsorted range probe for candidates, even-odd
     residual, per-row matched-zone arrays out.
 
-    Why fused: the staged plan's broadcast-exchange build is
-    single-threaded on the driver and re-runs per action — measured a
-    flat 4.3-6.7 s across local[2/8/32] at sf2 (33.5k zones -> ~4M
-    covering rows), capping spatial scaling efficiency at 0.59.  Fusing
-    moves the probe to executors (vectorized searchsorted), sends each
-    point through Arrow ONCE (the staged plan shipped every CANDIDATE),
-    and is skew-neutral: points stay in their natural partitions, so a
-    hot cell never concentrates a reducer.
+    Why fused: a JVM broadcast cell equi-join builds its broadcast
+    exchange single-threaded on the driver and re-runs it per action —
+    measured a flat 4.3-6.7 s across local[2/8/32] at sf2 (33.5k zones
+    -> ~4M covering rows), capping spatial scaling efficiency at 0.59.
+    Fusing moves the probe to executors (vectorized searchsorted), sends
+    each point through Arrow ONCE (a join-then-filter plan ships every
+    CANDIDATE), and is skew-neutral: points stay in their natural
+    partitions, so a hot cell never concentrates a reducer.
     """
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def matches(px: pd.Series, py: pd.Series) -> pd.Series:
@@ -470,126 +394,53 @@ def _pip_fused_udf(bc, res: int):
     return matches
 
 
-def pip_candidates(points: DataFrame, zones: DataFrame, res: int | None = None,
-                   lng: str = "lng", lat: str = "lat",
-                   point_cols=("image_id",), zone_cols=("zone_id",),
-                   salt: int | str = "auto", hot_threshold: int = 100_000):
-    """Broadcast-path PIP pipeline, split for stage-level observability.
-
-    Returns (candidates, residual_predicate, zone_map):
-      * ``candidates`` — the cell equi-join of probe points against the
-        broadcast zone-covering table, carrying (_zidx, lng, lat);
-      * ``residual_predicate`` — the packed-edge even-odd PIP Column;
-      * ``zone_map`` — (_zidx -> zone_cols) for the final projection.
-
-    ``pip_join`` composes these; benchmarks time candidates.count() vs
-    the full join to attribute wall time to candidate generation vs the
-    Arrow residual (the per-stage scaling decomposition the north_rule
-    evidence needs).
-
-    Small-zone regime (the north_star case: zones << images).  The zone
-    layer is collected ONCE; everything zone-side happens on the driver
-    in vectorized numpy:
-      * covering cells (incl. antimeridian wrap) -> a (cell, _zidx)
-        DataFrame broadcast into the probe join;
-      * edges packed into flat arrays -> one sc.broadcast (a
-        memcpy-pickle, not 10^5 object pickles);
-    and candidates cross the Arrow channel as (_zidx, lng, lat) only.
-    Compared to the distributed-zone variant this removes a repartition,
-    a Python UDF stage and a collect-for-broadcast.
-    """
-    spark = points.sparkSession
-    (zpdf, res, cov_ridx, cov_cell, edge_offs, ex0, ey0, ex1, ey1,
-     feat_wrap) = _zone_prep(zones, zone_cols, res)
-    p = with_point_cell(points.select(*point_cols, lng, lat), res, lng, lat)
-    zcov = spark.createDataFrame(
-        pd.DataFrame({"_zidx": cov_ridx, "cell": cov_cell}))
-    bc = spark.sparkContext.broadcast((edge_offs, ex0, ey0, ex1, ey1,
-                                       feat_wrap))
-    pip = _pip_residual_packed_udf(bc)
-
-    z = zcov
-    n_salt = 0 if salt == "auto" else int(salt)   # broadcast: no shuffle skew
-    if n_salt > 0:
-        hot = hot_cells(p, threshold=hot_threshold)
-        p, z = salt_sides(p, z, hot, n_salt, probe_key=point_cols[0])
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
-    cand = p.join(F.broadcast(z), join_keys, "inner")
-    zmap = spark.createDataFrame(
-        zpdf[list(zone_cols)].assign(
-            _zidx=np.arange(len(zpdf), dtype=np.int64)))
-    return cand, pip(F.col("_zidx"), F.col(lng), F.col(lat)), zmap
-
-
 def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
              lng: str = "lng", lat: str = "lat",
              point_cols=("image_id",), zone_cols=("zone_id",),
-             broadcast_zones: bool | None = None, convex: bool = False,
              salt: int | str = "auto", hot_threshold: int = 100_000,
-             max_broadcast_zones: int = MAX_BROADCAST_ZONES,
-             fused: bool = True) -> DataFrame:
+             max_broadcast_zones: int = MAX_BROADCAST_ZONES) -> DataFrame:
     """Exact point-in-polygon join (the exact form of Fiona's mask filter).
 
     points x zones -> rows of point_cols + zone_cols where the point is
-    strictly inside the zone polygon.  Plan: point-cell equi-join
-    against exploded zone coverings, then the vectorized PIP residual.
-    Each point has exactly ONE cell, so candidate pairs are already
-    unique — no dedup shuffle.
+    strictly inside the zone polygon.  Each point has exactly ONE cell,
+    so candidate pairs are already unique — no dedup shuffle.
 
     Geometry model: single-ring zones carry (xs, ys); multi-ring zones
     (holes, MultiPolygon — `fiona/model.py:18-115` geometry normalization)
     carry (rings_xs, rings_ys) as array<array<double>>; the even-odd
-    residual treats both identically.
+    residual treats both identically.  An empty ring contains no point.
 
-    ``broadcast_zones=None`` (default) auto-guards: the zone layer is
-    collected driver-side ONLY when its row count is <=
-    ``max_broadcast_zones``; bigger layers take the COGROUPED shuffled
-    plan: a light cell equi-join (keys + coords only) generates the
-    candidates, then candidates and zone rings cogroup on the zone key
-    so each zone's ring arrays cross the shuffle/Arrow boundary once
-    per zone, never per candidate row.  (A 10^8-row zone table must
-    never be toPandas'd — that was r1 "what's wrong" #4.)
+    Two lanes, chosen by one row guard on the zone layer:
+      * at most ``max_broadcast_zones`` rows: the FUSED lane.  The zone
+        layer is collected once (the guard rides that collect), its
+        covering table and packed edges ship by one torrent broadcast,
+        and one Arrow pass per point probes and refines.
+      * more rows: the COGROUPED shuffled lane.  A light cell equi-join
+        (keys + coords only) generates the candidates, then candidates
+        and zone rings cogroup on the zone key, so each zone's ring
+        arrays cross the shuffle/Arrow boundary once per zone, never per
+        candidate row.  (A 10^8-row zone table must never be
+        toPandas'd — that was r1 "what's wrong" #4.)
+    ``max_broadcast_zones=0`` forces the shuffled lane.
 
-    Skew: ``salt='auto'`` salts hot cells ONLY on the shuffled plan —
-    a broadcast join never moves probe rows, so a hot cell cannot
-    concentrate a reducer there and salting would only replicate build
-    rows for nothing.  On the shuffled plan one ``hot_cells``-style
-    map-side-combined count decides BOTH skew guards (hot candidate
-    cells -> cell salting on the equi-join; hot zones -> candidate
-    splitting + ring replication on the cogroup); no hot keys ->
-    unsalted.  Pass an int to force (0 disables).
-
-    ``fused=True`` (default) runs the broadcast plan as ONE Arrow pass
-    (covering probe + residual inside the UDF, zones via torrent
-    broadcast); ``fused=False`` keeps the staged JVM cell equi-join +
-    residual-filter plan (pip_candidates), used by the scaling bench to
-    attribute stage costs.
+    Skew: salting applies past the guard only — the fused lane never
+    moves probe rows, so a hot cell cannot concentrate a reducer there,
+    and it ignores ``salt``.  On the shuffled lane, ``salt='auto'`` runs
+    one map-side-combined count that decides BOTH skew guards (hot
+    candidate cells -> cell salting on the equi-join; hot zones ->
+    candidate splitting + ring replication on the cogroup); no hot keys
+    -> unsalted.  An int forces that many salts (0 disables both).
     """
     spark = points.sparkSession
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    multi = "rings_xs" in zones.columns
-    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
-
-    prep = None
-    if broadcast_zones is None and not convex and fused:
-        # merge the size guard into the collect: limit(max+1).toPandas()
-        # is ONE job; a count() would be a second full pass over zones
-        prep = _zone_prep(zones, zone_cols, res,
-                          row_guard=max_broadcast_zones)
-        broadcast_zones = prep is not None
-    elif broadcast_zones is None:
-        broadcast_zones = zones.count() <= max_broadcast_zones
-
-    if broadcast_zones and not convex and fused:
-        # FUSED plan (default): covering probe + residual in one Arrow
-        # pass, zone structures via one torrent broadcast — no JVM
+    # the size guard rides the collect: limit(max+1) is ONE job; a
+    # count() would be a second full pass over zones
+    prep = _zone_prep(zones, zone_cols, res, row_guard=max_broadcast_zones)
+    if prep is not None:
+        # FUSED lane: covering probe + residual in one Arrow pass, zone
+        # structures via one torrent broadcast — no JVM
         # broadcast-exchange build (a measured flat ~4-6 s single-thread
         # driver cost per action at 33.5k zones that capped N->4N
         # scaling efficiency).  Skew-neutral: no join shuffle at all.
-        if prep is None:
-            prep = _zone_prep(zones, zone_cols, res)
         (zpdf, res, cov_ridx, cov_cell, edge_offs, ex0, ey0, ex1, ey1,
          feat_wrap) = prep
         order = np.argsort(cov_cell, kind="stable")
@@ -622,50 +473,15 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
         return (hits.join(F.broadcast(zmap), "_zidx")
                 .select(*point_cols, *zone_cols))
 
-    if broadcast_zones and not convex:
-        cand, pip_col, zmap = pip_candidates(
-            points, zones, res=res, lng=lng, lat=lat,
-            point_cols=point_cols, zone_cols=zone_cols,
-            salt=salt, hot_threshold=hot_threshold)
-        hits = cand.filter(pip_col)
-        return (hits.join(F.broadcast(zmap), "_zidx")
-                .select(*point_cols, *zone_cols))
-
     if res is None:
         res = pip_res_for(zones)
     p = with_point_cell(points.select(*point_cols, lng, lat), res, lng, lat)
-    # zone layers usually arrive in 1-2 files; spread the covering UDF
-    # across the cluster before the cell equi-join
+    # zone layers usually arrive in 1-2 files; spread the covering
+    # explode across the cluster before the cell equi-join
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     zones = zones.repartition(n_shuffle)
-
-    if convex:
-        # CCW-convex zones: the exact residual is plain SQL over the
-        # ring arrays riding the broadcast join — zero Python.  The
-        # three OR'd longitude shifts handle antimeridian stradders
-        # (zones whose coords run past +/-180).
-        z = with_covering_cells(
-            zones.select(*zone_cols, "xs", "ys",
-                         "xmin", "ymin", "xmax", "ymax"), res
-        ).select(*zone_cols, "xs", "ys", "cell")
-        pred = " OR ".join(f"({_convex_pip_sql(lng, lat, s)})"
-                           for s in (0.0, 360.0, -360.0))
-        if salt == "auto":
-            # shuffled join: a hot cell = one overloaded reducer.  One
-            # map-side-combined count decides; the hot set is tiny.
-            hot = hot_cells(p, threshold=hot_threshold)
-            n_salt = 8 if (not broadcast_zones
-                           and hot.limit(1).count() > 0) else 0
-        else:
-            n_salt = int(salt)
-            hot = hot_cells(p, threshold=hot_threshold) if n_salt > 0 else None
-        if n_salt > 0:
-            p, z = salt_sides(p, z, hot, n_salt, probe_key=point_cols[0])
-            join_keys = ["cell", "_salt"]
-        else:
-            join_keys = ["cell"]
-        zj = F.broadcast(z) if broadcast_zones else z
-        cand = p.join(zj, join_keys, "inner")
-        return cand.filter(F.expr(pred)).select(*point_cols, *zone_cols)
+    multi = "rings_xs" in zones.columns
+    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
 
     # Shuffled regime v2 (zone side too large to broadcast), cogrouped:
     # rings NEVER ride candidate rows.  Phase 1 is a LIGHT cell
@@ -1026,56 +842,49 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
              lng: str = "lng", lat: str = "lat",
              point_key: str = "image_id", zone_key: str = "zone_id",
              zone_lng: str = "clng", zone_lat: str = "clat",
-             eager_cleanup: bool = True, fused: bool = True,
+             eager_cleanup: bool = True,
              max_broadcast_zones: int | None = MAX_BROADCAST_ZONES) -> DataFrame:
     """Exact k nearest zones (by centroid euclidean degrees) per point.
 
-    Plan (scale-first), a multi-resolution cascade:
-      * per level, the SMALL side (zones) is replicated into the 9 cells
-        of its disk(1) neighborhood — JVM-side array arithmetic — and
-        broadcast; the probe side keeps one row per point with a
-        codegen'd cell id: no probe-side explode, no Python, no shuffle
-        before the ranking window.
-      * candidates farther than cell_height are dropped BEFORE the
-        window: a point is provably finished iff it has >= k candidates
-        with dist < cell_height (every zone that close is inside
-        disk(1), so the filtered set still contains its true top-k);
-        strict < because a zone outside disk(1) can sit at exactly
-        cell_height and win the (dist, zone_key) tiebreak.
-      * unfinished points (sparse regions — e.g. beyond the data's
-        latitude band) retry at a 4x coarser level against the SAME
-        broadcast zone table; each level's remainder shrinks by the
-        density argument in :func:`knn_res_for`.  Without the cascade
-        the sparse tail cross-joined the full zone set — 857M pairs at
-        sf0.5 — which was the dominant cost of the whole benchmark.
-      * whatever survives all levels (~0 rows) cross-joins the zones,
-        repartitioned first so AQE's coalesced tail doesn't serialize
-        the fan-out.
     Output: (point_key, zone_key, knn_rank), rank 1..k by
-    (distance, zone_key) for determinism.
+    (distance, zone_key) for determinism.  Both lanes run the same
+    multi-resolution cascade:
+      * per level, every zone is replicated into the 9 cells of its
+        disk(1) neighborhood; each point probes its own cell.
+      * candidates farther than cell_height are dropped before ranking:
+        a point is provably finished iff it has >= k candidates with
+        dist < cell_height (every zone that close is inside disk(1), so
+        the filtered set still contains its true top-k); strict <
+        because a zone outside disk(1) can sit at exactly cell_height
+        and win the (dist, zone_key) tiebreak.
+      * unfinished points (sparse regions — e.g. beyond the data's
+        latitude band) retry at a 4x coarser level; each level's
+        remainder shrinks by the density argument in
+        :func:`knn_res_for`.  Without the cascade the sparse tail
+        cross-joined the full zone set — 857M pairs at sf0.5 — which
+        was the dominant cost of the whole benchmark.
+      * whatever survives all levels (~0 rows) is ranked exactly
+        against all zones.
 
-    ``max_broadcast_zones`` bounds every driver-side/broadcast use of
-    the zone layer: the fused plan collects at most that many rows (one
-    guarded job); past the guard the staged cascade runs with a SHUFFLED
-    zone side (plain cell equi-join, no broadcast, no driver collect),
-    trading the skew-neutral fused plan for bounded memory.
+    ``max_broadcast_zones`` is the one guard between the lanes:
+      * at most that many zone rows: the FUSED lane (see
+        :func:`_knn_join_fused`) collects the zones in one guarded job
+        and runs the whole cascade inside one Arrow pass per point.
+      * more rows: the STAGED lane with a SHUFFLED zone side — per level
+        a plain cell equi-join (disk explode is SQL arithmetic) and a
+        (dist, zone_key) ranking window, no broadcast and no driver
+        collect, trading the skew-neutral fused plan for bounded
+        memory.  ``eager_cleanup`` applies to this lane only.
     """
-    broadcast_zones = True
-    if fused:
-        out = _knn_join_fused(points, zones, k, res, levels, lng, lat,
-                              point_key, zone_key, zone_lng, zone_lat,
-                              row_guard=max_broadcast_zones)
-        if out is not None:
-            return out
-        broadcast_zones = False   # zone layer exceeded the guard
+    out = _knn_join_fused(points, zones, k, res, levels, lng, lat,
+                          point_key, zone_key, zone_lng, zone_lat,
+                          row_guard=max_broadcast_zones)
+    if out is not None:
+        return out
 
-    if res is None or broadcast_zones:
-        nz = zones.count()
-        if res is None:
-            res = knn_res_for(nz, k)
-        if max_broadcast_zones is not None and nz > max_broadcast_zones:
-            broadcast_zones = False
-
+    # past the guard: the staged cascade over a distributed zone side
+    if res is None:
+        res = knn_res_for(zones.count(), k)
     zc = zones.select(zone_key, F.col(zone_lng).alias("_zlng"),
                       F.col(zone_lat).alias("_zlat"))
     p0 = points.select(point_key, lng, lat)
@@ -1099,8 +908,7 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
               .withColumn("cell", F.explode(_disk_cells_sql("_zc", r)))
               .drop("_zc"))
         p = with_point_cell(remaining, r, lng, lat)
-        zx_side = F.broadcast(zx) if broadcast_zones else zx
-        cand = (p.join(zx_side, "cell")
+        cand = (p.join(zx, "cell")
                 .withColumn("dist", dist)
                 .filter(F.col("dist") < cell_h))
         ranked = (cand
@@ -1121,7 +929,7 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
     # final stragglers: exact join against all zones
     n_shuffle = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cand2 = (remaining.repartition(n_shuffle)
-             .crossJoin(F.broadcast(zc) if broadcast_zones else zc)
+             .crossJoin(zc)
              .withColumn("dist", dist)
              .withColumn("knn_rank", F.row_number().over(w))
              .filter(F.col("knn_rank") <= k))

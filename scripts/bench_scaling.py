@@ -16,13 +16,12 @@ Two N-vs-4N pairs are reported:
   * ``local[8] -> local[32]`` — the SATURATED pair: 32 threads share one
     DRAM controller and one JVM heap; bandwidth-bound stages flatten
     here in a way they would not across separate machines.  Reported
-    transparently with the per-stage decomposition that shows WHICH
-    stage saturates.
+    transparently with the per-job table that shows WHICH job
+    saturates.
 
-Stage decomposition (spatial job): ``cells`` = codegen'd cell-id
-assignment + covering explode (pure JVM CPU); ``cand`` = broadcast cell
-equi-join candidate generation (JVM join, no Python); ``residual`` =
-full PIP minus cand (the Arrow + numpy even-odd kernel).
+Spatial jobs: ``cells`` = codegen'd cell-id assignment + covering
+explode (pure JVM CPU); ``spatial`` = the fused PIP lane (the pip_join
+default); ``spatial_shuffled`` = the past-guard cogrouped PIP lane.
 
 Writes BENCH/BASELINE.md and prints one JSON line.
 """
@@ -172,25 +171,11 @@ n_zones = zones.count()
 # independent of data scale); compute once so the timed section holds
 # only the scale-dependent work
 PIP_RES = spatial.pip_res_for(zones)
-# candidate/residual split: build the staged pipeline ONCE (driver-side
-# zone prep — covering enumeration + edge packing — is untimed constant
-# work, ~1-3 s at 33.5k zones, identical at every level)
-CAND, PIP_COL, _ZMAP = spatial.pip_candidates(pts, zones, res=PIP_RES)
 
 def cells_job():
     """codegen cell assign + covering explode (pure JVM, no joins)."""
     return spatial.with_covering_cells(
         pts.select("image_id", "xmin", "ymin", "xmax", "ymax"), 9).count()
-
-def cand_job():
-    """staged plan's candidate generation (JVM broadcast cell equi-join;
-    its driver-built broadcast exchange is the measured serial cost the
-    fused plan removes)."""
-    return CAND.count()
-
-def staged_job():
-    """staged PIP plan (cand + residual filter) — attribution only."""
-    return CAND.filter(PIP_COL).count()
 
 def spatial_job():
     """north-star metric: exact PIP join, FUSED single-Arrow-pass plan
@@ -204,7 +189,7 @@ def spatial_shuffled_job():
     once per zone, never per candidate row), skew guards engaged
     (r4 verdict ask #7: this regime had no wall-time evidence)."""
     return spatial.pip_join(pts, zones, res=PIP_RES,
-                            broadcast_zones=False).count()
+                            max_broadcast_zones=0).count()
 
 def knn_job():
     return spatial.knn_join(pts, zones, k=3,
@@ -220,8 +205,6 @@ def decode_job():
     return spatial.block_tiles(images, res=12, block=8).count()
 
 JOBS = [("cells", cells_job, None),
-        ("cand", cand_job, None),
-        ("spatial_staged", staged_job, None),
         ("spatial", spatial_job, None),
         ("spatial_shuffled", spatial_shuffled_job, None),
         ("knn", knn_job, knn_reset),
@@ -321,8 +304,7 @@ def run_level(cores: int, worker: str, argv: list, timeout_s: int = 5400) -> dic
     raise RuntimeError(f"no RESULT from local[{cores}]: {stderr[-2000:]}")
 
 
-JOB_ORDER = ["cells", "cand", "residual", "spatial_staged", "spatial",
-             "spatial_shuffled", "knn", "decode"]
+JOB_ORDER = ["cells", "spatial", "spatial_shuffled", "knn", "decode"]
 
 
 def main() -> None:
@@ -347,8 +329,6 @@ def main() -> None:
     t = {}
     for c in levels:
         t[c] = run_level(c, WORKER, [sf, zsf, reps])
-        # derive the residual stage: full PIP minus candidate generation
-        t[c]["residual"] = max(t[c]["spatial_staged"] - t[c]["cand"], 1e-9)
 
     pairs = [(levels[i], levels[i + 1]) for i in range(len(levels) - 1)
              if levels[i + 1] == 4 * levels[i]]
@@ -431,25 +411,16 @@ def main() -> None:
         f"## Gate summary (north_rule >= 0.8, local[{lo}] -> local[{hi}])",
         "",
         f"At gate: {', '.join(passing) or 'none'}.  Below: "
-        f"{', '.join(below) or 'none'}."
-        "  `cand` is the staged plan's driver-built broadcast exchange — "
-        "the serial stage the DEFAULT fused plan exists to bypass (its "
-        "`spatial` row is the shipping path); `spatial_staged` inherits "
-        "cand's serial floor and is kept only for stage attribution.",
+        f"{', '.join(below) or 'none'}.",
         "",
-        "## Stage decomposition (spatial job)",
+        "## Spatial lanes",
         "",
         "`cells` = codegen'd cell-id + covering explode (pure JVM CPU); "
-        "`cand` = the STAGED plan's broadcast cell equi-join candidate "
-        "generation (JVM hash join; its driver-built broadcast exchange "
-        "is a serial per-action cost — visibly FLAT across levels); "
-        "`residual` = staged PIP minus cand (Arrow transfer + numpy "
-        "even-odd ray-cast); `spatial_staged` = cand + residual; "
         "`spatial` = the FUSED single-Arrow-pass plan (pip_join default: "
         "covering probe via torrent-broadcast searchsorted inside the "
         "residual UDF — no JVM broadcast-exchange build), the headline "
         "operator; `spatial_shuffled` = the PAST-GUARD lane "
-        "(broadcast_zones=False, the plan pip_join takes when zones "
+        "(max_broadcast_zones=0, the plan pip_join takes when zones "
         "exceed max_broadcast_zones; r5 COGROUPED design: a light cell "
         "equi-join generates candidates, then candidates cogroup with "
         "the zone rings on the zone key so rings cross the shuffle and "
@@ -457,13 +428,13 @@ def main() -> None:
         "v1 rings-on-candidates plan measured 15x the fused lane here; "
         "hot cells salt the equi-join, hot zones split the cogroup — "
         "r4 verdict ask #7's wall-time evidence).  "
-        "A stage whose unsaturated-pair efficiency is high but "
+        "A job whose unsaturated-pair efficiency is high but "
         "saturated-pair efficiency collapses is bandwidth-bound on this "
-        "box, not algorithmically serial — the per-stage table makes that "
+        "box, not algorithmically serial — the per-job table makes that "
         "attribution explicit instead of asserting it.",
         "",
         "Jobs: `spatial` = exact PIP join; `knn` = k=3 nearest zones per "
-        "image (multi-res cascade + rank window); `decode` = raster->vector "
+        "image (fused multi-res cascade, one Arrow pass); `decode` = raster->vector "
         "block tiling with full payload decode (Arrow-transfer-bound; "
         "~50 MB/s per Python worker floor, measured r1).",
         "",

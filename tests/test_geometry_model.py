@@ -59,22 +59,17 @@ def test_pip_join_multi_broadcast_matches_bruteforce(spark, pts, pts_pdf,
     assert len(keys) > 10   # fixture actually exercises the join
 
 
-def test_pip_join_multi_shuffled_matches_broadcast(spark, pts, pts_pdf,
-                                                   zones_multi):
-    got = spatial.pip_join(pts, zones_multi, res=6,
-                           broadcast_zones=False).toPandas()
-    keys = set(map(tuple, got[["image_id", "zone_id"]].itertuples(index=False)))
-    assert keys == _brute_pairs(pts_pdf)
-
-
 def test_pip_join_broadcast_autoguard_flips_to_shuffled(spark, pts, pts_pdf,
                                                         zones_multi):
-    """max_broadcast_zones below the layer size must take the shuffled
-    plan (no driver collect) and return identical rows."""
-    got = spatial.pip_join(pts, zones_multi, res=6,
-                           max_broadcast_zones=N_ZONES - 1).toPandas()
-    keys = set(map(tuple, got[["image_id", "zone_id"]].itertuples(index=False)))
-    assert keys == _brute_pairs(pts_pdf)
+    """max_broadcast_zones below the layer size (one row under it, and
+    0) must take the shuffled plan (no driver collect) and return the
+    same rows as the brute force."""
+    for guard in (N_ZONES - 1, 0):
+        got = spatial.pip_join(pts, zones_multi, res=6,
+                               max_broadcast_zones=guard).toPandas()
+        keys = set(map(tuple, got[["image_id", "zone_id"]]
+                       .itertuples(index=False)))
+        assert keys == _brute_pairs(pts_pdf)
 
 
 def test_hole_points_excluded_island_included(spark, zones_multi):

@@ -43,14 +43,14 @@ def test_bbox_filter_pushdown_and_pruning(spark, images_path):
 def test_pip_join_plan_shape(spark, images_path, zones):
     img = spark.read.parquet(images_path)
     q = spatial.pip_join(img, zones, res=6)
-    # zones side broadcast; the only exchange is the zone-side
-    # repartition (spreading the covering UDF), never the probe side
+    # fused lane: the zone map rides a broadcast join and no exchange
+    # moves the probe side
     assert quality.broadcast_join_count(q) >= 1
-    assert quality.shuffle_count(q) <= 1
+    assert quality.shuffle_count(q) == 0
     read = set(quality.read_schema_columns(q))
     assert "bytes" not in read
-    # exactly the covering UDF + the residual predicate touch Python
-    assert quality.python_eval_count(q) <= 2
+    # one Arrow UDF does the covering probe and the residual together
+    assert quality.python_eval_count(q) == 1
 
 
 def test_point_cell_is_jvm_only(spark, images_path):
@@ -63,11 +63,10 @@ def test_point_cell_is_jvm_only(spark, images_path):
 def test_knn_staged_plan_has_no_python(spark, images_path, zones):
     img = spark.read.parquet(images_path)
     q = spatial.knn_join(img, zones, k=3, res=4, eager_cleanup=False,
-                         fused=False)
-    # staged kNN plan is pure JVM: disk explode is SQL arithmetic,
-    # ranking is a window — no pandas UDF anywhere
+                         max_broadcast_zones=5)
+    # past the guard the staged kNN plan is pure JVM: disk explode is
+    # SQL arithmetic, ranking is a window — no pandas UDF anywhere
     assert quality.python_eval_count(q) == 0
-    assert quality.broadcast_join_count(q) >= 1
 
 
 def test_knn_fused_plan_is_one_arrow_pass(spark, images_path, zones):

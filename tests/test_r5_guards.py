@@ -336,7 +336,7 @@ def test_shuffled_pip_is_cogrouped_and_join_is_light(spark):
     img_path, zone_path = fixtures.ensure_canon()
     pts = spark.read.parquet(img_path).select("image_id", "lng", "lat")
     zones = spark.read.parquet(zone_path)
-    df = spatial.pip_join(pts, zones, res=6, broadcast_zones=False)
+    df = spatial.pip_join(pts, zones, res=6, max_broadcast_zones=0)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     join_lines = [ln for ln in plan.splitlines() if "Join" in ln]

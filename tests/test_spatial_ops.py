@@ -56,19 +56,46 @@ def test_pip_join_matches_oracle(spark, images, zones, images_pdf, zones_pdf):
     assert len(exp) > 20  # non-trivial overlap in the fixture
 
 
-def test_pip_join_convex_sql_same_result(spark, images, zones, images_pdf, zones_pdf):
-    """The zero-Python convex-SQL residual must agree with the ray-cast
-    kernel on the fixture (incl. the antimeridian stradder zones)."""
-    got = set(map(tuple, spatial.pip_join(images, zones, res=RES,
-                                          convex=True).collect()))
-    assert got == _pip_oracle(images_pdf, zones_pdf)
-
-
 def test_pip_join_salted_same_result(spark, images, zones, images_pdf, zones_pdf):
     got = set(map(tuple, spatial.pip_join(images, zones, res=RES,
-                                          broadcast_zones=False, salt=4,
+                                          max_broadcast_zones=0, salt=4,
                                           hot_threshold=5).collect()))
     assert got == _pip_oracle(images_pdf, zones_pdf)
+
+
+@pytest.mark.parametrize("multi", [False, True])
+def test_pip_join_empty_ring_lanes_agree(spark, multi):
+    """A zone whose ring is empty but whose bbox covers points contains
+    no point on either lane (the shuffled lane used to abort the job on
+    the empty ring)."""
+    ring_x = [0.0, 10.0, 10.0, 0.0]
+    ring_y = [0.0, 0.0, 10.0, 10.0]
+    bbox = (0.0, 0.0, 10.0, 10.0)
+    if multi:
+        zpdf = pd.DataFrame({
+            "zone_id": ["full", "empty", "no_rings"],
+            "rings_xs": [[ring_x], [[]], []],
+            "rings_ys": [[ring_y], [[]], []]})
+        ring_schema = "rings_xs array<array<double>>, rings_ys array<array<double>>"
+    else:
+        zpdf = pd.DataFrame({"zone_id": ["full", "empty"],
+                             "xs": [ring_x, []], "ys": [ring_y, []]})
+        ring_schema = "xs array<double>, ys array<double>"
+    for c, v in zip(("xmin", "ymin", "xmax", "ymax"), bbox):
+        zpdf[c] = v
+    zones = spark.createDataFrame(
+        zpdf, schema=f"zone_id string, {ring_schema}, xmin double, "
+                     "ymin double, xmax double, ymax double")
+    points = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["a", "b", "c"],
+                      "lng": [5.0, 2.5, 20.0], "lat": [5.0, 7.5, 5.0]}),
+        schema="image_id string, lng double, lat double")
+    fused = set(map(tuple, spatial.pip_join(points, zones, res=RES)
+                    .collect()))
+    shuffled = set(map(tuple, spatial.pip_join(points, zones, res=RES,
+                                               max_broadcast_zones=0)
+                       .collect()))
+    assert fused == shuffled == {("a", "full"), ("b", "full")}
 
 
 def test_semi_anti_partition(spark, images, zones):
@@ -167,10 +194,27 @@ def test_block_tiles(spark, images, images_pdf):
     assert (sub.mean_lum >= 0).all() and (sub.mean_lum <= 255).all()
 
 
-def test_covering_cells_jvm_matches_udf(spark):
+def _covering_reference(xmin, ymin, xmax, ymax, res):
+    """Plain-numpy covering of one bbox: the closed-form enumeration of
+    fiona_spark.cells, with antimeridian stradders split into their east
+    and west boxes and the union deduplicated."""
+    if xmax > 180.0:
+        boxes = [(xmin, ymin, 180.0, ymax), (-180.0, ymin, xmax - 360.0, ymax)]
+    elif xmin < -180.0:
+        boxes = [(xmin + 360.0, ymin, 180.0, ymax), (-180.0, ymin, xmax, ymax)]
+    else:
+        boxes = [(xmin, ymin, xmax, ymax)]
+    parts = [cells.cells_covering(np.array([b[0]]), np.array([b[1]]),
+                                  np.array([b[2]]), np.array([b[3]]), res)[0]
+             for b in boxes]
+    return np.unique(np.concatenate(parts))
+
+
+def test_covering_cells_matches_numpy_reference(spark):
     """r8 guard: the pure-Catalyst covering enumeration (sequence +
-    explode + pmod wrap) must match the vectorized pandas-UDF path on
-    boundary values, antimeridian stradders and full-circle boxes."""
+    explode + pmod wrap) must match the plain-numpy reference on
+    boundary values, antimeridian stradders, poles and full-circle
+    boxes."""
     rows, rid = [], 0
     for xmin in (-180.0, -179.9999, -0.5, 0.0, 179.9999, 180.0):
         for wdt in (0.0, 0.001, 0.7, 25.0):
@@ -186,11 +230,11 @@ def test_covering_cells_jvm_matches_udf(spark):
         pd.DataFrame(rows, columns=["id", "xmin", "ymin", "xmax", "ymax"]),
         schema="id string, xmin double, ymin double, xmax double, ymax double")
     for res in (3, 9):
-        old = sorted(map(tuple, spatial.with_covering_cells(
-            df, res, jvm=False).select("id", "cell").collect()))
-        new = sorted(map(tuple, spatial.with_covering_cells(
-            df, res, jvm=True).select("id", "cell").collect()))
-        assert old == new
+        want = sorted((rid_, int(c)) for rid_, *box in rows
+                      for c in _covering_reference(*box, res))
+        got = sorted(map(tuple, spatial.with_covering_cells(
+            df, res).select("id", "cell").collect()))
+        assert got == want
 
 
 def test_block_tiles_matches_scalar_reference(spark, images, images_pdf):
@@ -377,9 +421,10 @@ def test_fixture_phash_recomputable(spark, images):
 
 
 def test_knn_fused_matches_staged_including_sparse_tail(spark, zones):
-    """Fused one-pass kNN == staged cascade plan on a point set that
-    forces every path: dense cells, sparse tail (polar points far from
-    any zone -> exact fallback), and at least one exact-tie candidate."""
+    """Fused one-pass kNN == the past-guard staged cascade (shuffled zone
+    side) on a point set that forces every path: dense cells, sparse
+    tail (polar points far from any zone -> exact fallback), and at
+    least one exact-tie candidate."""
     import numpy as np
     import pandas as pd
     rng = np.random.default_rng(23)
@@ -391,7 +436,7 @@ def test_knn_fused_matches_staged_including_sparse_tail(spark, zones):
                                rng.uniform(85, 89, 20)])})  # sparse tail
     pts = spark.createDataFrame(pdf)
     fused = spatial.knn_join(pts, zones, k=3).toPandas()
-    staged = spatial.knn_join(pts, zones, k=3, fused=False,
+    staged = spatial.knn_join(pts, zones, k=3, max_broadcast_zones=5,
                               eager_cleanup=False).toPandas()
     key = ["image_id", "knn_rank"]
     f = fused.sort_values(key).reset_index(drop=True)

@@ -16,9 +16,19 @@ the payload-axis analogue of its geometry encode/decode round-trip
   * ``q4``  — 4-bit/channel, 2 samples/byte (lossy, ~34 dB; kept for
               the "reject below-gate format" negative test)
 
-Everything is array-in/array-out; the Spark surface wraps these in
-``mapInPandas`` over Arrow batches (zero per-row Python in the plan;
-the per-image loop below is inside one Arrow batch, like any codec).
+One batch core does the work.  A group of same-(fmt, w, h) payloads is
+one flat uint8 buffer plus int64 offsets, payload i being
+``buf[offs[i]:offs[i + 1]]`` with the payloads back to back (the layout
+of an Arrow binary column): :func:`decode_core` turns it into an
+``(m, h, w, 3)`` stack, :func:`encode_core` turns a stack back into
+buffer + offsets, and :func:`psnr_batch` / :func:`phash_batch` work on
+decoded stacks.  ``decode``, ``decode_batch``, ``encode``, ``psnr`` and
+``phash64`` are thin calls into it; the Spark operators feed it straight
+from Arrow buffers (``operators.images.decoded_chunks``).
+
+A payload is accepted only at its exact length for the declared (w, h);
+anything else raises one ``ValueError`` naming fmt, w x h and the bytes
+got against the bytes expected.
 """
 
 from __future__ import annotations
@@ -29,259 +39,202 @@ LOSSLESS = {"raw", "rle"}
 LOSSY = {"q6", "q4"}
 FORMATS = LOSSLESS | LOSSY
 
-# dequantization tables: the same integer expressions the scalar decode
-# evaluates per sample, precomputed over the 6-/4-bit domains
+# dequantization tables: q * 255 // 63 and q * 17 precomputed over the
+# 6-/4-bit domains (a table gather instead of a per-sample widen/
+# multiply/divide chain)
 _Q6_LUT = (np.arange(64, dtype=np.uint16) * 255 // 63).astype(np.uint8)
 _Q4_LUT = (np.arange(16, dtype=np.uint16) * 17).astype(np.uint8)
 
 
-# ---------------------------------------------------------------------------
-# Encode / decode (single image: (h, w, 3) uint8)
-# ---------------------------------------------------------------------------
-
-def encode(img: np.ndarray, fmt: str) -> bytes:
-    flat = np.ascontiguousarray(img, dtype=np.uint8).reshape(-1)
+def _fixed_len(fmt: str, n: int) -> int:
+    """Encoded bytes of ``n`` samples for the fixed-length formats."""
     if fmt == "raw":
-        return flat.tobytes()
-    if fmt == "rle":
-        return _rle_encode(flat)
+        return n
     if fmt == "q6":
-        return _pack_bits(flat >> 2, 6)
+        return (6 * n + 7) // 8
     if fmt == "q4":
-        return _pack_bits(flat >> 4, 4)
+        return (n + 1) // 2
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
-def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    n = w * h * 3
+def _reject(fmt, w, h, got, expected):
+    raise ValueError(f"{fmt} payload declared {w}x{h}: got {got} bytes, "
+                     f"expected {expected}")
+
+
+# ---------------------------------------------------------------------------
+# Batch core
+# ---------------------------------------------------------------------------
+
+def decode_core(buf: np.ndarray, offs: np.ndarray, fmt: str, w: int,
+                h: int) -> np.ndarray:
+    """Decode back-to-back same-(fmt, w, h) payloads -> (m, h, w, 3)."""
+    offs = np.asarray(offs, np.int64)
+    m = len(offs) - 1
+    lens = np.diff(offs)
+    n = 3 * w * h
+    if w < 0 or h < 0:
+        _reject(fmt, w, h, lens[0] if m else 0, "none (negative dimension)")
+    flat = buf[offs[0]:offs[-1]]
+    if fmt == "rle":
+        odd = lens % 2 == 1
+        if odd.any():
+            _reject(fmt, w, h, lens[odd][0], "an even count")
+        runs = flat[0::2]
+        # per-image run totals, so runs cannot bleed across images
+        # (reduceat over the non-empty payloads; an empty one sums to 0)
+        got = np.zeros(m, np.int64)
+        full = lens > 0
+        got[full] = np.add.reduceat(runs, (offs[:-1][full] - offs[0]) // 2,
+                                    dtype=np.int64)
+        bad = got != n
+        if bad.any():
+            _reject(fmt, w, h, f"{got[bad][0]} decoded", n)
+        return np.repeat(flat[1::2], runs).reshape(m, h, w, 3)
+    want = _fixed_len(fmt, n)
+    bad = lens != want
+    if bad.any():
+        _reject(fmt, w, h, lens[bad][0], want)
+    mat = flat.reshape(m, want)
     if fmt == "raw":
-        flat = np.frombuffer(data, dtype=np.uint8, count=n)
-    elif fmt == "rle":
-        flat = _rle_decode(data, n)
-    elif fmt == "q6":
-        q = _unpack_bits(data, 6, n)
-        flat = (q.astype(np.uint16) * 255 // 63).astype(np.uint8)
+        return mat.reshape(m, h, w, 3)
+    if fmt == "q4":
+        q = np.empty((m, want, 2), np.uint8)
+        q[..., 0] = mat & 0x0F
+        q[..., 1] = mat >> 4
+        lut = _Q4_LUT
+    else:
+        # 3 bytes <-> 4 six-bit samples, LSB first; a partial last
+        # group is zero-padded to whole bytes, then sliced off below
+        groups = -(-n // 4)
+        if 3 * groups != want:
+            mat = np.pad(mat, ((0, 0), (0, 3 * groups - want)))
+        b0, b1, b2 = (mat.reshape(m, groups, 3)[..., k] for k in range(3))
+        q = np.empty((m, groups, 4), np.uint8)
+        q[..., 0] = b0 & 0x3F
+        q[..., 1] = (b0 >> 6) | ((b1 & 0x0F) << 2)
+        q[..., 2] = (b1 >> 4) | ((b2 & 0x03) << 4)
+        q[..., 3] = b2 >> 2
+        lut = _Q6_LUT
+    return lut[q.reshape(m, -1)[:, :n]].reshape(m, h, w, 3)
+
+
+def encode_core(imgs: np.ndarray, fmt: str):
+    """Encode an (m, h, w, 3) uint8 stack -> (buf, offs), the layout
+    :func:`decode_core` reads."""
+    flat = np.ascontiguousarray(imgs, dtype=np.uint8).reshape(len(imgs), -1)
+    m, n = flat.shape
+    if fmt == "rle":
+        return _rle_runs(flat)
+    want = _fixed_len(fmt, n)
+    if fmt == "raw":
+        mat = flat
     elif fmt == "q4":
-        q = _unpack_bits(data, 4, n)
-        flat = (q.astype(np.uint16) * 17).astype(np.uint8)
+        q = np.pad(flat >> 4, ((0, 0), (0, 2 * want - n)))
+        mat = q[:, 0::2] | (q[:, 1::2] << 4)
     else:
-        raise ValueError(f"unknown fmt {fmt!r}")
-    return flat.reshape(h, w, 3)
+        groups = -(-n // 4)
+        q = np.pad(flat >> 2, ((0, 0), (0, 4 * groups - n)))
+        q0, q1, q2, q3 = (q.reshape(m, groups, 4)[..., k] for k in range(4))
+        mat = np.empty((m, groups, 3), np.uint8)
+        mat[..., 0] = q0 | (q1 << 6)
+        mat[..., 1] = (q1 >> 2) | (q2 << 4)
+        mat[..., 2] = (q2 >> 4) | (q3 << 2)
+        mat = mat.reshape(m, -1)[:, :want]
+    return (np.ascontiguousarray(mat).reshape(-1),
+            np.arange(m + 1, dtype=np.int64) * want)
 
 
-def decode_batch(datas: list, fmt: str, w: int, h: int) -> np.ndarray:
-    """Vectorized decode of a SAME-(fmt,w,h) payload group ->
-    ``(len(datas), h, w, 3)`` uint8, bit-identical to mapping
-    :func:`decode` over the list.
-
-    The per-image loop costs ~10 small-array numpy calls per image;
-    grouping a batch by shape replaces them with ONE pass over the
-    concatenated payload (raw: reshape; rle: a single ``np.repeat``
-    over the concatenated run pairs — per-image decode sizes are
-    validated so runs cannot bleed across images; q6/q4: 2-D bit
-    unpack).  Measured ~6x on the block-tiles bench cell, where the
-    per-image loop — not the Arrow transfer — was the dominant cost.
-    Falls back to the scalar path when payload lengths are ragged
-    (raw overlength tails are sliced off per image, like ``count=n``
-    in the scalar decode)."""
-    m = len(datas)
-    n = w * h * 3
-    if m == 0:
-        return np.empty((0, h, w, 3), np.uint8)
-    blen = len(datas[0])
-    if any(len(d) != blen for d in datas):
-        if fmt == "rle":
-            # r8: ragged RLE batches (run counts are content-dependent,
-            # so RLE groups are almost always ragged) decode in ONE
-            # np.repeat over the concatenated run pairs instead of one
-            # scalar decode per image; per-image totals are validated so
-            # runs cannot bleed across images (fallback = scalar path,
-            # which raises the same errors for corrupt payloads)
-            chunks = [np.frombuffer(d, dtype=np.uint8) for d in datas]
-            out = _rle_decode_ragged(chunks, n)
-            if out is not None:
-                return out.reshape(m, h, w, 3)
-        return np.stack([decode(d, fmt, w, h) for d in datas])
-    joined = np.frombuffer(b"".join(datas), dtype=np.uint8)
-    return decode_batch_matrix(joined.reshape(m, blen), fmt, w, h)
-
-
-def _rle_decode_ragged(chunks: list, n: int):
-    """Vectorized RLE decode of variable-length payloads -> (m, n) or
-    None when a payload is malformed (caller falls back to the scalar
-    path for identical error behavior)."""
-    if any(len(c) % 2 for c in chunks):
-        return None
-    cat = np.concatenate(chunks) if chunks else np.empty(0, np.uint8)
-    lens = cat[0::2].astype(np.int64)
-    vals = cat[1::2]
-    flat = np.repeat(vals, lens)
-    m = len(chunks)
-    if flat.size != m * n:
-        return None
-    # per-image totals must each be n, or runs bled across images
-    pair_counts = np.fromiter((len(c) // 2 for c in chunks), np.int64, m)
-    bounds = np.cumsum(pair_counts) - pair_counts
-    if m > 1 or (m == 1 and pair_counts[0] > 0):
-        sums = np.add.reduceat(lens, bounds)
-        if not (sums == n).all():
-            return None
-    return flat.reshape(m, n)
-
-
-def decode_batch_matrix(mat: np.ndarray, fmt: str, w: int, h: int) -> np.ndarray:
-    """Vectorized decode of a SAME-(fmt,w,h) group already gathered as
-    an (m, blen) uint8 matrix — the core of :func:`decode_batch`, also
-    fed directly from Arrow binary buffers (no per-row bytes objects).
-    """
-    m, blen = mat.shape
-    n = w * h * 3
-    joined = np.ascontiguousarray(mat).reshape(-1)
-    if fmt == "raw":
-        if blen < n:
-            raise ValueError(f"raw payload {blen} bytes < {n}")
-        flat = joined.reshape(m, blen)[:, :n]
-    elif fmt == "rle":
-        if blen % 2:
-            return np.stack([decode(mat[i].tobytes(), fmt, w, h)
-                             for i in range(m)])
-        pairs = joined.reshape(m, blen)
-        lens = pairs[:, 0::2].astype(np.int64).ravel()
-        vals = pairs[:, 1::2].ravel()
-        flat = np.repeat(vals, lens)
-        if flat.size != m * n:
-            raise ValueError(
-                f"rle batch decodes to {flat.size}, expected {m * n}")
-        flat = flat.reshape(m, n)
-        # per-image totals must each be n, or runs bled across images
-        if m > 1:
-            csum = np.cumsum(lens.reshape(m, -1), axis=1)[:, -1]
-            if not (csum == n).all():
-                return np.stack([decode(mat[i].tobytes(), fmt, w, h)
-                                 for i in range(m)])
-    elif fmt in ("q6", "q4"):
-        # r8: direct shift/mask extraction of the little-endian bit
-        # stream (3 bytes <-> 4 six-bit samples; 1 byte <-> 2 nibbles)
-        # when the packing is exact — identical q values to the
-        # unpackbits/packbits route without its 8x bool blowup (the
-        # bool intermediate was ~80 MB per 1k-image group and the
-        # dominant decode allocation).  Padded streams (n*bits not a
-        # multiple of 8) keep the generic path.
-        if fmt == "q6" and blen % 3 == 0 and blen * 4 == n * 3:
-            tri = joined.reshape(m, blen // 3, 3)
-            b0, b1, b2 = tri[..., 0], tri[..., 1], tri[..., 2]
-            q = np.empty((m, blen // 3, 4), np.uint8)
-            q[..., 0] = b0 & 0x3F
-            q[..., 1] = (b0 >> 6) | ((b1 & 0x0F) << 2)
-            q[..., 2] = (b1 >> 4) | ((b2 & 0x03) << 4)
-            q[..., 3] = b2 >> 2
-            q = q.reshape(m * n)
-        elif fmt == "q4" and blen * 2 == n:
-            byt = joined.reshape(m, blen)
-            q = np.empty((m, blen, 2), np.uint8)
-            q[..., 0] = byt & 0x0F
-            q[..., 1] = byt >> 4
-            q = q.reshape(m * n)
-        else:
-            bits = 6 if fmt == "q6" else 4
-            bitarr = np.unpackbits(joined.reshape(m, blen), axis=1,
-                                   bitorder="little")[:, : n * bits]
-            q = np.packbits(bitarr.reshape(m * n, bits), axis=1,
-                            bitorder="little")[:, 0]
-        # dequantize via a 64/16-entry LUT built with the exact same
-        # integer formula (r8) — a table gather replaces the per-sample
-        # widen/multiply/divide chain, bit-identical by construction
-        flat = (_Q6_LUT if fmt == "q6" else _Q4_LUT)[q]
-        flat = flat.reshape(m, n)
-    else:
-        raise ValueError(f"unknown fmt {fmt!r}")
-    return flat.reshape(m, h, w, 3)
-
-
-def _rle_encode(flat: np.ndarray) -> bytes:
+def _rle_runs(flat: np.ndarray):
+    """RLE of each row of an (m, n) uint8 matrix: runs break at value
+    changes and at image starts, runs over 255 split into 255s plus the
+    remainder.  The int64 per-run arrays are the encoder's peak memory,
+    so they are updated in place."""
+    m, n = flat.shape
     if flat.size == 0:
-        return b""
-    change = np.flatnonzero(flat[1:] != flat[:-1]) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [flat.size]))
-    lengths = ends - starts
-    values = flat[starts]
-    # split runs longer than 255 (fully vectorized: noisy images have
-    # ~1 run per pixel, so a per-run Python loop would dominate)
-    if (lengths <= 255).all():
-        out_lens, out_vals = lengths, values
-    else:
-        reps = (lengths + 254) // 255
-        out_vals = np.repeat(values, reps)
-        out_lens = np.full(out_vals.size, 255, dtype=np.int64)
-        ends = np.cumsum(reps) - 1
-        out_lens[ends] = lengths - 255 * (reps - 1)
-    pairs = np.empty(out_vals.size * 2, dtype=np.uint8)
-    pairs[0::2] = out_lens.astype(np.uint8)
-    pairs[1::2] = out_vals
-    return pairs.tobytes()
+        return np.empty(0, np.uint8), np.zeros(m + 1, np.int64)
+    v = flat.reshape(-1)
+    brk = np.empty(v.size, bool)
+    brk[0] = True
+    np.not_equal(v[1:], v[:-1], out=brk[1:])
+    brk[::n] = True
+    starts = np.flatnonzero(brk)
+    lengths = np.diff(starts, append=v.size)
+    reps = lengths + 254
+    reps //= 255
+    last = np.cumsum(reps)
+    pairs = np.empty((last[-1], 2), np.uint8)
+    pairs[:, 0] = 255
+    lengths -= 255 * (reps - 1)         # the last piece of each run
+    pairs[last - 1, 0] = lengths
+    pairs[:, 1] = np.repeat(v[starts], reps)
+    first = np.searchsorted(starts, np.arange(m + 1) * n)
+    offs = 2 * np.concatenate(([0], last))[first]
+    return pairs.reshape(-1), offs
 
 
-def _rle_decode(data: bytes, n: int) -> np.ndarray:
-    pairs = np.frombuffer(data, dtype=np.uint8)
-    lens = pairs[0::2].astype(np.int64)
-    vals = pairs[1::2]
-    flat = np.repeat(vals, lens)
-    if flat.size != n:
-        raise ValueError(f"rle payload decodes to {flat.size}, expected {n}")
-    return flat
+def psnr_batch(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Per-image peak SNR in dB between two uint8 stacks; inf when
+    identical.  The squared error sums are exact integers."""
+    m = len(a)
+    d = (np.maximum(a, b) - np.minimum(a, b)).reshape(m, -1).astype(np.uint16)
+    sse = (d * d).sum(axis=1, dtype=np.int64)
+    with np.errstate(divide="ignore"):
+        return 10.0 * np.log10(255.0 ** 2 / (sse / d.shape[1]))
 
 
-def _pack_bits(vals: np.ndarray, bits: int) -> bytes:
-    """Pack values (< 2**bits) into a little-endian bit stream."""
-    v = np.asarray(vals, dtype=np.uint8)
-    bitarr = np.unpackbits(v[:, None], axis=1, bitorder="little")[:, :bits]
-    return np.packbits(bitarr.ravel(), bitorder="little").tobytes()
-
-
-def _unpack_bits(data: bytes, bits: int, count: int) -> np.ndarray:
-    raw = np.frombuffer(data, dtype=np.uint8)
-    bitarr = np.unpackbits(raw, bitorder="little")[: count * bits]
-    return np.packbits(bitarr.reshape(count, bits), axis=1, bitorder="little")[:, 0]
-
-
-# ---------------------------------------------------------------------------
-# Metrics
-# ---------------------------------------------------------------------------
-
-def psnr(a: np.ndarray, b: np.ndarray) -> float:
-    """Peak SNR in dB between two uint8 images; inf when identical."""
-    a = np.asarray(a, dtype=np.float64)
-    b = np.asarray(b, dtype=np.float64)
-    mse = np.mean((a - b) ** 2)
-    if mse == 0.0:
-        return float("inf")
-    return float(10.0 * np.log10(255.0 ** 2 / mse))
-
-
-def phash64(img: np.ndarray) -> int:
-    """64-bit perceptual hash: 8x8 block-mean of grayscale vs median.
+def phash_batch(imgs: np.ndarray) -> np.ndarray:
+    """Per-image 64-bit perceptual hash (int64) of an (m, h, w, 3) stack:
+    8x8 block-mean of grayscale vs median.
 
     Deterministic integer-friendly pipeline: grayscale via fixed-point
-    (77R + 150G + 29B) >> 8, exact block means over an 8x8 grid (image
+    (77R + 150G + 29B) >> 8, exact block sums over an 8x8 grid (image
     dims are multiples of 8 in the fixtures; general dims use trimmed
     equal blocks), bit i set when block i > median.
     """
-    img = np.asarray(img)
-    h, w = img.shape[0], img.shape[1]
-    gray = ((77 * img[:, :, 0].astype(np.uint32)
-             + 150 * img[:, :, 1].astype(np.uint32)
-             + 29 * img[:, :, 2].astype(np.uint32)) >> 8)
+    m, h, w = imgs.shape[:3]
     bh, bw = h // 8, w // 8
-    g = gray[: bh * 8, : bw * 8].reshape(8, bh, 8, bw)
-    means = g.sum(axis=(1, 3), dtype=np.int64)   # exact integer sums
-    med = np.median(means)
-    bits = (means > med).ravel()
-    out = np.uint64(0)
-    for i in range(64):
-        if bits[i]:
-            out |= np.uint64(1) << np.uint64(i)
-    return int(out.astype(np.int64))   # two's complement into int64
+    px = imgs[:, : bh * 8, : bw * 8]
+    gray = (77 * px[..., 0].astype(np.uint32)
+            + 150 * px[..., 1].astype(np.uint32)
+            + 29 * px[..., 2].astype(np.uint32)) >> 8
+    means = gray.reshape(m, 8, bh, 8, bw).sum(axis=(2, 4), dtype=np.int64)
+    means = means.reshape(m, 64)
+    bits = means > np.median(means, axis=1)[:, None]
+    # bit i -> bit i of a little-endian uint64, read as two's complement
+    return np.packbits(bits, axis=1, bitorder="little").view("<i8")[:, 0]
+
+
+# ---------------------------------------------------------------------------
+# One-image / list entry points
+# ---------------------------------------------------------------------------
+
+def encode(img: np.ndarray, fmt: str) -> bytes:
+    return encode_core(np.asarray(img)[None], fmt)[0].tobytes()
+
+
+def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
+    return decode_core(np.frombuffer(data, np.uint8), [0, len(data)],
+                       fmt, w, h)[0]
+
+
+def decode_batch(datas: list, fmt: str, w: int, h: int) -> np.ndarray:
+    """Decode a SAME-(fmt,w,h) payload list -> ``(len(datas), h, w, 3)``
+    uint8 in one :func:`decode_core` pass over the joined payloads."""
+    offs = np.concatenate(([0], np.cumsum([len(d) for d in datas],
+                                          dtype=np.int64)))
+    return decode_core(np.frombuffer(b"".join(datas), np.uint8), offs,
+                       fmt, w, h)
+
+
+def psnr(a: np.ndarray, b: np.ndarray) -> float:
+    """Peak SNR in dB between two uint8 images; inf when identical."""
+    return float(psnr_batch(np.asarray(a)[None], np.asarray(b)[None])[0])
+
+
+def phash64(img: np.ndarray) -> int:
+    """64-bit perceptual hash of one image (see :func:`phash_batch`)."""
+    return int(phash_batch(np.asarray(img)[None])[0])
 
 
 def hamming64(a, b) -> np.ndarray:

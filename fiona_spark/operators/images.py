@@ -1,8 +1,13 @@
 """Image-payload operators over the (image_id, bytes, fmt, w, h, ...) table.
 
 The payload axis of the graft: binary image columns are decoded,
-verified and feature-extracted inside Arrow-batched pandas UDFs /
-``mapInPandas`` — never per-row Python in the plan.  This mirrors how
+verified and feature-extracted inside ``mapInArrow`` batches — never
+per-row Python in the plan.  Every payload operator (``decode_stats``,
+``verify_roundtrip``, ``resize`` here and ``spatial.block_tiles``) runs
+over :func:`decoded_chunks`: payloads are sliced out of the Arrow
+binary buffer, grouped by (fmt, w, h) and decoded by the one
+``codec.decode_core`` pass in ``CHUNK_PX``-bounded chunks; per-image
+results are numpy reductions along the image axis.  This mirrors how
 the reference treats binary fields as first-class values
 (`fiona/ogrext.pyx:335-347` OFTBinary get/set) and its round-trip test
 discipline (`fiona/_geometry.pyx:374-380` geometryRT; write-then-read
@@ -23,10 +28,73 @@ the build contract, the Spark side is real, the exotic codec is not.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+import pyarrow as pa
+from pyspark.sql import DataFrame, functions as F
 
 from .. import codec
+
+# Decoded pixels per chunk.  Bounding the chunk keeps decode temporaries
+# at ~10-20 MB: on hosts with expensive first-touch (lazy VM memory),
+# whole-group stacks (80+ MB per group per batch, fresh mmaps) stalled
+# the first wave of workers on page-fault service; bounded chunks land
+# on the reused heap after the first chunk.
+CHUNK_PX = 2_000_000
+
+
+def decoded_chunks(rb: pa.RecordBatch, chunk_px: int = CHUNK_PX):
+    """Decode the payloads of one Arrow batch with columns image_id,
+    bytes, fmt, w, h -> yields ``(rows, fmt, w, h, imgs)`` per chunk of
+    one (fmt, w, h) group, ``rows`` indexing ``rb`` and ``imgs`` the
+    ``(len(rows), h, w, 3)`` stack, at most ``chunk_px`` pixels per chunk
+    (one image if it is larger).
+
+    A null payload, fmt, w or h raises ``ValueError`` naming the image;
+    a payload that is not exactly its declared size raises the codec's
+    ``ValueError``.
+    """
+    by_a = rb.column("bytes")
+    fmt_a, w_a, h_a = rb.column("fmt"), rb.column("w"), rb.column("h")
+    for c in (by_a, fmt_a, w_a, h_a):
+        if c.null_count:
+            i = int(np.flatnonzero(c.is_null().to_numpy(zero_copy_only=False))[0])
+            raise ValueError("null payload, fmt, w or h for image_id "
+                             f"{rb.column('image_id')[i].as_py()!r}")
+    fmts, fmt_inv = np.unique(
+        fmt_a.to_numpy(zero_copy_only=False).astype(str), return_inverse=True)
+    keys = np.stack([fmt_inv, w_a.to_numpy(zero_copy_only=False),
+                     h_a.to_numpy(zero_copy_only=False)], axis=1)
+    groups, inv = np.unique(keys, axis=0, return_inverse=True)
+    order = np.argsort(inv.ravel(), kind="stable")
+    bnd = np.searchsorted(inv.ravel()[order], np.arange(len(groups) + 1))
+    off_dtype = np.int64 if pa.types.is_large_binary(by_a.type) else np.int32
+    offs_all = np.frombuffer(by_a.buffers()[1], off_dtype)[
+        by_a.offset: by_a.offset + len(by_a) + 1].astype(np.int64)
+    data = np.frombuffer(by_a.buffers()[2] or b"", np.uint8)
+    for (f, w, h), g0, g1 in zip(groups, bnd[:-1], bnd[1:]):
+        fmt, w, h = str(fmts[f]), int(w), int(h)
+        step = max(1, chunk_px // max(1, w * h))
+        for s in range(g0, g1, step):
+            rows = order[s:min(s + step, g1)]
+            lo, hi = offs_all[rows], offs_all[rows + 1]
+            # the chunk's payloads back to back: one memcpy per payload
+            # into a numpy buffer (an Arrow take per chunk left ~10 MB
+            # more resident per Python worker)
+            buf = np.concatenate([data[a:b] for a, b in zip(lo, hi)])
+            offs = np.concatenate(([0], np.cumsum(hi - lo)))
+            yield rows, fmt, w, h, codec.decode_core(buf, offs, fmt, w, h)
+
+
+def emit_batch(rb: pa.RecordBatch, parts: list, names: list, types: list):
+    """One output batch from per-chunk ``(rows, col, ...)`` tuples: the
+    input's image_id at ``rows``, then each column (numpy parts are
+    converted to ``types``; Arrow parts are concatenated as they are)."""
+    cols = [rb.column("image_id").take(pa.array(np.concatenate([p[0] for p in parts])))]
+    for k, t in enumerate(types, 1):
+        vals = [p[k] for p in parts]
+        cols.append(pa.concat_arrays(vals) if isinstance(vals[0], pa.Array)
+                    else pa.array(np.concatenate(vals), type=t))
+    return pa.RecordBatch.from_arrays(cols, names=["image_id"] + names)
+
 
 DECODE_STATS_SCHEMA = ("image_id string, n_px long, mean_r double, "
                        "mean_g double, mean_b double, lum_p50 double")
@@ -35,27 +103,29 @@ DECODE_STATS_SCHEMA = ("image_id string, n_px long, mean_r double, "
 def decode_stats(images: DataFrame) -> DataFrame:
     """Decode every payload and emit per-image pixel statistics.
 
-    One ``mapInPandas`` pass: Arrow batch in -> decode loop (numpy per
-    image, the unavoidable variable-shape step) -> stats frame out.
-    Column-pruned input: only the 5 needed columns reach Python.
+    One ``mapInArrow`` pass over :func:`decoded_chunks`: channel means
+    are exact int64 sums / n_px and the luminance median is
+    ``np.median`` of the uint16 channel sum / 3.0 along the image axis
+    (both bit-identical to float64 means per image).  Column-pruned
+    input: only the 5 needed columns reach Python.
     """
     def run(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "n_px", "mean_r", "mean_g",
-                                   "mean_b", "lum_p50")}
-            for row in pdf.itertuples(index=False):
-                img = codec.decode(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
-                f = img.astype(np.float64)
-                lum = f.mean(axis=2)
-                out["image_id"].append(row.image_id)
-                out["n_px"].append(img.shape[0] * img.shape[1])
-                out["mean_r"].append(f[:, :, 0].mean())
-                out["mean_g"].append(f[:, :, 1].mean())
-                out["mean_b"].append(f[:, :, 2].mean())
-                out["lum_p50"].append(float(np.median(lum)))
-            yield pd.DataFrame(out)
+        for rb in batches:
+            parts = []
+            for rows, _, w, h, imgs in decoded_chunks(rb):
+                m, n_px = len(rows), w * h
+                sums = imgs.reshape(m, n_px, 3).sum(axis=1, dtype=np.int64)
+                lum = imgs.sum(axis=3, dtype=np.uint16).reshape(m, n_px) / 3.0
+                means = sums / n_px
+                parts.append((rows, np.full(m, n_px, np.int64), means[:, 0],
+                              means[:, 1], means[:, 2],
+                              np.median(lum, axis=1, overwrite_input=True)))
+            if parts:
+                yield emit_batch(
+                    rb, parts, ["n_px", "mean_r", "mean_g", "mean_b", "lum_p50"],
+                    [pa.int64()] + [pa.float64()] * 4)
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
+    return images.select("image_id", "bytes", "fmt", "w", "h").mapInArrow(
         run, DECODE_STATS_SCHEMA)
 
 
@@ -65,36 +135,38 @@ def verify_roundtrip(images: DataFrame, psnr_gate: float = 40.0) -> DataFrame:
     Output per image: (image_id, fmt, lossless_exact, psnr_db,
     phash_match, ok).  ``ok`` means: lossless formats byte-identical,
     lossy formats PSNR >= gate, and the stored phash equals the phash
-    recomputed from decoded pixels.
+    recomputed from decoded pixels.  Each chunk is encoded and decoded
+    again as a whole stack, so it holds the decoded, encoded and
+    re-decoded stacks at once, and an RLE encode keeps ~40 bytes of
+    int64 run temporaries per sample, about three times a decode's: its
+    pixel bound is ``CHUNK_PX // 32`` (62,500 pixels, a ~9 MB peak).
     """
     schema = ("image_id string, fmt string, lossless_exact boolean, "
               "psnr_db double, phash_match boolean, ok boolean")
 
     def run(batches):
-        for pdf in batches:
-            recs = {k: [] for k in ("image_id", "fmt", "lossless_exact",
-                                    "psnr_db", "phash_match", "ok")}
-            for row in pdf.itertuples(index=False):
-                img = codec.decode(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
-                rt = codec.decode(codec.encode(img, row.fmt), row.fmt,
-                                  int(row.w), int(row.h))
-                exact = bool(np.array_equal(img, rt))
-                p = codec.psnr(img, rt)
-                ph_ok = codec.phash64(img) == int(row.phash)
-                if row.fmt in codec.LOSSLESS:
-                    ok = exact and ph_ok
-                else:
-                    ok = (p >= psnr_gate or exact) and ph_ok
-                recs["image_id"].append(row.image_id)
-                recs["fmt"].append(row.fmt)
-                recs["lossless_exact"].append(exact)
-                recs["psnr_db"].append(min(p, 999.0))
-                recs["phash_match"].append(ph_ok)
-                recs["ok"].append(ok)
-            yield pd.DataFrame(recs)
+        for rb in batches:
+            ph = rb.column("phash")
+            stored = ph.fill_null(0).to_numpy()
+            known = ph.is_valid().to_numpy(zero_copy_only=False)
+            parts = []
+            for rows, fmt, w, h, img in decoded_chunks(rb, CHUNK_PX // 32):
+                buf, offs = codec.encode_core(img, fmt)
+                p = codec.psnr_batch(img, codec.decode_core(buf, offs, fmt, w, h))
+                exact = p == np.inf
+                ph_ok = (codec.phash_batch(img) == stored[rows]) & known[rows]
+                gate = exact if fmt in codec.LOSSLESS else exact | (p >= psnr_gate)
+                parts.append((rows, np.full(len(rows), fmt, object), exact,
+                              np.minimum(p, 999.0), ph_ok, gate & ph_ok))
+            if parts:
+                yield emit_batch(
+                    rb, parts, ["fmt", "lossless_exact", "psnr_db",
+                                "phash_match", "ok"],
+                    [pa.string(), pa.bool_(), pa.float64(), pa.bool_(),
+                     pa.bool_()])
 
     return images.select("image_id", "bytes", "fmt", "w", "h", "phash"
-                         ).mapInPandas(run, schema)
+                         ).mapInArrow(run, schema)
 
 
 def caption_check(images: DataFrame, reference: DataFrame) -> DataFrame:
@@ -146,25 +218,36 @@ RESIZE_SCHEMA = "image_id string, w int, h int, bytes binary"
 def resize(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Nearest-neighbor resize of every payload to (out_w, out_h).
 
-    Engine formats resize for real (numpy index sampling); unknown
-    external formats (jpeg/png/...) raise NotImplementedError — the
-    decode step is the stub, the Spark plumbing is not.
+    Engine formats resize for real (numpy index sampling on each
+    decoded chunk, output raw); unknown external formats (jpeg/png/...)
+    raise NotImplementedError — the decode step is the stub, the Spark
+    plumbing is not.
     """
     def run(batches):
-        for pdf in batches:
-            ids, ws, hs, bs = [], [], [], []
-            for row in pdf.itertuples(index=False):
-                if row.fmt not in codec.FORMATS:
-                    raise NotImplementedError(
-                        f"decoder for fmt={row.fmt!r} requires an image "
-                        "library not present in this environment")
-                img = codec.decode(bytes(row.bytes), row.fmt, int(row.w), int(row.h))
-                yi = (np.arange(out_h) * img.shape[0]) // out_h
-                xi = (np.arange(out_w) * img.shape[1]) // out_w
-                small = img[yi[:, None], xi[None, :]]
-                ids.append(row.image_id); ws.append(out_w); hs.append(out_h)
-                bs.append(codec.encode(small, "raw"))
-            yield pd.DataFrame({"image_id": ids, "w": ws, "h": hs, "bytes": bs})
+        for rb in batches:
+            unknown = (set(rb.column("fmt").unique().to_pylist())
+                       - codec.FORMATS - {None})
+            if unknown:
+                raise NotImplementedError(
+                    f"decoder for fmt={min(unknown)!r} requires an image "
+                    "library not present in this environment")
+            out_t = rb.column("bytes").type
+            off_t = np.int64 if pa.types.is_large_binary(out_t) else np.int32
+            parts = []
+            for rows, _, w, h, imgs in decoded_chunks(rb):
+                yi = (np.arange(out_h) * h) // out_h
+                xi = (np.arange(out_w) * w) // out_w
+                buf, offs = codec.encode_core(
+                    imgs[:, yi[:, None], xi[None, :]], "raw")
+                m = len(rows)
+                small = pa.Array.from_buffers(
+                    out_t, m, [None, pa.py_buffer(offs.astype(off_t)),
+                               pa.py_buffer(buf)])
+                parts.append((rows, np.full(m, out_w, np.int32),
+                              np.full(m, out_h, np.int32), small))
+            if parts:
+                yield emit_batch(rb, parts, ["w", "h", "bytes"],
+                                 [pa.int32(), pa.int32(), out_t])
 
-    return images.select("image_id", "bytes", "fmt", "w", "h").mapInPandas(
+    return images.select("image_id", "bytes", "fmt", "w", "h").mapInArrow(
         run, RESIZE_SCHEMA)

@@ -961,147 +961,54 @@ def block_tiles(images: DataFrame, res: int, block: int = 8) -> DataFrame:
 
     This is the raster->vector op of the north_rule: pixel blocks become
     vector features keyed by cell id.  Decode + block means are one
-    mapInPandas pass (Arrow in, Arrow out).
+    ``mapInArrow`` pass over ``images.decoded_chunks`` (Arrow in, Arrow
+    out; image ids reach the output through one Arrow ``take``).  Rows
+    with a null payload, fmt, w or h are dropped in the plan, before
+    the Python boundary.
     """
-    from .. import codec
+    from .images import decoded_chunks, emit_batch
 
     out_schema = ("image_id string, bx int, by int, cell long, mean_lum double")
 
-    # bound per-chunk pixel volume so decode temporaries stay ~10-20 MB
-    # (r8): on hosts with expensive first-touch (lazy VM memory) the
-    # previous whole-group stacks (80+ MB per group per batch, fresh
-    # mmaps) made the first wave of workers stall on page-fault service;
-    # bounded chunks land on the reused heap after the first chunk.
-    # Per-image math is unchanged, so results are bit-identical.
-    CHUNK_PX = 2_000_000
-
-    # r8: mapInArrow instead of mapInPandas — payloads are sliced
-    # straight out of the Arrow binary value buffer (offsets + one
-    # uint8 view; no per-row Python bytes objects, no pandas object
-    # column), and image ids reach the output via a single Arrow
-    # ``take`` (C-level, no per-string Python).  Decode math identical
-    # (codec.decode_batch_matrix is the same kernel decode_batch used).
     def run(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         for rb in batches:
-            m_all = rb.num_rows
-            if m_all == 0:
-                continue
-            fmt_a = rb.column(2)          # fmt (select order below)
-            w_a, h_a = rb.column(3), rb.column(4)
-            if (fmt_a.null_count or w_a.null_count or h_a.null_count
-                    or rb.column(1).null_count):
-                # null group keys / payloads: rare degenerate input —
-                # keep the old pandas-groupby semantics (null keys drop)
-                mask = pc.and_(
-                    pc.and_(fmt_a.is_valid(), w_a.is_valid()),
-                    pc.and_(h_a.is_valid(), rb.column(1).is_valid()))
-                rb = rb.filter(mask)
-                m_all = rb.num_rows
-                if m_all == 0:
-                    continue
-                fmt_a = rb.column(2)
-                w_a, h_a = rb.column(3), rb.column(4)
-            by_a = rb.column(1)
-            off_dtype = (np.int64 if pa.types.is_large_binary(by_a.type)
-                         else np.int32)
-            offs = np.frombuffer(by_a.buffers()[1], off_dtype)[
-                by_a.offset: by_a.offset + m_all + 1].astype(np.int64)
-            data = np.frombuffer(by_a.buffers()[2], np.uint8)
-            fmt_np = np.asarray(fmt_a.to_numpy(zero_copy_only=False),
-                                dtype=object)
-            w_np = np.asarray(w_a.to_numpy(zero_copy_only=False), np.int64)
-            h_np = np.asarray(h_a.to_numpy(zero_copy_only=False), np.int64)
-            xmn_b = np.asarray(rb.column(5).to_numpy(zero_copy_only=False),
-                               np.float64)
-            ymn_b = np.asarray(rb.column(6).to_numpy(zero_copy_only=False),
-                               np.float64)
-            xmx_b = np.asarray(rb.column(7).to_numpy(zero_copy_only=False),
-                               np.float64)
-            ymx_b = np.asarray(rb.column(8).to_numpy(zero_copy_only=False),
-                               np.float64)
-
-            fmts, fmt_inv = np.unique(fmt_np.astype(str), return_inverse=True)
-            code = (fmt_inv.astype(np.int64) << 40) + (w_np << 20) + h_np
-            order = np.argsort(code, kind="stable")
-            bnd = np.flatnonzero(np.concatenate(
-                ([True], code[order][1:] != code[order][:-1])))
-            bnd = np.append(bnd, m_all)
-
-            take_l, bxs_l, bys_l, cells_l, lums_l = [], [], [], [], []
-            for g0, g1 in zip(bnd[:-1], bnd[1:]):
-                idx = order[g0:g1]
-                w = int(w_np[idx[0]])
-                h = int(h_np[idx[0]])
-                fmt = str(fmts[fmt_inv[idx[0]]])
+            bbox = {c: np.asarray(rb.column(c).to_numpy(zero_copy_only=False),
+                                  np.float64)
+                    for c in ("xmin", "ymin", "xmax", "ymax")}
+            parts = []
+            for rows, _, w, h, imgs in decoded_chunks(rb):
                 nbx, nby = w // block, h // block
                 if nbx == 0 or nby == 0:
                     continue
-                n_px = w * h * 3
-                step = max(1, CHUNK_PX // (w * h))
-                for s in range(0, len(idx), step):
-                    rows = idx[s:s + step]
-                    m = len(rows)
-                    starts = offs[rows]
-                    lens = offs[rows + 1] - starts
-                    if (lens == lens[0]).all():
-                        matq = np.empty((m, int(lens[0])), np.uint8)
-                        for j in range(m):
-                            matq[j] = data[starts[j]:starts[j] + lens[j]]
-                        imgs = codec.decode_batch_matrix(matq, fmt, w, h)
-                    elif fmt == "rle":
-                        chunks = [data[starts[j]:starts[j] + lens[j]]
-                                  for j in range(m)]
-                        rag = codec._rle_decode_ragged(chunks, n_px)
-                        if rag is not None:
-                            imgs = rag.reshape(m, h, w, 3)
-                        else:
-                            imgs = np.stack([
-                                codec.decode(c.tobytes(), fmt, w, h)
-                                for c in chunks])
-                    else:
-                        imgs = np.stack([
-                            codec.decode(
-                                data[starts[j]:starts[j] + lens[j]].tobytes(),
-                                fmt, w, h) for j in range(m)])
-                    # grayscale: uint16 channel sum + one float64 divide
-                    # is BIT-identical to float64 mean (sums <= 765 are
-                    # exact) and skips the 8x-size float64 image copy
-                    g = (imgs[:, : nby * block, : nbx * block]
-                         .sum(axis=3, dtype=np.uint16) / 3.0)
-                    means = g.reshape(m, nby, block, nbx, block).mean(axis=(2, 4))
-                    # tile centers in geography (row 0 = north edge)
-                    xmn = xmn_b[rows][:, None]
-                    xmx = xmx_b[rows][:, None]
-                    ymn = ymn_b[rows][:, None]
-                    ymx = ymx_b[rows][:, None]
-                    cx = xmn + (np.arange(nbx) + 0.5) / nbx * (xmx - xmn)
-                    cy = ymx - (np.arange(nby) + 0.5) / nby * (ymx - ymn)
-                    shape = (m, nby, nbx)
-                    gx = np.broadcast_to(cx[:, None, :], shape).ravel()
-                    gy = np.broadcast_to(cy[:, :, None], shape).ravel()
-                    cell = cells.cell_id(gx, gy, res)
-                    bxg = np.broadcast_to(
-                        np.arange(nbx, dtype=np.int32)[None, None, :], shape)
-                    byg = np.broadcast_to(
-                        np.arange(nby, dtype=np.int32)[None, :, None], shape)
-                    take_l.append(np.repeat(rows, nbx * nby))
-                    bxs_l.append(bxg.ravel())
-                    bys_l.append(byg.ravel())
-                    cells_l.append(cell)
-                    lums_l.append(means.ravel())
-            if not take_l:
-                continue
-            ids = rb.column(0).take(pa.array(np.concatenate(take_l)))
-            yield pa.RecordBatch.from_arrays(
-                [ids,
-                 pa.array(np.concatenate(bxs_l), type=pa.int32()),
-                 pa.array(np.concatenate(bys_l), type=pa.int32()),
-                 pa.array(np.concatenate(cells_l), type=pa.int64()),
-                 pa.array(np.concatenate(lums_l), type=pa.float64())],
-                names=["image_id", "bx", "by", "cell", "mean_lum"])
+                m = len(rows)
+                # grayscale: uint16 channel sum + one float64 divide
+                # is BIT-identical to float64 mean (sums <= 765 are
+                # exact) and skips the 8x-size float64 image copy
+                g = (imgs[:, : nby * block, : nbx * block]
+                     .sum(axis=3, dtype=np.uint16) / 3.0)
+                means = g.reshape(m, nby, block, nbx, block).mean(axis=(2, 4))
+                # tile centers in geography (row 0 = north edge)
+                xmn, xmx, ymn, ymx = (bbox[c][rows][:, None] for c in
+                                      ("xmin", "xmax", "ymin", "ymax"))
+                cx = xmn + (np.arange(nbx) + 0.5) / nbx * (xmx - xmn)
+                cy = ymx - (np.arange(nby) + 0.5) / nby * (ymx - ymn)
+                shape = (m, nby, nbx)
+                gx = np.broadcast_to(cx[:, None, :], shape).ravel()
+                gy = np.broadcast_to(cy[:, :, None], shape).ravel()
+                bxg = np.broadcast_to(
+                    np.arange(nbx, dtype=np.int32)[None, None, :], shape)
+                byg = np.broadcast_to(
+                    np.arange(nby, dtype=np.int32)[None, :, None], shape)
+                parts.append((np.repeat(rows, nbx * nby), bxg.ravel(),
+                              byg.ravel(), cells.cell_id(gx, gy, res),
+                              means.ravel()))
+            if parts:
+                yield emit_batch(rb, parts, ["bx", "by", "cell", "mean_lum"],
+                                 [pa.int32(), pa.int32(), pa.int64(),
+                                  pa.float64()])
 
     cols = ["image_id", "bytes", "fmt", "w", "h", "xmin", "ymin", "xmax", "ymax"]
-    return images.select(*cols).mapInArrow(run, out_schema)
+    return (images.select(*cols).dropna(subset=["bytes", "fmt", "w", "h"])
+            .mapInArrow(run, out_schema))

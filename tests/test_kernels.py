@@ -211,6 +211,80 @@ def _test_image(seed, w=32, h=16):
     return img
 
 
+# Scalar spec references for the batch codec core: one image at a time,
+# generic bit streams, the per-bit hash loop.
+
+def _pack_bits_reference(vals, bits):
+    bitarr = np.unpackbits(np.asarray(vals, np.uint8)[:, None], axis=1,
+                           bitorder="little")[:, :bits]
+    return np.packbits(bitarr.ravel(), bitorder="little").tobytes()
+
+
+def _unpack_bits_reference(data, bits, count):
+    bitarr = np.unpackbits(np.frombuffer(data, np.uint8),
+                           bitorder="little")[: count * bits]
+    return np.packbits(bitarr.reshape(count, bits), axis=1,
+                       bitorder="little")[:, 0]
+
+
+def _encode_reference(img, fmt):
+    flat = np.ascontiguousarray(img, dtype=np.uint8).reshape(-1)
+    if fmt == "raw":
+        return flat.tobytes()
+    if fmt == "q6":
+        return _pack_bits_reference(flat >> 2, 6)
+    if fmt == "q4":
+        return _pack_bits_reference(flat >> 4, 4)
+    assert fmt == "rle"
+    pairs = []
+    i = 0
+    while i < flat.size:
+        j = i
+        while j < flat.size and flat[j] == flat[i] and j - i < 255:
+            j += 1
+        pairs += [j - i, int(flat[i])]
+        i = j
+    return bytes(pairs)
+
+
+def _decode_reference(data, fmt, w, h):
+    n = w * h * 3
+    if fmt == "raw":
+        flat = np.frombuffer(data, dtype=np.uint8, count=n)
+    elif fmt == "rle":
+        pairs = np.frombuffer(data, dtype=np.uint8)
+        flat = np.repeat(pairs[1::2], pairs[0::2].astype(np.int64))
+        assert flat.size == n
+    elif fmt == "q6":
+        q = _unpack_bits_reference(data, 6, n)
+        flat = (q.astype(np.uint16) * 255 // 63).astype(np.uint8)
+    else:
+        q = _unpack_bits_reference(data, 4, n)
+        flat = (q.astype(np.uint16) * 17).astype(np.uint8)
+    return flat.reshape(h, w, 3)
+
+
+def _phash_reference(img):
+    h, w = img.shape[0], img.shape[1]
+    gray = ((77 * img[:, :, 0].astype(np.uint32)
+             + 150 * img[:, :, 1].astype(np.uint32)
+             + 29 * img[:, :, 2].astype(np.uint32)) >> 8)
+    bh, bw = h // 8, w // 8
+    g = gray[: bh * 8, : bw * 8].reshape(8, bh, 8, bw)
+    means = g.sum(axis=(1, 3), dtype=np.int64)
+    bits = (means > np.median(means)).ravel()
+    out = 0
+    for i in range(64):
+        if bits[i]:
+            out |= 1 << i
+    return out - (1 << 64) if out >= 1 << 63 else out
+
+
+def _psnr_reference(a, b):
+    mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)
+    return float("inf") if mse == 0.0 else float(10.0 * np.log10(255.0 ** 2 / mse))
+
+
 def test_raw_rle_lossless():
     img = _test_image(42)
     for fmt in ("raw", "rle"):
@@ -400,39 +474,62 @@ def test_convex_hull_contains_all_points_fuzz():
             assert d <= 1e-9, f"trial {trial} point {i} outside by {d}"
 
 
-def test_decode_batch_bit_identical_and_fallbacks():
-    """codec.decode_batch must equal stacking per-image decode() for
-    every format (incl. long-run rle splitting and q6/q4 bit padding),
-    fall back cleanly on ragged payload lengths, and keep decode()'s
-    error contract on corrupt rle."""
-    import numpy as np
-    import pytest as _pytest
-
-    from fiona_spark import codec
-
+def test_codec_matches_scalar_references():
+    """decode, decode_batch, encode and phash64 equal the scalar spec
+    references with ``==`` for every format on square, odd, 1x1 and
+    one-row shapes (q6/q4 partial bit groups), RLE runs over 255 and
+    two identical adjacent images (runs meeting at an image boundary)."""
     rng = np.random.default_rng(7)
     for fmt in ("raw", "rle", "q6", "q4"):
-        for (w, h) in ((16, 16), (37, 23), (1, 1)):
+        for (w, h) in ((16, 16), (37, 23), (3, 5), (1, 1), (7, 1)):
             imgs = [rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                    for _ in range(5)]
-            if fmt == "rle":
-                imgs[2] = np.full((h, w, 3), 9, np.uint8)  # runs > 255
+                    for _ in range(3)]
+            imgs.append(np.full((h, w, 3), 9, np.uint8))   # runs > 255
+            imgs.append(imgs[-1].copy())                    # identical pair
+            imgs.append((rng.integers(0, 2, (h, w, 3)) * 200).astype(np.uint8))
             datas = [codec.encode(im, fmt) for im in imgs]
+            assert datas == [_encode_reference(im, fmt) for im in imgs]
+            want = np.stack([_decode_reference(d, fmt, w, h) for d in datas])
             got = codec.decode_batch(datas, fmt, w, h)
-            want = np.stack([codec.decode(d, fmt, w, h) for d in datas])
             assert got.dtype == np.uint8 and (got == want).all()
-    # ragged rle lengths take the scalar fallback, same values
-    imgs = [np.full((4, 4, 3), v, np.uint8) for v in (3, 200)]
-    flat = rng.integers(0, 256, (4, 4, 3), dtype=np.uint8)
-    imgs.append(flat)
-    datas = [codec.encode(im, "rle") for im in imgs]
-    assert len({len(d) for d in datas}) > 1
-    got = codec.decode_batch(datas, "rle", 4, 4)
-    assert (got == np.stack([codec.decode(d, "rle", 4, 4)
-                             for d in datas])).all()
-    # corrupt rle (wrong total) raises ValueError, like decode()
-    bad = [codec.encode(np.zeros((2, 2, 3), np.uint8), "rle")] * 2
-    with _pytest.raises(ValueError):
-        codec.decode_batch(bad, "rle", 4, 4)
-    # empty group
+            for d, ref in zip(datas, want):
+                assert (codec.decode(d, fmt, w, h) == ref).all()
+            for im in imgs + list(want):
+                assert codec.phash64(im) == _phash_reference(im)
+                assert codec.psnr(im, want[0]) == _psnr_reference(im, want[0])
+    assert len(codec.encode(np.full((16, 16, 3), 9, np.uint8), "rle")) == 8
     assert codec.decode_batch([], "raw", 8, 8).shape == (0, 8, 8, 3)
+
+
+def _hostile(fmt, case):
+    """A 4x4 payload made hostile: (data, w, h, message fragment)."""
+    img = np.random.default_rng(3).integers(0, 256, (4, 4, 3), dtype=np.uint8)
+    data = codec.encode(img, fmt)
+    if case == "truncated":
+        return data[:-1], 4, 4, f"{fmt} payload declared 4x4: got "
+    if case == "overlong":
+        # rle: one more (count, value) pair, so the runs overshoot 48
+        extra = b"\x01\x00" if fmt == "rle" else b"\x00"
+        return data + extra, 4, 4, f"{fmt} payload declared 4x4: got "
+    if case == "negative":
+        return data, -1, 4, f"{fmt} payload declared -1x4: got {len(data)} bytes"
+    # 4x4 payload declared 2x4 (rle: the runs sum to twice the size)
+    return data, 2, 4, f"{fmt} payload declared 2x4: got "
+
+
+@pytest.mark.parametrize("entry", ["decode", "decode_batch"])
+@pytest.mark.parametrize("case", ["truncated", "overlong", "negative", "halved"])
+@pytest.mark.parametrize("fmt", ["raw", "rle", "q6", "q4"])
+def test_hostile_payload_rejected(fmt, case, entry):
+    """A payload not exactly its declared size, or a negative dimension,
+    raises one ValueError naming fmt, w x h and got/expected bytes on
+    both entry points — never a silent partial decode."""
+    data, w, h, msg = _hostile(fmt, case)
+    # neighbours valid for the declared shape (none is, below zero)
+    good = data if w < 0 else codec.encode(np.zeros((h, w, 3), np.uint8), fmt)
+    with pytest.raises(ValueError, match="expected") as ei:
+        if entry == "decode":
+            codec.decode(data, fmt, w, h)
+        else:   # the hostile payload between two good ones
+            codec.decode_batch([good, data, good], fmt, w, h)
+    assert str(ei.value).startswith(msg)

@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 
 from fiona_spark import checkpoint, codec, fixtures, geom, snuggs
 
+from .test_kernels import (_decode_reference, _encode_reference,
+                           _phash_reference, _psnr_reference)
+
 N_IMG = 300
 N_ZONES = 40
 
@@ -85,14 +88,72 @@ def test_q4_fails_psnr_gate():
     assert codec.psnr(px, q4) < 40.0
 
 
-def test_decode_stats_matches_pandas(spark, images, images_pdf):
+def test_verify_roundtrip_exact_per_row(spark, images, images_pdf):
+    """Every row's lossless_exact, psnr_db, phash_match and ok equal the
+    scalar spec references with ``==``."""
     from fiona_spark.operators import images as iops
-    got = iops.decode_stats(images).toPandas().set_index("image_id").sort_index()
-    row = images_pdf.iloc[5]
-    img = codec.decode(row["bytes"], row["fmt"], row["w"], row["h"])
-    g = got.loc[row["image_id"]]
-    assert g["n_px"] == row["w"] * row["h"]
-    assert abs(g["mean_r"] - img[:, :, 0].astype(np.float64).mean()) < 1e-9
+    got = iops.verify_roundtrip(images).toPandas().set_index("image_id")
+    assert len(got) == N_IMG
+    for row in images_pdf.itertuples():
+        img = _decode_reference(row.bytes, row.fmt, row.w, row.h)
+        rt = _decode_reference(_encode_reference(img, row.fmt), row.fmt,
+                               row.w, row.h)
+        exact, p = np.array_equal(img, rt), _psnr_reference(img, rt)
+        ph_ok = _phash_reference(img) == row.phash
+        g = got.loc[row.image_id]
+        assert (g["fmt"], g["lossless_exact"], g["psnr_db"], g["phash_match"]) \
+            == (row.fmt, exact, min(p, 999.0), ph_ok)
+        assert g["ok"] == ((exact or (row.fmt in codec.LOSSY and p >= 40.0))
+                           and ph_ok)
+
+
+def test_decode_stats_matches_pandas(spark, images, images_pdf):
+    """All five stats of every row equal the float64 per-image formulas
+    over the scalar spec decode, with ``==``."""
+    from fiona_spark.operators import images as iops
+    got = iops.decode_stats(images).toPandas().set_index("image_id")
+    assert len(got) == N_IMG
+    for row in images_pdf.itertuples():
+        f = _decode_reference(row.bytes, row.fmt, row.w, row.h).astype(np.float64)
+        want = (row.w * row.h, f[:, :, 0].mean(), f[:, :, 1].mean(),
+                f[:, :, 2].mean(), float(np.median(f.mean(axis=2))))
+        g = got.loc[row.image_id]
+        assert tuple(g[["n_px", "mean_r", "mean_g", "mean_b", "lum_p50"]]) == want
+
+
+@pytest.mark.parametrize("fmt", ["raw", "rle", "q6", "q4"])
+def test_decode_stats_rejects_truncated_payload(spark, fmt):
+    """A payload one byte short fails the Spark job with the codec's
+    message (fmt, w x h, got vs expected bytes), on every format."""
+    from fiona_spark.operators import images as iops
+    img = np.random.default_rng(5).integers(0, 256, (8, 8, 3), dtype=np.uint8)
+    data = codec.encode(img, fmt)[:-1]
+    df = spark.createDataFrame(
+        [("imgGOOD", codec.encode(img, fmt), fmt, 8, 8),
+         ("imgBAD", data, fmt, 8, 8)],
+        "image_id string, bytes binary, fmt string, w int, h int")
+    with pytest.raises(Exception,
+                       match=f"{fmt} payload declared 8x8: got {len(data)} bytes"):
+        iops.decode_stats(df).collect()
+
+
+def _with_null(images, col, image_id):
+    return images.withColumn(col, F.when(F.col("image_id") == image_id, None)
+                             .otherwise(F.col(col)))
+
+
+def test_payload_ops_reject_null_rows(spark, images):
+    """decode_stats / verify_roundtrip / resize raise a ValueError naming
+    the image whose payload, fmt, w or h is null."""
+    from fiona_spark.operators import images as iops
+    sub = images.filter("image_id < 'img0000000006'")
+    bad = "img0000000003"
+    cases = [(op, "bytes") for op in (iops.decode_stats, iops.verify_roundtrip,
+                                      lambda df: iops.resize(df, 8, 8))]
+    cases += [(iops.decode_stats, c) for c in ("fmt", "w", "h")]
+    for op, col in cases:
+        with pytest.raises(Exception, match=f"w or h for image_id '{bad}'"):
+            op(_with_null(sub, col, bad)).collect()
 
 
 def test_caption_check_detects_mismatch(spark, images):

@@ -239,16 +239,16 @@ def test_covering_cells_matches_numpy_reference(spark):
 
 def test_block_tiles_matches_scalar_reference(spark, images, images_pdf):
     """r8 guard: the mapInArrow block_tiles (Arrow-buffer payload slices,
-    vectorized ragged-RLE decode, chunked groups) must match a
-    per-image scalar reference on every format/shape in the fixture."""
-    from fiona_spark import codec
+    batch decode core, chunked groups) must match a per-image scalar
+    reference decode on every format/shape in the fixture."""
+    from .test_kernels import _decode_reference
 
     out = spatial.block_tiles(images, res=12, block=8).toPandas()
     got = {(r.image_id, r.bx, r.by): (r.cell, r.mean_lum)
            for r in out.itertuples()}
     n_exp = 0
     for row in images_pdf.itertuples():
-        img = codec.decode(row.bytes, row.fmt, row.w, row.h)
+        img = _decode_reference(row.bytes, row.fmt, row.w, row.h)
         nbx, nby = row.w // 8, row.h // 8
         g = img.astype(np.float64).mean(axis=2)
         for by in range(nby):
@@ -262,6 +262,24 @@ def test_block_tiles_matches_scalar_reference(spark, images, images_pdf):
                 assert gcell == cell
                 assert abs(glum - lum) < 1e-9
     assert len(got) == n_exp
+
+
+def test_block_tiles_drops_null_rows(spark, images):
+    """Rows with a null payload, fmt, w or h are dropped before the
+    Python boundary: the tiles equal those of the remaining rows."""
+    from pyspark.sql import functions as F
+
+    from .test_new_ops import _with_null
+
+    sub = images.filter("image_id < 'img0000000008'")
+    ids = [f"img{i:010d}" for i in range(4)]
+    nulled = sub
+    for col, iid in zip(("bytes", "fmt", "w", "h"), ids):
+        nulled = _with_null(nulled, col, iid)
+    got = sorted(map(tuple, spatial.block_tiles(nulled, res=12).collect()))
+    want = sorted(map(tuple, spatial.block_tiles(
+        sub.filter(~F.col("image_id").isin(ids)), res=12).collect()))
+    assert got == want and len(want) > 0
 
 
 # --- filters / aggregates (Fiona parity semantics) -------------------------

@@ -75,50 +75,6 @@ def _close_ring(xs: np.ndarray, ys: np.ndarray):
     return xs, ys
 
 
-def points_in_polygon(px: np.ndarray, py: np.ndarray,
-                      poly_x: np.ndarray, poly_y: np.ndarray) -> np.ndarray:
-    """Ray-cast many points against ONE polygon ring. Vectorized over points.
-
-    O(n_points * n_vertices) as a numpy broadcast.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    xs, ys = _close_ring(np.asarray(poly_x, dtype=np.float64),
-                         np.asarray(poly_y, dtype=np.float64))
-    x0, y0 = xs[:-1], ys[:-1]
-    x1, y1 = xs[1:], ys[1:]
-    # (edges, points) broadcast
-    cond = (y0[:, None] > py[None, :]) != (y1[:, None] > py[None, :])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0[:, None] + (py[None, :] - y0[:, None]) / (y1[:, None] - y0[:, None]) * (x1[:, None] - x0[:, None])
-    crossing = cond & (px[None, :] < xint)
-    return (crossing.sum(axis=0) % 2).astype(bool)
-
-
-def points_in_polygons_pairs(px, py, polys_x, polys_y) -> np.ndarray:
-    """Row-aligned PIP: point i against polygon i (candidate-pair refinement).
-
-    ``polys_x/ys`` are lists/object-arrays of per-row vertex arrays.
-    Groups rows by identical polygon id is the caller's job; this kernel
-    just loops polygons (vertex counts vary) but vectorizes the edges.
-    """
-    n = len(px)
-    out = np.zeros(n, dtype=bool)
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    for i in range(n):
-        xs, ys = _close_ring(np.asarray(polys_x[i], dtype=np.float64),
-                             np.asarray(polys_y[i], dtype=np.float64))
-        x0, y0, x1, y1 = xs[:-1], ys[:-1], xs[1:], ys[1:]
-        cond = (y0 > py[i]) != (y1 > py[i])
-        if not cond.any():
-            continue
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = x0[cond] + (py[i] - y0[cond]) / (y1[cond] - y0[cond]) * (x1[cond] - x0[cond])
-        out[i] = (px[i] < xint).sum() % 2 == 1
-    return out
-
-
 def pack_rings(xs_list, ys_list):
     """Pack ragged rings into flat arrays: (offs, flat_x, flat_y).
 
@@ -132,43 +88,6 @@ def pack_rings(xs_list, ys_list):
     flat_y = np.concatenate([np.asarray(v, np.float64) for v in ys_list]) \
         if len(ys_list) else np.empty(0)
     return offs, flat_x, flat_y
-
-
-def points_in_polygons_packed(px, py, ridx, offs, flat_x, flat_y) -> np.ndarray:
-    """Row-aligned PIP against PACKED rings, fully vectorized.
-
-    ``ridx[i]`` selects the ring for point i.  Unlike the per-group
-    kernel this has NO per-polygon Python overhead — when every
-    candidate row references a different polygon (large zone layers:
-    measured 111M candidates over 134k zones, ~1 row/group) the grouped
-    kernel degraded to ~45us/row of Python; this enumeration of all
-    (row, edge) pairs with one crossing test + bincount parity is
-    ~1000x denser.  Crossing rule identical to points_in_polygon:
-    (y0 > py) != (y1 > py), strict px < x-intersection.
-    """
-    px = np.asarray(px, np.float64)
-    py = np.asarray(py, np.float64)
-    ridx = np.asarray(ridx, np.int64)
-    n = len(px)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    cnt = (offs[ridx + 1] - offs[ridx]).astype(np.int64)
-    total = int(cnt.sum())
-    row = np.repeat(np.arange(n, dtype=np.int64), cnt)
-    starts = np.cumsum(cnt) - cnt
-    local = np.arange(total, dtype=np.int64) - starts[row]
-    base = offs[ridx][row]
-    v0 = base + local
-    v1 = base + (local + 1) % cnt[row]    # closing edge included
-    x0, y0 = flat_x[v0], flat_y[v0]
-    x1, y1 = flat_x[v1], flat_y[v1]
-    pye, pxe = py[row], px[row]
-    cond = (y0 > pye) != (y1 > pye)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0 + (pye - y0) / (y1 - y0) * (x1 - x0)
-    crossing = cond & (pxe < xint)
-    parity = np.bincount(row[crossing], minlength=n)
-    return (parity % 2).astype(bool)
 
 
 def pack_feature_edges(rings_xs, rings_ys):
@@ -192,15 +111,10 @@ def pack_feature_edges(rings_xs, rings_ys):
     ring_nx = np.fromiter((len(rl) for rl in rings_xs), np.int64, nfeat)
     xa = [np.asarray(r, np.float64) for rl in rings_xs for r in rl]
     ya = [np.asarray(r, np.float64) for rl in rings_ys for r in rl]
-    nr = len(xa)
-    if nr == 0 or sum(len(a) for a in xa) == 0:
-        edge_offs = np.zeros(nfeat + 1, dtype=np.int64)
-        z = np.empty(0)
-        return edge_offs, z, z, z, z
-    lens0 = np.fromiter((len(a) for a in xa), np.int64, nr)
-    cx = np.concatenate(xa)
-    cy = np.concatenate(ya)
-    return pack_feature_edges_flat(cx, cy, lens0, ring_nx)
+    lens0 = np.fromiter((len(a) for a in xa), np.int64, len(xa))
+    return pack_feature_edges_flat(np.concatenate([np.empty(0), *xa]),
+                                   np.concatenate([np.empty(0), *ya]),
+                                   lens0, ring_nx)
 
 
 def pack_feature_edges_flat(cx, cy, ring_lens, ring_nx):
@@ -259,24 +173,23 @@ PIP_EDGE_CHUNK = 1 << 20
 
 
 def points_in_edges_packed(px, py, fidx, edge_offs, ex0, ey0, ex1, ey1) -> np.ndarray:
-    """Row-aligned even-odd PIP against PACKED EDGES, fully vectorized.
+    """Row-aligned even-odd PIP against PACKED EDGES — the package's
+    ONE crossing test (:func:`points_in_rings` and
+    :func:`points_in_features` wrap it for every other caller).
 
-    The multi-ring generalization of :func:`points_in_polygons_packed`:
-    parity is counted across ALL edges of the feature, so interior rings
-    (holes) exclude points and disjoint MultiPolygon parts include them
-    — the reference's full geometry model (`fiona/model.py:18-115`
-    normalizes OGR types to these shapes).  Crossing rule identical to
-    points_in_polygon: (y0 > py) != (y1 > py), strict px < x-intersection.
+    Point i is tested against feature ``fidx[i]`` with parity counted
+    across ALL its edges, so holes exclude points and disjoint
+    MultiPolygon parts include them (`fiona/model.py:18-115`).
+    Crossing rule: (y0 > py) != (y1 > py), strict px < x-intersection;
+    a NaN point is inside nothing.
 
     r8: processed in bounded edge chunks (PIP_EDGE_CHUNK) so peak
-    temporaries stay ~8-16 MB instead of growing with the candidate
-    batch (45+ MB arrays were mmap/munmap'd per batch by glibc; on this
-    VM first-touch of fresh pages is served host-side at ~300 MB/s
-    SERIALIZED, which made the 32-worker first wave ~30-80 s/batch —
-    bounded chunks land on the reused heap and touch no new pages after
-    warmup).  The x-intersection divide runs only where the y-span
-    condition holds (~2/nv of edges) — same divides on the same values,
-    so the result is bit-identical to the unchunked full-width form.
+    temporaries stay ~8-16 MB however large the batch or the feature
+    (fresh per-batch temporaries were mmap/munmap'd by glibc, and
+    first touch of fresh pages is slow and serialized on some hosts).
+    The x-intersection divide runs only where the y-span condition
+    holds — same divides on the same values, so the result is
+    bit-identical to the unchunked full-width form.
     """
     px = np.asarray(px, np.float64)
     py = np.asarray(py, np.float64)
@@ -322,11 +235,72 @@ def points_in_edges_packed(px, py, fidx, edge_offs, ex0, ey0, ex1, ey1) -> np.nd
 
 
 def points_in_rings(px, py, rings_x, rings_y) -> np.ndarray:
-    """Many points against ONE multi-ring feature (even-odd across rings)."""
+    """Many points against ONE multi-ring feature (even-odd across
+    rings): pack the feature, then run :func:`points_in_edges_packed`."""
+    px = np.asarray(px, np.float64)
+    return points_in_edges_packed(px, py, np.zeros(len(px), np.int64),
+                                  *pack_feature_edges([rings_x], [rings_y]))
+
+
+def feature_vertex_bounds(edges):
+    """Per-feature VERTEX bounds and antimeridian wrap flags of packed
+    edges (``edges`` = the :func:`pack_feature_edges` tuple), by one
+    segmented reduce: (fxmin, fymin, fxmax, fymax, wrap).
+
+    A feature without edges gets (+inf, -inf) bounds and no wrap, so
+    :func:`points_in_features` drops its every candidate (no edges:
+    parity 0 anyway).  A NaN vertex makes its feature's bounds NaN.
+    """
+    edge_offs, ex0, ey0 = edges[:3]
+    nf = len(edge_offs) - 1
+    fxmin, fymin = np.full(nf, np.inf), np.full(nf, np.inf)
+    fxmax, fymax = np.full(nf, -np.inf), np.full(nf, -np.inf)
+    nonempty = edge_offs[:-1] < edge_offs[1:]
+    if nonempty.any():
+        seg = edge_offs[:-1][nonempty]
+        fxmin[nonempty] = np.minimum.reduceat(ex0, seg)
+        fxmax[nonempty] = np.maximum.reduceat(ex0, seg)
+        fymin[nonempty] = np.minimum.reduceat(ey0, seg)
+        fymax[nonempty] = np.maximum.reduceat(ey0, seg)
+    wrap = (fxmax > 180.0) | (fxmin < -180.0)
+    return fxmin, fymin, fxmax, fymax, wrap
+
+
+def points_in_features(px, py, fidx, edges, fbounds) -> np.ndarray:
+    """Exact refine of candidate pairs: is point i inside feature
+    ``fidx[i]``?  ``edges`` is the :func:`pack_feature_edges` tuple and
+    ``fbounds`` its :func:`feature_vertex_bounds`; both ``pip_join``
+    lanes call this.  Returns a bool mask aligned with the candidates.
+
+    Exact-bounds prefilter (r8): a candidate strictly outside its
+    feature's VERTEX bounds provably gets parity 0 from the even-odd
+    raycast (y: no edge spans py, both comparisons are strict and
+    rounding-free; x: outside [fxmin, fxmax] every spanning edge's
+    crossings pair up — the 1e-9 margin covers x-intersection rounding,
+    a few 1e-13 at degree-scale coordinates), so dropping it BEFORE the
+    edge expansion is bit-neutral.  Antimeridian features (vertices
+    past +/-180) skip the filter: their misses are retested with the
+    point shifted by +360, then -360.
+    """
+    px = np.asarray(px, np.float64)
+    py = np.asarray(py, np.float64)
+    fidx = np.asarray(fidx, np.int64)
+    fxmin, fymin, fxmax, fymax, wrap = fbounds
+    keep = wrap[fidx] | ((py >= fymin[fidx]) & (py <= fymax[fidx])
+                         & (px >= fxmin[fidx] - 1e-9)
+                         & (px <= fxmax[fidx] + 1e-9))
+    rx, ry, zi = px[keep], py[keep], fidx[keep]
+    hit = points_in_edges_packed(rx, ry, zi, *edges)
+    pend = np.flatnonzero(wrap[zi] & ~hit)
+    for shift in (360.0, -360.0):
+        if not len(pend):
+            break
+        h2 = points_in_edges_packed(rx[pend] + shift, ry[pend], zi[pend],
+                                    *edges)
+        hit[pend] |= h2
+        pend = pend[~h2]
     out = np.zeros(len(px), dtype=bool)
-    for rx, ry in zip(rings_x, rings_y):
-        out ^= points_in_polygon(px, py, np.asarray(rx, np.float64),
-                                 np.asarray(ry, np.float64))
+    out[keep] = hit
     return out
 
 
@@ -1079,9 +1053,13 @@ def _band_pieces(xs, ys, dist, segs):
 
 def _feature_ring_depths(rings):
     """Nesting depth per ring of one feature, by the off-boundary
-    VERTEX probe (see feature_union: interior points are wrong for a
-    shell with nested holes; on-boundary vertices are
-    parity-dependent)."""
+    VERTEX probe.  Ring i is inside ring j iff a vertex of ring i that
+    does not lie on ring j's boundary is inside ring j — within one
+    feature rings never cross, so containment is all-or-nothing.  The
+    probe must NOT be an interior point of ring i (it can land inside
+    the shell's own nested hole — the r4 donut mis-orientation), nor an
+    on-boundary vertex (parity-dependent when a hole shares a vertex
+    with its shell — the r3 advice)."""
     depths = []
     for i, (xs, ys) in enumerate(rings):
         depth = 0
@@ -1091,8 +1069,8 @@ def _feature_ring_depths(rings):
             for k in range(len(xs)):
                 if not _on_ring_boundary(float(xs[k]), float(ys[k]),
                                          ox, oy):
-                    depth += int(points_in_polygon(
-                        xs[k:k + 1], ys[k:k + 1], ox, oy)[0])
+                    depth += int(points_in_rings(
+                        xs[k:k + 1], ys[k:k + 1], [ox], [oy])[0])
                     break
             else:
                 raise UnionDegeneracyError(
@@ -1128,9 +1106,8 @@ def buffer_feature(rings_xs, rings_ys, dist: float, segs: int = 32):
         return [], []
     if dist == 0:
         return [r[0].copy() for r in rings], [r[1].copy() for r in rings]
-    depths = _feature_ring_depths(rings) if len(rings) > 1         else [0]
     oriented = []
-    for (xs, ys), depth in zip(rings, depths):
+    for (xs, ys), depth in zip(rings, _feature_ring_depths(rings)):
         signed = float(np.sum(xs * np.roll(ys, -1)
                               - np.roll(xs, -1) * ys))
         # interior-on-left: outer (even depth) CCW, hole (odd) CW
@@ -1437,29 +1414,7 @@ def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
             k = np.lexsort((ys, xs))[0]
             rings.append((np.roll(xs, -k), np.roll(ys, -k)))
         oriented = []
-        for i, (xs, ys) in enumerate(rings):
-            # Nesting depth: ring i is inside ring j iff a VERTEX of
-            # ring i that does not lie on ring j's boundary is inside
-            # ring j — within one feature rings never cross, so
-            # containment is all-or-nothing and any off-boundary vertex
-            # decides it.  Probing must NOT use an interior point of
-            # ring i (an interior point of a shell can land inside its
-            # own nested hole — the r4 donut mis-orientation), and must
-            # NOT use an on-boundary vertex (parity-dependent when a
-            # hole shares a vertex with its shell — the r3 advice).
-            depth = 0
-            for j, (ox, oy) in enumerate(rings):
-                if j == i:
-                    continue
-                for k in range(len(xs)):
-                    if not _on_ring_boundary(float(xs[k]), float(ys[k]),
-                                             ox, oy):
-                        depth += int(points_in_polygon(
-                            xs[k:k + 1], ys[k:k + 1], ox, oy)[0])
-                        break
-                else:
-                    raise UnionDegeneracyError(
-                        "ring vertices all on a sibling ring boundary")
+        for (xs, ys), depth in zip(rings, _feature_ring_depths(rings)):
             signed = float(np.sum(xs * np.roll(ys, -1)
                                   - np.roll(xs, -1) * ys)) * 0.5
             if (signed > 0) != (depth % 2 == 0):

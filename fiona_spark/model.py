@@ -265,8 +265,8 @@ def geometry_from_rings(geom_type: str, rings_xs, rings_ys) -> Geometry:
                 k = next((k for k in range(len(hx))
                           if not _g._on_ring_boundary(
                               float(hx[k]), float(hy[k]), sx, sy)), 0)
-                if _g.points_in_polygon(hx[k:k + 1], hy[k:k + 1],
-                                        sx, sy)[0]:
+                if _g.points_in_rings(hx[k:k + 1], hy[k:k + 1],
+                                      [sx], [sy])[0]:
                     area = abs(0.5 * float(np.sum(
                         sx * np.roll(sy, -1) - np.roll(sx, -1) * sy)))
                     if area < best_area:

@@ -71,8 +71,9 @@ def filter_mask(df: DataFrame, mask_xs, mask_ys, lng: str = "lng", lat: str = "l
 
     @F.pandas_udf(T.BooleanType())
     def pip(px: pd.Series, py: pd.Series) -> pd.Series:
-        return pd.Series(geom.points_in_polygon(px.to_numpy(np.float64),
-                                                py.to_numpy(np.float64), xs, ys))
+        return pd.Series(geom.points_in_rings(px.to_numpy(np.float64),
+                                              py.to_numpy(np.float64),
+                                              [xs], [ys]))
 
     return env.filter(pip(lng, lat))
 

@@ -128,37 +128,44 @@ def salt_sides(probe: DataFrame, build: DataFrame, hot: DataFrame,
 # PIP join (point-in-polygon)
 # ---------------------------------------------------------------------------
 
+def _check_zones(keys, bad):
+    """The zone-ring rule of both ``pip_join`` lanes: raise ValueError
+    naming the first zone flagged in ``bad`` (a null ring, or a null or
+    NaN vertex).  Null geometries never get here — ``pip_join`` drops
+    them in the plan."""
+    if bad.any():
+        raise ValueError(f"pip_join: zone {keys.iloc[int(np.argmax(bad))]!r} "
+                         "has a null ring or a null or NaN vertex")
+
+
 def _pip_cogroup_fn(lng, lat, ring_cols, multi, out_cols):
-    """Per-zone residual for the cogrouped shuffled lane: one vectorized
-    (points x rings) even-odd ray-cast per cogroup (multi-ring: holes and
-    MultiPolygon parts XOR per ring); antimeridian zones re-test misses
-    with +/-360-shifted points; an empty ring contains no point, as on
-    the fused lane.  Never per-row Python — the whole candidate block
-    of a zone is one numpy call."""
+    """Per-zone residual for the cogrouped shuffled lane: the zone's
+    rings are packed with :func:`geom.pack_feature_edges` and its whole
+    candidate block is refined by ONE :func:`geom.points_in_features`
+    call — the fused lane's refine (exact-bounds prefilter, even-odd
+    raycast, +/-360 antimeridian retest), so both lanes agree bit for
+    bit.  The zone's rings are checked before the no-candidates early
+    return, so a bad zone raises whether or not any point reaches it.
+    Never per-row Python."""
     rx_col, ry_col = ring_cols
 
     def fn(cpdf: pd.DataFrame, zpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cpdf) or not len(zpdf):
+        if not len(zpdf):
             return cpdf.iloc[0:0][out_cols]
-        if multi:
-            rings_x = [np.asarray(r, np.float64) for r in zpdf[rx_col].iloc[0]]
-            rings_y = [np.asarray(r, np.float64) for r in zpdf[ry_col].iloc[0]]
-        else:
-            rings_x = [np.asarray(zpdf[rx_col].iloc[0], np.float64)]
-            rings_y = [np.asarray(zpdf[ry_col].iloc[0], np.float64)]
+        rings_x, rings_y = zpdf[rx_col].iloc[0], zpdf[ry_col].iloc[0]
+        if not multi:
+            rings_x, rings_y = [rings_x], [rings_y]
+        _check_zones(zpdf["_rkey"], np.array(
+            [any(r is None for r in (*rings_x, *rings_y))]))
+        edges = geom.pack_feature_edges([rings_x], [rings_y])
+        fb = geom.feature_vertex_bounds(edges)   # NaN from a null/NaN vertex
+        _check_zones(zpdf["_rkey"], np.isnan(fb[0]) | np.isnan(fb[1]))
+        if not len(cpdf):
+            return cpdf.iloc[0:0][out_cols]
         px = cpdf[lng].to_numpy(np.float64)
-        py = cpdf[lat].to_numpy(np.float64)
-        hit = geom.points_in_rings(px, py, rings_x, rings_y)
-        allx = np.concatenate([np.empty(0), *rings_x])
-        if len(allx) and (allx.max() > 180.0
-                          or allx.min() < -180.0):  # antimeridian stradder
-            for shift in (360.0, -360.0):
-                pend = np.flatnonzero(~hit)
-                if not len(pend):
-                    break
-                hit[pend] |= geom.points_in_rings(
-                    px[pend] + shift, py[pend], rings_x, rings_y)
-        return cpdf.loc[np.asarray(hit, bool), out_cols]
+        hit = geom.points_in_features(px, cpdf[lat].to_numpy(np.float64),
+                                      np.zeros(len(px), np.int64), edges, fb)
+        return cpdf.loc[hit, out_cols]
 
     return fn
 
@@ -202,20 +209,21 @@ def _res_from_stats(n: int, w: float, h: float,
 MAX_BROADCAST_ZONES = 2_000_000
 
 
-def _zone_prep(zones: DataFrame, zone_cols, res: int | None,
+def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
                row_guard: int | None = None):
     """Driver-side zone preparation for the fused PIP lane: collect the
     (small) zone layer once, enumerate covering cells (antimeridian wrap
-    included), pack rings into flat edge arrays.
+    included), pack rings into flat edge arrays straight from the Arrow
+    list offsets, and take their vertex bounds under the zone-ring rule
+    of :func:`_check_zones`.  ``zones`` holds no null ring column
+    (``pip_join`` drops those rows).
 
     ``row_guard``: collect at most guard+1 rows; returns None if the
     layer exceeds the guard (caller falls back to the shuffled plan) —
     one job instead of a count() followed by a collect.
 
-    Returns (zpdf, res, cov_ridx, cov_cell, edge pack..., feat_wrap).
+    Returns (zpdf, res, cov_ridx, cov_cell, edges, fbounds).
     """
-    multi = "rings_xs" in zones.columns
-    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
     sel = zones.select(*zone_cols, *ring_cols,
                        "xmin", "ymin", "xmax", "ymax")
     # r8: collect via Arrow (one toArrow job) — ring columns arrive as
@@ -277,53 +285,32 @@ def _zone_prep(zones: DataFrame, zone_cols, res: int | None,
     cov_cell = np.concatenate([c for _, c in parts]) if parts else np.empty(0, np.int64)
 
     def _flat_rings(name):
-        """(flat_values, ring_lens, ring_nx) from an Arrow list column;
-        None when nulls force the object fallback."""
+        """(flat_values, ring_lens, ring_nx, null-ring features) from an
+        Arrow list column; a null vertex reads as NaN."""
         col = ztbl.column(name).combine_chunks()
-        if col.null_count:
-            return None
-        if multi:
-            inner = col.flatten()          # list<double> rings, in order
-            if inner.null_count:
-                return None
-            flat = inner.flatten()
-            if flat.null_count:
-                return None
+        if ring_cols[0] == "rings_xs":
             ring_nx = np.diff(col.offsets.to_numpy().astype(np.int64))
-            ring_lens = np.diff(inner.offsets.to_numpy().astype(np.int64))
+            col = col.flatten()          # list<double> rings, in order
+            null_ring = np.repeat(np.arange(len(ring_nx)), ring_nx)[
+                col.is_null().to_numpy(zero_copy_only=False)]
         else:
-            flat = col.flatten()
-            if flat.null_count:
-                return None
             ring_nx = np.ones(len(col), dtype=np.int64)
-            ring_lens = np.diff(col.offsets.to_numpy().astype(np.int64))
-        return (np.asarray(flat.to_numpy(zero_copy_only=False), np.float64),
-                ring_lens, ring_nx)
+            null_ring = []
+        ring_lens = np.diff(col.offsets.to_numpy().astype(np.int64))
+        return (np.asarray(col.flatten().to_numpy(zero_copy_only=False),
+                           np.float64), ring_lens, ring_nx, null_ring)
 
     fx = _flat_rings(ring_cols[0])
     fy = _flat_rings(ring_cols[1])
-    if fx is not None and fy is not None:
-        edge_offs, ex0, ey0, ex1, ey1 = geom.pack_feature_edges_flat(
-            fx[0], fy[0], fx[1], fx[2])
-    else:
-        rpdf = ztbl.select(list(ring_cols)).to_pandas()
-        if multi:
-            rings_xs = rpdf[ring_cols[0]].tolist()
-            rings_ys = rpdf[ring_cols[1]].tolist()
-        else:
-            rings_xs = [[v] for v in rpdf[ring_cols[0]].tolist()]
-            rings_ys = [[v] for v in rpdf[ring_cols[1]].tolist()]
-        edge_offs, ex0, ey0, ex1, ey1 = geom.pack_feature_edges(
-            rings_xs, rings_ys)
-    # per-feature wrap flags via segmented reduce (no Python loop)
-    feat_wrap = np.zeros(len(zpdf), dtype=bool)
-    nonempty = edge_offs[:-1] < edge_offs[1:]
-    if len(ex0) and nonempty.any():
-        seg = edge_offs[:-1][nonempty]
-        fmax = np.maximum.reduceat(ex0, seg)
-        fmin = np.minimum.reduceat(ex0, seg)
-        feat_wrap[nonempty] = (fmax > 180.0) | (fmin < -180.0)
-    return zpdf, res, cov_ridx, cov_cell, edge_offs, ex0, ey0, ex1, ey1, feat_wrap
+    null_ring = np.zeros(len(zpdf), dtype=bool)
+    null_ring[fx[3]] = True
+    null_ring[fy[3]] = True
+    _check_zones(zpdf[zone_cols[0]], null_ring)
+    edges = geom.pack_feature_edges_flat(fx[0], fy[0], fx[1], fx[2])
+    fbounds = geom.feature_vertex_bounds(edges)  # NaN from a null/NaN vertex
+    _check_zones(zpdf[zone_cols[0]],
+                 np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
+    return zpdf, res, cov_ridx, cov_cell, edges, fbounds
 
 
 def _pip_fused_udf(bc, res: int):
@@ -331,10 +318,11 @@ def _pip_fused_udf(bc, res: int):
 
     Each executor receives, via ONE torrent sc.broadcast (parallel to
     executors, pickled once — never a driver-built JVM hash relation):
-    the covering table sorted by cell (cell_sorted, zidx_sorted) and the
-    packed zone edges.  Per batch: cell id (numpy closed form, identical
-    to the SQL form), searchsorted range probe for candidates, even-odd
-    residual, per-row matched-zone arrays out.
+    the covering table sorted by cell (cell_sorted, zidx_sorted), the
+    packed zone edges and their vertex bounds.  Per batch: cell id
+    (numpy closed form, identical to the SQL form), searchsorted range
+    probe for candidates, the shared :func:`geom.points_in_features`
+    refine, per-row matched-zone arrays out.
 
     Why fused: a JVM broadcast cell equi-join builds its broadcast
     exchange single-threaded on the driver and re-runs it per action —
@@ -347,8 +335,7 @@ def _pip_fused_udf(bc, res: int):
     """
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def matches(px: pd.Series, py: pd.Series) -> pd.Series:
-        (cell_sorted, zidx_sorted, edge_offs, ex0, ey0, ex1, ey1,
-         feat_wrap, fxmin, fymin, fxmax, fymax) = bc.value
+        cell_sorted, zidx_sorted, edges, fbounds = bc.value
         pxv = px.to_numpy(np.float64)
         pyv = py.to_numpy(np.float64)
         n = len(pxv)
@@ -363,31 +350,7 @@ def _pip_fused_udf(bc, res: int):
         starts = np.cumsum(cnt) - cnt
         pos = lo[row] + (np.arange(total, dtype=np.int64) - starts[row])
         zi = zidx_sorted[pos]
-        rx, ry = pxv[row], pyv[row]
-        # exact-bbox prefilter (r8): candidates strictly outside the
-        # feature's VERTEX bounds provably get parity 0 from the
-        # even-odd raycast (y: no edge spans py, both comparisons are
-        # strict and rounding-free; x: outside [fxmin, fxmax] every
-        # spanning edge's crossings pair up — the 1e-9 margin covers
-        # x-intersection rounding, which is <= a few 1e-13), so
-        # dropping them BEFORE the ~20x edge expansion is bit-neutral.
-        # Antimeridian features skip the filter: their hits can sit
-        # +/-360 outside the raw bounds (retested below).
-        keep = feat_wrap[zi] | ((ry >= fymin[zi]) & (ry <= fymax[zi])
-                                & (rx >= fxmin[zi] - 1e-9)
-                                & (rx <= fxmax[zi] + 1e-9))
-        row, zi, rx, ry = row[keep], zi[keep], rx[keep], ry[keep]
-        hit = geom.points_in_edges_packed(rx, ry, zi, edge_offs,
-                                          ex0, ey0, ex1, ey1)
-        pend = np.flatnonzero(feat_wrap[zi] & ~hit)
-        for shift in (360.0, -360.0):
-            if not len(pend):
-                break
-            h2 = geom.points_in_edges_packed(rx[pend] + shift, ry[pend],
-                                             zi[pend], edge_offs,
-                                             ex0, ey0, ex1, ey1)
-            hit[pend] |= h2
-            pend = pend[~h2]
+        hit = geom.points_in_features(pxv[row], pyv[row], zi, edges, fbounds)
         # per-row matched-zone arrays (row is sorted, split is O(n))
         out_cnt = np.bincount(row[hit], minlength=n)
         return pd.Series(np.split(zi[hit], np.cumsum(out_cnt)[:-1]))
@@ -407,8 +370,14 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
 
     Geometry model: single-ring zones carry (xs, ys); multi-ring zones
     (holes, MultiPolygon — `fiona/model.py:18-115` geometry normalization)
-    carry (rings_xs, rings_ys) as array<array<double>>; the even-odd
-    residual treats both identically.  An empty ring contains no point.
+    carry (rings_xs, rings_ys) as array<array<double>>; both lanes refine
+    through the one :func:`geom.points_in_features` call, so they treat
+    both identically.  An empty ring contains no point.  A null ring
+    column is a null geometry and contains no point (OGR's spatial
+    filter never returns a feature without one): those zones are dropped
+    in the plan.  A null ring inside ``rings_xs``, or a null or NaN
+    vertex, raises ``ValueError`` naming the zone key, on both lanes,
+    whether or not any point reaches that zone.
 
     Two lanes, chosen by one row guard on the zone layer:
       * at most ``max_broadcast_zones`` rows: the FUSED lane.  The zone
@@ -432,37 +401,23 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     -> unsalted.  An int forces that many salts (0 disables both).
     """
     spark = points.sparkSession
+    multi = "rings_xs" in zones.columns
+    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
+    zones = zones.dropna(subset=list(ring_cols))
     # the size guard rides the collect: limit(max+1) is ONE job; a
     # count() would be a second full pass over zones
-    prep = _zone_prep(zones, zone_cols, res, row_guard=max_broadcast_zones)
+    prep = _zone_prep(zones, zone_cols, ring_cols, res,
+                      row_guard=max_broadcast_zones)
     if prep is not None:
         # FUSED lane: covering probe + residual in one Arrow pass, zone
         # structures via one torrent broadcast — no JVM
         # broadcast-exchange build (a measured flat ~4-6 s single-thread
         # driver cost per action at 33.5k zones that capped N->4N
         # scaling efficiency).  Skew-neutral: no join shuffle at all.
-        (zpdf, res, cov_ridx, cov_cell, edge_offs, ex0, ey0, ex1, ey1,
-         feat_wrap) = prep
+        zpdf, res, cov_ridx, cov_cell, edges, fbounds = prep
         order = np.argsort(cov_cell, kind="stable")
-        # per-feature vertex bounds FROM THE PACKED EDGES (not the table's
-        # bbox columns) so the UDF's bbox prefilter is provably consistent
-        # with the raycast geometry; empty features get (+inf, -inf) so
-        # every candidate is dropped (no edges -> parity 0 anyway)
-        nf = len(zpdf)
-        fxmin = np.full(nf, np.inf)
-        fymin = np.full(nf, np.inf)
-        fxmax = np.full(nf, -np.inf)
-        fymax = np.full(nf, -np.inf)
-        nonempty = edge_offs[:-1] < edge_offs[1:]
-        if len(ex0) and nonempty.any():
-            seg = edge_offs[:-1][nonempty]
-            fxmin[nonempty] = np.minimum.reduceat(ex0, seg)
-            fxmax[nonempty] = np.maximum.reduceat(ex0, seg)
-            fymin[nonempty] = np.minimum.reduceat(ey0, seg)
-            fymax[nonempty] = np.maximum.reduceat(ey0, seg)
         bc = spark.sparkContext.broadcast(
-            (cov_cell[order], cov_ridx[order], edge_offs, ex0, ey0, ex1,
-             ey1, feat_wrap, fxmin, fymin, fxmax, fymax))
+            (cov_cell[order], cov_ridx[order], edges, fbounds))
         matches = _pip_fused_udf(bc, res)
         hits = (points.select(*point_cols, lng, lat)
                 .withColumn("_zidx", F.explode(matches(F.col(lng),
@@ -480,8 +435,6 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     # explode across the cluster before the cell equi-join
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     zones = zones.repartition(n_shuffle)
-    multi = "rings_xs" in zones.columns
-    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
 
     # Shuffled regime v2 (zone side too large to broadcast), cogrouped:
     # rings NEVER ride candidate rows.  Phase 1 is a LIGHT cell

@@ -30,6 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .. import geom
 from ..errors import DriverError
 
 SHP_NULL = 0
@@ -207,18 +208,6 @@ def _signed_area2(r: np.ndarray) -> float:
     return float(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
 
 
-def _point_in_ring(px: float, py: float, r: np.ndarray) -> bool:
-    """Even-odd containment of a point in a closed ring (vectorized)."""
-    x0, y0 = r[:-1, 0], r[:-1, 1]
-    x1, y1 = r[1:, 0], r[1:, 1]
-    straddle = (y0 > py) != (y1 > py)
-    if not straddle.any():
-        return False
-    with np.errstate(divide="ignore", invalid="ignore"):
-        xint = x0 + (py - y0) * (x1 - x0) / (y1 - y0)
-    return bool(np.count_nonzero(straddle & (px < xint)) % 2)
-
-
 def _orient_esri(rings: list[np.ndarray]) -> list[np.ndarray]:
     """Enforce the ESRI polygon convention — outer rings CLOCKWISE,
     holes COUNTERCLOCKWISE (Shapefile Technical Description p.12).
@@ -234,10 +223,10 @@ def _orient_esri(rings: list[np.ndarray]) -> list[np.ndarray]:
     else:
         depth = []
         for i, r in enumerate(rings):
-            px, py = float(r[0, 0]), float(r[0, 1])
             depth.append(sum(
                 1 for j, o in enumerate(rings)
-                if j != i and len(o) >= 4 and _point_in_ring(px, py, o)))
+                if j != i and len(o) >= 4 and geom.points_in_rings(
+                    r[:1, 0], r[:1, 1], [o[:, 0]], [o[:, 1]])[0]))
     out = []
     for r, d in zip(rings, depth):
         a2 = _signed_area2(r)

@@ -102,12 +102,33 @@ def test_cell_id_sql_matches_numpy_duckdb():
 # geom
 # ---------------------------------------------------------------------------
 
+def _pip_reference(px, py, poly_x, poly_y):
+    """Spec reference for the packed PIP kernel: many points against ONE
+    ring as one (edges x points) numpy broadcast.  The ring is closed
+    unless its last vertex repeats its first; an empty ring contains
+    nothing.  Same crossing rule and x-intersection expression as
+    ``geom.points_in_edges_packed``, so results compare with ``==``."""
+    px = np.asarray(px, dtype=np.float64)
+    py = np.asarray(py, dtype=np.float64)
+    xs = np.asarray(poly_x, dtype=np.float64)
+    ys = np.asarray(poly_y, dtype=np.float64)
+    if len(xs) and (xs[0] != xs[-1] or ys[0] != ys[-1]):
+        xs, ys = np.append(xs, xs[0]), np.append(ys, ys[0])
+    x0, y0 = xs[:-1, None], ys[:-1, None]
+    x1, y1 = xs[1:, None], ys[1:, None]
+    cond = (y0 > py[None, :]) != (y1 > py[None, :])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = x0 + (py[None, :] - y0) / (y1 - y0) * (x1 - x0)
+    crossing = cond & (px[None, :] < xint)
+    return (crossing.sum(axis=0) % 2).astype(bool)
+
+
 def test_pip_square():
     xs = np.array([0.0, 10.0, 10.0, 0.0])
     ys = np.array([0.0, 0.0, 10.0, 10.0])
     px = np.array([5.0, 15.0, -1.0, 9.99])
     py = np.array([5.0, 5.0, 5.0, 0.01])
-    assert geom.points_in_polygon(px, py, xs, ys).tolist() == [True, False, False, True]
+    assert geom.points_in_rings(px, py, [xs], [ys]).tolist() == [True, False, False, True]
 
 
 def test_pip_concave():
@@ -116,17 +137,99 @@ def test_pip_concave():
     ys = np.array([0, 0, 2, 2, 4, 4], dtype=float)
     px = np.array([1.0, 3.0, 3.0, 1.0])
     py = np.array([1.0, 1.0, 3.0, 3.0])
-    assert geom.points_in_polygon(px, py, xs, ys).tolist() == [True, True, False, True]
+    assert geom.points_in_rings(px, py, [xs], [ys]).tolist() == [True, True, False, True]
 
 
-def test_pip_pairs_matches_single():
-    rng = np.random.default_rng(11)
-    xs = rng.uniform(0, 10, 8); ys = rng.uniform(0, 10, 8)
-    hx, hy = geom.convex_hull(xs, ys)
-    px = rng.uniform(-2, 12, 300); py = rng.uniform(-2, 12, 300)
-    single = geom.points_in_polygon(px, py, hx, hy)
-    pairs = geom.points_in_polygons_pairs(px, py, [hx] * 300, [hy] * 300)
-    assert (single == pairs).all()
+def _grid_ring(rng, cx, cy, r, nv, snap=True):
+    """Ring of ``nv`` vertices around (cx, cy), grid-snapped unless
+    ``snap`` is false, closed explicitly half of the time."""
+    draw = ((lambda: rng.integers(-r, r + 1, nv).astype(np.float64))
+            if snap else (lambda: rng.uniform(-r, r, nv)))
+    xs, ys = cx + draw(), cy + draw()
+    if nv and rng.random() < 0.5:
+        xs, ys = np.append(xs, xs[0]), np.append(ys, ys[0])
+    return xs, ys
+
+
+def _grid_features(kind, rng):
+    """(features, centers, r): each feature a (rings_x, rings_y) pair."""
+    r = 5
+    n_feat = 30 if kind == "many" else 6
+    feats, centers = [], []
+    for f in range(n_feat):
+        cx = ((178.0, -178.0)[f % 2] if kind == "wrap"
+              else float(rng.integers(-150, 150)))
+        cy = float(rng.integers(-60, 60))
+        if kind == "holes":       # shell, holes, an island in a hole
+            rings = [_grid_ring(rng, cx, cy, r, int(rng.integers(3, 41)))]
+            rings += [_grid_ring(rng, cx, cy, k, int(rng.integers(3, 9)))
+                      for k in (3, 2, 1)]
+        elif kind == "multipart":  # two parts, apart or overlapping
+            rings = [_grid_ring(rng, cx + dx, cy, 2, int(rng.integers(3, 9)))
+                     for dx in (-3, int(rng.integers(0, 4)))]
+        else:                       # 0, 1 and 2 vertices included
+            nv = (0, 1, 2)[f] if f < 3 else int(rng.integers(3, 41))
+            rings = [_grid_ring(rng, cx, cy, r, nv, kind != "float")]
+        feats.append(([x for x, _ in rings], [y for _, y in rings]))
+        centers.append((cx, cy))
+    return feats, np.array(centers), r
+
+
+PIP_KINDS = ["single", "holes", "multipart", "many", "nan", "wrap", "float"]
+
+
+@pytest.mark.parametrize("kind", PIP_KINDS)
+def test_pip_kernels_match_reference(kind):
+    """points_in_edges_packed, points_in_rings and points_in_features
+    equal _pip_reference (XOR over a feature's rings) with ``==`` on
+    grid-snapped rings and points — points land exactly on vertices and
+    edges — over closed/open rings with 0-40 vertices, holes,
+    multipart features, many features under a random fidx, NaN points,
+    antimeridian features (against the reference at +/-360), and
+    unsnapped float coordinates."""
+    rng = np.random.default_rng(PIP_KINDS.index(kind))
+    feats, centers, r = _grid_features(kind, rng)
+    n = 3000
+    fidx = rng.integers(0, len(feats), n)
+    step = (rng.uniform(-r - 1, r + 1, (2, n)) if kind == "float"
+            else rng.integers(-2 * r - 2, 2 * r + 3, (2, n)) * 0.5)
+    px = centers[fidx, 0] + step[0]
+    py = centers[fidx, 1] + step[1]
+    if kind == "wrap":             # probes past +/-180 arrive wrapped
+        px = (px + 180.0) % 360.0 - 180.0
+    if kind == "nan":
+        px[rng.random(n) < 0.1] = np.nan
+        py[rng.random(n) < 0.1] = np.nan
+
+    def reference(x, y, f):
+        out = np.zeros(len(x), dtype=bool)
+        for rx, ry in zip(*feats[f]):
+            out ^= _pip_reference(x, y, rx, ry)
+        return out
+
+    want = np.zeros(n, dtype=bool)
+    want_wrap = np.zeros(n, dtype=bool)
+    got_rings = np.zeros(n, dtype=bool)
+    for f in range(len(feats)):
+        i = np.flatnonzero(fidx == f)
+        want[i] = reference(px[i], py[i], f)
+        want_wrap[i] = want[i]
+        allx = np.concatenate([np.empty(0), *feats[f][0]])
+        if len(allx) and (allx.max() > 180.0 or allx.min() < -180.0):
+            for shift in (360.0, -360.0):
+                want_wrap[i] |= reference(px[i] + shift, py[i], f)
+        got_rings[i] = geom.points_in_rings(px[i], py[i], *feats[f])
+    edges = geom.pack_feature_edges([f[0] for f in feats],
+                                    [f[1] for f in feats])
+    got_packed = geom.points_in_edges_packed(px, py, fidx, *edges)
+    got_feats = geom.points_in_features(
+        px, py, fidx, edges, geom.feature_vertex_bounds(edges))
+    assert (got_packed == want).all()
+    assert (got_rings == want).all()
+    assert (got_feats == want_wrap).all()
+    assert 0 < want.sum() < n            # a non-trivial mix
+    if kind == "wrap":
+        assert (want_wrap & ~want).any()  # the +/-360 retest matters
 
 
 def test_shoelace_and_centroid():
@@ -192,10 +295,10 @@ def test_convex_hull_and_buffer():
     rng = np.random.default_rng(2)
     px, py = rng.uniform(0, 10, 50), rng.uniform(0, 10, 50)
     hx, hy = geom.convex_hull(px, py)
-    assert geom.points_in_polygon(np.array([5.0]), np.array([5.0]), hx, hy)[0]
+    assert _pip_reference(np.array([5.0]), np.array([5.0]), hx, hy)[0]
     bx, by = geom.buffer_convex(hx, hy, 2.0)
     # buffered hull contains all original hull vertices
-    assert geom.points_in_polygon(hx, hy, bx, by).all()
+    assert _pip_reference(hx, hy, bx, by).all()
 
 
 # ---------------------------------------------------------------------------
@@ -332,40 +435,6 @@ def test_hamming64():
     assert codec.hamming64([0b1011], [0b0001])[0] == 2
 
 
-def test_packed_pip_matches_per_polygon_kernel():
-    """points_in_polygons_packed == points_in_polygon on random rings,
-    including boundary-ish points, closed rings, and varying sizes."""
-    import numpy as np
-    from fiona_spark import geom
-
-    rng = np.random.default_rng(123)
-    rings_x, rings_y = [], []
-    for j in range(40):
-        nv = int(rng.integers(3, 30))
-        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
-        r = rng.uniform(0.5, 3.0)
-        xs = rng.uniform(-170, 170) + r * np.cos(ang)
-        ys = rng.uniform(-80, 80) + r * np.sin(ang)
-        if j % 5 == 0:   # closed-ring variant (first == last)
-            xs = np.append(xs, xs[0]); ys = np.append(ys, ys[0])
-        rings_x.append(xs); rings_y.append(ys)
-
-    n = 5000
-    ridx = rng.integers(0, 40, n)
-    cx = np.array([rings_x[i].mean() for i in ridx])
-    cy = np.array([rings_y[i].mean() for i in ridx])
-    px = cx + rng.uniform(-4, 4, n)
-    py = cy + rng.uniform(-4, 4, n)
-
-    offs, fx, fy = geom.pack_rings(rings_x, rings_y)
-    got = geom.points_in_polygons_packed(px, py, ridx, offs, fx, fy)
-    exp = np.array([geom.points_in_polygon(
-        px[i:i+1], py[i:i+1], rings_x[ridx[i]], rings_y[ridx[i]])[0]
-        for i in range(n)])
-    assert (got == exp).all()
-    assert 0 < got.sum() < n   # non-trivial mix of hits and misses
-
-
 def test_edges_packed_holes_and_multipolygon():
     """Even-odd parity over packed feature edges: hole interior is OUT,
     island-in-hole is IN, disjoint MultiPolygon parts are both IN."""
@@ -383,28 +452,6 @@ def test_edges_packed_holes_and_multipolygon():
     got = geom.points_in_edges_packed(px, py, fi, eo, ex0, ey0, ex1, ey1)
     #      shell  hole   island part1  part2  gap   outside
     assert got.tolist() == [True, False, True, True, True, False, False]
-
-
-def test_edges_packed_matches_single_ring_kernel():
-    """Single-ring features through the edge kernel == the r1 packed
-    ring kernel (regression for the pip_join kernel swap)."""
-    rng = np.random.default_rng(8)
-    rings_x, rings_y = [], []
-    for _ in range(20):
-        nv = rng.integers(4, 12)
-        ang = np.sort(rng.uniform(0, 2 * np.pi, nv))
-        cx, cy = rng.uniform(-50, 50, 2)
-        rings_x.append(cx + rng.uniform(1, 3) * np.cos(ang))
-        rings_y.append(cy + rng.uniform(1, 3) * np.sin(ang))
-    px = rng.uniform(-60, 60, 500)
-    py = rng.uniform(-60, 60, 500)
-    ridx = rng.integers(0, 20, 500)
-    offs, fx, fy = geom.pack_rings(rings_x, rings_y)
-    want = geom.points_in_polygons_packed(px, py, ridx, offs, fx, fy)
-    eo, ex0, ey0, ex1, ey1 = geom.pack_feature_edges(
-        [[r] for r in rings_x], [[r] for r in rings_y])
-    got = geom.points_in_edges_packed(px, py, ridx, eo, ex0, ey0, ex1, ey1)
-    assert (got == want).all()
 
 
 def test_points_in_rings_equals_xor_of_rings():
@@ -465,7 +512,7 @@ def test_convex_hull_contains_all_points_fuzz():
         hx, hy = geom.convex_hull(px, py)
         if len(hx) < 3:
             continue
-        inside = geom.points_in_polygon(px, py, hx, hy)
+        inside = _pip_reference(px, py, hx, hy)
         m = len(hx)
         for i in np.nonzero(~inside)[0]:
             d = min(pt_seg(px[i], py[i], hx[j], hy[j],

@@ -13,6 +13,8 @@ import pytest
 
 from fiona_spark import geom
 
+from .test_kernels import _pip_reference
+
 
 def _sweep_union_area(polys, n_guard: int = 200):
     """Exact union area via x-sweep (independent oracle)."""
@@ -84,7 +86,7 @@ def _membership_diff(polys, rings, n=120):
     gx, gy = gx.ravel(), gy.ravel()
     want = np.zeros(len(gx), dtype=bool)
     for xs, ys in polys:
-        want |= geom.points_in_polygon(
+        want |= _pip_reference(
             gx, gy, np.asarray(xs, np.float64), np.asarray(ys, np.float64))
     got = geom.points_in_rings(gx, gy, rings[0], rings[1])
     return want, got
@@ -363,7 +365,7 @@ def _buffer_oracle_area(xs, ys, d, n=500):
     gy = np.linspace(ys.min() - pad, ys.max() + pad, n)
     GX, GY = np.meshgrid(gx, gy)
     px, py = GX.ravel(), GY.ravel()
-    inside = geom.points_in_polygon(px, py, xs, ys)
+    inside = _pip_reference(px, py, xs, ys)
     x1, y1 = np.roll(xs, -1), np.roll(ys, -1)
     ex, ey = x1 - xs, y1 - ys
     L2 = ex ** 2 + ey ** 2
@@ -446,9 +448,8 @@ def _grid_cells_covered(xs, ys):
     y0, y1 = int(min(ys)), int(max(ys))
     for i in range(x0, x1):
         for j in range(y0, y1):
-            if geom.points_in_polygon(np.array([i + 0.5]),
-                                      np.array([j + 0.5]),
-                                      np.asarray(xs), np.asarray(ys))[0]:
+            if _pip_reference(np.array([i + 0.5]), np.array([j + 0.5]),
+                              np.asarray(xs), np.asarray(ys))[0]:
                 cov.add((i, j))
     return cov
 
@@ -617,7 +618,7 @@ def _erosion_oracle_area(xs, ys, d, n=400):
     gy = np.linspace(ys.min(), ys.max(), n)
     GX, GY = np.meshgrid(gx, gy)
     px, py = GX.ravel(), GY.ravel()
-    inside = geom.points_in_polygon(px, py, xs, ys)
+    inside = _pip_reference(px, py, xs, ys)
     x1, y1 = np.roll(xs, -1), np.roll(ys, -1)
     ex, ey = x1 - xs, y1 - ys
     L2 = ex ** 2 + ey ** 2

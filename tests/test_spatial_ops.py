@@ -8,6 +8,8 @@ import pytest
 from fiona_spark import cells, fixtures, geom
 from fiona_spark.operators import aggregates, filters, spatial
 
+from .test_kernels import _pip_reference
+
 N_IMG = 400
 N_ZONES = 45
 RES = 6
@@ -42,7 +44,7 @@ def _pip_oracle(images_pdf, zones_pdf):
         xs = np.asarray(z.xs); ys = np.asarray(z.ys)
         inside = np.zeros(len(px), dtype=bool)
         for shift in (0.0, 360.0, -360.0):
-            inside |= geom.points_in_polygon(px + shift, py, xs, ys)
+            inside |= _pip_reference(px + shift, py, xs, ys)
         for i in np.flatnonzero(inside):
             out.add((images_pdf.image_id.iloc[i], z.zone_id))
     return out
@@ -96,6 +98,53 @@ def test_pip_join_empty_ring_lanes_agree(spark, multi):
                                                max_broadcast_zones=0)
                        .collect()))
     assert fused == shuffled == {("a", "full"), ("b", "full")}
+
+
+@pytest.mark.parametrize("defect", ["none", "null_ring", "null_vertex",
+                                    "nan_vertex"])
+@pytest.mark.parametrize("multi", [False, True], ids=["single", "multi"])
+@pytest.mark.parametrize("guard", [spatial.MAX_BROADCAST_ZONES, 0],
+                         ids=["fused", "shuffled"])
+def test_pip_join_null_and_nan_zone_rings(spark, guard, multi, defect):
+    """One rule on both lanes.  A null ring column is a null geometry:
+    the zone is dropped in the plan and contains no point (zone
+    'nogeom', whose bbox covers point 'a').  A null ring inside
+    rings_xs, a null vertex or a NaN vertex in zone 'bad' raises a
+    ValueError naming it, although no point reaches 'bad'.  Without
+    rings_xs a null ring IS the null geometry, so it is dropped."""
+    from pyspark.errors import PythonException
+    sq_x, sq_y = [0.0, 10.0, 10.0, 0.0], [0.0, 0.0, 10.0, 10.0]
+    far_x, far_y = [50.0, 60.0, 60.0, 50.0], [50.0, 50.0, 60.0, 60.0]
+    bad_x = {"none": far_x, "null_ring": None,
+             "null_vertex": [50.0, None, 60.0, 50.0],
+             "nan_vertex": [50.0, float("nan"), 60.0, 50.0]}[defect]
+    if multi:
+        cols, typ = ("rings_xs", "rings_ys"), "array<array<double>>"
+        xs, ys = [[sq_x], None, [far_x, bad_x]], [[sq_y], None, [far_y] * 2]
+    else:
+        cols, typ = ("xs", "ys"), "array<double>"
+        xs, ys = [sq_x, None, bad_x], [sq_y, None, far_y]
+    zones = spark.createDataFrame(
+        pd.DataFrame({"zone_id": ["good", "nogeom", "bad"],
+                      cols[0]: xs, cols[1]: ys,
+                      "xmin": [0.0, 0.0, 50.0], "ymin": [0.0, 0.0, 50.0],
+                      "xmax": [10.0, 10.0, 60.0], "ymax": [10.0, 10.0, 60.0]}),
+        schema=f"zone_id string, {cols[0]} {typ}, {cols[1]} {typ}, "
+               "xmin double, ymin double, xmax double, ymax double")
+    points = spark.createDataFrame(
+        pd.DataFrame({"image_id": ["a", "b"], "lng": [5.0, 20.0],
+                      "lat": [5.0, 5.0]}),
+        schema="image_id string, lng double, lat double")
+    run = lambda: set(map(tuple, spatial.pip_join(  # noqa: E731
+        points, zones, res=RES, max_broadcast_zones=guard).collect()))
+    if defect in ("null_vertex", "nan_vertex") or (
+            defect == "null_ring" and multi):
+        with pytest.raises((ValueError, PythonException),
+                           match="zone 'bad' has a null ring or a null "
+                                 "or NaN vertex"):
+            run()
+    else:
+        assert run() == {("a", "good")}
 
 
 def test_semi_anti_partition(spark, images, zones):
@@ -316,8 +365,8 @@ def test_filter_mask_envelope_vs_exact(spark, images, images_pdf):
     # triangle: envelope over-matches, exact matches oracle
     txs = np.array([0.0, 40.0, 0.0]); tys = np.array([0.0, 0.0, 30.0])
     n_exact = filters.filter_mask(images, txs, tys, exact=True).count()
-    oracle = geom.points_in_polygon(images_pdf.lng.to_numpy(),
-                                    images_pdf.lat.to_numpy(), txs, tys).sum()
+    oracle = _pip_reference(images_pdf.lng.to_numpy(),
+                            images_pdf.lat.to_numpy(), txs, tys).sum()
     assert n_exact == oracle
     assert filters.filter_mask(images, txs, tys).count() >= n_exact
 
@@ -388,7 +437,7 @@ def test_info_and_dissolve(spark, zones, zones_pdf):
         gx, gy = gx.ravel(), gy.ravel()
         want = np.zeros(len(gx), dtype=bool)
         for v, w in zip(zones_pdf["xs"], zones_pdf["ys"]):
-            want |= geom.points_in_polygon(
+            want |= _pip_reference(
                 gx, gy, np.asarray(v, np.float64), np.asarray(w, np.float64))
         got = geom.points_in_rings(gx, gy, rxs, rys)
         assert (want == got).all()
@@ -397,7 +446,7 @@ def test_info_and_dissolve(spark, zones, zones_pdf):
         px = np.concatenate([np.asarray(v) for v in zones_pdf["xs"]])
         py = np.concatenate([np.asarray(v) for v in zones_pdf["ys"]])
         bx, by = geom.buffer_convex(rxs[0], rys[0], 1e-9)
-        assert geom.points_in_polygon(px, py, bx, by).mean() > 0.999
+        assert _pip_reference(px, py, bx, by).mean() > 0.999
 
 
 def test_dissolve_union_exact_two_stage(spark):

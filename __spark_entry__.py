@@ -24,11 +24,8 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
 def _ship_pkg(spark: SparkSession) -> None:
     """Make fiona_spark importable on executor Python workers."""
-    from fiona_spark.session import build_pyfiles_zip
-    try:
-        spark.sparkContext.addPyFile(build_pyfiles_zip())
-    except Exception:
-        pass  # already shipped in this context
+    from fiona_spark.session import ship_package
+    ship_package(spark.sparkContext)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -11,7 +11,48 @@ operator library lives in the submodules (see README.md).
 
 from __future__ import annotations
 
+import os as _os
+import sys as _sys
+import zipimport as _zipimport
+
 __version__ = "0.4.0"          # round-4 build
+
+_zip_reread = _zipimport.zipimporter.invalidate_caches
+_zip_reread = getattr(_zip_reread, "__wrapped__", _zip_reread)   # reload-safe
+
+
+def _zip_invalidate_caches(self):
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when the archive's ``(st_mtime_ns, st_size)`` differs
+    from the last read, or when ``stat`` fails.
+
+    ``pyspark.worker`` calls ``importlib.invalidate_caches()`` at the
+    start of every task; on CPython 3.11 that makes every zip importer
+    (pyspark.zip and its subpackages, the Spark jar, py4j, the py-files
+    zip: ~27k entries) re-parse its archive directory in pure Python,
+    120-200 ms per task before any UDF code runs.  A rewritten archive
+    gets a new mtime or size and is re-read; a new archive gets a new
+    importer, so it is still picked up.
+    """
+    try:
+        st = _os.stat(self.archive)
+        key = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    if key is None or key != getattr(self, "_fs_stat_key", None):
+        _zip_reread(self)
+        self._fs_stat_key = key
+
+
+_zip_invalidate_caches.__wrapped__ = _zip_reread
+
+# installed once, inside Spark Python tasks only (the driver keeps the
+# stock method); pyspark.worker sets the TaskContext before it
+# unpickles the UDFs that import this package
+_tc = _sys.modules.get("pyspark.taskcontext")
+if (_tc is not None and _tc.TaskContext.get() is not None
+        and _zipimport.zipimporter.invalidate_caches is _zip_reread):
+    _zipimport.zipimporter.invalidate_caches = _zip_invalidate_caches
 
 
 def open(spark, path: str, mode: str = "r", driver: str | None = None,

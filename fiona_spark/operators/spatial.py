@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import pandas as pd
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .. import cells, geom
@@ -222,7 +223,7 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
     layer exceeds the guard (caller falls back to the shuffled plan) —
     one job instead of a count() followed by a collect.
 
-    Returns (zpdf, res, cov_ridx, cov_cell, edges, fbounds).
+    Returns (zone_arrays, res, cov_ridx, cov_cell, edges, fbounds).
     """
     sel = zones.select(*zone_cols, *ring_cols,
                        "xmin", "ymin", "xmax", "ymax")
@@ -237,7 +238,7 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
             return None
     else:
         ztbl = sel.toArrow()
-    zpdf = ztbl.select(list(zone_cols)).to_pandas()
+    keys = ztbl.column(zone_cols[0]).to_pandas()
 
     def _np(name):
         return np.asarray(ztbl.column(name).combine_chunks().to_numpy(
@@ -248,9 +249,9 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
     xmaxv = _np("xmax")
     ymaxv = _np("ymax")
     if res is None:
-        w = float(np.mean(xmaxv - xminv)) if len(zpdf) else 1.0
-        h = float(np.mean(ymaxv - yminv)) if len(zpdf) else 1.0
-        res = _res_from_stats(len(zpdf), w, h)
+        w = float(np.mean(xmaxv - xminv)) if len(keys) else 1.0
+        h = float(np.mean(ymaxv - yminv)) if len(keys) else 1.0
+        res = _res_from_stats(len(keys), w, h)
     wrap = (xmaxv > 180.0) | (xminv < -180.0)
     parts = []
     if (~wrap).any():
@@ -302,59 +303,78 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
 
     fx = _flat_rings(ring_cols[0])
     fy = _flat_rings(ring_cols[1])
-    null_ring = np.zeros(len(zpdf), dtype=bool)
+    null_ring = np.zeros(len(keys), dtype=bool)
     null_ring[fx[3]] = True
     null_ring[fy[3]] = True
-    _check_zones(zpdf[zone_cols[0]], null_ring)
+    _check_zones(keys, null_ring)
     edges = geom.pack_feature_edges_flat(fx[0], fy[0], fx[1], fx[2])
     fbounds = geom.feature_vertex_bounds(edges)  # NaN from a null/NaN vertex
-    _check_zones(zpdf[zone_cols[0]],
-                 np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
-    return zpdf, res, cov_ridx, cov_cell, edges, fbounds
+    _check_zones(keys, np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
+    zone_arrays = [ztbl.column(c).combine_chunks() for c in zone_cols]
+    return zone_arrays, res, cov_ridx, cov_cell, edges, fbounds
 
 
-def _pip_fused_udf(bc, res: int):
-    """FUSED candidate-generation + residual: one Arrow pass per point.
+def _fused_lane(points: DataFrame, point_cols, lng: str, lat: str, bc,
+                kernel, fields) -> DataFrame:
+    """The one ``mapInArrow`` pass of both fused lanes.  ``bc.value`` is
+    ``(*state, zone_arrays)``; per batch ``kernel(state, px, py)`` (the
+    coordinates as float64, a null read as NaN) returns ``(rows, zidx,
+    *extra)`` and the flat output is ``point_cols`` taken at ``rows``,
+    the zone arrays taken at ``zidx``, then ``extra``, typed by
+    ``point_cols``' fields plus ``fields``."""
+    npc = len(point_cols)
+    schema = T.StructType([points.schema[c] for c in point_cols] + fields)
+    names = schema.fieldNames()
 
-    Each executor receives, via ONE torrent sc.broadcast (parallel to
-    executors, pickled once — never a driver-built JVM hash relation):
-    the covering table sorted by cell (cell_sorted, zidx_sorted), the
-    packed zone edges and their vertex bounds.  Per batch: cell id
-    (numpy closed form, identical to the SQL form), searchsorted range
-    probe for candidates, the shared :func:`geom.points_in_features`
-    refine, per-row matched-zone arrays out.
+    def run(batches):
+        *state, zone_arrays = bc.value
+        for rb in batches:
+            if not rb.num_rows:
+                continue
+            px, py = (np.asarray(rb.column(i).to_numpy(zero_copy_only=False),
+                                 np.float64) for i in (npc, npc + 1))
+            rows, zi, *extra = kernel(state, px, py)
+            rows, zi = pa.array(rows), pa.array(zi)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(i).take(rows) for i in range(npc)]
+                + [a.take(zi) for a in zone_arrays]
+                + [pa.array(e) for e in extra], names=names)
 
-    Why fused: a JVM broadcast cell equi-join builds its broadcast
-    exchange single-threaded on the driver and re-runs it per action —
-    measured a flat 4.3-6.7 s across local[2/8/32] at sf2 (33.5k zones
-    -> ~4M covering rows), capping spatial scaling efficiency at 0.59.
-    Fusing moves the probe to executors (vectorized searchsorted), sends
-    each point through Arrow ONCE (a join-then-filter plan ships every
-    CANDIDATE), and is skew-neutral: points stay in their natural
-    partitions, so a hot cell never concentrates a reducer.
+    return (points.select(*point_cols, F.col(lng).cast("double"),
+                          F.col(lat).cast("double"))
+            .mapInArrow(run, schema))
+
+
+def _pip_matches(state, pxv, pyv):
+    """FUSED candidate generation + residual: the ``_fused_lane`` kernel
+    of ``pip_join``.  ``state`` (one torrent sc.broadcast, pickled once,
+    never a driver-built JVM hash relation) is the resolution, the
+    covering table sorted by cell, the packed zone edges and their vertex
+    bounds.  Per batch: cell id (numpy closed form, identical to the SQL
+    form), searchsorted range probe, the shared
+    :func:`geom.points_in_features` refine; returns flat (row, zone idx)
+    hit pairs.
+
+    Why fused: a JVM broadcast cell equi-join builds its exchange
+    single-threaded on the driver, per action (a flat 4.3-6.7 s at 33.5k
+    zones across local[2/8/32], capping scaling efficiency at 0.59).
+    Here the probe runs on executors, each point crosses Arrow once, and
+    points stay in their partitions, so a hot cell never concentrates a
+    reducer.
     """
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def matches(px: pd.Series, py: pd.Series) -> pd.Series:
-        cell_sorted, zidx_sorted, edges, fbounds = bc.value
-        pxv = px.to_numpy(np.float64)
-        pyv = py.to_numpy(np.float64)
-        n = len(pxv)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        pcell = cells.cell_id(pxv, pyv, res)
-        lo = np.searchsorted(cell_sorted, pcell, "left")
-        hi = np.searchsorted(cell_sorted, pcell, "right")
-        cnt = hi - lo
-        total = int(cnt.sum())
-        row = np.repeat(np.arange(n, dtype=np.int64), cnt)
-        starts = np.cumsum(cnt) - cnt
-        pos = lo[row] + (np.arange(total, dtype=np.int64) - starts[row])
-        zi = zidx_sorted[pos]
-        hit = geom.points_in_features(pxv[row], pyv[row], zi, edges, fbounds)
-        # per-row matched-zone arrays (row is sorted, split is O(n))
-        out_cnt = np.bincount(row[hit], minlength=n)
-        return pd.Series(np.split(zi[hit], np.cumsum(out_cnt)[:-1]))
-    return matches
+    res, cell_sorted, zidx_sorted, edges, fbounds = state
+    n = len(pxv)
+    pcell = cells.cell_id(pxv, pyv, res)
+    lo = np.searchsorted(cell_sorted, pcell, "left")
+    hi = np.searchsorted(cell_sorted, pcell, "right")
+    cnt = hi - lo
+    total = int(cnt.sum())
+    row = np.repeat(np.arange(n, dtype=np.int64), cnt)
+    starts = np.cumsum(cnt) - cnt
+    pos = lo[row] + (np.arange(total, dtype=np.int64) - starts[row])
+    zi = zidx_sorted[pos]
+    hit = geom.points_in_features(pxv[row], pyv[row], zi, edges, fbounds)
+    return row[hit], zi[hit]
 
 
 def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
@@ -382,8 +402,9 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     Two lanes, chosen by one row guard on the zone layer:
       * at most ``max_broadcast_zones`` rows: the FUSED lane.  The zone
         layer is collected once (the guard rides that collect), its
-        covering table and packed edges ship by one torrent broadcast,
-        and one Arrow pass per point probes and refines.
+        covering table, packed edges and zone columns ship by one
+        torrent broadcast, and one ``mapInArrow`` pass probes, refines
+        and emits flat rows (zone columns by an Arrow take).
       * more rows: the COGROUPED shuffled lane.  A light cell equi-join
         (keys + coords only) generates the candidates, then candidates
         and zone rings cogroup on the zone key, so each zone's ring
@@ -409,24 +430,14 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     prep = _zone_prep(zones, zone_cols, ring_cols, res,
                       row_guard=max_broadcast_zones)
     if prep is not None:
-        # FUSED lane: covering probe + residual in one Arrow pass, zone
-        # structures via one torrent broadcast — no JVM
-        # broadcast-exchange build (a measured flat ~4-6 s single-thread
-        # driver cost per action at 33.5k zones that capped N->4N
-        # scaling efficiency).  Skew-neutral: no join shuffle at all.
-        zpdf, res, cov_ridx, cov_cell, edges, fbounds = prep
+        # FUSED lane (why fused: see _pip_matches): no join, no shuffle
+        zone_arrays, res, cov_ridx, cov_cell, edges, fbounds = prep
         order = np.argsort(cov_cell, kind="stable")
         bc = spark.sparkContext.broadcast(
-            (cov_cell[order], cov_ridx[order], edges, fbounds))
-        matches = _pip_fused_udf(bc, res)
-        hits = (points.select(*point_cols, lng, lat)
-                .withColumn("_zidx", F.explode(matches(F.col(lng),
-                                                       F.col(lat)))))
-        zmap = spark.createDataFrame(
-            zpdf[list(zone_cols)].assign(
-                _zidx=np.arange(len(zpdf), dtype=np.int64)))
-        return (hits.join(F.broadcast(zmap), "_zidx")
-                .select(*point_cols, *zone_cols))
+            (res, cov_cell[order], cov_ridx[order], edges, fbounds,
+             zone_arrays))
+        return _fused_lane(points, point_cols, lng, lat, bc, _pip_matches,
+                           [zones.schema[c] for c in zone_cols])
 
     if res is None:
         res = pip_res_for(zones)
@@ -638,18 +649,19 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
                     zone_lng: str, zone_lat: str,
                     row_guard: int | None = None) -> DataFrame | None:
     """Fused kNN: the ENTIRE multi-resolution cascade + exact fallback
-    in one Arrow pass per point (same plan shape as the fused PIP).
+    in one flat ``mapInArrow`` pass (:func:`_fused_lane`, as the PIP).
 
-    Zone structures — centroids + per-level disk(1) cell tables — ride
-    one torrent sc.broadcast; per batch, each level probes the point's
-    own cell via searchsorted, applies the provable-finish rule
-    (>= k candidates with dist < cell_height inside disk(1) guarantees
-    the filtered set contains the true top-k), and the surviving tail
-    brute-forces against all zone centroids in bounded row chunks with
-    a STABLE dist sort (zones pre-sorted by key, so ties resolve by
-    zone key exactly like the (dist, zone_key) window ordering of the
-    staged plan and the DuckDB oracle).  No shuffles, no windows, no
-    per-level caches to clean up.
+    Zone structures — centroids, per-level disk(1) cell tables and the
+    key-sorted zone keys as an Arrow array — ride one torrent
+    sc.broadcast; per batch, each level probes the point's own cell via
+    searchsorted, applies the provable-finish rule (>= k candidates with
+    dist < cell_height inside disk(1) guarantees the filtered set
+    contains the true top-k), and the surviving tail brute-forces
+    against all zone centroids in bounded row chunks with a STABLE dist
+    sort (zones pre-sorted by key, so ties resolve by zone key exactly
+    like the (dist, zone_key) window ordering of the staged plan and the
+    DuckDB oracle).  No shuffles, no windows, no per-level caches to
+    clean up.
 
     ``row_guard``: collect at most guard+1 zone rows in ONE job; returns
     None if the layer exceeds the guard (caller falls back to the staged
@@ -659,13 +671,11 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
     """
     spark = points.sparkSession
     zsel = zones.select(zone_key, zone_lng, zone_lat)
-    if row_guard is not None:
-        zpdf = zsel.limit(row_guard + 1).toPandas()
-        if len(zpdf) > row_guard:
-            return None
-        zpdf = zpdf.sort_values(zone_key).reset_index(drop=True)
-    else:
-        zpdf = zsel.toPandas().sort_values(zone_key).reset_index(drop=True)
+    ztbl = (zsel if row_guard is None else zsel.limit(row_guard + 1)).toArrow()
+    if row_guard is not None and ztbl.num_rows > row_guard:
+        return None
+    zpdf = ztbl.to_pandas().sort_values(zone_key)
+    zkey = ztbl.column(zone_key).combine_chunks().take(pa.array(zpdf.index))
     zx = zpdf[zone_lng].to_numpy(np.float64)
     zy = zpdf[zone_lat].to_numpy(np.float64)
     nz = len(zpdf)
@@ -680,17 +690,12 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
         cs, zs = _disk1_table(zc, r)
         level_tables.append((r, 180.0 / (1 << r), cs, zs))
         r -= 2
-    bc = spark.sparkContext.broadcast((zx, zy, level_tables))
+    bc = spark.sparkContext.broadcast((zx, zy, level_tables, [zkey]))
     kk = min(k, nz)
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def knn_arr(px: pd.Series, py: pd.Series) -> pd.Series:
-        zxv, zyv, lts = bc.value
-        pxv = px.to_numpy(np.float64)
-        pyv = py.to_numpy(np.float64)
+    def knn_ranks(state, pxv, pyv):
+        zxv, zyv, lts = state
         n = len(pxv)
-        if n == 0:
-            return pd.Series([], dtype=object)
         out = np.full((n, kk), -1, dtype=np.int64)
         remaining = np.arange(n, dtype=np.int64)
         # bounded candidate chunks (r8): the per-level expansion built
@@ -777,17 +782,12 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
             # i.e. ascending zone_key (zones pre-sorted by key)
             order = np.argsort(d, axis=1, kind="stable")[:, :kk]
             out[idx, :] = order
-        return pd.Series(list(out))
+        row, rank0 = np.nonzero(out >= 0)
+        return row, out[row, rank0], (rank0 + 1).astype(np.int32)
 
-    zmap = spark.createDataFrame(
-        zpdf[[zone_key]].assign(_zidx=np.arange(nz, dtype=np.int64)))
-    hits = (points.select(point_key, lng, lat)
-            .select(point_key, F.posexplode(knn_arr(F.col(lng), F.col(lat)))
-                    .alias("_rk", "_zidx"))
-            .filter(F.col("_zidx") >= 0)
-            .withColumn("knn_rank", (F.col("_rk") + 1).cast("integer")))
-    return (hits.join(F.broadcast(zmap), "_zidx")
-            .select(point_key, zone_key, "knn_rank"))
+    return _fused_lane(points, [point_key], lng, lat, bc, knn_ranks,
+                       [zones.schema[zone_key],
+                        T.StructField("knn_rank", T.IntegerType(), False)])
 
 
 def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
@@ -924,8 +924,6 @@ def block_tiles(images: DataFrame, res: int, block: int = 8) -> DataFrame:
     out_schema = ("image_id string, bx int, by int, cell long, mean_lum double")
 
     def run(batches):
-        import pyarrow as pa
-
         for rb in batches:
             bbox = {c: np.asarray(rb.column(c).to_numpy(zero_copy_only=False),
                                   np.float64)

@@ -17,6 +17,7 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+PYFILES_ZIP = "fiona_spark_pyfiles.zip"
 
 
 def build_pyfiles_zip(dest: str | None = None) -> str:
@@ -25,7 +26,7 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
     Deterministic content; rebuilt on demand.  Returns the zip path.
     """
     if dest is None:
-        dest = os.path.join(tempfile.gettempdir(), "fiona_spark_pyfiles.zip")
+        dest = os.path.join(tempfile.gettempdir(), PYFILES_ZIP)
     with zipfile.ZipFile(dest, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
             if "__pycache__" in root:
@@ -37,6 +38,24 @@ def build_pyfiles_zip(dest: str | None = None) -> str:
                 rel = os.path.join("fiona_spark", os.path.relpath(full, _PKG_DIR))
                 zf.write(full, rel)
     return dest
+
+
+def ship_package(sc) -> None:
+    """Ship the package to executor Python workers as the py-files zip
+    (what ``spark-submit --py-files`` does on a cluster), once per
+    SparkContext: re-adding the same path raises nothing, but would
+    append another copy to the workers' and the driver's import path."""
+    if PYFILES_ZIP not in {os.path.basename(f) for f in sc.listFiles}:
+        sc.addPyFile(build_pyfiles_zip())
+
+
+def default_driver_mem() -> str:
+    """The driver heap default: min(12g, a quarter of physical memory
+    (``MemTotal`` on Linux)), rounded down to whole GiB, at least 1g —
+    3g on a 16 GB host, 12g on large ones.  The heap is pre-touched, so
+    a fixed 12g took most of a small host."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(12, total // 4 // 2**30))}g"
 
 
 def get_spark(cores: int | None = None, app: str = "fiona_spark",
@@ -72,7 +91,8 @@ def get_spark(cores: int | None = None, app: str = "fiona_spark",
                   # route pyarrow through glibc malloc so its batch
                   # buffers get the same heap-reuse behavior
                   "ARROW_DEFAULT_MEMORY_POOL": "system"}
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g")
+    driver_mem = (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                  or default_driver_mem())
     for k, v in malloc_env.items():
         # must be in the JVM's environment BEFORE it spawns so the
         # pyspark.daemon / worker processes inherit it (local mode);
@@ -97,8 +117,9 @@ def get_spark(cores: int | None = None, app: str = "fiona_spark",
         # Pre-touching moves the entire fault cost into session startup
         # (untimed setup), and a fixed-size heap is never uncommitted.
         # The default heap is sized to the driver's actual working set
-        # (bounded collects + broadcasts, << 12g) instead of 48g, so the
-        # pre-touch stays cheap; SPARK_GRAFT_DRIVER_MEM overrides.
+        # (bounded collects + broadcasts, << 12g) and to the host (see
+        # default_driver_mem), never 48g, so the pre-touch stays cheap;
+        # SPARK_GRAFT_DRIVER_MEM overrides.
         .config("spark.driver.extraJavaOptions",
                 f"-Xms{driver_mem} -XX:+AlwaysPreTouch")
         .config("spark.ui.enabled", "false")
@@ -111,10 +132,5 @@ def get_spark(cores: int | None = None, app: str = "fiona_spark",
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    # Ship the package so executor Python workers can re-import it by
-    # name (same mechanism as spark-submit --py-files on a cluster).
-    try:
-        spark.sparkContext.addPyFile(build_pyfiles_zip())
-    except Exception:
-        pass  # already added in a reused session
+    ship_package(spark.sparkContext)
     return spark

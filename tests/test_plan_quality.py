@@ -43,14 +43,15 @@ def test_bbox_filter_pushdown_and_pruning(spark, images_path):
 def test_pip_join_plan_shape(spark, images_path, zones):
     img = spark.read.parquet(images_path)
     q = spatial.pip_join(img, zones, res=6)
-    # fused lane: the zone map rides a broadcast join and no exchange
-    # moves the probe side
-    assert quality.broadcast_join_count(q) >= 1
+    # fused lane: one mapInArrow pass does the covering probe, the
+    # residual and the zone-key take -- no join, no explode, no exchange
+    assert quality.python_eval_count(q) == 1
+    plan = quality.formatted_plan(q)
+    assert "MapInArrow" in plan and "Generate" not in plan
+    assert quality.broadcast_join_count(q) == 0
     assert quality.shuffle_count(q) == 0
     read = set(quality.read_schema_columns(q))
     assert "bytes" not in read
-    # one Arrow UDF does the covering probe and the residual together
-    assert quality.python_eval_count(q) == 1
 
 
 def test_point_cell_is_jvm_only(spark, images_path):
@@ -72,11 +73,27 @@ def test_knn_staged_plan_has_no_python(spark, images_path, zones):
 def test_knn_fused_plan_is_one_arrow_pass(spark, images_path, zones):
     img = spark.read.parquet(images_path)
     q = spatial.knn_join(img, zones, k=3, res=4)
-    # fused kNN: exactly one Arrow UDF (the whole cascade), no window
-    # exchanges, zone map rides a broadcast join
+    # fused kNN: exactly one mapInArrow pass (the whole cascade and the
+    # zone-key take), no window exchange, no posexplode, no join
     assert quality.python_eval_count(q) == 1
-    assert quality.broadcast_join_count(q) >= 1
+    plan = quality.formatted_plan(q)
+    assert "MapInArrow" in plan and "Generate" not in plan
+    assert quality.broadcast_join_count(q) == 0
     assert quality.shuffle_count(q) == 0
+
+
+def test_python_eval_count_sees_arrow_maps_and_cogroups(spark, zones):
+    """mapInArrow and cogrouped applyInPandas are Python operators too:
+    the payload operators and the shuffled PIP lane count."""
+    img = spark.createDataFrame(
+        [("a", b"", "raw", 1, 1, 0.0, 0.0, 1.0, 1.0, 0.5, 0.5)],
+        "image_id string, bytes binary, fmt string, w int, h int, "
+        "xmin double, ymin double, xmax double, ymax double, "
+        "lng double, lat double")
+    assert quality.python_eval_count(spatial.block_tiles(img, 9)) == 1
+    cog = spatial.pip_join(img, zones, res=6, max_broadcast_zones=0)
+    assert "FlatMapCoGroupsInPandas" in quality.formatted_plan(cog)
+    assert quality.python_eval_count(cog) == 1
 
 
 def test_tpch_q1_single_shuffle(spark):

@@ -510,3 +510,85 @@ def test_knn_fused_matches_staged_including_sparse_tail(spark, zones):
     s = staged.sort_values(key).reset_index(drop=True)
     assert f[["image_id", "zone_id", "knn_rank"]].equals(
         s[["image_id", "zone_id", "knn_rank"]])
+
+
+def _hostile_points(spark, images_pdf, zones_pdf):
+    """12 fixture points that hit a zone and 12 that miss, plus a far
+    miss, a NaN and a null coordinate on each axis, with a second (long)
+    point column; round-robin into more partitions than rows, so some
+    partitions hold zero rows and some a single point that hits no
+    zone."""
+    hit = images_pdf.image_id.isin(
+        {i for i, _ in _pip_oracle(images_pdf, zones_pdf)})
+    pdf = pd.concat([images_pdf[hit].head(12), images_pdf[~hit].head(12)],
+                    ignore_index=True)[["image_id", "lng", "lat"]]
+    pdf["tag"] = np.arange(len(pdf), dtype=np.int64) * 7
+    extra = pd.DataFrame({
+        "image_id": ["far", "nan_lng", "nan_lat", "null_lng", "null_lat"],
+        "lng": [0.5, np.nan, 10.0, None, 10.0],
+        "lat": [-89.5, 10.0, np.nan, 10.0, None],
+        "tag": np.arange(100, 105, dtype=np.int64)})
+    pdf = pd.concat([pdf, extra], ignore_index=True)
+    # a pandas NaN arrives as null: set the NaN rows in SQL
+    pts = (spark.createDataFrame(
+        pdf, "image_id string, lng double, lat double, tag long")
+        .selectExpr("image_id", "tag", *(
+            f"IF(image_id = 'nan_{c}', double('NaN'), {c}) AS {c}"
+            for c in ("lng", "lat"))))
+    assert pts.filter("lng IS NULL OR lat IS NULL").count() == 2
+    assert pts.filter("isnan(lng) OR isnan(lat)").count() == 2
+    return pdf, pts.repartition(len(pdf) + 3)
+
+
+def _int_keyed_zones(spark, zones_pdf):
+    """The fixture zones with an integer key ``zid`` whose order is the
+    reverse of ``zone_id``'s."""
+    zid = (len(zones_pdf) - np.arange(len(zones_pdf), dtype=np.int64)) * 3
+    return zid, spark.createDataFrame(zones_pdf.assign(zid=zid),
+                                      schema=fixtures.ZONES_SCHEMA + ", zid long")
+
+
+def test_pip_fused_lane_flat_output_matches_shuffled(spark, images_pdf,
+                                                      zones_pdf):
+    """Fused mapInArrow lane == cogrouped lane == brute force, with two
+    point columns, two zone columns (an integer zone key first), zero-row
+    partitions, no-hit batches and null/NaN coordinates."""
+    pdf, pts = _hostile_points(spark, images_pdf, zones_pdf)
+    zid, z = _int_keyed_zones(spark, zones_pdf)
+    kw = dict(res=RES, point_cols=("image_id", "tag"),
+              zone_cols=("zid", "NAME"))
+    fused = spatial.pip_join(pts, z, **kw)
+    shuffled = spatial.pip_join(pts, z, max_broadcast_zones=0, **kw)
+    assert fused.schema == shuffled.schema
+    assert fused.schema["zid"].dataType.typeName() == "long"
+    got_f = sorted(map(tuple, fused.collect()))
+    got_s = sorted(map(tuple, shuffled.collect()))
+    finite = pdf[np.isfinite(pdf.lng.astype(float))
+                 & np.isfinite(pdf.lat.astype(float))]
+    tag = dict(zip(pdf.image_id, pdf.tag))
+    zinfo = dict(zip(zones_pdf.zone_id, zip(zid, zones_pdf.NAME)))
+    exp = sorted((i, tag[i], *zinfo[zone])
+                 for i, zone in _pip_oracle(finite, zones_pdf))
+    assert got_f == got_s == exp
+    assert len(exp) >= 12
+
+
+def test_knn_fused_lane_flat_output_matches_staged(spark, images_pdf,
+                                                    zones_pdf):
+    """Fused mapInArrow kNN == the staged lane on an integer zone key,
+    with zero-row partitions and null/NaN coordinates (those rank the
+    first k zones by key on both lanes: every distance ties)."""
+    pdf, pts = _hostile_points(spark, images_pdf, zones_pdf)
+    zid, z = _int_keyed_zones(spark, zones_pdf)
+    kw = dict(k=3, point_key="image_id", zone_key="zid")
+    fused = spatial.knn_join(pts, z, **kw)
+    staged = spatial.knn_join(pts, z, max_broadcast_zones=0,
+                              eager_cleanup=False, **kw)
+    assert fused.schema.fieldNames() == ["image_id", "zid", "knn_rank"]
+    assert fused.schema["zid"].dataType.typeName() == "long"
+    got_f = sorted(map(tuple, fused.collect()))
+    assert got_f == sorted(map(tuple, staged.collect()))
+    assert len(got_f) == 3 * len(pdf)
+    first3 = sorted(zid)[:3]
+    for bad in ("nan_lng", "nan_lat", "null_lng", "null_lat"):
+        assert [r[1] for r in got_f if r[0] == bad] == first3

@@ -15,11 +15,13 @@ Scale design notes (10^12-row table, 1000 executors):
    probes and refines (the common case: zones << images); past it the
    zone side stays distributed and candidates come from a shuffled
    equi-join on the int64 ``cell``.
- * skewed cells (dense polygon stacks / the fixture's hot cell) on the
-   shuffled lane are salted EXPLICITLY: replicate hot zone-cell rows S
-   ways, give the image side a deterministic salt — see
-   :func:`salt_sides` / :func:`pip_join` ``salt=``.  AQE skew-join
-   stays on as backstop.
+ * skew on the shuffled lane has one explicit policy, decided by one
+   driver aggregate over the candidate cells: hot cells (dense polygon
+   stacks / the fixture's hot cell) replicate their zone-cell rows S
+   ways against a deterministic image-side salt (:func:`salt_sides`),
+   hot zones split their candidates S ways on the zone-key cogroup, and
+   the bucket count grows with the candidate count — see
+   :func:`pip_join` ``salt=``.  AQE skew-join stays on as backstop.
  * dedup of multi-cell candidates uses the reference-point trick (the
    pair is kept only in the cell containing the intersection's
    lower-left corner) — no ``distinct`` shuffle.
@@ -32,9 +34,9 @@ Scale design notes (10^12-row table, 1000 executors):
 
 from __future__ import annotations
 
-import pandas as pd
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pac
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .. import cells, geom
@@ -131,44 +133,59 @@ def salt_sides(probe: DataFrame, build: DataFrame, hot: DataFrame,
 
 def _check_zones(keys, bad):
     """The zone-ring rule of both ``pip_join`` lanes: raise ValueError
-    naming the first zone flagged in ``bad`` (a null ring, or a null or
-    NaN vertex).  Null geometries never get here — ``pip_join`` drops
-    them in the plan."""
+    naming the first Arrow zone key flagged in ``bad`` (a null ring, or
+    a null or NaN vertex).  Null geometries never get here — ``pip_join``
+    drops them in the plan."""
     if bad.any():
-        raise ValueError(f"pip_join: zone {keys.iloc[int(np.argmax(bad))]!r} "
-                         "has a null ring or a null or NaN vertex")
+        key = keys[int(np.argmax(bad))].as_py()
+        raise ValueError(f"pip_join: zone {key!r} has a null ring or a "
+                         "null or NaN vertex")
 
 
-def _pip_cogroup_fn(lng, lat, ring_cols, multi, out_cols):
-    """Per-zone residual for the cogrouped shuffled lane: the zone's
-    rings are packed with :func:`geom.pack_feature_edges` and its whole
-    candidate block is refined by ONE :func:`geom.points_in_features`
-    call — the fused lane's refine (exact-bounds prefilter, even-odd
-    raycast, +/-360 antimeridian retest), so both lanes agree bit for
-    bit.  The zone's rings are checked before the no-candidates early
-    return, so a bad zone raises whether or not any point reaches it.
-    Never per-row Python."""
-    rx_col, ry_col = ring_cols
+def _pack_rings(tbl: pa.Table, key: str, ring_cols):
+    """Both ``pip_join`` lanes' ring packer: flat edges straight from the
+    Arrow list offsets (zero per-ring Python) and their vertex bounds,
+    checked by :func:`_check_zones` on column ``key``; feature i is row i."""
 
-    def fn(cpdf: pd.DataFrame, zpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(zpdf):
-            return cpdf.iloc[0:0][out_cols]
-        rings_x, rings_y = zpdf[rx_col].iloc[0], zpdf[ry_col].iloc[0]
-        if not multi:
-            rings_x, rings_y = [rings_x], [rings_y]
-        _check_zones(zpdf["_rkey"], np.array(
-            [any(r is None for r in (*rings_x, *rings_y))]))
-        edges = geom.pack_feature_edges([rings_x], [rings_y])
-        fb = geom.feature_vertex_bounds(edges)   # NaN from a null/NaN vertex
-        _check_zones(zpdf["_rkey"], np.isnan(fb[0]) | np.isnan(fb[1]))
-        if not len(cpdf):
-            return cpdf.iloc[0:0][out_cols]
-        px = cpdf[lng].to_numpy(np.float64)
-        hit = geom.points_in_features(px, cpdf[lat].to_numpy(np.float64),
-                                      np.zeros(len(px), np.int64), edges, fb)
-        return cpdf.loc[hit, out_cols]
+    def _flat_rings(name):
+        """(flat_values, ring_lens, ring_nx, null-ring features) from an
+        Arrow list column; a null vertex reads as NaN."""
+        col = tbl.column(name).combine_chunks()
+        if ring_cols[0] == "rings_xs":
+            ring_nx = np.diff(col.offsets.to_numpy().astype(np.int64))
+            col = col.flatten()          # list<double> rings, in order
+            null_ring = np.repeat(np.arange(len(ring_nx)), ring_nx)[
+                col.is_null().to_numpy(zero_copy_only=False)]
+        else:
+            ring_nx = np.ones(len(col), dtype=np.int64)
+            null_ring = []
+        ring_lens = np.diff(col.offsets.to_numpy().astype(np.int64))
+        return (np.asarray(col.flatten().to_numpy(zero_copy_only=False),
+                           np.float64), ring_lens, ring_nx, null_ring)
 
-    return fn
+    fx = _flat_rings(ring_cols[0])
+    fy = _flat_rings(ring_cols[1])
+    null_ring = np.zeros(tbl.num_rows, dtype=bool)
+    null_ring[fx[3]] = True
+    null_ring[fy[3]] = True
+    _check_zones(tbl.column(key), null_ring)
+    edges = geom.pack_feature_edges_flat(fx[0], fy[0], fx[1], fx[2])
+    fbounds = geom.feature_vertex_bounds(edges)  # NaN from a null/NaN vertex
+    _check_zones(tbl.column(key), np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
+    return edges, fbounds
+
+
+def _pip_refine(lo, hi, fidx_sorted, px, py, edges, fbounds):
+    """Both ``pip_join`` lanes' expand+refine: pair point i with features
+    ``fidx_sorted[lo[i]:hi[i]]``, test the pairs with
+    :func:`geom.points_in_features`, return the hits as (row, feature)."""
+    cnt = hi - lo
+    row = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    starts = np.cumsum(cnt) - cnt
+    pos = lo[row] + (np.arange(len(row), dtype=np.int64) - starts[row])
+    zi = fidx_sorted[pos]
+    hit = geom.points_in_features(px[row], py[row], zi, edges, fbounds)
+    return row[hit], zi[hit]
 
 
 def pip_res_for(zones: DataFrame, max_cover_rows: int = 4_000_000,
@@ -208,16 +225,15 @@ def _res_from_stats(n: int, w: float, h: float,
 
 
 MAX_BROADCAST_ZONES = 2_000_000
+PIP_BUCKET_ROWS = 1 << 20   # shuffled pip_join: candidates per bucket
 
 
 def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
                row_guard: int | None = None):
     """Driver-side zone preparation for the fused PIP lane: collect the
     (small) zone layer once, enumerate covering cells (antimeridian wrap
-    included), pack rings into flat edge arrays straight from the Arrow
-    list offsets, and take their vertex bounds under the zone-ring rule
-    of :func:`_check_zones`.  ``zones`` holds no null ring column
-    (``pip_join`` drops those rows).
+    included), and pack and check the rings with :func:`_pack_rings`.
+    ``zones`` holds no null ring column (``pip_join`` drops those rows).
 
     ``row_guard``: collect at most guard+1 rows; returns None if the
     layer exceeds the guard (caller falls back to the shuffled plan) —
@@ -238,7 +254,7 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
             return None
     else:
         ztbl = sel.toArrow()
-    keys = ztbl.column(zone_cols[0]).to_pandas()
+    nz = ztbl.num_rows
 
     def _np(name):
         return np.asarray(ztbl.column(name).combine_chunks().to_numpy(
@@ -249,9 +265,9 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
     xmaxv = _np("xmax")
     ymaxv = _np("ymax")
     if res is None:
-        w = float(np.mean(xmaxv - xminv)) if len(keys) else 1.0
-        h = float(np.mean(ymaxv - yminv)) if len(keys) else 1.0
-        res = _res_from_stats(len(keys), w, h)
+        w = float(np.mean(xmaxv - xminv)) if nz else 1.0
+        h = float(np.mean(ymaxv - yminv)) if nz else 1.0
+        res = _res_from_stats(nz, w, h)
     wrap = (xmaxv > 180.0) | (xminv < -180.0)
     parts = []
     if (~wrap).any():
@@ -285,33 +301,19 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
     cov_ridx = np.concatenate([p0 for p0, _ in parts]) if parts else np.empty(0, np.int64)
     cov_cell = np.concatenate([c for _, c in parts]) if parts else np.empty(0, np.int64)
 
-    def _flat_rings(name):
-        """(flat_values, ring_lens, ring_nx, null-ring features) from an
-        Arrow list column; a null vertex reads as NaN."""
-        col = ztbl.column(name).combine_chunks()
-        if ring_cols[0] == "rings_xs":
-            ring_nx = np.diff(col.offsets.to_numpy().astype(np.int64))
-            col = col.flatten()          # list<double> rings, in order
-            null_ring = np.repeat(np.arange(len(ring_nx)), ring_nx)[
-                col.is_null().to_numpy(zero_copy_only=False)]
-        else:
-            ring_nx = np.ones(len(col), dtype=np.int64)
-            null_ring = []
-        ring_lens = np.diff(col.offsets.to_numpy().astype(np.int64))
-        return (np.asarray(col.flatten().to_numpy(zero_copy_only=False),
-                           np.float64), ring_lens, ring_nx, null_ring)
-
-    fx = _flat_rings(ring_cols[0])
-    fy = _flat_rings(ring_cols[1])
-    null_ring = np.zeros(len(keys), dtype=bool)
-    null_ring[fx[3]] = True
-    null_ring[fy[3]] = True
-    _check_zones(keys, null_ring)
-    edges = geom.pack_feature_edges_flat(fx[0], fy[0], fx[1], fx[2])
-    fbounds = geom.feature_vertex_bounds(edges)  # NaN from a null/NaN vertex
-    _check_zones(keys, np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
+    edges, fbounds = _pack_rings(ztbl, zone_cols[0], ring_cols)
     zone_arrays = [ztbl.column(c).combine_chunks() for c in zone_cols]
     return zone_arrays, res, cov_ridx, cov_cell, edges, fbounds
+
+
+def _emit(point_arrays, rows, zone_arrays, zidx, extra, names) -> pa.Table:
+    """Flat lane output (fused lanes, bucketed PIP lane): ``point_arrays``
+    taken at ``rows``, ``zone_arrays`` at ``zidx``, then ``extra``."""
+    rows, zidx = pa.array(rows), pa.array(zidx)
+    return pa.Table.from_arrays(
+        [a.take(rows) for a in point_arrays]
+        + [a.take(zidx) for a in zone_arrays]
+        + [pa.array(e) for e in extra], names=names)
 
 
 def _fused_lane(points: DataFrame, point_cols, lng: str, lat: str, bc,
@@ -319,9 +321,8 @@ def _fused_lane(points: DataFrame, point_cols, lng: str, lat: str, bc,
     """The one ``mapInArrow`` pass of both fused lanes.  ``bc.value`` is
     ``(*state, zone_arrays)``; per batch ``kernel(state, px, py)`` (the
     coordinates as float64, a null read as NaN) returns ``(rows, zidx,
-    *extra)`` and the flat output is ``point_cols`` taken at ``rows``,
-    the zone arrays taken at ``zidx``, then ``extra``, typed by
-    ``point_cols``' fields plus ``fields``."""
+    *extra)`` for :func:`_emit`, typed by ``point_cols``' fields plus
+    ``fields``."""
     npc = len(point_cols)
     schema = T.StructType([points.schema[c] for c in point_cols] + fields)
     names = schema.fieldNames()
@@ -334,11 +335,8 @@ def _fused_lane(points: DataFrame, point_cols, lng: str, lat: str, bc,
             px, py = (np.asarray(rb.column(i).to_numpy(zero_copy_only=False),
                                  np.float64) for i in (npc, npc + 1))
             rows, zi, *extra = kernel(state, px, py)
-            rows, zi = pa.array(rows), pa.array(zi)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(i).take(rows) for i in range(npc)]
-                + [a.take(zi) for a in zone_arrays]
-                + [pa.array(e) for e in extra], names=names)
+            yield from _emit(rb.columns[:npc], rows, zone_arrays, zi, extra,
+                             names).to_batches()
 
     return (points.select(*point_cols, F.col(lng).cast("double"),
                           F.col(lat).cast("double"))
@@ -351,9 +349,8 @@ def _pip_matches(state, pxv, pyv):
     never a driver-built JVM hash relation) is the resolution, the
     covering table sorted by cell, the packed zone edges and their vertex
     bounds.  Per batch: cell id (numpy closed form, identical to the SQL
-    form), searchsorted range probe, the shared
-    :func:`geom.points_in_features` refine; returns flat (row, zone idx)
-    hit pairs.
+    form), searchsorted range probe, then the shared :func:`_pip_refine`;
+    returns flat (row, zone idx) hit pairs.
 
     Why fused: a JVM broadcast cell equi-join builds its exchange
     single-threaded on the driver, per action (a flat 4.3-6.7 s at 33.5k
@@ -363,18 +360,38 @@ def _pip_matches(state, pxv, pyv):
     reducer.
     """
     res, cell_sorted, zidx_sorted, edges, fbounds = state
-    n = len(pxv)
     pcell = cells.cell_id(pxv, pyv, res)
-    lo = np.searchsorted(cell_sorted, pcell, "left")
-    hi = np.searchsorted(cell_sorted, pcell, "right")
-    cnt = hi - lo
-    total = int(cnt.sum())
-    row = np.repeat(np.arange(n, dtype=np.int64), cnt)
-    starts = np.cumsum(cnt) - cnt
-    pos = lo[row] + (np.arange(total, dtype=np.int64) - starts[row])
-    zi = zidx_sorted[pos]
-    hit = geom.points_in_features(pxv[row], pyv[row], zi, edges, fbounds)
-    return row[hit], zi[hit]
+    return _pip_refine(np.searchsorted(cell_sorted, pcell, "left"),
+                       np.searchsorted(cell_sorted, pcell, "right"),
+                       zidx_sorted, pxv, pyv, edges, fbounds)
+
+
+def _pip_bucket_fn(npc: int, nzc: int, ring_cols, names):
+    """The shuffled ``pip_join`` lane's body, one call per (zone-key
+    bucket, zone split): ``cand`` holds ``npc`` point columns, the zone
+    key and float64 lng/lat; ``rings`` the ``nzc`` zone columns (key
+    first) and the ring columns.  Ring-only groups are visited too, so a
+    bad zone raises with no candidate.  A candidate's key maps by Arrow
+    hash lookups to its key's run in a stable key sort of the rings, so
+    :func:`_pip_refine` tests it against EVERY zone row of its key."""
+
+    def fn(cand: pa.Table, rings: pa.Table) -> pa.Table:
+        edges, fbounds = _pack_rings(rings, "_rkey", ring_cols)
+        keys = pac.unique(rings.column(0))
+        rid = pac.index_in(rings.column(0), value_set=keys).to_numpy()
+        order = np.argsort(rid, kind="stable")
+        rid = rid[order]
+        cid = (pac.index_in(cand.column(npc), value_set=keys)
+               .fill_null(-1).to_numpy())
+        px, py = (np.asarray(cand.column(i).to_numpy(), np.float64)
+                  for i in (npc + 1, npc + 2))
+        row, zi = _pip_refine(np.searchsorted(rid, cid, "left"),
+                              np.searchsorted(rid, cid, "right"),
+                              order, px, py, edges, fbounds)
+        return _emit(cand.columns[:npc], row, rings.columns[:nzc], zi, (),
+                     names)
+
+    return fn
 
 
 def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
@@ -405,28 +422,27 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
         covering table, packed edges and zone columns ship by one
         torrent broadcast, and one ``mapInArrow`` pass probes, refines
         and emits flat rows (zone columns by an Arrow take).
-      * more rows: the COGROUPED shuffled lane.  A light cell equi-join
-        (keys + coords only) generates the candidates, then candidates
-        and zone rings cogroup on the zone key, so each zone's ring
-        arrays cross the shuffle/Arrow boundary once per zone, never per
-        candidate row.  (A 10^8-row zone table must never be
-        toPandas'd — that was r1 "what's wrong" #4.)
+      * more rows: the BUCKETED shuffled lane.  A light cell equi-join
+        (keys + coords only) yields one candidate per (point, zone key);
+        candidates and zone rings cogroup on a zone-key bucket, and one
+        ``applyInArrow`` call per bucket runs the fused lane's ring
+        packer, refine and Arrow output.  (A 10^8-row zone table must
+        never be collected — that was r1 "what's wrong" #4.)
     ``max_broadcast_zones=0`` forces the shuffled lane.
 
     Skew: salting applies past the guard only — the fused lane never
     moves probe rows, so a hot cell cannot concentrate a reducer there,
-    and it ignores ``salt``.  On the shuffled lane, ``salt='auto'`` runs
-    one map-side-combined count that decides BOTH skew guards (hot
-    candidate cells -> cell salting on the equi-join; hot zones ->
-    candidate splitting + ring replication on the cogroup); no hot keys
-    -> unsalted.  An int forces that many salts (0 disables both).
+    and it ignores ``salt``.  The shuffled lane runs one driver
+    aggregate over the candidate cells: its sum sizes the buckets (about
+    ``PIP_BUCKET_ROWS`` candidates each), and under ``salt='auto'`` a
+    cell past ``hot_threshold`` points turns on 8 salts.  ``salt`` is
+    the number of salts for both skew guards (hot cells salted on the
+    equi-join, hot zones split on the cogroup); 0 disables both.
     """
     spark = points.sparkSession
-    multi = "rings_xs" in zones.columns
-    ring_cols = ("rings_xs", "rings_ys") if multi else ("xs", "ys")
+    ring_cols = (("rings_xs", "rings_ys") if "rings_xs" in zones.columns
+                 else ("xs", "ys"))
     zones = zones.dropna(subset=list(ring_cols))
-    # the size guard rides the collect: limit(max+1) is ONE job; a
-    # count() would be a second full pass over zones
     prep = _zone_prep(zones, zone_cols, ring_cols, res,
                       row_guard=max_broadcast_zones)
     if prep is not None:
@@ -442,85 +458,65 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     if res is None:
         res = pip_res_for(zones)
     p = with_point_cell(points.select(*point_cols, lng, lat), res, lng, lat)
-    # zone layers usually arrive in 1-2 files; spread the covering
-    # explode across the cluster before the cell equi-join
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    zones = zones.repartition(n_shuffle)
-
-    # Shuffled regime v2 (zone side too large to broadcast), cogrouped:
-    # rings NEVER ride candidate rows.  Phase 1 is a LIGHT cell
-    # equi-join (keys + coords only); phase 2 cogroups the candidates
-    # with the zone rings on the zone key, so each zone's ring arrays
-    # cross the shuffle and the Arrow boundary exactly once per
-    # (zone, salt split) instead of once per candidate row — the v1
-    # rings-on-candidates plan measured 15x slower than the fused lane
-    # at sf2 (BENCH/BASELINE.md) and its shuffle volume grew with
-    # |candidates| x |ring bytes|, a 100 TB scale-killer.
     zkey = zone_cols[0]
-    z = with_covering_cells(
-        zones.select(*zone_cols, "xmin", "ymin", "xmax", "ymax"),
-        res).select(*zone_cols, "cell")
+    # zone layers usually arrive in 1-2 files; spread the covering
+    # explode across the cluster before the cell equi-join, hashed on
+    # the key so the (key, cell) dedup needs no second exchange
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    zones = zones.repartition(n_shuffle, zkey)
+    # one candidate per (point, zone key): the bucket body tests it
+    # against every feature of its key (see _pip_bucket_fn)
+    z = (with_covering_cells(zones.select(zkey, "xmin", "ymin", "xmax",
+                                          "ymax"), res)
+         .select(zkey, "cell").dropDuplicates([zkey, "cell"]))
+    counts = p.groupBy("cell").count()
+    # ONE driver aggregate: the exact candidate count sizes the buckets,
+    # the densest candidate cell makes the salt='auto' decision
+    n_cand, top = (z.join(counts, "cell")
+                   .agg(F.sum("count"), F.max("count")).first())
+    n_salt = ((8 if (top or 0) > hot_threshold else 0) if salt == "auto"
+              else int(salt))
+    n_bucket = max(n_shuffle, -(-(n_cand or 0) // PIP_BUCKET_ROWS))
 
-    if salt == "auto" or int(salt) > 0:
-        # one light map-side-combined count feeds BOTH skew decisions
-        pc = p.groupBy("cell").count()
-        hot = pc.filter(F.col("count") > hot_threshold)
-        if salt == "auto":
-            n_salt = 8 if hot.limit(1).count() > 0 else 0
-        else:
-            n_salt = int(salt)
-    else:
-        pc, hot, n_salt = None, None, 0
-
+    # rings carry a RENAMED key: z / hotz / rings all descend from
+    # `zones`, and same-lineage joins on a shared column name trip
+    # Spark's ambiguous-self-join analysis
+    bucket = F.pmod(F.xxhash64(zkey), F.lit(n_bucket)).alias("_b")
+    rings = zones.select(F.col(zkey).alias("_rkey"), *zone_cols[1:],
+                         *ring_cols, bucket)
+    join_keys, gcols, zsalt = ["cell"], ["_b"], []
     if n_salt > 0:
-        p, z = salt_sides(p, z, hot, n_salt, probe_key=point_cols[0])
-        join_keys = ["cell", "_salt"]
-    else:
-        join_keys = ["cell"]
-    cand = (p.join(z, join_keys, "inner")
-            .select(*point_cols, *zone_cols, lng, lat))
-
-    # rings side carries a RENAMED key: cand / hotz / rings all descend
-    # from `zones`, and joins between same-lineage frames on a shared
-    # column name trip Spark's ambiguous-self-join analysis.
-    rings = zones.select(F.col(zkey).alias("_rkey"), *ring_cols)
-    if pc is not None:
-        # zone-level skew: the cogroup stage has no AQE skew handling,
-        # so a zone whose covering collects > hot_threshold candidate
-        # points is SPLIT — its candidates hash into n_zsalt subgroups
-        # and its rings replicate once per subgroup (rings per zone are
-        # tiny next to rings per candidate).  The estimate is exact:
-        # sum of per-cell point counts over the zone's covering cells
-        # IS the zone's candidate count.
-        n_zsalt = max(n_salt, 8)
-        hotz = (z.join(pc, "cell")
+        # the cogroup has no AQE skew handling: a zone with more than
+        # hot_threshold candidates (exactly, the point counts of its
+        # covering cells) is SPLIT — its candidates hash into n_salt
+        # subgroups and its rings replicate once per subgroup
+        hotz = (z.join(counts, "cell")
                 .groupBy(zkey).agg(F.sum("count").alias("_est"))
                 .filter(F.col("_est") > hot_threshold)
                 .select(F.col(zkey).alias("_hotz")))
-        cand = (cand.join(F.broadcast(hotz),
-                          cand[zkey] == hotz["_hotz"], "left")
-                .withColumn("_zsalt", F.when(
-                    F.col("_hotz").isNotNull(),
-                    F.pmod(F.hash(point_cols[0]), F.lit(n_zsalt)))
-                    .otherwise(F.lit(0)))
-                .drop("_hotz"))
+        z = z.join(F.broadcast(hotz), z[zkey] == hotz["_hotz"], "left")
+        zsalt = [F.when(F.col("_hotz").isNotNull(),
+                        F.pmod(F.hash(point_cols[0]), F.lit(n_salt)))
+                 .otherwise(F.lit(0)).alias("_zsalt")]
         rings = (rings.join(F.broadcast(hotz),
                             rings["_rkey"] == hotz["_hotz"], "left")
                  .withColumn("_zsalt", F.explode(F.when(
                      F.col("_hotz").isNotNull(),
-                     F.sequence(F.lit(0), F.lit(n_zsalt - 1)))
+                     F.sequence(F.lit(0), F.lit(n_salt - 1)))
                      .otherwise(F.array(F.lit(0)))))
                  .drop("_hotz"))
-        gcols, rcols = [zkey, "_zsalt"], ["_rkey", "_zsalt"]
-    else:
-        gcols, rcols = [zkey], ["_rkey"]
-
-    out_cols = [*point_cols, *zone_cols]
-    out_schema = T.StructType([cand.schema[c] for c in out_cols])
-    fn = _pip_cogroup_fn(lng, lat, ring_cols, multi, out_cols)
-    return (cand.groupBy(*gcols)
-            .cogroup(rings.groupBy(*rcols))
-            .applyInPandas(fn, out_schema))
+        p, z = salt_sides(p, z, counts.filter(F.col("count") > hot_threshold),
+                          n_salt, probe_key=point_cols[0])
+        join_keys, gcols = ["cell", "_salt"], ["_b", "_zsalt"]
+    cand = (p.join(z, join_keys, "inner")
+            .select(*point_cols, zkey, F.col(lng).cast("double"),
+                    F.col(lat).cast("double"), *zsalt, bucket))
+    schema = T.StructType([points.schema[c] for c in point_cols]
+                          + [zones.schema[c] for c in zone_cols])
+    fn = _pip_bucket_fn(len(point_cols), len(zone_cols), ring_cols,
+                        schema.fieldNames())
+    return (cand.groupBy(*gcols).cogroup(rings.groupBy(*gcols))
+            .applyInArrow(fn, schema))
 
 
 def spatial_semi_join(points: DataFrame, zones: DataFrame, **kw) -> DataFrame:

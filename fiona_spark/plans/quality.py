@@ -80,12 +80,12 @@ def codegen_stage_count(df: DataFrame) -> int:
 
 def python_eval_count(df: DataFrame) -> int:
     """Python-execution operators in the plan (ArrowEval/BatchEval/
-    MapInPandas/MapInArrow/FlatMapGroups/FlatMapCoGroups) — the ones
-    that must stay off pure relational paths."""
+    MapInPandas/MapInArrow/FlatMapGroups/FlatMapCoGroups, pandas or
+    Arrow) — the ones that must stay off pure relational paths."""
     return sum(_op_count(df, tok) for tok in
                ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                 "MapInArrow", "FlatMapGroupsInPandas",
-                "FlatMapCoGroupsInPandas"))
+                "FlatMapCoGroupsInPandas", "FlatMapCoGroupsInArrow"))
 
 
 def assert_quality(df: DataFrame, *, max_shuffles: int | None = None,

@@ -17,7 +17,7 @@ per-job table shows WHICH job saturates.
 
 Spatial jobs: ``cells`` = codegen'd cell-id assignment + covering
 explode (pure JVM CPU); ``spatial`` = the fused PIP lane (the pip_join
-default); ``spatial_shuffled`` = the past-guard cogrouped PIP lane.
+default); ``spatial_shuffled`` = the past-guard bucketed PIP lane.
 
 Writes BENCH/BASELINE.md and prints one JSON line.
 """
@@ -185,11 +185,11 @@ def spatial_job():
     return spatial.pip_join(pts, zones, res=PIP_RES).count()
 
 def spatial_shuffled_job():
-    """the PAST-GUARD lane (r5 cogrouped plan): zones too large to
-    broadcast -> light shuffled cell equi-join for candidates, then a
-    candidate x rings cogroup on the zone key (rings cross the wire
-    once per zone, never per candidate row), skew guards engaged
-    (r4 verdict ask #7: this regime had no wall-time evidence)."""
+    """the PAST-GUARD lane: zones too large to broadcast -> light
+    shuffled cell equi-join for candidates, then a candidate x rings
+    cogroup on a zone-key bucket (rings cross the wire once per zone,
+    never per candidate row; one Arrow call per bucket), skew guards
+    engaged (r4 verdict ask #7: this regime had no wall-time evidence)."""
     return spatial.pip_join(pts, zones, res=PIP_RES,
                             max_broadcast_zones=0).count()
 
@@ -418,13 +418,15 @@ def main() -> None:
         "residual UDF — no JVM broadcast-exchange build), the headline "
         "operator; `spatial_shuffled` = the PAST-GUARD lane "
         "(max_broadcast_zones=0, the plan pip_join takes when zones "
-        "exceed max_broadcast_zones; r5 COGROUPED design: a light cell "
+        "exceed max_broadcast_zones; BUCKETED design: a light cell "
         "equi-join generates candidates, then candidates cogroup with "
-        "the zone rings on the zone key so rings cross the shuffle and "
-        "Arrow once per zone instead of once per candidate row — the "
-        "v1 rings-on-candidates plan measured 15x the fused lane here; "
-        "hot cells salt the equi-join, hot zones split the cogroup — "
-        "r4 verdict ask #7's wall-time evidence).  "
+        "the zone rings on a zone-key bucket, pmod(xxhash64(zone key), "
+        "P), so rings cross the shuffle and Arrow once per zone instead "
+        "of once per candidate row and Python runs once per bucket "
+        "through the fused lane's ring packer, refine and Arrow output "
+        "— the v1 rings-on-candidates plan measured 15x the fused lane "
+        "here; hot cells salt the equi-join, hot zones split the "
+        "cogroup — r4 verdict ask #7's wall-time evidence).  "
         "A job whose unsaturated-pair efficiency is high but "
         "saturated-pair efficiency collapses is bandwidth-bound on this "
         "box, not algorithmically serial — the per-job table makes that "

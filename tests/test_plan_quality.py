@@ -83,7 +83,7 @@ def test_knn_fused_plan_is_one_arrow_pass(spark, images_path, zones):
 
 
 def test_python_eval_count_sees_arrow_maps_and_cogroups(spark, zones):
-    """mapInArrow and cogrouped applyInPandas are Python operators too:
+    """mapInArrow and cogrouped applyInArrow are Python operators too:
     the payload operators and the shuffled PIP lane count."""
     img = spark.createDataFrame(
         [("a", b"", "raw", 1, 1, 0.0, 0.0, 1.0, 1.0, 0.5, 0.5)],
@@ -92,7 +92,7 @@ def test_python_eval_count_sees_arrow_maps_and_cogroups(spark, zones):
         "lng double, lat double")
     assert quality.python_eval_count(spatial.block_tiles(img, 9)) == 1
     cog = spatial.pip_join(img, zones, res=6, max_broadcast_zones=0)
-    assert "FlatMapCoGroupsInPandas" in quality.formatted_plan(cog)
+    assert "FlatMapCoGroupsInArrow" in quality.formatted_plan(cog)
     assert quality.python_eval_count(cog) == 1
 
 

@@ -328,7 +328,7 @@ def test_bbox_where_composition_matches_eager(spark):
 
 def test_shuffled_pip_is_cogrouped_and_join_is_light(spark):
     """The past-guard lane's plan must contain the cogroup operator
-    (FlatMapCoGroupsInPandas) and its equi-join must NOT carry ring
+    (FlatMapCoGroupsInArrow) and its equi-join must NOT carry ring
     arrays — the v1 rings-on-candidates plan shuffled |candidates| x
     |ring bytes| and measured 15x the fused lane at sf2."""
     from fiona_spark import fixtures
@@ -338,7 +338,7 @@ def test_shuffled_pip_is_cogrouped_and_join_is_light(spark):
     zones = spark.read.parquet(zone_path)
     df = spatial.pip_join(pts, zones, res=6, max_broadcast_zones=0)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert "FlatMapCoGroupsInPandas" in plan
+    assert "FlatMapCoGroupsInArrow" in plan
     join_lines = [ln for ln in plan.splitlines() if "Join" in ln]
     assert join_lines, plan
     # the candidate equi-join output never references ring columns

@@ -36,15 +36,20 @@ def zones(spark, zones_pdf):
 
 
 def _pip_oracle(images_pdf, zones_pdf):
-    """Brute-force point-in-polygon pairs with antimeridian wrap."""
+    """Brute-force point-in-polygon pairs with antimeridian wrap; a
+    multi-ring zone (rings_xs/rings_ys) is the XOR of its rings."""
     out = set()
     px = images_pdf.lng.to_numpy()
     py = images_pdf.lat.to_numpy()
     for z in zones_pdf.itertuples(index=False):
-        xs = np.asarray(z.xs); ys = np.asarray(z.ys)
+        rings = (list(zip(z.rings_xs, z.rings_ys))
+                 if "rings_xs" in zones_pdf else [(z.xs, z.ys)])
         inside = np.zeros(len(px), dtype=bool)
         for shift in (0.0, 360.0, -360.0):
-            inside |= _pip_reference(px + shift, py, xs, ys)
+            parity = np.zeros(len(px), dtype=bool)
+            for xs, ys in rings:
+                parity ^= _pip_reference(px + shift, py, xs, ys)
+            inside |= parity
         for i in np.flatnonzero(inside):
             out.add((images_pdf.image_id.iloc[i], z.zone_id))
     return out
@@ -58,11 +63,60 @@ def test_pip_join_matches_oracle(spark, images, zones, images_pdf, zones_pdf):
     assert len(exp) > 20  # non-trivial overlap in the fixture
 
 
-def test_pip_join_salted_same_result(spark, images, zones, images_pdf, zones_pdf):
-    got = set(map(tuple, spatial.pip_join(images, zones, res=RES,
-                                          max_broadcast_zones=0, salt=4,
-                                          hot_threshold=5).collect()))
-    assert got == _pip_oracle(images_pdf, zones_pdf)
+@pytest.mark.parametrize("bucket_rows", [spatial.PIP_BUCKET_ROWS, 1],
+                         ids=["zones_over_buckets", "buckets_over_zones"])
+@pytest.mark.parametrize("skew", ["salt4", "one_cell"])
+@pytest.mark.parametrize("multi", [False, True], ids=["single", "multi"])
+@pytest.mark.parametrize("key", ["str", "int"])
+def test_pip_join_salted_same_result(spark, monkeypatch, images_pdf,
+                                     zones_pdf, key, multi, skew,
+                                     bucket_rows):
+    """The bucketed shuffled lane at forced tiny guards returns the
+    fused lane's rows and the brute force's, as a multiset.  ``salt4``:
+    four forced salts over the spread fixture points; ``one_cell``: every
+    point in one cell with hot_threshold=1, so salt='auto' engages both
+    the cell salting and the zone split.  A bucket budget of one
+    candidate row makes more buckets than zones; the default budget
+    leaves fewer buckets than zones."""
+    monkeypatch.setattr(spatial, "PIP_BUCKET_ROWS", bucket_rows)
+    zpdf = fixtures.gen_zones_multi_pdf(N_ZONES) if multi else zones_pdf
+    zpdf = zpdf.assign(zid=np.arange(len(zpdf), dtype=np.int64) * 7 + 3)
+    schema = (fixtures.ZONES_MULTI_SCHEMA if multi
+              else fixtures.ZONES_SCHEMA) + ", zid long"
+    zones = spark.createDataFrame(zpdf, schema=schema)
+    if skew == "one_cell":
+        # points around a zone center, all inside that center's cell
+        rng = np.random.default_rng(5)
+        c = cells.cell_bounds(cells.cell_id(
+            np.array([zpdf.clng[0]]), np.array([zpdf.clat[0]]), RES))
+        pdf = pd.DataFrame({
+            "image_id": [f"q{i:03d}" for i in range(60)],
+            "lng": rng.uniform(c[0][0], c[2][0], 60),
+            "lat": rng.uniform(c[1][0], c[3][0], 60)})
+        kw = dict(hot_threshold=1)
+    else:
+        rng = np.random.default_rng(6)
+        zi = rng.integers(0, len(zpdf), 200)
+        pdf = pd.concat([images_pdf[["image_id", "lng", "lat"]],
+                         pd.DataFrame({
+                             "image_id": [f"z{i:03d}" for i in range(200)],
+                             "lng": zpdf.clng.to_numpy()[zi]
+                             + rng.uniform(-3, 3, 200),
+                             "lat": zpdf.clat.to_numpy()[zi]
+                             + rng.uniform(-3, 3, 200)})],
+                        ignore_index=True)
+        kw = dict(salt=4, hot_threshold=5)
+    pts = spark.createDataFrame(pdf, "image_id string, lng double, lat double")
+    zone_cols = ("zone_id",) if key == "str" else ("zid", "zone_id")
+    fused = spatial.pip_join(pts, zones, res=RES, zone_cols=zone_cols)
+    shuffled = spatial.pip_join(pts, zones, res=RES, zone_cols=zone_cols,
+                                max_broadcast_zones=0, **kw)
+    zid = dict(zip(zpdf.zone_id, zpdf.zid))
+    exp = sorted((i, z) if key == "str" else (i, zid[z], z)
+                 for i, z in _pip_oracle(pdf, zpdf))
+    assert sorted(map(tuple, shuffled.collect())) == exp
+    assert sorted(map(tuple, fused.collect())) == exp
+    assert len(exp) >= 10
 
 
 @pytest.mark.parametrize("multi", [False, True])
@@ -98,6 +152,28 @@ def test_pip_join_empty_ring_lanes_agree(spark, multi):
                                                max_broadcast_zones=0)
                        .collect()))
     assert fused == shuffled == {("a", "full"), ("b", "full")}
+
+
+@pytest.mark.parametrize("guard", [spatial.MAX_BROADCAST_ZONES, 0],
+                         ids=["fused", "shuffled"])
+def test_pip_join_duplicate_zone_keys(spark, guard):
+    """Two zone rows share the key 'Z' (disjoint squares, told apart by
+    NAME) and 'U' covers both: each lane returns one row per zone ROW
+    containing the point, with that row's NAME, never only the key's
+    first row."""
+    rows = [("Z", "z_low", 0.0, 1.0), ("Z", "z_high", 2.0, 3.0),
+            ("U", "u", 0.0, 3.0)]
+    zones = spark.createDataFrame(
+        [(k, n, [a, b, b, a], [a, a, b, b], a, a, b, b)
+         for k, n, a, b in rows],
+        "zone_id string, NAME string, xs array<double>, ys array<double>, "
+        "xmin double, ymin double, xmax double, ymax double")
+    points = spark.createDataFrame([("a", 0.5, 0.5), ("b", 2.5, 2.5)],
+                                   "image_id string, lng double, lat double")
+    got = spatial.pip_join(points, zones, res=3, zone_cols=("zone_id", "NAME"),
+                           max_broadcast_zones=guard).collect()
+    assert sorted(map(tuple, got)) == [("a", "U", "u"), ("a", "Z", "z_low"),
+                                       ("b", "U", "u"), ("b", "Z", "z_high")]
 
 
 @pytest.mark.parametrize("defect", ["none", "null_ring", "null_vertex",

@@ -4,19 +4,20 @@ No Fiona counterpart — these are the web-scale data-curation operators
 the engine adds on top of the reference's scan/filter model (the brief's
 first-class extension set).  Everything below is expressed as DataFrame
 transformations that stay inside whole-stage codegen (hashing, bitwise
-ops, groupBy aggregates); the only Python is the embedding signature
-UDF, which is one Arrow-vectorized matrix multiply.
+ops, groupBy aggregates); the Python is Arrow-vectorized numpy over
+embedding batches (sign-LSH signature, ``qdot_batch``, ``_sqdist``).
 
 Scale design:
-  * Candidate generation is always an equi-join on a band key — never
-    an O(n^2) cross join.  Band keys are compact ints/strings, so the
-    shuffle is small; banded self-joins of hot keys are bounded because
-    a band bucket with B members yields B^2 pairs — the ``max_bucket``
-    guard drops degenerate buckets (boilerplate-only shingles) exactly
-    like web-dedup pipelines drop stop-shingles.  The degenerate set is
-    TINY by construction, so it (not its complement) is what gets
-    broadcast into a left_anti join — at 10^9 docs broadcasting the
-    cold buckets (~n_docs x bands rows) would OOM the driver.
+  * Candidate generation is always an equi-join on a band key (one
+    core, ``_band_pairs``) — never an O(n^2) cross join.  Band keys are
+    compact ints/strings, so the shuffle is small; banded self-joins of
+    hot keys are bounded because a band bucket with B members yields B^2
+    pairs — the ``max_bucket`` guard drops degenerate buckets
+    (boilerplate-only shingles) exactly like web-dedup pipelines drop
+    stop-shingles.  The degenerate set is TINY by construction, so it
+    (not its complement) is what gets broadcast into a left_anti join —
+    at 10^9 docs broadcasting the cold buckets (~n_docs x bands rows)
+    would OOM the driver.
   * Exact verification (Jaccard / Hamming / cosine) runs only on
     candidate pairs.
 
@@ -31,7 +32,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
 
 # Mersenne prime 2^61-1.  The universal hash h(x) = (a*x + b) mod P is
 # evaluated in limbs that never exceed 2^63 (see _perm_hash_col), using
@@ -88,8 +89,6 @@ def _perm_hash_col(x: Column, aj: int, bj: int) -> Column:
       * y*2^31 mod P via 2^61 ≡ 1: (y >> 30) + ((y & (2^30-1)) << 31),
         both limbs < 2^61, sum < 2^62;
       * + a*xl (< 2^62) + b: total < 2^63.  No intermediate overflows.
-    (The previous formulation shifted pmod(a*xh, P) left by 31 which
-    wraps mod 2^64 — a biased, undocumented family.)
     """
     xl = x.bitwiseAND(F.lit((1 << 31) - 1))
     xh = F.shiftright(x, 31)
@@ -125,28 +124,62 @@ def _signatures_from_shingles(sh: DataFrame, id_col: str, n_perm: int,
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def band_keys(sig: DataFrame, id_col: str, n_perm: int, bands: int,
-              band_key: str = "xxhash64") -> DataFrame:
-    """(id, band, key) rows: one band key per signature band.
+# ---------------------------------------------------------------------------
+# Banded candidates (the one candidate core under every LSH operator)
+# ---------------------------------------------------------------------------
 
-    ``band_key='xxhash64'`` packs the band's rows into one int64 (the
-    compact production shuffle key); ``'concat'`` joins them as a
-    string — bigger, but reproducible in ANSI SQL for the oracle.
+def _band_mask(b: int, band_bits: int) -> int:
+    """Signed int64 mask over bits [b*band_bits, (b+1)*band_bits)."""
+    m = (((1 << band_bits) - 1) << (b * band_bits)) & 0xFFFFFFFFFFFFFFFF
+    return m - (1 << 64) if m >= (1 << 63) else m
+
+
+def _explode_bands(df: DataFrame, id_col: str, keys: list[Column],
+                   carry: tuple = ()) -> DataFrame:
+    """(id, band, key, *carry) rows: one per entry of ``keys``."""
+    structs = F.array(*[F.struct(F.lit(b).alias("band"), k.alias("key"))
+                        for b, k in enumerate(keys)])
+    return (df.select(F.col(id_col).alias("id"), *carry,
+                      F.explode(structs).alias("_b"))
+            .select("id", *carry, "_b.band", "_b.key"))
+
+
+def _bit_bands(df: DataFrame, id_col: str, hash_col: str, band_bits: int,
+               n_bits: int = 64, carry: tuple = ()) -> DataFrame:
+    """Band an integer hash into its n_bits/band_bits masked bit ranges."""
+    keys = [F.col(hash_col).bitwiseAND(F.lit(_band_mask(b, band_bits)))
+            for b in range(n_bits // band_bits)]
+    return _explode_bands(df, id_col, keys, carry)
+
+
+def _band_pairs(left: DataFrame, right: DataFrame | None = None,
+                max_bucket: int | None = None,
+                carry: tuple = ()) -> DataFrame:
+    """Distinct (id_a, id_b, *carry_a, *carry_b) pairs from one band
+    equi-join of (id, band, key, *carry) frames: a self-join keeping
+    id_a < id_b, or ``left`` (id_a) against ``right`` (id_b) keeping
+    id_a != id_b.  Skew policy: a side's buckets with more than
+    ``max_bucket`` rows are dropped by a left_anti join against the
+    broadcast hot set; ``None`` disables the guard.
     """
-    rows = n_perm // bands
+    sides = [left] if right is None else [left, right]
+    if max_bucket is not None:
+        sides = [s.join(F.broadcast(s.groupBy("band", "key").count()
+                                    .filter(F.col("count") > max_bucket)
+                                    .select("band", "key")),
+                        ["band", "key"], "left_anti") for s in sides]
 
-    def key_of(bi: int) -> Column:
-        cols = [F.col(f"m{bi * rows + j}") for j in range(rows)]
-        if band_key == "xxhash64":
-            return F.xxhash64(*cols)
-        return F.concat_ws("|", *[c.cast("string") for c in cols])
+    def side(s: DataFrame, sfx: str) -> DataFrame:
+        return s.select(F.col("id").alias("id" + sfx), "band", "key",
+                        *[F.col(c).alias(c + sfx) for c in carry])
 
-    band_structs = F.array(*[
-        F.struct(F.lit(bi).alias("band"), key_of(bi).alias("key"))
-        for bi in range(bands)])
-    return (sig.select(id_col, F.explode(band_structs).alias("b"))
-            .select(id_col, F.col("b.band").alias("band"),
-                    F.col("b.key").alias("key")))
+    keep = (F.col("id_a") < F.col("id_b")) if right is None \
+        else (F.col("id_a") != F.col("id_b"))
+    return (side(sides[0], "_a").join(side(sides[-1], "_b"), ["band", "key"])
+            .filter(keep)
+            .select("id_a", "id_b", *[c + sfx for sfx in ("_a", "_b")
+                                      for c in carry])
+            .distinct())
 
 
 def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -155,46 +188,35 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
                       threshold: float = 0.5, seed: int = 42,
                       max_bucket: int = 1000,
                       hash_fn: str = "xxhash64",
-                      band_key: str = "xxhash64",
-                      persist: bool = True) -> DataFrame:
+                      band_key: str = "xxhash64") -> DataFrame:
     """Near-duplicate pairs by MinHash LSH + exact Jaccard verification.
 
     Signature -> ``bands`` band keys (rows = n_perm/bands) -> band-key
     equi-self-join for candidates -> exact shingle-set Jaccard on the
     candidates only.  Output: (id_a, id_b, jaccard) with jaccard >=
-    threshold, id_a < id_b.
+    threshold, id_a < id_b.  ``band_key='xxhash64'`` packs a band's rows
+    into one int64 (the compact production shuffle key); ``'concat'``
+    joins them as a string — bigger, but reproducible in ANSI SQL for
+    the oracle.
 
-    ``persist=True`` (default) caches the two frames every downstream
-    branch re-reads: the shingle explode (consumed by the signature agg
-    and THREE times by exact Jaccard — both join sides + the size agg)
-    and the banded keys (hot-bucket count + both self-join sides).
-    Without it Spark recomputes the full text->shingle->hash subtree
-    once per branch — measured 5x the pipeline wall at 10^6 docs; at
-    100 TB the recompute IS the job, so the persisted plan is the only
-    one that scales (the signature table, n_docs x n_perm int64s, is
-    the small thing to keep hot; StorageLevel spills to disk past
-    executor memory).  Caches are scoped to this call's output: they
-    hold no correctness state, but benchmark reps should
+    Two frames are persisted because several branches re-read them: the
+    shingle explode (the signature agg, then both exact-Jaccard join
+    sides and its size agg) and the banded keys (the hot-bucket count
+    and both self-join sides).  Recomputing the text->shingle->hash
+    subtree per branch measured 5x the pipeline wall at 10^6 docs.  The
+    caches hold no correctness state, but benchmark reps should
     ``spark.catalog.clearCache()`` between runs (CLAUDE.md convention).
     """
-    sh = word_shingles(docs, id_col, text_col, shingle_n)
-    if persist:
-        sh = sh.persist()
+    sh = word_shingles(docs, id_col, text_col, shingle_n).persist()
     sig = _signatures_from_shingles(sh, id_col, n_perm, seed, hash_fn)
-    banded = band_keys(sig, id_col, n_perm, bands, band_key)
-    if persist:
-        banded = banded.persist()
-    # degenerate-bucket guard (boilerplate shingle sets): the HOT set is
-    # tiny — broadcast it and anti-join (never broadcast the cold set,
-    # which is ~n_docs x bands rows)
-    hot = (banded.groupBy("band", "key").count()
-           .filter(F.col("count") > max_bucket).select("band", "key"))
-    banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    rhs = banded.select(F.col(id_col).alias("_idb"), "band", "key")
-    cand = (banded.join(rhs, ["band", "key"])
-            .filter(F.col(id_col) < F.col("_idb"))
-            .select(F.col(id_col).alias("id_a"), F.col("_idb").alias("id_b"))
-            .distinct())
+    rows = n_perm // bands
+    keys = []
+    for bi in range(bands):
+        ms = [F.col(f"m{bi * rows + j}") for j in range(rows)]
+        keys.append(F.xxhash64(*ms) if band_key == "xxhash64"
+                    else F.concat_ws("|", *[m.cast("string") for m in ms]))
+    banded = _explode_bands(sig, id_col, keys).persist()
+    cand = _band_pairs(banded, max_bucket=max_bucket)
     return exact_jaccard(docs, cand, id_col, text_col, shingle_n, threshold,
                          _shingles=sh)
 
@@ -244,14 +266,11 @@ def simhash(docs: DataFrame, id_col: str = "doc_id",
     aggs = [F.sum(F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"s{i}")
             for i in range(n_bits)]
     sums = tok.groupBy(id_col).agg(*aggs)
-    bit_terms = []
-    for i in range(n_bits):
-        # set bit i when the weighted sum is positive; bit 63 lands on
-        # the sign bit — shiftleft on long handles it via overflow
-        bit_terms.append(F.shiftleft((F.col(f"s{i}") > 0).cast("long"), i))
-    out = bit_terms[0]
-    for t2 in bit_terms[1:]:
-        out = out.bitwiseOR(t2)
+    # set bit i when the weighted sum is positive; bit 63 lands on the
+    # sign bit — shiftleft on long handles it via overflow
+    out = F.shiftleft((F.col("s0") > 0).cast("long"), 0)
+    for i in range(1, n_bits):
+        out = out.bitwiseOR(F.shiftleft((F.col(f"s{i}") > 0).cast("long"), i))
     return sums.select(id_col, out.alias("simhash"))
 
 
@@ -270,42 +289,23 @@ def hamming_pairs(df: DataFrame, id_col: str, hash_col: str,
     band_bits <= n_bits // (max_dist + 1).  Output: (id_a, id_b, hamming).
 
     Degenerate buckets (e.g. a constant hash over millions of rows)
-    are dropped via the same tiny-hot-set broadcast anti-join as
-    minhash_lsh_pairs, bounding the self-join blow-up.
+    are dropped by the ``_band_pairs`` skew guard, bounding the
+    self-join blow-up.
     """
-    n_bands = n_bits // band_bits
     if warn_recall and band_bits > n_bits // (max_dist + 1):
         import warnings
         warnings.warn(
             f"hamming_pairs: band_bits={band_bits} does not guarantee "
             f"recall at max_dist={max_dist} (pairs at distance >= "
-            f"{n_bands} may share no band); pass band_bits <= "
+            f"{n_bits // band_bits} may share no band); pass band_bits <= "
             f"{n_bits // (max_dist + 1)} for full recall",
             RuntimeWarning, stacklevel=2)
-
-    def band_mask(b: int) -> int:
-        m = (((1 << band_bits) - 1) << (b * band_bits)) & 0xFFFFFFFFFFFFFFFF
-        return m - (1 << 64) if m >= (1 << 63) else m
-
-    bands = F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.col(hash_col).bitwiseAND(F.lit(band_mask(b))).alias("key"))
-        for b in range(n_bands)])
-    a = (df.select(id_col, hash_col)
-         .withColumn("b", F.explode(bands))
-         .select(F.col(id_col).alias("id_a"), F.col(hash_col).alias("_ha"),
-                 F.col("b.band").alias("band"), F.col("b.key").alias("key")))
-    hot = (a.groupBy("band", "key").count()
-           .filter(F.col("count") > max_bucket).select("band", "key"))
-    a = a.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    bside = a.select(F.col("id_a").alias("id_b"), F.col("_ha").alias("_hb"),
-                     "band", "key")
-    cand = (a.join(bside, ["band", "key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "_ha", "_hb").distinct())
-    return (cand.withColumn("hamming", F.expr("bit_count(_ha ^ _hb)"))
-            .filter(F.col("hamming") <= max_dist)
-            .select("id_a", "id_b", "hamming"))
+    banded = _bit_bands(df.select(id_col, F.col(hash_col).alias("_h")),
+                        id_col, "_h", band_bits, n_bits, ("_h",))
+    cand = _band_pairs(banded, max_bucket=max_bucket, carry=("_h",))
+    return (cand.select("id_a", "id_b",
+                        F.expr("bit_count(_h_a ^ _h_b)").alias("hamming"))
+            .filter(F.col("hamming") <= max_dist))
 
 
 def simhash_pairs(docs: DataFrame, id_col: str = "doc_id",
@@ -342,75 +342,71 @@ def lsh_planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return p
 
 
+def _stack(v: pd.Series) -> np.ndarray:
+    """(rows, dim) float64 matrix from a Series of equal-length arrays."""
+    return np.stack(v.to_numpy(object)).astype(np.float64)
+
+
+def _sqdist(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
+    """(rows, k) squared distances to centroids: the nearest-centroid step."""
+    return ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+
+
 def sign_lsh_signatures(emb: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding", dim: int = 64,
                         n_planes: int = 64, seed: int = 7) -> DataFrame:
     """Random-hyperplane signature: bit j = (quantize(emb) . plane_j) > 0.
 
-    One Arrow-vectorized integer matrix multiply per batch (the only
-    Python in this module); planes are deterministic from ``seed`` and
-    live in the UDF closure (broadcast with the task, ~32 KB).
+    One Arrow-vectorized integer matrix multiply per batch; planes are
+    deterministic from ``seed`` and live in the UDF closure (broadcast
+    with the task, ~32 KB).  A null vector has no signature: its row is
+    dropped in the plan, so it forms no candidate pair.
     """
     planes = lsh_planes(dim, n_planes, seed)
     weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
 
     @F.pandas_udf(T.LongType())
     def sig(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy(object)).astype(np.float64)   # (B, dim)
-        q = np.floor(m * 1000.0).astype(np.int64)             # exact quantize
+        q = np.floor(_stack(v) * 1000.0).astype(np.int64)    # exact quantize
         bits = (q @ planes) > 0                                # (B, n_planes)
         out = (bits.astype(np.uint64) * weights).sum(axis=1)
         return pd.Series(out.astype(np.int64))
 
-    return emb.select(id_col, sig(vec_col).alias("sig"))
+    return (emb.filter(F.col(vec_col).isNotNull())
+            .select(id_col, sig(vec_col).alias("sig")))
 
 
-QDOT_EXPR = ("aggregate(zip_with(qe, ce, (x, y) -> "
-             "CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)"
-             " * CAST(floor(CAST(y AS DOUBLE) * 1000.0) AS BIGINT)), "
-             "CAST(0 AS BIGINT), (acc, v) -> acc + v)")
+# Bound on the float64 sum of |floor(1000 a_i) * floor(1000 b_i)|: below
+# it the int64 sum cannot wrap (float error ~dim ulps << 2x headroom).
+QDOT_LIMIT = float(1 << 62)
 
 
-def _qdot_udf():
-    """Arrow-vectorized twin of ``QDOT_EXPR``: the same
-    floor(x*1000) int64 quantized dot, computed as one numpy integer
-    matmul per batch.  Spark's array higher-order functions are
-    INTERPRETED (CLAUDE.md r1 lesson) — measured 1.7x slower than this
-    UDF on the 16M-candidate verify stage at 500k vectors, with
-    BIT-IDENTICAL int64 output (both sides floor the same doubles and
-    sum the same int64 products), so oracle rows stay exact."""
-    def _qdot_arrays(qv: np.ndarray, cv: np.ndarray) -> pd.Series:
-        try:
-            af = np.stack(qv).astype(np.float64) * 1000.0
-            bf = np.stack(cv).astype(np.float64) * 1000.0
-        except (ValueError, TypeError):
-            # a NULL array on either side: SQL null-propagates, so the
-            # twin must too (r7 ADVICE) — mask the null rows, stack the
-            # valid remainder
-            valid = np.array([q is not None and c is not None
-                              for q, c in zip(qv, cv)], bool)
-            out = np.full(len(qv), None, dtype=object)
-            if valid.any():
-                out[valid] = np.asarray(
-                    _qdot_arrays(qv[valid], cv[valid]).to_numpy(), object)
-            return pd.Series(out)
-        a = np.floor(af).astype(np.int64)
-        b = np.floor(bf).astype(np.int64)
-        s = (a * b).sum(axis=1)
-        # NaN elements: the SQL expression null-propagates to a NULL
-        # qdot, while floor(nan).astype(int64) is platform garbage that
-        # would pass downstream threshold filters (r7 ADVICE)
-        bad = np.isnan(af).any(axis=1) | np.isnan(bf).any(axis=1)
-        if bad.any():
-            out = s.astype(object)
-            out[bad] = None
-            return pd.Series(out)
-        return pd.Series(s)
+def qdot_batch(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Per-row quantized dot sum_i floor(1000 a_i) * floor(1000 b_i), exact
+    in int64 and so bit-identical to the oracles' SQL — the one quantized
+    dot, under the ann / ivf reranks and the near-dup test.  NULL when a
+    vector is null or holds a NaN (SQL null propagation); ``ValueError``
+    when the sum could leave int64 (inf included) instead of wrapping.
+    """
+    ok = (a.notna() & b.notna()).to_numpy()
+    out = np.zeros(len(a), np.int64)
+    if ok.any():
+        with np.errstate(invalid="ignore", over="ignore"):
+            qa = np.floor(_stack(a[ok]) * 1000.0)
+            qb = qa if b is a else np.floor(_stack(b[ok]) * 1000.0)
+            real = ~(np.isnan(qa).any(axis=1) | np.isnan(qb).any(axis=1))
+            qa, qb = qa[real], qb[real]
+            bound = (np.abs(qa) * np.abs(qb)).sum(axis=1)
+            if not (bound < QDOT_LIMIT).all():
+                raise ValueError(
+                    "quantized dot could overflow int64: sum of |floor(1000 "
+                    "a_i) * floor(1000 b_i)| >= 2^62 or not finite")
+            ok[ok] = real
+            out[ok] = (qa.astype(np.int64) * qb.astype(np.int64)).sum(axis=1)
+    return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
-    @F.pandas_udf(T.LongType())
-    def qdot(qe: pd.Series, ce: pd.Series) -> pd.Series:
-        return _qdot_arrays(qe.to_numpy(object), ce.to_numpy(object))
-    return qdot
+
+_qdot = F.pandas_udf(qdot_batch, T.LongType())
 
 
 def ann_cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -419,59 +415,40 @@ def ann_cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                     seed: int = 7, rank_by: str = "cosine") -> DataFrame:
     """Approximate top-k neighbors per query via sign-LSH buckets.
 
-    Query/candidate signatures band-joined (8x8-bit bands); candidate
-    ids are deduped FIRST (a narrow (qid, cid) distinct — never shuffle
-    the embedding arrays per band copy), then embeddings re-joined for
-    the exact rerank, JVM-side (zip_with/aggregate — no Python).
+    Query/candidate signatures band-joined (8x8-bit bands, unguarded);
+    candidate ids are deduped FIRST (a narrow (qid, cid) distinct —
+    never shuffle the embedding arrays per band copy), then embeddings
+    re-joined for the exact rerank.
 
-    ``rank_by='cosine'`` ranks by exact float cosine; ``'qdot'`` ranks
-    by the integer-quantized dot product (order-independent and
-    bit-identical across engines — the oracle-checkable mode, same
-    scoring as the brute-force ``contract.q_embed_topk``).
+    ``rank_by='cosine'`` ranks by exact float cosine; ``'qdot'`` by
+    ``qdot_batch`` (bit-identical across engines: the oracle-checkable
+    mode, scored like ``contract.q_embed_topk``; a NULL qdot sorts last).
     Output: (qid, cid, qdot, cosine, rnk<=k).
     """
-    from pyspark.sql import Window
+    def banded(df: DataFrame) -> DataFrame:
+        return _bit_bands(sign_lsh_signatures(df, id_col, vec_col, dim,
+                                              seed=seed),
+                          id_col, "sig", band_bits)
 
-    n_bands = 64 // band_bits
-
-    def band_mask(b: int) -> int:
-        m = (((1 << band_bits) - 1) << (b * band_bits)) & 0xFFFFFFFFFFFFFFFF
-        return m - (1 << 64) if m >= (1 << 63) else m
-
-    qs = sign_lsh_signatures(queries, id_col, vec_col, dim, seed=seed) \
-        .withColumnRenamed("sig", "_qsig")
-    cs = sign_lsh_signatures(emb, id_col, vec_col, dim, seed=seed)
-    bands_q = F.array(*[F.struct(F.lit(b).alias("band"),
-                                 F.col("_qsig").bitwiseAND(F.lit(band_mask(b)))
-                                 .alias("key")) for b in range(n_bands)])
-    bands_c = F.array(*[F.struct(F.lit(b).alias("band"),
-                                 F.col("sig").bitwiseAND(F.lit(band_mask(b)))
-                                 .alias("key")) for b in range(n_bands)])
-    qb = (qs.select(F.col(id_col).alias("qid"), "_qsig")
-          .withColumn("b", F.explode(bands_q))
-          .select("qid", F.col("b.band").alias("band"), F.col("b.key").alias("key")))
-    cb = (cs.select(F.col(id_col).alias("cid"), "sig")
-          .withColumn("b", F.explode(bands_c))
-          .select("cid", F.col("b.band").alias("band"), F.col("b.key").alias("key")))
-    cand_ids = (qb.join(cb, ["band", "key"])
-                .filter(F.col("qid") != F.col("cid"))
-                .select("qid", "cid").distinct())
+    cand_ids = _band_pairs(banded(queries), banded(emb)).select(
+        F.col("id_a").alias("qid"), F.col("id_b").alias("cid"))
     qe = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
     ce = emb.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"))
     cand = cand_ids.join(F.broadcast(qe), "qid").join(ce, "cid")
-    qdot = F.expr(QDOT_EXPR)
-    nq = F.expr("sqrt(aggregate(transform(qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-    nc = F.expr("sqrt(aggregate(transform(ce, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-                "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-    dot = F.expr("aggregate(zip_with(qe, ce, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                 "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-    scored = cand.select("qid", "cid", qdot.alias("qdot"),
-                         (dot / (nq * nc)).alias("cosine"))
-    if rank_by == "qdot":
-        w = Window.partitionBy("qid").orderBy(F.col("qdot").desc(), "cid")
-    else:
-        w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "cid")
+
+    def dot(u: str, v: str) -> Column:
+        return F.expr(f"aggregate(zip_with({u}, {v}, (x, y) -> CAST(x AS DOUBLE)"
+                      " * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+
+    cosine = dot("qe", "ce") / (F.sqrt(dot("qe", "qe")) * F.sqrt(dot("ce", "ce")))
+    scored = cand.select("qid", "cid", _qdot("qe", "ce").alias("qdot"),
+                         cosine.alias("cosine"))
+    return _top_k(scored, "qdot" if rank_by == "qdot" else "cosine", k)
+
+
+def _top_k(scored: DataFrame, by: str, k: int) -> DataFrame:
+    """Rows ranked 1..k per qid by ``by`` desc (NULLs last), then cid."""
+    w = Window.partitionBy("qid").orderBy(F.col(by).desc(), "cid")
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k))
 
@@ -488,8 +465,7 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
                             vec_col: str = "embedding", dim: int = 64,
                             band_bits: int = 8, seed: int = 7,
                             cos2_pct: int = 81,
-                            max_bucket: int = 1000,
-                            persist: bool = True) -> DataFrame:
+                            max_bucket: int = 1000) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the 5th dedup modality).
 
     Sign-LSH banded self-join for candidates (never all-pairs), then an
@@ -497,57 +473,32 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
 
         qdot^2 * 100 >= cos2_pct * qaa * qbb      (cos2_pct=81 ~ cos>=0.9)
 
-    restricted to qdot > 0 (cosine sign).  Integer arithmetic keeps the
-    decision bit-identical across engines (qdot ~ 6.4e7 for unit-ish
-    64-dim embeddings -> qdot^2*100 ~ 4e17 < 2^63); rows whose
-    quantized self-dots exceed ``QDOT_SAFE_SELFDOT`` (norm >~ 17 at any
-    dim) would wrap int64 SILENTLY in non-ANSI Spark, so those compare
-    via double cosine instead.  ``max_bucket`` drops degenerate
-    signature buckets (e.g. a mass of near-zero embeddings hashing to
-    one key) before the self-join — without it a B-row bucket emits B^2
-    candidates; the hot set is tiny so it broadcasts into a left_anti,
-    exactly like ``minhash_lsh_pairs``.  Output: (id_a, id_b, qdot).
+    restricted to qdot > 0 (cosine sign; a NULL qdot never passes).
+    Integer arithmetic keeps the decision bit-identical across engines
+    (qdot ~ 6.4e7 for unit-ish 64-dim embeddings -> qdot^2*100 ~ 4e17 <
+    2^63); rows whose quantized self-dots exceed ``QDOT_SAFE_SELFDOT``
+    (norm >~ 17 at any dim) would wrap int64 SILENTLY in non-ANSI
+    Spark, so those compare via double cosine instead.  ``max_bucket``
+    drops degenerate signature buckets (e.g. a mass of near-zero
+    embeddings hashing to one key) before the self-join — without it a
+    B-row bucket emits B^2 candidates.  Output: (id_a, id_b, qdot).
     """
-    n_bands = 64 // band_bits
-
-    def band_mask(b: int) -> int:
-        m = (((1 << band_bits) - 1) << (b * band_bits)) & 0xFFFFFFFFFFFFFFFF
-        return m - (1 << 64) if m >= (1 << 63) else m
-
     sigs = sign_lsh_signatures(emb, id_col, vec_col, dim, seed=seed)
-    bands = F.array(*[F.struct(F.lit(b).alias("band"),
-                               F.col("sig").bitwiseAND(F.lit(band_mask(b)))
-                               .alias("key")) for b in range(n_bands)])
-    banded = (sigs.withColumn("b", F.explode(bands))
-              .select(F.col(id_col).alias("id_a"),
-                      F.col("b.band").alias("band"), F.col("b.key").alias("key")))
-    if persist:
-        # three downstream branches (hot-bucket count + both self-join
-        # sides) would each re-run the Arrow signature UDF otherwise —
-        # the same recompute hazard minhash_lsh_pairs documents
-        banded = banded.persist()
-    hot = (banded.groupBy("band", "key").count()
-           .filter(F.col("count") > max_bucket).select("band", "key"))
-    banded = banded.join(F.broadcast(hot), ["band", "key"], "left_anti")
-    rhs = banded.select(F.col("id_a").alias("id_b"), "band", "key")
-    cand = (banded.join(rhs, ["band", "key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b").distinct())
+    # persisted: the hot-bucket count and both self-join sides would
+    # each re-run the signature UDF otherwise
+    banded = _bit_bands(sigs, id_col, "sig", band_bits).persist()
+    cand = _band_pairs(banded, max_bucket=max_bucket)
     # self-dots are PER-VECTOR quantities: compute them once per row
     # BEFORE the pair join (n_vecs evaluations) instead of inside the
-    # scored projection (n_pairs evaluations — with B candidates per
-    # vector that interpreted 64-element aggregate ran B extra times
-    # per side; measured ~35% of the lane wall at 10^6 vectors)
-    self_dot = QDOT_EXPR.replace("qe", "{v}").replace("ce", "{v}")
-    ea = emb.select(F.col(id_col).alias("id_a"),
-                    F.col(vec_col).alias("qe"),
-                    F.expr(self_dot.format(v=vec_col)).alias("qaa"))
-    eb = emb.select(F.col(id_col).alias("id_b"),
-                    F.col(vec_col).alias("ce"),
-                    F.expr(self_dot.format(v=vec_col)).alias("qbb"))
+    # scored projection (n_pairs evaluations; measured ~35% of the lane
+    # wall at 10^6 vectors)
+    self_dot = _qdot(vec_col, vec_col)
+    ea = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("qe"),
+                    self_dot.alias("qaa"))
+    eb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("ce"),
+                    self_dot.alias("qbb"))
     scored = (cand.join(ea, "id_a").join(eb, "id_b")
-              .select("id_a", "id_b",
-                      _qdot_udf()("qe", "ce").alias("qdot"),
+              .select("id_a", "id_b", _qdot("qe", "ce").alias("qdot"),
                       "qaa", "qbb"))
     safe = ((F.col("qaa") <= QDOT_SAFE_SELFDOT)
             & (F.col("qbb") <= QDOT_SAFE_SELFDOT))
@@ -580,8 +531,8 @@ def semantic_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
     """
     cents = ivf_index(emb, vec_col, dim, k, n_iter, train=train)
     assigned = ivf_assign(emb, cents, id_col, vec_col, out="_sb")
-    sizes = assigned.groupBy("_sb").count()
-    big = sizes.filter(F.col("count") > max_bucket).limit(1).collect()
+    big = (assigned.groupBy("_sb").count()
+           .filter(F.col("count") > max_bucket).limit(1).collect())
     if big:
         raise ValueError(
             f"cluster {big[0]['_sb']} holds {big[0]['count']} vectors "
@@ -594,8 +545,7 @@ def semantic_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
 
     @F.pandas_udf(T.DoubleType())
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        ma = np.stack(va.to_numpy(object)).astype(np.float64)
-        mb = np.stack(vb.to_numpy(object)).astype(np.float64)
+        ma, mb = _stack(va), _stack(vb)
         dots = (ma * mb).sum(axis=1)
         na = np.linalg.norm(ma, axis=1)
         nb = np.linalg.norm(mb, axis=1)
@@ -636,8 +586,7 @@ def winnow_fingerprints(docs: DataFrame, id_col: str = "doc_id",
 
 
 def kmeans_fit(emb: DataFrame, vec_col: str = "embedding",
-               k: int = 32, dim: int = 64, n_iter: int = 5,
-               seed: int = 7) -> np.ndarray:
+               k: int = 32, dim: int = 64, n_iter: int = 5) -> np.ndarray:
     """FULLY DISTRIBUTED Lloyd's k-means over an embedding column —
     the unbounded-corpus alternative to ``ivf_index``'s bounded-sample
     training: per iteration the only driver state is the (k, dim)
@@ -651,48 +600,38 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding",
     order — same rationale as ivf_index's hash-mod sample); empty
     clusters keep their previous centroid.  Returns (k, dim) float64.
     """
-    init_rows = (emb.select(vec_col)
-                 .orderBy(F.xxhash64(F.col(vec_col)))
-                 .limit(k).collect())
-    if len(init_rows) < k:
-        raise ValueError(f"need >= {k} vectors, have {len(init_rows)}")
-    cents = np.stack([np.asarray(r[vec_col], np.float64)
-                      for r in init_rows])
+    init = (emb.select(vec_col).orderBy(F.xxhash64(F.col(vec_col)))
+            .limit(k).toPandas())
+    if len(init) < k:
+        raise ValueError(f"need >= {k} vectors, have {len(init)}")
+    cents = _stack(init[vec_col])
 
     part_schema = ("b int, cnt double, " +
                    ", ".join(f"s{i} double" for i in range(dim)))
 
     for _ in range(n_iter):
-        c = cents.copy()
-
-        def partials(batches, c=c):
+        def partials(batches, c=cents):
             for pdf in batches:
                 if not len(pdf):
                     continue
-                m = np.stack(pdf[vec_col].to_numpy(object)
-                             ).astype(np.float64)
-                d = ((m[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                b = d.argmin(axis=1)
+                m = _stack(pdf[vec_col])
+                b = _sqdist(m, c).argmin(axis=1)
                 sums = np.zeros((k, dim))
                 cnts = np.zeros(k)
                 np.add.at(sums, b, m)
                 np.add.at(cnts, b, 1.0)
-                out = {"b": np.arange(k, dtype=np.int32), "cnt": cnts}
-                for i in range(dim):
-                    out[f"s{i}"] = sums[:, i]
-                yield pd.DataFrame(out)
+                part = pd.DataFrame(sums, columns=[f"s{i}" for i in range(dim)])
+                yield part.assign(b=np.arange(k, dtype=np.int32), cnt=cnts)
 
         agg = (emb.select(vec_col).mapInPandas(partials, part_schema)
                .groupBy("b")
                .agg(F.sum("cnt").alias("cnt"),
                     *[F.sum(f"s{i}").alias(f"s{i}") for i in range(dim)])
-               .collect())
-        new_c = cents.copy()
-        for r in agg:
-            if r["cnt"] > 0:
-                new_c[r["b"]] = np.array(
-                    [r[f"s{i}"] for i in range(dim)]) / r["cnt"]
-        cents = new_c
+               .toPandas())
+        live = agg[agg["cnt"] > 0]
+        cents = cents.copy()
+        cents[live["b"]] = (live[[f"s{i}" for i in range(dim)]].to_numpy()
+                            / live[["cnt"]].to_numpy())
     return cents
 
 
@@ -712,10 +651,8 @@ def ivf_index(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
     array shipped to executors in the assignment UDF closure.
     """
     if train == "full":
-        # unbounded distributed training (see kmeans_fit): no sample
-        # cap — use when the embedding distribution is heavy-tailed
-        # enough that a 20k sample misplaces centroids
-        return kmeans_fit(emb, vec_col, n_centroids, dim, n_iter, seed)
+        # no sample cap, for distributions a 20k sample misplaces
+        return kmeans_fit(emb, vec_col, n_centroids, dim, n_iter)
     total = emb.count()
     mod = 1_000_000
     thresh = mod if total <= sample_rows else \
@@ -725,13 +662,12 @@ def ivf_index(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
            .limit(sample_rows).toPandas())
     if len(pdf) == 0:   # degenerate: hash landed nothing (tiny tables)
         pdf = emb.select(vec_col).limit(sample_rows).toPandas()
-    x = np.stack(pdf[vec_col].to_numpy(object)).astype(np.float64)
+    x = _stack(pdf[vec_col])
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=min(n_centroids, len(x)),
                          replace=False)]
     for _ in range(n_iter):
-        d = ((x[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
+        assign = _sqdist(x, cents).argmin(axis=1)
         for c in range(len(cents)):
             m = assign == c
             if m.any():
@@ -743,13 +679,10 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray,
                id_col: str = "vec_id", vec_col: str = "embedding",
                out: str = "bucket") -> DataFrame:
     """Nearest-centroid bucket per vector (one Arrow matrix op/batch)."""
-    cents = centroids
-
     @F.pandas_udf(T.IntegerType())
     def assign(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy(object)).astype(np.float64)
-        d = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
+        return pd.Series(
+            _sqdist(_stack(v), centroids).argmin(axis=1).astype(np.int32))
 
     return emb.withColumn(out, assign(vec_col))
 
@@ -766,16 +699,13 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     keys, never all-pairs.  Output (qid, cid, qdot, rnk<=k) with the
     same integer-quantized rerank as ann_cosine_topk(rank_by='qdot').
     """
-    from pyspark.sql import Window
-
     cents = ivf_index(emb, vec_col, dim, n_centroids, seed=seed)
     cand_b = ivf_assign(emb, cents, id_col, vec_col).select(
         F.col(id_col).alias("cid"), F.col(vec_col).alias("ce"), "bucket")
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def probes(v: pd.Series) -> pd.Series:
-        m = np.stack(v.to_numpy(object)).astype(np.float64)
-        d = ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+        d = _sqdist(_stack(v), cents)
         order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(order.astype(np.int32)))
 
@@ -784,11 +714,8 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                          F.explode(probes(vec_col)).alias("bucket")))
     cand = (qb.join(cand_b, "bucket")
             .filter(F.col("qid") != F.col("cid")))
-    qdot = F.expr(QDOT_EXPR)
-    w = Window.partitionBy("qid").orderBy(F.col("qdot").desc(), "cid")
-    return (cand.select("qid", "cid", qdot.alias("qdot"))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k))
+    return _top_k(cand.select("qid", "cid", _qdot("qe", "ce").alias("qdot")),
+                  "qdot", k)
 
 
 # ---------------------------------------------------------------------------
@@ -797,10 +724,11 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
 
 def dedup_exact(df: DataFrame, content_cols: list[str],
                 id_col: str = "doc_id") -> DataFrame:
-    """Keep one row (min id) per exact content key; single shuffle."""
-    w_key = F.xxhash64(*content_cols)
-    from pyspark.sql import Window
-    w = Window.partitionBy(w_key).orderBy(id_col)
+    """Keep one row (min id) per exact content key; single shuffle.
+
+    Partitioned on the content columns, not on a hash of them: xxhash64
+    skips nulls, so ("x", NULL) and (NULL, "x") would merge."""
+    w = Window.partitionBy(*content_cols).orderBy(id_col)
     return (df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1).drop("_rn"))
 
@@ -855,11 +783,10 @@ def connected_components_df(pairs: DataFrame, a_col: str = "id_a",
         nbr = (sym.join(labels.select(F.col("id").alias(v),
                                       F.col("lbl").alias("_nl")), v)
                .groupBy(u).agg(F.min("_nl").alias("_nm")))
-        # carry the pre-round label through the propagation (r8): the
+        # carry the pre-round label through the propagation: the
         # convergence check below then reads the ALREADY-materialized
         # checkpoint blocks instead of re-joining l2 against the old
-        # labels — one full shuffle join per round removed (the r7
-        # scaling appendix's 'piggyback the changed-count' fix).
+        # labels — one full shuffle join per round removed.
         l1 = (labels.join(nbr, labels["id"] == nbr[u], "left")
               .select(labels["id"],
                       labels["lbl"].alias("_old"),
@@ -898,8 +825,6 @@ def connected_groups(pairs: DataFrame, a_col: str = "id_a",
     state, no size limit).
     Output: (id, group) for ids that appear in at least one pair.
     """
-    import pandas as pd
-
     edges = pairs.select(a_col, b_col).limit(max_edges + 1).collect()
     if len(edges) > max_edges:
         return (connected_components_df(pairs, a_col, b_col)
@@ -917,14 +842,9 @@ def connected_groups(pairs: DataFrame, a_col: str = "id_a",
         ra, rb = find(r[a_col]), find(r[b_col])
         if ra != rb:
             parent[ra] = rb
-    members: dict = {}
-    for i in ids:
-        members.setdefault(find(i), []).append(i)
-    label = {}
-    for ms in members.values():
-        m = min(ms)
-        for i in ms:
-            label[i] = m
+    # ids ascend, so the first member seen per root is the group's min
+    roots: dict = {}
+    groups = [roots.setdefault(find(i), i) for i in ids]
     spark = pairs.sparkSession
     if not ids:
         # derive the empty schema from the pair column type so string
@@ -935,7 +855,7 @@ def connected_groups(pairs: DataFrame, a_col: str = "id_a",
             [], T.StructType([T.StructField("id", id_t),
                               T.StructField("group", id_t)]))
     return spark.createDataFrame(
-        pd.DataFrame({"id": ids, "group": [label[i] for i in ids]}))
+        pd.DataFrame({"id": ids, "group": groups}))
 
 
 def apply_dedup(docs: DataFrame, groups: DataFrame,

@@ -126,6 +126,77 @@ def test_hamming_pairs_vs_bruteforce(spark):
         assert r["hamming"] == d <= 4
 
 
+def test_hamming_pairs_hot_bucket_guard(spark):
+    """A planted constant-hash bucket past ``max_bucket`` is dropped and
+    every other pair is unchanged."""
+    rng = np.random.default_rng(21)
+    hashes = rng.integers(-(1 << 62), 1 << 62, 30).astype(np.int64)
+    hashes[5] = hashes[2] ^ 0b101
+    hashes[9] = hashes[2]
+    base = spark.createDataFrame(pd.DataFrame({"vid": range(30), "h": hashes}))
+    const = spark.createDataFrame(pd.DataFrame({
+        "vid": range(100, 120), "h": np.full(20, 0x0F0F0F0F0F0F0F0F)}))
+
+    def keys(df, **kw):
+        got = dedup.hamming_pairs(df, "vid", "h", max_dist=3, **kw).toPandas()
+        return set(map(tuple, got[["id_a", "id_b", "hamming"]]
+                       .itertuples(index=False)))
+
+    want = keys(base)
+    assert {(2, 5, 2), (2, 9, 0), (5, 9, 2)} <= want
+    planted = base.unionByName(const)
+    unguarded = keys(planted)
+    assert len(unguarded - want) == 20 * 19 // 2   # the bucket's pairs
+    assert keys(planted, max_bucket=10) == want
+
+
+def test_sign_lsh_null_embedding_forms_no_pair(spark):
+    """A null vector has no signature: both sign-LSH operators drop it
+    instead of crashing inside the signature UDF."""
+    rng = np.random.default_rng(13)
+    vecs = [v.tolist() for v in rng.standard_normal((40, 64))]
+    vecs[30] = [x * 1.3 for x in vecs[2]]
+    vecs[7] = None
+    emb = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(40), "embedding": vecs}),
+        "vec_id long, embedding array<double>")
+    pairs = dedup.embedding_neardup_pairs(emb).toPandas()
+    keys = set(map(tuple, pairs[["id_a", "id_b"]].itertuples(index=False)))
+    assert (2, 30) in keys and not any(7 in k for k in keys)
+    top = dedup.ann_cosine_topk(emb, emb.filter("vec_id IN (2, 7)"), k=3,
+                                rank_by="qdot").toPandas()
+    assert set(top["qid"]) == {2} and 7 not in set(top["cid"])
+    assert top.loc[top["rnk"] == 1, "cid"].item() == 30
+
+
+def test_null_qdot_never_outranks_or_pairs(spark):
+    """A vector holding a NaN or a null element has a NULL quantized
+    dot: it ranks after every real candidate and never passes the
+    near-dup test.  One-bit bands make every pair a candidate, so those
+    rows surely reach the rerank."""
+    rng = np.random.default_rng(4)
+    vecs = [v.tolist() for v in rng.standard_normal((30, 64))]
+    vecs[20] = [x * 1.1 for x in vecs[3]]
+    vecs[25] = vecs[3][:9] + [float("nan")] + vecs[3][10:]
+    vecs[26] = vecs[3][:9] + [None] + vecs[3][10:]
+    # rows, not pandas: a pandas round trip would turn the NaN into null
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<double>")
+    assert np.isnan(emb.filter("vec_id = 25").first()["embedding"][9])
+    top = dedup.ann_cosine_topk(emb, emb.filter("vec_id = 3"), k=30,
+                                band_bits=1, rank_by="qdot").toPandas()
+    assert len(top) == 29
+    ranked = top.sort_values("rnk")
+    assert ranked["cid"].iloc[0] == 20
+    assert set(ranked["cid"].iloc[-2:]) == {25, 26}
+    assert ranked["qdot"].iloc[-2:].isna().all()
+    assert ranked["qdot"].iloc[:-2].notna().all()
+    pairs = dedup.embedding_neardup_pairs(emb, band_bits=1).toPandas()
+    keys = set(map(tuple, pairs[["id_a", "id_b"]].itertuples(index=False)))
+    assert (3, 20) in keys
+    assert not any(k & {25, 26} for k in map(set, keys))
+
+
 def test_ann_cosine_finds_planted_neighbor(spark):
     rng = np.random.default_rng(5)
     vecs = rng.standard_normal((100, 64)).astype(np.float64)
@@ -211,6 +282,13 @@ def test_dedup_exact_keeps_min_id(spark, docs):
     out = dedup.dedup_exact(d2, ["text"]).toPandas()
     assert len(out) == docs.count()
     assert set(out["doc_id"]) == set(range(docs.count()))
+    # nulls are part of the key: ("x", NULL) and (NULL, "x") are two
+    # keys (a hash of the columns skips nulls and merged them)
+    nulls = spark.createDataFrame(
+        [(1, "x", None), (2, None, "x"), (3, "x", "x"), (4, "x", None)],
+        "doc_id long, a string, b string")
+    kept = dedup.dedup_exact(nulls, ["a", "b"]).toPandas()
+    assert set(kept["doc_id"]) == {1, 2, 3}
 
 
 def test_winnow_fingerprints_guarantee(spark):

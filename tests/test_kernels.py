@@ -1,4 +1,4 @@
-"""Kernel unit tests (no Spark): cells, geom, codec."""
+"""Kernel unit tests (no Spark): cells, geom, codec, quantized dot."""
 
 import numpy as np
 import pytest
@@ -580,3 +580,62 @@ def test_hostile_payload_rejected(fmt, case, entry):
         else:   # the hostile payload between two good ones
             codec.decode_batch([good, data, good], fmt, w, h)
     assert str(ei.value).startswith(msg)
+
+
+# ---------------------------------------------------------------------------
+# quantized dot
+# ---------------------------------------------------------------------------
+
+def _qdot_reference(a, b):
+    """Spec: sum_i floor(1000 a_i) * floor(1000 b_i) in Python integers;
+    None for a null vector or a NaN element."""
+    import math
+    if a is None or b is None or any(math.isnan(x) for x in [*a, *b]):
+        return None
+    return sum(math.floor(x * 1000.0) * math.floor(y * 1000.0)
+               for x, y in zip(a, b))
+
+
+def test_qdot_kernel_matches_integer_reference():
+    import pandas as pd
+
+    from fiona_spark.operators.dedup import qdot_batch
+    rng = np.random.default_rng(8)
+    dim = 64
+    av = list(rng.standard_normal((200, dim)) * rng.choice([0.01, 1, 500], (200, 1)))
+    bv = list(rng.standard_normal((200, dim)) * rng.choice([0.01, 1, 500], (200, 1)))
+    av[3][5] = np.nan                                # NaN on the left
+    bv[7][0] = np.nan                                # NaN on the right
+    av[11], bv[12] = None, None                      # null vectors
+    av[13] = bv[13] = None
+    bv[20] = av[20]                                  # a self-dot
+    av[30] = np.full(dim, -0.0004)                   # floors to -1, not 0
+    got = qdot_batch(pd.Series(av, dtype=object), pd.Series(bv, dtype=object))
+    assert str(got.dtype) == "Int64"
+    for i, (a, b) in enumerate(zip(av, bv)):
+        want = _qdot_reference(None if a is None else a.tolist(),
+                               None if b is None else b.tolist())
+        if want is None:
+            assert got.isna()[i], i
+        else:
+            assert int(got[i]) == want, i
+    assert got.isna().sum() == 5
+
+
+def test_qdot_kernel_raises_instead_of_wrapping():
+    import pandas as pd
+
+    from fiona_spark.operators.dedup import qdot_batch
+
+    def run(a, b):
+        return qdot_batch(pd.Series([np.asarray(a, float)], dtype=object),
+                          pd.Series([np.asarray(b, float)], dtype=object))
+
+    # (1e15)^2 * 2 = 2e30: int64 arithmetic would wrap to garbage
+    with pytest.raises(ValueError, match="overflow int64"):
+        run([1e12, 2.0], [1e12, 4.0])
+    with pytest.raises(ValueError, match="overflow int64"):
+        run([np.inf, 1.0], [0.5, 1.0])
+    # just inside the bound: exact, and matches the reference
+    big = [1.5e6, 1.0]                      # floor(1000x)^2 = 2.25e18 < 2^62
+    assert int(run(big, big)[0]) == _qdot_reference(big, big)

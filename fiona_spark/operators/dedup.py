@@ -357,23 +357,37 @@ def sign_lsh_signatures(emb: DataFrame, id_col: str = "vec_id",
                         n_planes: int = 64, seed: int = 7) -> DataFrame:
     """Random-hyperplane signature: bit j = (quantize(emb) . plane_j) > 0.
 
-    One Arrow-vectorized integer matrix multiply per batch; planes are
-    deterministic from ``seed`` and live in the UDF closure (broadcast
-    with the task, ~32 KB).  A null vector has no signature: its row is
-    dropped in the plan, so it forms no candidate pair.
+    One Arrow-vectorized integer matrix multiply per batch
+    (:func:`signature_batch`); planes are deterministic from ``seed`` and
+    live in the UDF closure (broadcast with the task, ~32 KB).  A null
+    vector, or one holding a NaN, has no signature: its row is dropped,
+    so it forms no candidate pair.
     """
     planes = lsh_planes(dim, n_planes, seed)
-    weights = (np.uint64(1) << np.arange(n_planes, dtype=np.uint64))
 
     @F.pandas_udf(T.LongType())
     def sig(v: pd.Series) -> pd.Series:
-        q = np.floor(_stack(v) * 1000.0).astype(np.int64)    # exact quantize
-        bits = (q @ planes) > 0                                # (B, n_planes)
-        out = (bits.astype(np.uint64) * weights).sum(axis=1)
-        return pd.Series(out.astype(np.int64))
+        return signature_batch(v, planes)
 
-    return (emb.filter(F.col(vec_col).isNotNull())
-            .select(id_col, sig(vec_col).alias("sig")))
+    return (emb.select(id_col, sig(vec_col).alias("sig"))
+            .filter(F.col("sig").isNotNull()))
+
+
+def signature_batch(v: pd.Series, planes: np.ndarray) -> pd.Series:
+    """Per-row sign-LSH signature over ``planes`` (dim, n_planes): bit j
+    is the exact integer test floor(1000 v) . plane_j > 0.  NULL for a
+    null vector or one holding a NaN (a null element reads as NaN),
+    which has no signature — it is never quantized."""
+    ok = v.notna().to_numpy()
+    out = np.zeros(len(v), np.int64)
+    if ok.any():
+        m = _stack(v[ok])
+        real = ~np.isnan(m).any(axis=1)
+        ok[ok] = real
+        bits = (np.floor(m[real] * 1000.0).astype(np.int64) @ planes) > 0
+        weights = np.uint64(1) << np.arange(planes.shape[1], dtype=np.uint64)
+        out[ok] = (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.int64)
+    return pd.Series(pd.arrays.IntegerArray(out, ~ok))
 
 
 # Bound on the float64 sum of |floor(1000 a_i) * floor(1000 b_i)|: below
@@ -420,9 +434,10 @@ def ann_cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     never shuffle the embedding arrays per band copy), then embeddings
     re-joined for the exact rerank.
 
-    ``rank_by='cosine'`` ranks by exact float cosine; ``'qdot'`` by
-    ``qdot_batch`` (bit-identical across engines: the oracle-checkable
-    mode, scored like ``contract.q_embed_topk``; a NULL qdot sorts last).
+    ``rank_by='cosine'`` ranks by exact float cosine (NULL, sorted last,
+    for a zero vector or a NaN); ``'qdot'`` by ``qdot_batch``
+    (bit-identical across engines: the oracle-checkable mode, scored
+    like ``contract.q_embed_topk``; a NULL qdot sorts last).
     Output: (qid, cid, qdot, cosine, rnk<=k).
     """
     def banded(df: DataFrame) -> DataFrame:
@@ -440,7 +455,9 @@ def ann_cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
         return F.expr(f"aggregate(zip_with({u}, {v}, (x, y) -> CAST(x AS DOUBLE)"
                       " * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
 
-    cosine = dot("qe", "ce") / (F.sqrt(dot("qe", "qe")) * F.sqrt(dot("ce", "ce")))
+    cosine = F.nanvl(F.try_divide(dot("qe", "ce"), F.sqrt(dot("qe", "qe"))
+                                  * F.sqrt(dot("ce", "ce"))),
+                     F.lit(None).cast("double"))
     scored = cand.select("qid", "cid", _qdot("qe", "ce").alias("qdot"),
                          cosine.alias("cosine"))
     return _top_k(scored, "qdot" if rank_by == "qdot" else "cosine", k)
@@ -598,8 +615,10 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding",
     Deterministic: init = the k vectors with the smallest
     xxhash64(vector) (a global TakeOrdered, unbiased under any file
     order — same rationale as ivf_index's hash-mod sample); empty
-    clusters keep their previous centroid.  Returns (k, dim) float64.
+    clusters keep their previous centroid.  A null vector is dropped in
+    the plan.  Returns (k, dim) float64.
     """
+    emb = emb.dropna(subset=[vec_col])
     init = (emb.select(vec_col).orderBy(F.xxhash64(F.col(vec_col)))
             .limit(k).toPandas())
     if len(init) < k:
@@ -648,8 +667,10 @@ def ivf_index(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
     space (the r2 advisory).  The hash filter touches every partition
     uniformly; ``limit`` after it only hard-caps the driver transfer.
     Centroid training is driver-side numpy — centroids are a (C, dim)
-    array shipped to executors in the assignment UDF closure.
+    array shipped to executors in the assignment UDF closure.  A null
+    vector is dropped in the plan.
     """
+    emb = emb.dropna(subset=[vec_col])
     if train == "full":
         # no sample cap, for distributions a 20k sample misplaces
         return kmeans_fit(emb, vec_col, n_centroids, dim, n_iter)
@@ -678,13 +699,14 @@ def ivf_index(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
 def ivf_assign(emb: DataFrame, centroids: np.ndarray,
                id_col: str = "vec_id", vec_col: str = "embedding",
                out: str = "bucket") -> DataFrame:
-    """Nearest-centroid bucket per vector (one Arrow matrix op/batch)."""
+    """Nearest-centroid bucket per vector (one Arrow matrix op/batch); a
+    null vector has none and its row is dropped in the plan."""
     @F.pandas_udf(T.IntegerType())
     def assign(v: pd.Series) -> pd.Series:
         return pd.Series(
             _sqdist(_stack(v), centroids).argmin(axis=1).astype(np.int32))
 
-    return emb.withColumn(out, assign(vec_col))
+    return emb.dropna(subset=[vec_col]).withColumn(out, assign(vec_col))
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -698,6 +720,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     ~nprobe/C of the table per query; the bucket equi-join shuffles int
     keys, never all-pairs.  Output (qid, cid, qdot, rnk<=k) with the
     same integer-quantized rerank as ann_cosine_topk(rank_by='qdot').
+    Null vectors, on either side, are dropped in the plan.
     """
     cents = ivf_index(emb, vec_col, dim, n_centroids, seed=seed)
     cand_b = ivf_assign(emb, cents, id_col, vec_col).select(
@@ -709,9 +732,9 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
         order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(order.astype(np.int32)))
 
-    qb = (queries.select(F.col(id_col).alias("qid"),
-                         F.col(vec_col).alias("qe"),
-                         F.explode(probes(vec_col)).alias("bucket")))
+    qb = (queries.dropna(subset=[vec_col])
+          .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"),
+                  F.explode(probes(vec_col)).alias("bucket")))
     cand = (qb.join(cand_b, "bucket")
             .filter(F.col("qid") != F.col("cid")))
     return _top_k(cand.select("qid", "cid", _qdot("qe", "ce").alias("qdot")),

@@ -29,7 +29,8 @@ Scale design notes (10^12-row table, 1000 executors):
    density-chosen resolution answers ~all images; the provably
    unfinished remainder (cell-ring bound: kth-distance <= r *
    cell_height) retries coarser and finally falls back to an exact
-   scan of the full zone set.
+   scan of the full zone set.  One kernel (:func:`_knn_cascade`) runs it
+   per Arrow batch (fused lane) or per coarse-cell cogroup (past guard).
 """
 
 from __future__ import annotations
@@ -577,9 +578,7 @@ def knn_res_for(n_zones: int, k: int) -> int:
     concentrates around sqrt(k / (pi * rho)); a point is provably
     finished at disk radius r0=1 only when its kth distance <=
     cell_height(res), so cell_height must exceed that typical distance —
-    otherwise the expensive exact fallback swallows the dataset (the
-    failure mode this formula replaces: a density-only rule that chose
-    one level too fine and sent ~half the points to phase 2).
+    otherwise the expensive exact fallback swallows the dataset.
     """
     rho = max(n_zones, 1) / (360.0 * 180.0)
     r_k = float(np.sqrt(k / (np.pi * rho)))
@@ -590,12 +589,13 @@ def knn_res_for(n_zones: int, k: int) -> int:
 
 
 MAX_KNN_RES = 14
+KNN_GROUP_ROWS = 1 << 20    # past-guard knn_join: points per cogroup group
 
 
 def _disk_cells_sql(cell_col: str, res: int) -> "F.Column":
     """JVM-side disk(1) of a cell id: the 9 neighbor cells at ``res``
-    with longitude wrap and latitude clip — pure codegen'd arithmetic,
-    replacing a per-row Python UDF on the probe side."""
+    with longitude wrap and latitude clip — pure codegen'd arithmetic
+    (the zone explode of the cogrouped kNN lane)."""
     n = 1 << res
     base = res * cells.RES_SHIFT
     rem = f"({cell_col} - {base}L)"
@@ -614,29 +614,111 @@ def _disk_cells_sql(cell_col: str, res: int) -> "F.Column":
 def _disk1_table(zc: np.ndarray, r: int):
     """Vectorized disk(1) replication: every (neighbor_cell, zone_idx)
     pair for all zones at res r, deduped (lon wrap aliases dx=+-1 at
-    tiny n) and sorted by cell for searchsorted probing."""
+    tiny n) and sorted by cell, then zone idx, for searchsorted probing."""
     xi, yi, _res = cells.unpack(zc)
     n = np.int64(1) << r
-    base = np.int64(r) * cells.RES_SHIFT
-    nz = len(zc)
-    cell_list, zidx_list = [], []
-    for dy in (-1, 0, 1):
-        ny = yi + dy
-        ok = (ny >= 0) & (ny < n)
-        for dx in (-1, 0, 1):
-            nx = (xi + dx) % n
-            cell_list.append(np.where(ok, base + ny * n + nx, np.int64(-1)))
-            zidx_list.append(np.arange(nz, dtype=np.int64))
-    cell = np.concatenate(cell_list)
-    zidx = np.concatenate(zidx_list)
-    keep = cell >= 0
-    cell, zidx = cell[keep], zidx[keep]
-    # dedup (cell, zidx) pairs from wrap aliasing
-    combo = cell * np.int64(len(zc) + 1) + zidx if nz else cell
-    _u, ui = np.unique(combo, return_index=True)
-    cell, zidx = cell[ui], zidx[ui]
-    order = np.argsort(cell, kind="stable")
-    return cell[order], zidx[order]
+    d = np.arange(-1, 2, dtype=np.int64)
+    shape = (3, 3, len(zc))                  # (dy, dx, zone)
+    ny = np.broadcast_to(yi + d[:, None, None], shape).ravel()
+    nx = np.broadcast_to((xi + d[:, None]) % n, shape).ravel()
+    zidx = np.broadcast_to(np.arange(len(zc), dtype=np.int64), shape).ravel()
+    ok = (ny >= 0) & (ny < n)
+    # (cell offset < 4^r, zone idx) packed exactly into one int64, so
+    # one sort dedups and orders the pairs
+    m = np.int64(len(zc) + 1)
+    u = np.unique((ny[ok] * n + nx[ok]) * m + zidx[ok])
+    return np.int64(r) * cells.RES_SHIFT + u // m, u % m
+
+
+def _knn_zones(zs: pa.Table, res: int, levels: int):
+    """Both kNN lanes' zone prep: the (key, lng, lat) table sorted by key
+    (zone idx order is key order), its float64 centroids, and the level
+    tables of the cascade for r = res, res-2, ... (at most ``levels``,
+    r >= 1): cell height and :func:`_disk1_table`."""
+    zs = zs.take(pac.sort_indices(zs.column(0)))
+    zx, zy = (np.asarray(zs.column(i).to_numpy(), np.float64) for i in (1, 2))
+    return zs, zx, zy, [
+        (r, 180.0 / (1 << r), *_disk1_table(cells.cell_id(zx, zy, r), r))
+        for r in range(res, 0, -2)[:levels]]
+
+
+def _knn_cascade(pxv, pyv, zxv, zyv, lts, kk: int):
+    """The cascade of both ``knn_join`` lanes (see its docstring) over
+    the level tables ``lts`` of :func:`_knn_zones`, zones in key order.
+    Returns ``(out, remaining)``: row i of ``out`` holds point i's zone
+    indices by rank (-1 if no level finished it)."""
+    n = len(pxv)
+    out = np.full((n, kk), -1, dtype=np.int64)
+    remaining = np.arange(n, dtype=np.int64)
+    # bounded candidate chunks (r8): an unchunked level built ~8 arrays
+    # of |candidates| (~20 MB each at 10k pts x 234 cand), mmap'd afresh
+    # per batch — a fleet-wide stall where first touch is costly.  Chunks
+    # split on point boundaries, so the output is bit-identical.
+    KNN_CAND_CHUNK = 1 << 19
+    for (r, cell_h, cs, zs) in lts:
+        if not len(remaining):
+            break
+        rx_a, ry_a = pxv[remaining], pyv[remaining]
+        pc = cells.cell_id(rx_a, ry_a, r)
+        lo_a = np.searchsorted(cs, pc, "left")
+        hi_a = np.searchsorted(cs, pc, "right")
+        cnt_a = hi_a - lo_a
+        ccum = np.cumsum(cnt_a)
+        if int(ccum[-1]) == 0:
+            continue
+        mm = len(remaining)
+        fin_all = np.zeros(mm, dtype=bool)
+        bounds = [0]
+        while bounds[-1] < mm:
+            nxt = int(np.searchsorted(
+                ccum, (ccum[bounds[-1] - 1] if bounds[-1] else 0)
+                + KNN_CAND_CHUNK, "right"))
+            bounds.append(max(nxt, bounds[-1] + 1))
+        for lo_r, hi_r in zip(bounds[:-1], bounds[1:]):
+            m = hi_r - lo_r
+            cnt = cnt_a[lo_r:hi_r]
+            total = int(cnt.sum())
+            if total == 0:
+                continue
+            rx, ry = rx_a[lo_r:hi_r], ry_a[lo_r:hi_r]
+            row = np.repeat(np.arange(m, dtype=np.int64), cnt)
+            starts = np.cumsum(cnt) - cnt
+            pos = lo_a[lo_r:hi_r][row] + (
+                np.arange(total, dtype=np.int64) - starts[row])
+            zi = zs[pos]
+            dx = rx[row] - zxv[zi]
+            dy = ry[row] - zyv[zi]
+            # squared-distance screen, sqrt deferred to the survivors
+            # (r6; -17% kernel wall, bit-identical): cell_h = 45/2^(r-2)
+            # and cell_h^2 are exactly representable, and sqrt is
+            # correctly rounded + monotone, so ds2 < cell_h*cell_h is
+            # THE SAME predicate as sqrt(ds2) < cell_h — not an
+            # approximation of it.
+            ds2 = dx * dx + dy * dy
+            close = ds2 < cell_h * cell_h
+            ccnt = np.bincount(row[close], minlength=m)
+            fin = ccnt >= kk
+            sel = close & fin[row]
+            if sel.any():
+                rs, zsel = row[sel], zi[sel]
+                ds = np.sqrt(ds2[sel])
+                # two-key lexsort (r6): _disk1_table stores zone idx
+                # ASCENDING within each cell run, candidate generation
+                # is row-major, and lexsort is stable — so ties in
+                # (row, dist) keep ascending zone order without paying
+                # a third sort key (the (dist, zone_key) window order
+                # of the straggler fallback and the DuckDB oracle).
+                order = np.lexsort((ds, rs))
+                rs_o, z_o = rs[order], zsel[order]
+                first = np.concatenate(([True], rs_o[1:] != rs_o[:-1]))
+                seg_start = np.maximum.accumulate(
+                    np.where(first, np.arange(len(rs_o)), 0))
+                rank = np.arange(len(rs_o)) - seg_start
+                topk = rank < kk
+                out[remaining[lo_r + rs_o[topk]], rank[topk]] = z_o[topk]
+            fin_all[lo_r:hi_r] = fin
+        remaining = remaining[~fin_all]
+    return out, remaining
 
 
 def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
@@ -644,127 +726,33 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
                     point_key: str, zone_key: str,
                     zone_lng: str, zone_lat: str,
                     row_guard: int | None = None) -> DataFrame | None:
-    """Fused kNN: the ENTIRE multi-resolution cascade + exact fallback
-    in one flat ``mapInArrow`` pass (:func:`_fused_lane`, as the PIP).
-
-    Zone structures — centroids, per-level disk(1) cell tables and the
-    key-sorted zone keys as an Arrow array — ride one torrent
-    sc.broadcast; per batch, each level probes the point's own cell via
-    searchsorted, applies the provable-finish rule (>= k candidates with
-    dist < cell_height inside disk(1) guarantees the filtered set
-    contains the true top-k), and the surviving tail brute-forces
-    against all zone centroids in bounded row chunks with a STABLE dist
-    sort (zones pre-sorted by key, so ties resolve by zone key exactly
-    like the (dist, zone_key) window ordering of the staged plan and the
-    DuckDB oracle).  No shuffles, no windows, no per-level caches to
-    clean up.
+    """Fused kNN: cascade + exact fallback in one flat ``mapInArrow``
+    pass (:func:`_fused_lane`).  Centroids, level tables and key-sorted
+    zone keys ride one torrent sc.broadcast; per batch
+    :func:`_knn_cascade` runs, and the tail brute-forces against all
+    zones in bounded row chunks with a STABLE dist sort, so ties resolve
+    by zone key like the (dist, zone_key) window and the DuckDB oracle.
 
     ``row_guard``: collect at most guard+1 zone rows in ONE job; returns
-    None if the layer exceeds the guard (caller falls back to the staged
-    plan with a SHUFFLED zone side) — the same bounded-collect contract
-    as ``_zone_prep`` for the fused PIP.  Without it a 10^8-row zone
-    table OOMs the driver (r2 verdict "what's wrong" #2).
+    None past it (the caller runs the cogrouped lane), as ``_zone_prep``
+    does for the fused PIP: a 10^8-row zone table must never reach the
+    driver.
     """
-    spark = points.sparkSession
     zsel = zones.select(zone_key, zone_lng, zone_lat)
     ztbl = (zsel if row_guard is None else zsel.limit(row_guard + 1)).toArrow()
     if row_guard is not None and ztbl.num_rows > row_guard:
         return None
-    zpdf = ztbl.to_pandas().sort_values(zone_key)
-    zkey = ztbl.column(zone_key).combine_chunks().take(pa.array(zpdf.index))
-    zx = zpdf[zone_lng].to_numpy(np.float64)
-    zy = zpdf[zone_lat].to_numpy(np.float64)
-    nz = len(zpdf)
+    nz = ztbl.num_rows
     if res is None:
         res = knn_res_for(nz, k)
-    level_tables = []
-    r = res
-    for _li in range(levels):
-        if r < 1:
-            break
-        zc = cells.cell_id(zx, zy, r)
-        cs, zs = _disk1_table(zc, r)
-        level_tables.append((r, 180.0 / (1 << r), cs, zs))
-        r -= 2
-    bc = spark.sparkContext.broadcast((zx, zy, level_tables, [zkey]))
+    ztbl, zx, zy, lts = _knn_zones(ztbl, res, levels)
+    bc = points.sparkSession.sparkContext.broadcast(
+        (zx, zy, lts, [ztbl.column(0).combine_chunks()]))
     kk = min(k, nz)
 
     def knn_ranks(state, pxv, pyv):
         zxv, zyv, lts = state
-        n = len(pxv)
-        out = np.full((n, kk), -1, dtype=np.int64)
-        remaining = np.arange(n, dtype=np.int64)
-        # bounded candidate chunks (r8): the per-level expansion built
-        # ~8 arrays of |candidates| (~20 MB each at 10k pts x 234 cand),
-        # which glibc mmap/munmap'd per batch — on hosts with expensive
-        # first-touch that stalled the worker fleet (same pathology as
-        # the PIP raycast).  Chunks split on point boundaries, so the
-        # per-point math (screen, lexsort ranks) is unchanged and the
-        # output is bit-identical.
-        KNN_CAND_CHUNK = 1 << 19
-        for (r, cell_h, cs, zs) in lts:
-            if not len(remaining):
-                break
-            rx_a, ry_a = pxv[remaining], pyv[remaining]
-            pc = cells.cell_id(rx_a, ry_a, r)
-            lo_a = np.searchsorted(cs, pc, "left")
-            hi_a = np.searchsorted(cs, pc, "right")
-            cnt_a = hi_a - lo_a
-            ccum = np.cumsum(cnt_a)
-            if int(ccum[-1]) == 0:
-                continue
-            mm = len(remaining)
-            fin_all = np.zeros(mm, dtype=bool)
-            bounds = [0]
-            while bounds[-1] < mm:
-                nxt = int(np.searchsorted(
-                    ccum, (ccum[bounds[-1] - 1] if bounds[-1] else 0)
-                    + KNN_CAND_CHUNK, "right"))
-                bounds.append(max(nxt, bounds[-1] + 1))
-            for lo_r, hi_r in zip(bounds[:-1], bounds[1:]):
-                m = hi_r - lo_r
-                cnt = cnt_a[lo_r:hi_r]
-                total = int(cnt.sum())
-                if total == 0:
-                    continue
-                rx, ry = rx_a[lo_r:hi_r], ry_a[lo_r:hi_r]
-                row = np.repeat(np.arange(m, dtype=np.int64), cnt)
-                starts = np.cumsum(cnt) - cnt
-                pos = lo_a[lo_r:hi_r][row] + (
-                    np.arange(total, dtype=np.int64) - starts[row])
-                zi = zs[pos]
-                dx = rx[row] - zxv[zi]
-                dy = ry[row] - zyv[zi]
-                # squared-distance screen, sqrt deferred to the survivors
-                # (r6; -17% kernel wall, bit-identical): cell_h = 45/2^(r-2)
-                # and cell_h^2 are exactly representable, and sqrt is
-                # correctly rounded + monotone, so ds2 < cell_h*cell_h is
-                # THE SAME predicate as sqrt(ds2) < cell_h — not an
-                # approximation of it.
-                ds2 = dx * dx + dy * dy
-                close = ds2 < cell_h * cell_h
-                ccnt = np.bincount(row[close], minlength=m)
-                fin = ccnt >= kk
-                sel = close & fin[row]
-                if sel.any():
-                    rs, zsel = row[sel], zi[sel]
-                    ds = np.sqrt(ds2[sel])
-                    # two-key lexsort (r6): _disk1_table stores zone idx
-                    # ASCENDING within each cell run, candidate generation
-                    # is row-major, and lexsort is stable — so ties in
-                    # (row, dist) keep ascending zone order without paying
-                    # a third sort key (the (dist, zone_key) window order
-                    # of the staged plan and the DuckDB oracle).
-                    order = np.lexsort((ds, rs))
-                    rs_o, z_o = rs[order], zsel[order]
-                    first = np.concatenate(([True], rs_o[1:] != rs_o[:-1]))
-                    seg_start = np.maximum.accumulate(
-                        np.where(first, np.arange(len(rs_o)), 0))
-                    rank = np.arange(len(rs_o)) - seg_start
-                    topk = rank < kk
-                    out[remaining[lo_r + rs_o[topk]], rank[topk]] = z_o[topk]
-                fin_all[lo_r:hi_r] = fin
-            remaining = remaining[~fin_all]
+        out, remaining = _knn_cascade(pxv, pyv, zxv, zyv, lts, kk)
         # exact fallback for the sparse tail, bounded chunks (row count
         # adapted to the zone count so the (rows x nz) distance matrix
         # stays ~4M elements)
@@ -776,14 +764,40 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
             d = np.sqrt(dx * dx + dy * dy)
             # stable sort on dist: ties fall back to ascending zone idx,
             # i.e. ascending zone_key (zones pre-sorted by key)
-            order = np.argsort(d, axis=1, kind="stable")[:, :kk]
-            out[idx, :] = order
+            out[idx, :] = np.argsort(d, axis=1, kind="stable")[:, :kk]
         row, rank0 = np.nonzero(out >= 0)
         return row, out[row, rank0], (rank0 + 1).astype(np.int32)
 
     return _fused_lane(points, [point_key], lng, lat, bc, knn_ranks,
                        [zones.schema[zone_key],
                         T.StructField("knn_rank", T.IntegerType(), False)])
+
+
+def _knn_group_fn(kk: int, res: int, levels: int, names):
+    """The cogrouped ``knn_join`` body, one call per (r_min cell, split):
+    ``pts`` holds the key and lng/lat of the cell's points, ``zs`` key and
+    centroid of each zone whose r_min disk(1) holds the cell.  Cells are
+    an aligned quadtree, so a zone in the disk(1) of a point's level-r
+    cell (r >= r_min) is in that of its r_min cell: the group sees every
+    candidate and finishes exactly the points the fused lane does.
+    Emits their rows, and a rank-0 row with the coordinates (zone null)
+    per unfinished point."""
+
+    def fn(pts: pa.Table, zs: pa.Table) -> pa.Table:
+        # a zone-only group (no point in the cell) needs no level table
+        zs, zx, zy, lts = _knn_zones(zs, res, levels if pts.num_rows else 0)
+        px, py = (np.asarray(pts.column(i).to_numpy(), np.float64)
+                  for i in (1, 2))
+        out, rest = _knn_cascade(px, py, zx, zy, lts, kk)
+        row, rank0 = np.nonzero(out >= 0)
+        rows = np.concatenate((row, rest))
+        zi = np.ma.masked_array(np.concatenate((out[row, rank0], rest)),
+                                np.arange(len(rows)) >= len(row))
+        rank = np.concatenate((rank0 + 1, rest * 0)).astype(np.int32)
+        return _emit(pts.columns[:1], rows, zs.columns[:1], zi,
+                     [rank, px[rows], py[rows]], names)
+
+    return fn
 
 
 def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
@@ -796,8 +810,9 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
     """Exact k nearest zones (by centroid euclidean degrees) per point.
 
     Output: (point_key, zone_key, knn_rank), rank 1..k by
-    (distance, zone_key) for determinism.  Both lanes run the same
-    multi-resolution cascade:
+    (distance, zone_key) for determinism.  A zone with a null or NaN
+    centroid has no distance: it is dropped in the plan.  Both lanes
+    run the same multi-resolution cascade, :func:`_knn_cascade`:
       * per level, every zone is replicated into the 9 cells of its
         disk(1) neighborhood; each point probes its own cell.
       * candidates farther than cell_height are dropped before ranking:
@@ -809,9 +824,8 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
       * unfinished points (sparse regions — e.g. beyond the data's
         latitude band) retry at a 4x coarser level; each level's
         remainder shrinks by the density argument in
-        :func:`knn_res_for`.  Without the cascade the sparse tail
-        cross-joined the full zone set — 857M pairs at sf0.5 — which
-        was the dominant cost of the whole benchmark.
+        :func:`knn_res_for` (a single level sent the sparse tail, 857M
+        pairs at sf0.5, to the exact fallback).
       * whatever survives all levels (~0 rows) is ranked exactly
         against all zones.
 
@@ -819,84 +833,68 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
       * at most that many zone rows: the FUSED lane (see
         :func:`_knn_join_fused`) collects the zones in one guarded job
         and runs the whole cascade inside one Arrow pass per point.
-      * more rows: the STAGED lane with a SHUFFLED zone side — per level
-        a plain cell equi-join (disk explode is SQL arithmetic) and a
-        (dist, zone_key) ranking window, no broadcast and no driver
-        collect, trading the skew-neutral fused plan for bounded
-        memory.  ``eager_cleanup`` applies to this lane only.
+      * more rows: the COGROUPED lane, no broadcast and no collect of
+        the zone side: points group by their cell at the coarsest level
+        r_min, and one ``applyInArrow`` call per group runs the cascade
+        (:func:`_knn_group_fn`).  A cell over ``KNN_GROUP_ROWS`` points
+        (one driver aggregate) splits by a hash of the point key, its
+        zones replicated per split.  The output is materialized once
+        (``localCheckpoint``); the unfinished points are ranked against
+        all zones by a nested-loop join and a (dist, zone_key) window.
+    ``eager_cleanup`` has no effect (existing callers still pass it).
     """
+    zones = zones.dropna(subset=[zone_lng, zone_lat])
     out = _knn_join_fused(points, zones, k, res, levels, lng, lat,
                           point_key, zone_key, zone_lng, zone_lat,
                           row_guard=max_broadcast_zones)
     if out is not None:
         return out
 
-    # past the guard: the staged cascade over a distributed zone side
+    # one pass counts both sides; no cell can be hot unless the whole
+    # point set is, so only then does the per-cell aggregate run
+    n_all, nz = (points.select(F.lit(0).alias("_z"))
+                 .union(zones.select(F.lit(1).alias("_z")))
+                 .agg(F.count("_z"), F.sum("_z")).first())
+    nz = nz or 0
     if res is None:
-        res = knn_res_for(zones.count(), k)
+        res = knn_res_for(nz, k)
+    r_min = min(range(res, 0, -2)[:levels], default=res)
     zc = zones.select(zone_key, F.col(zone_lng).alias("_zlng"),
                       F.col(zone_lat).alias("_zlat"))
-    p0 = points.select(point_key, lng, lat)
+    p = with_point_cell(points.select(point_key, lng, lat), r_min, lng, lat,
+                        out="_g")
+    hot = ([] if n_all - nz <= KNN_GROUP_ROWS
+           else hot_cells(p, "_g", KNN_GROUP_ROWS).collect())
+    n_split = max([1] + [-(-c["count"] // KNN_GROUP_ROWS) for c in hot])
+    n_s = F.when(F.col("_g").isin([c["_g"] for c in hot]),
+                 n_split).otherwise(1)
+    p = p.withColumn("_s", F.pmod(F.xxhash64(point_key), n_s).cast("int"))
+    z = (with_point_cell(zc, r_min, "_zlng", "_zlat", out="_zc")
+         .withColumn("_g", F.explode(_disk_cells_sql("_zc", r_min)))
+         .withColumn("_s", F.explode(F.sequence(F.lit(0), n_s - 1)))
+         .drop("_zc"))
+    schema = (T.StructType([points.schema[point_key]])
+              .add(zone_key, zones.schema[zone_key].dataType)
+              .add("knn_rank", T.IntegerType()).add(lng, T.DoubleType())
+              .add(lat, T.DoubleType()))
+    staged = (p.groupBy("_g", "_s").cogroup(z.groupBy("_g", "_s"))
+              .applyInArrow(_knn_group_fn(min(k, nz), res, levels,
+                                          schema.fieldNames()), schema)
+              .localCheckpoint())
 
     # plain multiplication (not pow()) so the double expression tree is
     # bit-identical to the DuckDB oracle's
     dx = F.col(lng) - F.col("_zlng")
     dy = F.col(lat) - F.col("_zlat")
-    dist = F.sqrt(dx * dx + dy * dy)
     w = Window.partitionBy(point_key).orderBy("dist", zone_key)
-    w_all = Window.partitionBy(point_key)
-
-    remaining = p0
-    dones = []
-    r = res
-    for _level in range(levels):
-        if r < 1:
-            break
-        cell_h = 180.0 / (1 << r)
-        zx = (with_point_cell(zc, r, "_zlng", "_zlat", out="_zc")
-              .withColumn("cell", F.explode(_disk_cells_sql("_zc", r)))
-              .drop("_zc"))
-        p = with_point_cell(remaining, r, lng, lat)
-        cand = (p.join(zx, "cell")
-                .withColumn("dist", dist)
-                .filter(F.col("dist") < cell_h))
-        ranked = (cand
-                  .withColumn("knn_rank", F.row_number().over(w))
-                  .withColumn("_n", F.count(F.lit(1)).over(w_all)))
-        done = (ranked.filter((F.col("_n") >= k) & (F.col("knn_rank") <= k))
-                .select(point_key, zone_key, "knn_rank")
-                .persist())   # k rows/point: break the lineage so the
-        # ranking window runs ONCE per level — it is consumed by both
-        # the output union and the next level's remainder anti-join,
-        # and without the persist each consumer re-executed the whole
-        # window cascade (measured ~2x wall on the sf0.5 benchmark)
-        dones.append(done)
-        remaining = remaining.join(
-            done.select(point_key).distinct(), point_key, "left_anti")
-        r -= 2
-
-    # final stragglers: exact join against all zones
-    n_shuffle = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cand2 = (remaining.repartition(n_shuffle)
-             .crossJoin(zc)
-             .withColumn("dist", dist)
-             .withColumn("knn_rank", F.row_number().over(w))
-             .filter(F.col("knn_rank") <= k))
-    out = cand2.select(point_key, zone_key, "knn_rank")
-    for d in dones:
-        out = out.unionByName(d)
-    if eager_cleanup and dones:
-        # Materialize the final union once (localCheckpoint: the k
-        # rows/point result lands in executor storage, spilling to disk)
-        # then drop the per-level caches — without this, repeated calls
-        # in a long-lived session leak one cached DataFrame per cascade
-        # level (the ContextCleaner only reclaims them on driver GC).
-        # Pass eager_cleanup=False for a fully lazy plan; then the
-        # caller owns unpersisting via spark.catalog.clearCache().
-        out = out.localCheckpoint(eager=True)
-        for d in dones:
-            d.unpersist()
-    return out
+    tail = (staged.filter(F.col("knn_rank") == 0).select(point_key, lng, lat)
+            .hint("shuffle_replicate_nl").crossJoin(zc)
+            .withColumn("dist", F.sqrt(dx * dx + dy * dy))
+            .withColumn("knn_rank", F.row_number().over(w))
+            .filter(F.col("knn_rank") <= k))
+    cols = [point_key, zone_key, "knn_rank"]
+    return (staged.filter(F.col("knn_rank") > 0).select(*cols)
+            .unionByName(tail.select(*cols)))
 
 
 # ---------------------------------------------------------------------------

@@ -198,8 +198,9 @@ def knn_job():
                             res=spatial.knn_res_for(n_zones, 3)).count()
 
 def knn_reset():
-    # knn materializes a localCheckpoint; identical re-created plans can
-    # also hit the CacheManager.  Drop caches, restore the inputs.
+    # the fused knn lane caches nothing (past the guard it materializes
+    # one localCheckpoint), but identical re-created plans can hit the
+    # CacheManager.  Drop caches, restore the inputs.
     spark.catalog.clearCache()
     images.cache().count(); pts.cache().count(); zones.cache().count()
 

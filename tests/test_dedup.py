@@ -170,10 +170,10 @@ def test_sign_lsh_null_embedding_forms_no_pair(spark):
 
 
 def test_null_qdot_never_outranks_or_pairs(spark):
-    """A vector holding a NaN or a null element has a NULL quantized
-    dot: it ranks after every real candidate and never passes the
-    near-dup test.  One-bit bands make every pair a candidate, so those
-    rows surely reach the rerank."""
+    """A vector holding a NaN or a null element has no signature (and a
+    NULL quantized dot): it never reaches the rerank, never outranks a
+    real candidate and never pairs.  One-bit bands make every other pair
+    a candidate."""
     rng = np.random.default_rng(4)
     vecs = [v.tolist() for v in rng.standard_normal((30, 64))]
     vecs[20] = [x * 1.1 for x in vecs[3]]
@@ -185,16 +185,65 @@ def test_null_qdot_never_outranks_or_pairs(spark):
     assert np.isnan(emb.filter("vec_id = 25").first()["embedding"][9])
     top = dedup.ann_cosine_topk(emb, emb.filter("vec_id = 3"), k=30,
                                 band_bits=1, rank_by="qdot").toPandas()
-    assert len(top) == 29
+    assert len(top) == 27 and not set(top["cid"]) & {25, 26}
     ranked = top.sort_values("rnk")
     assert ranked["cid"].iloc[0] == 20
-    assert set(ranked["cid"].iloc[-2:]) == {25, 26}
-    assert ranked["qdot"].iloc[-2:].isna().all()
-    assert ranked["qdot"].iloc[:-2].notna().all()
+    assert ranked["qdot"].notna().all()
     pairs = dedup.embedding_neardup_pairs(emb, band_bits=1).toPandas()
     keys = set(map(tuple, pairs[["id_a", "id_b"]].itertuples(index=False)))
     assert (3, 20) in keys
     assert not any(k & {25, 26} for k in map(set, keys))
+
+
+def test_ann_cosine_null_cosine_ranks_last(spark):
+    """The planted 1.1x copy ranks first by cosine.  A zero vector has no
+    cosine (0/0): NULL, ranked last, instead of a division-by-zero
+    failure; a NaN vector has no signature, so no NaN cosine ranks
+    first."""
+    rng = np.random.default_rng(4)
+    vecs = [v.tolist() for v in rng.standard_normal((30, 64))]
+    vecs[20] = [x * 1.1 for x in vecs[3]]
+    vecs[25] = vecs[3][:9] + [float("nan")] + vecs[3][10:]
+    vecs[27] = [0.0] * 64
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<double>")
+    top = (dedup.ann_cosine_topk(emb, emb.filter("vec_id = 3"), k=30,
+                                 band_bits=1).toPandas().sort_values("rnk"))
+    assert top["rnk"].tolist() == list(range(1, 29))
+    assert top["cid"].iloc[0] == 20 and top["cosine"].iloc[0] > 0.999
+    assert 25 not in set(top["cid"])
+    assert top["cid"].iloc[-1] == 27 and pd.isna(top["cosine"].iloc[-1])
+    assert top["cosine"].iloc[:-1].notna().all()
+
+
+def test_sign_lsh_nan_vector_has_no_signature(spark):
+    """A vector holding a NaN is never quantized (no RuntimeWarning from
+    a NaN-to-int64 cast) and gets no signature, like a null vector: it
+    joins no bucket and forms no candidate pair."""
+    import warnings
+
+    rng = np.random.default_rng(13)
+    vecs = [v.tolist() for v in rng.standard_normal((40, 64))]
+    vecs[30] = [x * 1.3 for x in vecs[2]]
+    vecs[7] = vecs[2][:5] + [float("nan")] + vecs[2][6:]
+    vecs[8] = None
+    planes = dedup.lsh_planes(64, 64, 7)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        sig = dedup.signature_batch(pd.Series(
+            [None if v is None else np.asarray(v) for v in vecs],
+            dtype=object), planes)
+    assert sig.isna().tolist() == [i in (7, 8) for i in range(40)]
+    q = np.floor(np.asarray(vecs[2]) * 1000.0).astype(np.int64) @ planes
+    assert sig[2] == int(sum(1 << j for j in range(64) if q[j] > 0)
+                         ^ (1 << 63)) - (1 << 63)
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<double>")
+    ids = {r[0] for r in dedup.sign_lsh_signatures(emb).collect()}
+    assert ids == set(range(40)) - {7, 8}
+    pairs = dedup.embedding_neardup_pairs(emb, band_bits=1).toPandas()
+    keys = set(map(tuple, pairs[["id_a", "id_b"]].itertuples(index=False)))
+    assert (2, 30) in keys and not any(k & {7, 8} for k in map(set, keys))
 
 
 def test_ann_cosine_finds_planted_neighbor(spark):
@@ -323,6 +372,24 @@ def test_ivf_topk_finds_planted_neighbor(spark):
     assert top["cid"] == 200
     # bucketed candidates only: far fewer than the full table reranked
     assert len(got) <= 5
+
+
+def test_ivf_drops_null_embedding(spark):
+    """A null vector has no bucket: the IVF index, the k-means fit and
+    the rerank drop it in the plan instead of crashing the matrix
+    stack."""
+    rng = np.random.default_rng(9)
+    vecs = [v.tolist() for v in rng.standard_normal((300, 64))]
+    vecs[200] = (np.asarray(vecs[11]) + rng.standard_normal(64) * 0.01).tolist()
+    vecs[42] = None
+    emb = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(300), "embedding": vecs}),
+        "vec_id long, embedding array<double>")
+    got = dedup.ivf_topk(emb, emb.filter("vec_id IN (11, 42)"), k=5,
+                         n_centroids=16, nprobe=4).toPandas()
+    assert set(got["qid"]) == {11} and 42 not in set(got["cid"])
+    assert got.loc[got["rnk"] == 1, "cid"].item() == 200
+    assert dedup.kmeans_fit(emb, k=4, n_iter=1).shape == (4, 64)
 
 
 def test_repetition_stats_match_pandas_oracle(spark):

@@ -1,6 +1,8 @@
 """Plan-property regression tests: pushdown, pruning, broadcast, Python
 containment — the engine's optimizer invariants (SURVEY.md section 4)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,13 +63,35 @@ def test_point_cell_is_jvm_only(spark, images_path):
     assert quality.codegen_stage_count(q) >= 1
 
 
-def test_knn_staged_plan_has_no_python(spark, images_path, zones):
+def test_knn_past_guard_plan_is_one_cogroup(spark, images_path, zones,
+                                            monkeypatch):
     img = spark.read.parquet(images_path)
-    q = spatial.knn_join(img, zones, k=3, res=4, eager_cleanup=False,
-                         max_broadcast_zones=5)
-    # past the guard the staged kNN plan is pure JVM: disk explode is
-    # SQL arithmetic, ranking is a window — no pandas UDF anywhere
+    staged = []
+    checkpoint = type(img).localCheckpoint
+    monkeypatch.setattr(type(img), "localCheckpoint", lambda df, *a, **kw:
+                        staged.append(df) or checkpoint(df, *a, **kw))
+    q = spatial.knn_join(img, zones, k=3, res=4, max_broadcast_zones=5)
+    # past the guard the whole cascade is one cogrouped applyInArrow
+    # pass, materialized once: no per-level window, cache or anti-join
+    (cascade,) = staged
+    cascade = cascade.select("*")   # a fresh, unexecuted plan
+    ops = _plan_ops(cascade)
+    assert ops.count("FlatMapCoGroupsInArrow") == 1
+    assert quality.python_eval_count(cascade) == 1
+    assert "Window" not in ops and "InMemoryTableScan" not in ops
+    # the result reads the materialized rows; its one window ranks the
+    # stragglers, against a zone side that is never broadcast
+    ops = _plan_ops(q)
     assert quality.python_eval_count(q) == 0
+    assert ops.count("Window") == 1 and "CartesianProduct" in ops
+    assert "InMemoryTableScan" not in ops
+    assert quality.broadcast_join_count(q) == 0
+
+
+def _plan_ops(df):
+    """Operator names of the numbered detail section of the plan."""
+    return re.findall(r"^\(\d+\) (\w+)", quality.formatted_plan(df),
+                      re.MULTILINE)
 
 
 def test_knn_fused_plan_is_one_arrow_pass(spark, images_path, zones):

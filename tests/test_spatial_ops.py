@@ -668,3 +668,42 @@ def test_knn_fused_lane_flat_output_matches_staged(spark, images_pdf,
     first3 = sorted(zid)[:3]
     for bad in ("nan_lng", "nan_lat", "null_lng", "null_lat"):
         assert [r[1] for r in got_f if r[0] == bad] == first3
+
+
+def test_knn_null_and_nan_centroid_zones_dropped(spark):
+    """A zone with a null or NaN centroid has no distance: both lanes
+    drop it in the plan and rank only the located zones (the shuffled
+    lane used to rank a null centroid first, the fused lane last)."""
+    z = spark.createDataFrame(
+        [("a", 0.0, 0.0), ("b", 1.0, 1.0), ("c", None, None),
+         ("d", 2.0, 2.0), ("e", float("nan"), 3.0)],
+        "zone_id string, clng double, clat double")
+    pts = spark.createDataFrame([("q", 120.0, -60.0)],
+                                "image_id string, lng double, lat double")
+    exp = [("q", "a", 3), ("q", "b", 2), ("q", "d", 1)]
+    for guard in (spatial.MAX_BROADCAST_ZONES, 0):
+        got = spatial.knn_join(pts, z, k=4, max_broadcast_zones=guard)
+        assert sorted(map(tuple, got.collect())) == exp
+
+
+def test_knn_split_lane_matches_fused(spark, zones, monkeypatch):
+    """60 points in one coarsest-level cell (res 6, levels 6/4/2: r_min
+    2) plus a polar tail, with KNN_GROUP_ROWS patched to 4: the hot
+    cell's points split over 15 groups and its zones replicate to each,
+    and the past-guard lane returns exactly the fused lane's rows, none
+    dropped or doubled."""
+    rng = np.random.default_rng(41)
+    lng = np.concatenate([rng.uniform(5, 20, 60), rng.uniform(-180, 180, 10)])
+    lat = np.concatenate([rng.uniform(30, 44, 60), rng.uniform(85, 89, 10)])
+    assert len(set(cells.cell_id(lng[:60], lat[:60], 2))) == 1
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"s{i:03d}" for i in range(70)], "lng": lng, "lat": lat}))
+    monkeypatch.setattr(spatial, "KNN_GROUP_ROWS", 4)
+    hot, hot_cells = [], spatial.hot_cells
+    monkeypatch.setattr(spatial, "hot_cells", lambda *a: hot.extend(
+        r["count"] for r in hot_cells(*a).collect()) or hot_cells(*a))
+    fused = spatial.knn_join(pts, zones, k=3, res=6).collect()
+    split = spatial.knn_join(pts, zones, k=3, res=6,
+                             max_broadcast_zones=0).collect()
+    assert 60 in hot and len(fused) == 3 * 70
+    assert sorted(map(tuple, split)) == sorted(map(tuple, fused))

@@ -76,11 +76,7 @@ class Collection:
         if self._schema is None:
             from . import schema as _schema
             self._guard_read()
-            rec = _schema.from_spark_schema(
-                self._df.schema,
-                skip=frozenset({"id", "fid", "geom_type", "xs", "ys",
-                                "rings_xs", "rings_ys",
-                                "xmin", "ymin", "xmax", "ymax"}))
+            rec = _schema.from_spark_schema(self._df.schema)
             if "geom_type" in self._df.columns \
                     and rec.get("geometry") in (None, "None", "Unknown"):
                 head = self._df.select("geom_type").limit(1).collect()
@@ -232,9 +228,18 @@ class Collection:
         """Commit buffered features as ONE distributed write
         (append after the first flush)."""
         import fiona_spark
+        from pyspark.sql import types as T
+
+        from .schema import RINGS_STRUCT, with_ring_columns
         if not self._buffer:
             return
-        df = self._spark.createDataFrame(self._buffer)
+        # Spark infers no type for an all-null column, so the ring
+        # columns (null for null geometries) get theirs explicitly
+        props = self._spark.createDataFrame(
+            [{k: v for k, v in r.items() if k not in RINGS_STRUCT.names}
+             for r in self._buffer]).schema
+        df = with_ring_columns(self._spark.createDataFrame(
+            self._buffer, T.StructType(props.fields + RINGS_STRUCT.fields)))
         mode = self.mode if self._df is None else "a"
         fiona_spark.open(self._spark, self.path, mode=mode,
                          driver=self._driver, df=df, **self._opts)

@@ -20,6 +20,7 @@ import pandas as pd
 from pyspark.sql import functions as F, types as T
 
 from .. import geom
+from ..schema import with_ring_columns
 
 _D = T.DoubleType()
 
@@ -402,17 +403,8 @@ def reproject_rings(df, src: str, dst: str,
         raise ValueError("reproject_rings needs ring-model geometry columns")
     u = transform_geom_udf(src, dst,
                            antimeridian_cutting=antimeridian_cutting)
-    return (df.withColumn("_t", u("rings_xs", "rings_ys"))
-            .withColumn("rings_xs", F.col("_t.rings_xs"))
-            .withColumn("rings_ys", F.col("_t.rings_ys"))
-            .drop("_t")
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(
+        df.withColumn("_t", u("rings_xs", "rings_ys"))
+        .withColumn("rings_xs", F.col("_t.rings_xs"))
+        .withColumn("rings_ys", F.col("_t.rings_ys"))
+        .drop("_t"))

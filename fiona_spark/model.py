@@ -19,6 +19,8 @@ from collections.abc import Mapping
 
 import numpy as np
 
+from .schema import RING_COLS
+
 
 class Object(Mapping):
     """Immutable-ish mapping base for Geometry/Feature/Properties —
@@ -235,7 +237,13 @@ def geometry_from_rings(geom_type: str, rings_xs, rings_ys) -> Geometry:
     MultiPolygon part grouping is RECONSTRUCTED from ring nesting:
     even-depth rings are part shells, each hole attaches to its
     containing shell (vertex-probe containment — the same rule the
-    union kernel uses)."""
+    union kernel uses).  Null rings give a null geometry, an empty ring
+    list an EMPTY one."""
+    if rings_xs is None:
+        return None
+    if len(rings_xs) == 0:
+        return Geometry(type=geom_type, coordinates=[])
+
     def pts(i):
         return [[x, y] for x, y in zip(rings_xs[i], rings_ys[i])]
 
@@ -278,9 +286,7 @@ def geometry_from_rings(geom_type: str, rings_xs, rings_ys) -> Geometry:
     raise ValueError(f"unsupported geometry type {geom_type!r}")
 
 
-def row_to_feature(row, id_col: str = "id",
-                   skip=("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                         "xmin", "ymin", "xmax", "ymax")) -> Feature:
+def row_to_feature(row, id_col: str = "id") -> Feature:
     """Engine row (Row or mapping with the ring columns) -> Feature."""
     d = row.asDict(recursive=True) if hasattr(row, "asDict") else dict(row)
     if d.get("rings_xs") is not None:
@@ -292,22 +298,18 @@ def row_to_feature(row, id_col: str = "id",
     else:
         geometry = None
     props = {k: v for k, v in d.items()
-             if k not in skip and k != id_col}
+             if k not in RING_COLS and k != id_col}
     return Feature(geometry=geometry, id=d.get(id_col),
                    properties=Properties(**props))
 
 
 def feature_to_row(feature, id_col: str = "id") -> dict:
-    """Feature (object or dict) -> engine row dict (ring columns +
-    envelope + flattened properties)."""
+    """Feature (object or dict) -> engine row dict: the id, the ring
+    columns (null for a null geometry) and the flattened properties.
+    ``schema.with_ring_columns`` derives the rest on the frame."""
     f = decode_object(feature)
-    t, rxs, rys = rings_from_geometry(f["geometry"])
-    allx = [x for r in rxs for x in r]
-    ally = [y for r in rys for y in r]
-    return {
-        id_col: f["id"], "geom_type": t,
-        "rings_xs": rxs, "rings_ys": rys,
-        "xs": rxs[0], "ys": rys[0],
-        "xmin": min(allx), "ymin": min(ally),
-        "xmax": max(allx), "ymax": max(ally),
-        **dict(f["properties"] or {})}
+    t, rxs, rys = (rings_from_geometry(f["geometry"])
+                   if f["geometry"] is not None else (None, None, None))
+    return {id_col: f["id"], "geom_type": t,
+            "rings_xs": rxs, "rings_ys": rys,
+            **dict(f["properties"] or {})}

@@ -352,6 +352,13 @@ def _sqdist(m: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return ((m[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
 
 
+def _real_vectors(df: DataFrame, vec_col: str) -> DataFrame:
+    """Rows whose vector is present and holds no NaN or null element.
+    The IVF paths drop the rest in the plan: one NaN vector would make
+    its centroid NaN, and argmin over NaN distances picks bucket 0."""
+    return df.filter(~F.exists(vec_col, lambda x: x.isNull() | F.isnan(x)))
+
+
 def sign_lsh_signatures(emb: DataFrame, id_col: str = "vec_id",
                         vec_col: str = "embedding", dim: int = 64,
                         n_planes: int = 64, seed: int = 7) -> DataFrame:
@@ -615,10 +622,10 @@ def kmeans_fit(emb: DataFrame, vec_col: str = "embedding",
     Deterministic: init = the k vectors with the smallest
     xxhash64(vector) (a global TakeOrdered, unbiased under any file
     order — same rationale as ivf_index's hash-mod sample); empty
-    clusters keep their previous centroid.  A null vector is dropped in
-    the plan.  Returns (k, dim) float64.
+    clusters keep their previous centroid.  A null vector, or one
+    holding a NaN, is dropped in the plan.  Returns (k, dim) float64.
     """
-    emb = emb.dropna(subset=[vec_col])
+    emb = _real_vectors(emb, vec_col)
     init = (emb.select(vec_col).orderBy(F.xxhash64(F.col(vec_col)))
             .limit(k).toPandas())
     if len(init) < k:
@@ -668,9 +675,9 @@ def ivf_index(emb: DataFrame, vec_col: str = "embedding", dim: int = 64,
     uniformly; ``limit`` after it only hard-caps the driver transfer.
     Centroid training is driver-side numpy — centroids are a (C, dim)
     array shipped to executors in the assignment UDF closure.  A null
-    vector is dropped in the plan.
+    vector, or one holding a NaN, is dropped in the plan.
     """
-    emb = emb.dropna(subset=[vec_col])
+    emb = _real_vectors(emb, vec_col)
     if train == "full":
         # no sample cap, for distributions a 20k sample misplaces
         return kmeans_fit(emb, vec_col, n_centroids, dim, n_iter)
@@ -700,13 +707,14 @@ def ivf_assign(emb: DataFrame, centroids: np.ndarray,
                id_col: str = "vec_id", vec_col: str = "embedding",
                out: str = "bucket") -> DataFrame:
     """Nearest-centroid bucket per vector (one Arrow matrix op/batch); a
-    null vector has none and its row is dropped in the plan."""
+    null vector, or one holding a NaN, has none and its row is dropped
+    in the plan."""
     @F.pandas_udf(T.IntegerType())
     def assign(v: pd.Series) -> pd.Series:
         return pd.Series(
             _sqdist(_stack(v), centroids).argmin(axis=1).astype(np.int32))
 
-    return emb.dropna(subset=[vec_col]).withColumn(out, assign(vec_col))
+    return _real_vectors(emb, vec_col).withColumn(out, assign(vec_col))
 
 
 def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -720,7 +728,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     ~nprobe/C of the table per query; the bucket equi-join shuffles int
     keys, never all-pairs.  Output (qid, cid, qdot, rnk<=k) with the
     same integer-quantized rerank as ann_cosine_topk(rank_by='qdot').
-    Null vectors, on either side, are dropped in the plan.
+    Null or NaN-holding vectors, on either side, are dropped in the plan.
     """
     cents = ivf_index(emb, vec_col, dim, n_centroids, seed=seed)
     cand_b = ivf_assign(emb, cents, id_col, vec_col).select(
@@ -732,7 +740,7 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
         order = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(order.astype(np.int32)))
 
-    qb = (queries.dropna(subset=[vec_col])
+    qb = (_real_vectors(queries, vec_col)
           .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"),
                   F.explode(probes(vec_col)).alias("bucket")))
     cand = (qb.join(cand_b, "bucket")

@@ -22,10 +22,41 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from .errors import (GeometryTypeValidationError, SchemaError,
                      UnsupportedGeometryTypeError)
+
+#: The ring layer (SURVEY.md section 1.1): a Fiona Geometry is its type
+#: plus ring arrays, with the flat first ring and the envelope derived
+#: from them.  Readers build the first three columns and call
+#: ``with_ring_columns`` for the rest; writers skip all of them when
+#: they serialize properties.
+RING_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
+             "xmin", "ymin", "xmax", "ymax")
+
+#: Spark types of the columns a reader builds itself.
+RINGS_STRUCT = T.StructType([
+    T.StructField("geom_type", T.StringType()),
+    T.StructField("rings_xs", T.ArrayType(T.ArrayType(T.DoubleType()))),
+    T.StructField("rings_ys", T.ArrayType(T.ArrayType(T.DoubleType()))),
+])
+
+
+def with_ring_columns(df: DataFrame) -> DataFrame:
+    """Derive ``xs``/``ys`` (the first ring) and the envelope from
+    ``rings_xs``/``rings_ys`` in the JVM.  A null or empty ring list
+    (a null or EMPTY geometry) gives null columns: ``get`` returns null
+    past the end where ANSI ``rings_xs[0]`` would fail the query."""
+    return df.withColumns({
+        "xs": F.get("rings_xs", 0),
+        "ys": F.get("rings_ys", 0),
+        "xmin": F.array_min(F.expr("transform(rings_xs, r -> array_min(r))")),
+        "ymin": F.array_min(F.expr("transform(rings_ys, r -> array_min(r))")),
+        "xmax": F.array_max(F.expr("transform(rings_xs, r -> array_max(r))")),
+        "ymax": F.array_max(F.expr("transform(rings_ys, r -> array_max(r))")),
+    })
+
 
 FIELD_TYPES_MAP = {
     "int16": T.ShortType(),
@@ -127,10 +158,7 @@ _SPARK_TO_FIONA = {
 }
 
 
-def from_spark_schema(schema: T.StructType,
-                      skip: set[str] = frozenset(
-                          {"id", "geom_type", "xs", "ys",
-                           "xmin", "ymin", "xmax", "ymax"})) -> dict:
+def from_spark_schema(schema: T.StructType) -> dict:
     """Spark StructType -> Fiona schema dict (inverse of to_spark_schema;
     width/precision restored from metadata when present — the engine
     analogue of `fio load`'s schema inference `fiona/fio/load.py:84-97`)."""
@@ -139,7 +167,7 @@ def from_spark_schema(schema: T.StructType,
     for f in schema.fields:
         if f.name == "geom_type":
             geometry = (f.metadata or {}).get("fiona:geometry", "Unknown")
-        if f.name in skip:
+        if f.name in ("id", "fid") or f.name in RING_COLS:
             continue
         meta = f.metadata or {}
         if "fiona:type" in meta:

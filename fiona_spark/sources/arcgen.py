@@ -20,23 +20,10 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
-
-
-def _finish(df: DataFrame) -> DataFrame:
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+from ..schema import with_ring_columns
 
 
 def read_arcgen(spark, path: str) -> DataFrame:
@@ -85,5 +72,5 @@ def read_arcgen(spark, path: str) -> DataFrame:
                      "rings_xs": [xs], "rings_ys": [ys]})
     if not rows:
         raise DriverError(f"no features in generate file {path!r}")
-    return _finish(spark.createDataFrame(
+    return with_ring_columns(spark.createDataFrame(
         pd.DataFrame(rows, dtype=object)))

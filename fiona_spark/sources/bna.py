@@ -35,25 +35,12 @@ import math
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 _HEADER = re.compile(r'^\s*"')
-
-
-def _finish(df: DataFrame) -> DataFrame:
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
 
 
 def _split_header(line: str):
@@ -116,7 +103,7 @@ def read_bna(spark, path: str) -> DataFrame:
         rows.append(row)
     if not rows:
         raise DriverError(f"no BNA records in {path!r}")
-    return _finish(spark.createDataFrame(
+    return with_ring_columns(spark.createDataFrame(
         pd.DataFrame(rows, dtype=object)))
 
 
@@ -130,10 +117,8 @@ def write_bna(df: DataFrame, path: str) -> None:
     THROUGHPUT CEILING: one text file = driver-serial encode; bulk
     exports belong in parquet/iceberg_like.
     """
-    geom_cols = {"geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                 "xmin", "ymin", "xmax", "ymax", "fid"}
-    id_cols = [c for c, t in df.dtypes
-               if c not in geom_cols and t == "string"][:4]
+    id_cols = [c for c, t in df.dtypes if c not in RING_COLS
+               and c != "fid" and t == "string"][:4]
     if not id_cols:
         id_cols = []
     with open(path, "w", encoding="utf-8") as f:

@@ -37,9 +37,10 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 __all__ = ["read_dgn"]
 
@@ -188,14 +189,4 @@ def read_dgn(spark, path: str) -> DataFrame:
               "geom_type string, rings_xs array<array<double>>, "
               "rings_ys array<array<double>>")
     df = spark.createDataFrame(pdf, schema=schema)
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)

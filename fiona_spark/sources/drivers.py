@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RINGS_STRUCT, with_ring_columns
 
 # name -> (reader, writer, modes)
 _REGISTRY: dict = {}
@@ -170,46 +171,40 @@ def _read_csv(spark, path, encoding=None, **opts):
     # the ring model, curves linearized — distributed, one mapInPandas
     wkt_col = next((c for c in df.columns if c.lower() == "wkt"), None)
     if wkt_col is not None:
-        df = _decode_wkt_column(df, wkt_col)
+        from .. import wkt
+        df = decode_geometry_column(df, wkt_col, wkt.decode)
     return df
 
 
-def _decode_wkt_column(df: DataFrame, wkt_col: str) -> DataFrame:
+def decode_geometry_column(df: DataFrame, col: str, decode) -> DataFrame:
+    """Decode a WKT or WKB column into the ring layer in one
+    distributed ``mapInPandas`` pass; ``decode`` is the codec's
+    (``wkt.decode``, ``wkb.decode``).  As in OGR, a null or undecodable
+    value gives a null geometry: the codecs raise ``WKTError``/
+    ``WKBError``, both ``ValueError``s.  Any other error fails the
+    read."""
     import pandas as pd
-    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    from .. import model, wkt as wktmod
+    from .. import model
 
-    out_schema = (", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + ", geom_type string, rings_xs array<array<double>>, "
-          "rings_ys array<array<double>>")
+    def rings(value):
+        if value is None:
+            return None, None, None
+        try:
+            return model.rings_from_geometry(decode(value))
+        except ValueError:
+            return None, None, None
 
     def run(batches):
         for b in batches:
-            recs = []
-            for d in b.to_dict("records"):
-                try:
-                    g = wktmod.decode(d[wkt_col])
-                    t, rxs, rys = model.rings_from_geometry(g)
-                except Exception:
-                    t, rxs, rys = None, None, None
-                d.update(geom_type=t, rings_xs=rxs, rings_ys=rys)
-                recs.append(d)
+            recs = b.to_dict("records")
+            for d in recs:
+                d.update(zip(RINGS_STRUCT.names, rings(d[col])))
             yield pd.DataFrame(recs)
 
-    out = df.mapInPandas(run, out_schema)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df.mapInPandas(
+        run, T.StructType(df.schema.fields + RINGS_STRUCT.fields)))
 
 
 def _write_csv(df: DataFrame, path, mode="overwrite", **opts):

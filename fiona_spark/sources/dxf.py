@@ -28,23 +28,10 @@ Driver-side parse + ``createDataFrame``; the writer streams
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
-
-
-def _finish(df: DataFrame) -> DataFrame:
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+from ..schema import with_ring_columns
 
 
 def _pairs(path: str):
@@ -141,7 +128,7 @@ def read_dxf(spark, path: str) -> DataFrame:
     flush()
     if not rows:
         raise DriverError(f"no supported entities in {path!r}")
-    return _finish(spark.createDataFrame(pd.DataFrame(rows)))
+    return with_ring_columns(spark.createDataFrame(pd.DataFrame(rows)))
 
 
 def write_dxf(df: DataFrame, path: str) -> None:

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 _GEOM_KIND = {
     "esriGeometryPoint": "Point",
@@ -83,14 +84,4 @@ def read_esrijson(spark, path: str) -> DataFrame:
     if isinstance(fcols.get("attributes"), T.StructType):
         sel.append(F.col("attributes.*"))
     out = feats.select(*sel)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)

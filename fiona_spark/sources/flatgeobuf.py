@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 MAGIC = b"fgb\x03fgb\x00"
 
@@ -541,18 +542,7 @@ def read_flatgeobuf(spark, path: str, bbox=None) -> DataFrame:
                 recs.append(rec)
             yield pd.DataFrame(recs)
 
-    out = src.mapInPandas(run, out_schema)
-    out = (out
-           .withColumn("xs", F.expr("rings_xs[0]"))
-           .withColumn("ys", F.expr("rings_ys[0]"))
-           .withColumn("xmin", F.array_min(F.expr(
-               "transform(rings_xs, r -> array_min(r))")))
-           .withColumn("ymin", F.array_min(F.expr(
-               "transform(rings_ys, r -> array_min(r))")))
-           .withColumn("xmax", F.array_max(F.expr(
-               "transform(rings_xs, r -> array_max(r))")))
-           .withColumn("ymax", F.array_max(F.expr(
-               "transform(rings_ys, r -> array_max(r))"))))
+    out = with_ring_columns(src.mapInPandas(run, out_schema))
     if bbox is not None and fids is None:
         # no index in the file: same bbox semantics via a post-decode
         # envelope-intersects filter
@@ -566,10 +556,6 @@ def read_flatgeobuf(spark, path: str, bbox=None) -> DataFrame:
 # ---------------------------------------------------------------------------
 # writer
 # ---------------------------------------------------------------------------
-
-_DERIVED_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                 "xmin", "ymin", "xmax", "ymax", "fid")
-
 
 def _encode_geometry(bld: _Builder, gt: str, rxs, rys) -> int:
     code = _GT_CODE.get(gt)
@@ -673,7 +659,8 @@ def write_flatgeobuf(df: DataFrame, path: str, name: str = "layer",
     single-file encode; bulk exports belong in parquet.  Coordinates
     are raw ``<f8`` copies (bit-exact round-trip).
     """
-    props = [f for f in df.schema.fields if f.name not in _DERIVED_COLS]
+    props = [f for f in df.schema.fields
+             if f.name not in RING_COLS and f.name != "fid"]
     cols = []
     for f_ in props:
         t = f_.dataType.simpleString()

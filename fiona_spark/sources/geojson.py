@@ -23,12 +23,9 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..schema import RING_COLS, with_ring_columns
+
 RS = "\x1e"   # ASCII record separator, as in fio --rs output
-
-
-#: engine geometry/envelope columns — never serialized as properties
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax")
 
 
 def feature_struct(df: DataFrame, id_col: str = "id",
@@ -40,7 +37,7 @@ def feature_struct(df: DataFrame, id_col: str = "id",
     ``prop_cols`` (default: everything else).  Output column:
     ``feature`` struct mirroring `fiona/model.py:296-391` Feature.
     """
-    skip = {id_col, *_GEOM_COLS}
+    skip = {id_col, *RING_COLS}
     props = prop_cols or [c for c in df.columns if c not in skip]
     coords = F.expr("transform(xs, (x, i) -> array(x, ys[i]))")
     if geom_type == "Polygon":
@@ -85,7 +82,7 @@ def _feature_lines(df: DataFrame, id_col: str, geom_type: str) -> DataFrame:
                     rec.get("geom_type") or geom_type,
                     rec["rings_xs"], rec["rings_ys"])
                 props = {k: v for k, v in rec.items()
-                         if k not in _GEOM_COLS and k != idc}
+                         if k not in RING_COLS and k != idc}
                 feat = {"type": "Feature",
                         "id": rec.get(idc) if idc else None,
                         "geometry": geometry, "properties": props}
@@ -204,9 +201,11 @@ def _features_to_rows(js: DataFrame) -> DataFrame:
     elif depth == 2:      # LineString / MultiPoint
         rx = F.expr("array(transform(geometry.coordinates, c -> c[0]))")
         ry = F.expr("array(transform(geometry.coordinates, c -> c[1]))")
-    else:                 # Point
-        rx = F.expr("array(array(CAST(geometry.coordinates[0] AS DOUBLE)))")
-        ry = F.expr("array(array(CAST(geometry.coordinates[1] AS DOUBLE)))")
+    else:                 # Point; EMPTY (coordinates []) has no ring
+        rx = F.expr("transform(slice(geometry.coordinates, 1, 1), "
+                    "x -> array(CAST(x AS DOUBLE)))")
+        ry = F.expr("transform(slice(geometry.coordinates, 2, 1), "
+                    "y -> array(CAST(y AS DOUBLE)))")
     from pyspark.sql import types as T2
     names = {f.name: f.dataType for f in js.schema.fields}
     sel = [F.col("id") if "id" in names
@@ -218,15 +217,4 @@ def _features_to_rows(js: DataFrame) -> DataFrame:
     if isinstance(names.get("properties"), T2.StructType):
         sel.append(F.col("properties.*"))
     out = js.select(*sel)
-    return (out
-            # first ring kept as flat (xs, ys) for single-ring consumers
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 _ENV_DOUBLES = {0: 0, 1: 4, 2: 6, 3: 6, 4: 8}
 
@@ -142,18 +143,7 @@ def read_geopackage(spark, path: str, layer: str | None = None,
                 recs.append(d)
             yield pd.DataFrame(recs)
 
-    out = src.mapInPandas(run, out_schema)
-    out = (out
-           .withColumn("xs", F.expr("rings_xs[0]"))
-           .withColumn("ys", F.expr("rings_ys[0]"))
-           .withColumn("xmin", F.array_min(F.expr(
-               "transform(rings_xs, r -> array_min(r))")))
-           .withColumn("ymin", F.array_min(F.expr(
-               "transform(rings_ys, r -> array_min(r))")))
-           .withColumn("xmax", F.array_max(F.expr(
-               "transform(rings_xs, r -> array_max(r))")))
-           .withColumn("ymax", F.array_max(F.expr(
-               "transform(rings_ys, r -> array_max(r))"))))
+    out = with_ring_columns(src.mapInPandas(run, out_schema))
     if bbox is not None:
         out = out.filter((F.col("xmin") <= bbox[2])
                          & (F.col("xmax") >= bbox[0])
@@ -167,10 +157,6 @@ _SQLITE_T = {"string": "TEXT", "bigint": "INTEGER", "int": "INTEGER",
              "boolean": "INTEGER",
              "double": "REAL", "float": "REAL", "binary": "BLOB",
              "date": "TEXT", "timestamp": "TEXT"}
-
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax")
-
 
 def write_geopackage(df: DataFrame, path: str, layer: str = "features",
                      mode: str = "w", srs_id: int = 4326,
@@ -198,7 +184,7 @@ def write_geopackage(df: DataFrame, path: str, layer: str = "features",
     """
     from .. import model, wkb
 
-    props = [f for f in df.schema.fields if f.name not in _GEOM_COLS]
+    props = [f for f in df.schema.fields if f.name not in RING_COLS]
     con = sqlite3.connect(path)
     try:
         if mode == "w":

@@ -25,9 +25,10 @@ import xml.etree.ElementTree as ET
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 from ..wkb import _linearize_arcs
 
 
@@ -189,26 +190,12 @@ def read_gml(spark, path: str) -> DataFrame:
     if not rows:
         raise DriverError(f"no featureMember elements in {path!r}")
     df = spark.createDataFrame(pd.DataFrame(rows))
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)
 
 
 # ---------------------------------------------------------------------------
 # writer (reference registers GML "rw": fiona/drvsupport.py:69)
 # ---------------------------------------------------------------------------
-
-_DERIVED_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                 "xmin", "ymin", "xmax", "ymax", "fid")
-
 
 def _pos_list_text(ring_x, ring_y) -> str:
     return " ".join(f"{float(x)!r} {float(y)!r}"
@@ -281,7 +268,7 @@ def write_gml(df: DataFrame, path: str,
     from xml.sax.saxutils import escape
 
     props = [f.name for f in df.schema.fields
-             if f.name not in _DERIVED_COLS]
+             if f.name not in RING_COLS and f.name != "fid"]
     cols_set = set(df.columns)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:

@@ -44,9 +44,10 @@ import os
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 __all__ = ["read_gtm", "write_gtm", "append_gtm", "LAYERS"]
 
@@ -191,17 +192,7 @@ def read_gtm(spark, path: str, layer: str = "waypoints") -> DataFrame:
     df = spark.createDataFrame(pd.DataFrame(
         rows, columns=[f.split()[0] for f in schema.split(", ")]),
         schema=schema)
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)
 
 
 def _ts_to_wdate(val) -> int:

@@ -14,9 +14,10 @@ import os
 import xml.etree.ElementTree as ET
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 LAYERS = ("waypoints", "tracks", "track_points", "routes", "route_points")
 
@@ -102,17 +103,7 @@ def read_gpx(spark, path: str, layer: str = "waypoints") -> DataFrame:
     if not rows:
         raise DriverError(f"no {layer!r} features in {path!r}")
     df = spark.createDataFrame(pd.DataFrame(rows))
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)
 
 
 # ---------------------------------------------------------------------------

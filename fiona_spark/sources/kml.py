@@ -14,9 +14,10 @@ import os
 import xml.etree.ElementTree as ET
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 
 def _local(tag: str) -> str:
@@ -127,26 +128,12 @@ def read_kml(spark, path: str) -> DataFrame:
     if not rows:
         raise DriverError(f"no Placemark elements in {path!r}")
     df = spark.createDataFrame(pd.DataFrame(rows))
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)
 
 
 # ---------------------------------------------------------------------------
 # writer (reference registers KML "rw": fiona/drvsupport.py KML row)
 # ---------------------------------------------------------------------------
-
-_DERIVED_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                 "xmin", "ymin", "xmax", "ymax", "fid")
-
 
 def _coords(ring_x, ring_y) -> str:
     return " ".join(f"{float(x)!r},{float(y)!r}"
@@ -212,7 +199,7 @@ def write_kml(df: DataFrame, path: str) -> None:
     from xml.sax.saxutils import escape, quoteattr
 
     props = [f.name for f in df.schema.fields
-             if f.name not in _DERIVED_COLS]
+             if f.name not in RING_COLS and f.name != "fid"]
     cols_set = set(df.columns)
     tmp = path + ".tmp"
     with open(tmp, "w", encoding="utf-8") as fh:

@@ -38,27 +38,12 @@ import os
 import re
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax", "fid")
 _STYLE = ("SYMBOL", "PEN", "BRUSH", "CENTER", "SMOOTH", "FONT")
-
-
-def _finish(df: DataFrame) -> DataFrame:
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
 
 
 def _mid_path(path: str) -> str:
@@ -188,8 +173,8 @@ def read_mapinfo(spark, path: str) -> DataFrame:
     # dtype=object keeps nullable numeric properties as None (a plain
     # DataFrame would coerce float columns to NaN, which Spark stores
     # as NaN, not NULL)
-    return _finish(spark.createDataFrame(pd.DataFrame(rows,
-                                                      dtype=object)))
+    return with_ring_columns(spark.createDataFrame(
+        pd.DataFrame(rows, dtype=object)))
 
 
 def _mif_type(spark_t: str) -> str:
@@ -236,7 +221,8 @@ def write_mapinfo(df: DataFrame, path: str, mode: str = "w",
     THROUGHPUT CEILING: one text-file pair = driver-serial encode;
     bulk exports belong in parquet/iceberg_like.
     """
-    props = [(c, t) for c, t in df.dtypes if c not in _GEOM_COLS]
+    props = [(c, t) for c, t in df.dtypes
+             if c not in RING_COLS and c != "fid"]
     mid = _mid_path(path)
     if mode == "a":
         with open(path, encoding="utf-8", errors="replace") as f:

@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 _GTYPES = {
     "POINT": "Point", "MULTIPOINT": "MultiPoint",
@@ -50,20 +51,6 @@ _WRITE_G = {"Point": "POINT", "MultiPoint": "MULTIPOINT",
             "LineString": "LINESTRING",
             "MultiLineString": "MULTILINESTRING",
             "Polygon": "POLYGON", "MultiPolygon": "MULTIPOLYGON"}
-
-
-def _finish(df: DataFrame) -> DataFrame:
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
 
 
 def _split_d(payload: str) -> list[str]:
@@ -183,7 +170,7 @@ def read_gmt(spark, path: str) -> DataFrame:
                "rings_ys": ft.pop("rings_ys")}
         row.update(ft)
         rows.append(row)
-    return _finish(spark.createDataFrame(
+    return with_ring_columns(spark.createDataFrame(
         pd.DataFrame(rows, dtype=object)))
 
 
@@ -195,9 +182,8 @@ def write_gmt(df: DataFrame, path: str) -> None:
     rings, later rings marked ``# @H`` so multi-ring polygons round
     trip.  THROUGHPUT CEILING: driver-serial single-file encode.
     """
-    geom_cols = {"geom_type", "rings_xs", "rings_ys", "xs", "ys",
-                 "xmin", "ymin", "xmax", "ymax", "fid"}
-    props = [(c, t) for c, t in df.dtypes if c not in geom_cols]
+    props = [(c, t) for c, t in df.dtypes
+             if c not in RING_COLS and c != "fid"]
     gtype_rows = (df.select("geom_type").filter(
         F.col("geom_type").isNotNull()).limit(1).collect())
     gtype = gtype_rows[0][0] if gtype_rows else "LineString"

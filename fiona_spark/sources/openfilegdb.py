@@ -40,9 +40,10 @@ import uuid as _uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 FT_INT16, FT_INT32, FT_FLOAT32, FT_FLOAT64, FT_STRING = 0, 1, 2, 3, 4
 FT_DATETIME, FT_OBJECTID, FT_GEOMETRY, FT_BINARY, FT_RASTER = 5, 6, 7, 8, 9
@@ -392,17 +393,7 @@ def read_openfilegdb(spark, path: str, layer: str | None = None) -> DataFrame:
             yield pd.DataFrame(recs)
 
     out = src.mapInPandas(run, out_schema)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)
 
 
 # ---------------------------------------------------------------------------
@@ -745,11 +736,9 @@ def _collect_rows(df: DataFrame):
     """DataFrame -> (prop fields from the schema, row dicts streamed
     driver-side — single-file formats are driver-serial by design, the
     same toLocalIterator convention as shapefile/gpkg)."""
-    skip = {"fid", "geom_type", "rings_xs", "rings_ys", "xs", "ys",
-            "xmin", "ymin", "xmax", "ymax"}
     props = []
     for f in df.schema.fields:
-        if f.name in skip:
+        if f.name in RING_COLS or f.name == "fid":
             continue
         t = f.dataType.simpleString()
         if t not in _SPARK_FT:

@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 __all__ = ["read_pds", "parse_odl"]
 
@@ -297,16 +298,9 @@ def read_pds(spark, path: str, lng_column: str = "LONGITUDE",
     lngc = by_upper.get(lng_column.upper())
     latc = by_upper.get(lat_column.upper())
     if lngc and latc:
-        df = (df
-              .withColumn("geom_type", F.lit("Point"))
-              .withColumn("rings_xs", F.array(F.array(
-                  F.col(f"`{lngc}`").cast("double"))))
-              .withColumn("rings_ys", F.array(F.array(
-                  F.col(f"`{latc}`").cast("double"))))
-              .withColumn("xs", F.expr("rings_xs[0]"))
-              .withColumn("ys", F.expr("rings_ys[0]"))
-              .withColumn("xmin", F.expr("rings_xs[0][0]"))
-              .withColumn("xmax", F.expr("rings_xs[0][0]"))
-              .withColumn("ymin", F.expr("rings_ys[0][0]"))
-              .withColumn("ymax", F.expr("rings_ys[0][0]")))
+        df = with_ring_columns(df.withColumns({
+            "geom_type": F.lit("Point"),
+            "rings_xs": F.array(F.array(F.col(f"`{lngc}`").cast("double"))),
+            "rings_ys": F.array(F.array(F.col(f"`{latc}`").cast("double"))),
+        }))
     return df

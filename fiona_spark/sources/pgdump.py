@@ -43,14 +43,11 @@ import struct
 
 from pyspark.sql import DataFrame
 
-from ..errors import DriverError
 from .. import model, wkb as wkbmod
+from ..errors import DriverError
+from ..schema import RING_COLS
 
 __all__ = ["write_pgdump"]
-
-#: engine ring-model geometry columns (shared source convention)
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax")
 
 _PG_TYPES = {
     "string": "VARCHAR",
@@ -140,7 +137,7 @@ def write_pgdump(df: DataFrame, path: str, layer: str | None = None,
     layer = layer or os.path.splitext(os.path.basename(path))[0]
     has_geom = "rings_xs" in df.columns and "geom_type" in df.columns
     props = [(f.name, f.dataType.simpleString())
-             for f in df.schema.fields if f.name not in _GEOM_COLS]
+             for f in df.schema.fields if f.name not in RING_COLS]
     pg_cols = [(name, _pg_type(t)) for name, t in props]
 
     # layer geometry type: the distinct geom_type values, or GEOMETRY

@@ -62,9 +62,10 @@ from __future__ import annotations
 import struct
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 __all__ = ["read_s57", "listlayers_s57"]
 
@@ -374,14 +375,4 @@ def read_s57(spark, path: str, layer: str | None = None) -> DataFrame:
         [f"ATTL_{c}" for c in attl_codes]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=cols),
                                schema=schema)
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(df)

@@ -27,9 +27,10 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..errors import DriverError
+from ..schema import with_ring_columns
 
 __all__ = ["read_segy"]
 
@@ -132,10 +133,4 @@ def read_segy(spark, path: str) -> DataFrame:
               "rings_xs array<array<double>>, "
               "rings_ys array<array<double>>")
     df = spark.createDataFrame(pdf, schema=schema)
-    return (df
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.expr("rings_xs[0][0]"))
-            .withColumn("xmax", F.expr("rings_xs[0][0]"))
-            .withColumn("ymin", F.expr("rings_ys[0][0]"))
-            .withColumn("ymax", F.expr("rings_ys[0][0]")))
+    return with_ring_columns(df)

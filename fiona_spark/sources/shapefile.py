@@ -28,10 +28,11 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .. import geom
 from ..errors import DriverError
+from ..schema import RING_COLS, with_ring_columns
 
 SHP_NULL = 0
 SHP_POINT = 1
@@ -181,26 +182,12 @@ def read_shapefile(spark, path: str, encoding: str | None = None) -> DataFrame:
             yield pd.DataFrame(recs)
 
     out = src.mapInPandas(run, out_schema)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)
 
 
 # ---------------------------------------------------------------------------
 # writer
 # ---------------------------------------------------------------------------
-
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax", "fid")
-
 
 def _signed_area2(r: np.ndarray) -> float:
     """Twice the shoelace signed area of a closed ring (CCW positive)."""
@@ -318,7 +305,8 @@ def write_shapefile(df: DataFrame, path: str,
     CW, holes CCW) so GDAL/fiona readers classify shells correctly.
     """
     base, _ = os.path.splitext(path)
-    props = [f for f in df.schema.fields if f.name not in _GEOM_COLS]
+    props = [f for f in df.schema.fields
+             if f.name not in RING_COLS and f.name != "fid"]
     # dbf descriptors: strings C:80, ints N:18, floats N:20.6, bool L
     descs = []
     for f in props:

@@ -31,9 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
-
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax")
+from ..schema import RING_COLS, with_ring_columns
 
 _OGR_GEOM_CODE = {"Point": 1, "LineString": 2, "Polygon": 3,
                   "MultiPoint": 4, "MultiLineString": 5,
@@ -103,17 +101,7 @@ def read_sqlite(spark, path: str, layer: str | None = None) -> DataFrame:
             yield pd.DataFrame(recs)
 
     out = src.mapInPandas(run, out_schema)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)
 
 
 def write_sqlite(df: DataFrame, path: str, layer: str = "features",
@@ -123,7 +111,7 @@ def write_sqlite(df: DataFrame, path: str, layer: str = "features",
     from .. import model, wkb
 
     props = [f for f in df.schema.fields
-             if f.name not in _GEOM_COLS and f.name != "fid"]
+             if f.name not in RING_COLS and f.name != "fid"]
     gt_rows = (df.select("geom_type").filter(
         F.col("geom_type").isNotNull()).limit(1).collect())
     gcode = _OGR_GEOM_CODE.get(gt_rows[0][0], 0) if gt_rows else 0

@@ -20,7 +20,9 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
+
+from ..schema import with_ring_columns
 
 _OUT_SCHEMA = ("object string, fid long, geom_type string, "
                "rings_xs array<array<double>>, "
@@ -127,14 +129,4 @@ def read_topojson(spark, path: str) -> DataFrame:
             yield pd.DataFrame(rows)
 
     out = src.mapInPandas(run, _OUT_SCHEMA)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(out)

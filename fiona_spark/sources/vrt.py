@@ -54,10 +54,7 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
-
-#: engine ring-model geometry columns (shared source convention)
-_GEOM_COLS = ("geom_type", "rings_xs", "rings_ys", "xs", "ys",
-              "xmin", "ymin", "xmax", "ymax")
+from ..schema import RING_COLS, with_ring_columns
 
 #: OGR field type -> Spark cast target (GDAL VRT <Field type=...>)
 _OGR_TO_SPARK = {
@@ -144,68 +141,23 @@ def _apply_geometry_field(df: DataFrame, gf: ET.Element) -> DataFrame:
         for c in (xcol, ycol):
             if c not in df.columns:
                 raise DriverError(f"PointFromColumns: no column {c!r}")
-        x = F.col(xcol).cast("double")
-        y = F.col(ycol).cast("double")
-        return (df.withColumn("geom_type", F.lit("Point"))
-                  .withColumn("rings_xs", F.array(F.array(x)))
-                  .withColumn("rings_ys", F.array(F.array(y)))
-                  .withColumn("xs", F.array(x))
-                  .withColumn("ys", F.array(y))
-                  .withColumn("xmin", x).withColumn("xmax", x)
-                  .withColumn("ymin", y).withColumn("ymax", y))
-    if enc == "wkt":
+        return with_ring_columns(df.withColumns({
+            "geom_type": F.lit("Point"),
+            "rings_xs": F.array(F.array(F.col(xcol).cast("double"))),
+            "rings_ys": F.array(F.array(F.col(ycol).cast("double"))),
+        }))
+    if enc in ("wkt", "wkb"):
         field = gf.get("field")
         if not field or field not in df.columns:
-            raise DriverError(f"WKT geometry field {field!r} not in source")
-        from .drivers import _decode_wkt_column
-        return _decode_wkt_column(df, field)
-    if enc == "wkb":
-        field = gf.get("field")
-        if not field or field not in df.columns:
-            raise DriverError(f"WKB geometry field {field!r} not in source")
-        return _decode_wkb_column(df, field)
+            raise DriverError(f"{enc.upper()} geometry field {field!r} "
+                              "not in source")
+        from .. import wkb, wkt
+        from .drivers import decode_geometry_column
+        codec = wkt if enc == "wkt" else wkb
+        return decode_geometry_column(df, field, codec.decode)
     if enc == "direct":
         return df
     raise DriverError(f"unsupported GeometryField encoding {enc!r}")
-
-
-def _decode_wkb_column(df: DataFrame, wkb_col: str) -> DataFrame:
-    """One-pass distributed WKB decode into the ring model (the WKB
-    twin of ``drivers._decode_wkt_column``)."""
-    import pandas as pd
-
-    from .. import model, wkb as wkbmod
-
-    out_schema = (", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-        + ", geom_type string, rings_xs array<array<double>>, "
-          "rings_ys array<array<double>>")
-
-    def run(batches):
-        for b in batches:
-            recs = []
-            for d in b.to_dict("records"):
-                try:
-                    g = wkbmod.decode(bytes(d[wkb_col]))
-                    t, rxs, rys = model.rings_from_geometry(g)
-                except Exception:
-                    t, rxs, rys = None, None, None
-                d.update(geom_type=t, rings_xs=rxs, rings_ys=rys)
-                recs.append(d)
-            yield pd.DataFrame(recs)
-
-    out = df.mapInPandas(run, out_schema)
-    return (out
-            .withColumn("xs", F.expr("rings_xs[0]"))
-            .withColumn("ys", F.expr("rings_ys[0]"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
 
 
 def _read_member(spark, vrt_path: str, node: ET.Element) -> DataFrame:
@@ -262,7 +214,7 @@ def _read_member(spark, vrt_path: str, node: ET.Element) -> DataFrame:
                     raise DriverError(f"unknown <Field type={ftype!r}>")
                 col = col.cast(spark_t)
             cols.append(col.alias(name))
-        cols.extend(F.col(c) for c in _GEOM_COLS if c in df.columns)
+        cols.extend(F.col(c) for c in RING_COLS if c in df.columns)
         df = df.select(*cols)
     return df
 

@@ -23,6 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from .schema import RINGS_STRUCT, with_ring_columns
+
 WKB_POINT = 1
 WKB_LINESTRING = 2
 WKB_POLYGON = 3
@@ -107,6 +109,8 @@ def _read_coords(buf: memoryview, off: int, n: int, little: bool, ndim: int):
 
 
 def _read_count(buf: memoryview, off: int, little: bool):
+    if off + 4 > len(buf):
+        raise WKBError("truncated count")
     (n,) = struct.unpack_from("<I" if little else ">I", buf, off)
     return n, off + 4
 
@@ -315,34 +319,6 @@ def encode(g: dict) -> bytes:
 # adapters to the engine ring model
 # ---------------------------------------------------------------------------
 
-def to_rings(g: dict):
-    """GeoJSON geometry -> (rings_xs, rings_ys) for the even-odd PIP
-    kernels: Polygon rings (shell + holes) and MultiPolygon parts all
-    flatten into one ring list (parity composes).  Points/LineStrings
-    degrade to a single open 'ring' of their vertices."""
-    t, c = g["type"], g["coordinates"]
-    if t == "Point":
-        return [[float(c[0])]], [[float(c[1])]]
-    if t in ("LineString", "MultiPoint"):
-        xs = [float(p[0]) for p in c]
-        ys = [float(p[1]) for p in c]
-        return [xs], [ys]
-    if t == "Polygon":
-        return ([[float(p[0]) for p in ring] for ring in c],
-                [[float(p[1]) for p in ring] for ring in c])
-    if t == "MultiLineString":
-        return ([[float(p[0]) for p in line] for line in c],
-                [[float(p[1]) for p in line] for line in c])
-    if t == "MultiPolygon":
-        xs, ys = [], []
-        for poly in c:
-            for ring in poly:
-                xs.append([float(p[0]) for p in ring])
-                ys.append([float(p[1]) for p in ring])
-        return xs, ys
-    raise WKBError(f"no ring model for {t}")
-
-
 def promote_multi(g: dict) -> dict:
     """Polygon -> MultiPolygon (etc.) promotion, as the reference applies
     on heterogeneous writes (fiona/collection.py:699-720)."""
@@ -352,25 +328,17 @@ def promote_multi(g: dict) -> dict:
     return g
 
 
-RINGS_STRUCT = T.StructType([
-    T.StructField("geom_type", T.StringType()),
-    T.StructField("rings_xs", T.ArrayType(T.ArrayType(T.DoubleType()))),
-    T.StructField("rings_ys", T.ArrayType(T.ArrayType(T.DoubleType()))),
-])
-
-
 def wkb_to_rings_udf() -> Column:
     """pandas UDF factory: binary WKB column -> (geom_type, rings_xs,
-    rings_ys) struct, ready for pip_join's multi-ring path."""
+    rings_ys) struct, ready for pip_join's multi-ring path.  A null
+    value gives a null geometry; malformed bytes raise WKBError."""
+    from .model import rings_from_geometry
+
     @F.pandas_udf(RINGS_STRUCT)
     def conv(b: pd.Series) -> pd.DataFrame:
-        types, xss, yss = [], [], []
-        for raw in b:
-            g = decode(bytes(raw))
-            xs, ys = to_rings(g)
-            types.append(g["type"]); xss.append(xs); yss.append(ys)
-        return pd.DataFrame({"geom_type": types, "rings_xs": xss,
-                             "rings_ys": yss})
+        rows = [(None, None, None) if raw is None
+                else rings_from_geometry(decode(bytes(raw))) for raw in b]
+        return pd.DataFrame(rows, columns=RINGS_STRUCT.names)
     return conv
 
 
@@ -403,17 +371,7 @@ def rings_to_wkb_udf(geom_type: str = "Polygon") -> Column:
 
 def read_wkb(df: DataFrame, wkb_col: str = "wkb") -> DataFrame:
     """Decode a WKB column into the engine's multi-ring layer shape:
-    geom_type, rings_xs, rings_ys + envelope columns (JVM array math)."""
+    geom_type, rings_xs, rings_ys + the derived ring columns."""
     out = df.withColumn("_g", wkb_to_rings_udf()(wkb_col))
-    return (out.select(*[c for c in df.columns if c != wkb_col],
-                       F.col("_g.geom_type").alias("geom_type"),
-                       F.col("_g.rings_xs").alias("rings_xs"),
-                       F.col("_g.rings_ys").alias("rings_ys"))
-            .withColumn("xmin", F.array_min(F.expr(
-                "transform(rings_xs, r -> array_min(r))")))
-            .withColumn("ymin", F.array_min(F.expr(
-                "transform(rings_ys, r -> array_min(r))")))
-            .withColumn("xmax", F.array_max(F.expr(
-                "transform(rings_xs, r -> array_max(r))")))
-            .withColumn("ymax", F.array_max(F.expr(
-                "transform(rings_ys, r -> array_max(r))"))))
+    return with_ring_columns(
+        out.select(*[c for c in df.columns if c != wkb_col], "_g.*"))

@@ -124,6 +124,31 @@ def test_multi_flush_readback(spark, src, tmp_path):
             == {f["properties"]["NAME"] for f in feats})
 
 
+def test_writerecords_null_and_empty_geometry(spark, tmp_path):
+    """A null and an EMPTY geometry write and read back through the
+    GeoJSON driver.  Before, the writer re-derived the envelope in
+    Python: TypeError on None, IndexError on POINT EMPTY."""
+    out = str(tmp_path / "odd.geojson")
+    schema = {"geometry": "Point", "properties": {"name": "str"}}
+    feats = [
+        {"type": "Feature", "id": "1", "properties": {"name": "a"},
+         "geometry": {"type": "Point", "coordinates": [1.0, 2.0]}},
+        {"type": "Feature", "id": "2", "properties": {"name": "b"},
+         "geometry": None},
+        {"type": "Feature", "id": "3", "properties": {"name": "c"},
+         "geometry": {"type": "Point", "coordinates": []}}]
+    with fiona_spark.open_collection(spark, out, "w", schema=schema,
+                                     driver="geojson") as dst:
+        dst.writerecords(feats)
+    back = {f["id"]: f for f in fiona_spark.open_collection(spark, out)}
+    assert len(back) == 3
+    assert back["1"]["geometry"]["coordinates"] == [1.0, 2.0]
+    assert back["2"]["geometry"] is None
+    assert back["3"]["geometry"]["type"] == "Point"
+    assert back["3"]["geometry"]["coordinates"] == []
+    assert {f["properties"]["name"] for f in back.values()} == {"a", "b", "c"}
+
+
 def test_write_mode_guards(spark, src, tmp_path):
     with pytest.raises(ValueError):
         fiona_spark.open_collection(spark, "x.gpkg", "x")

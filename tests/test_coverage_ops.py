@@ -138,6 +138,22 @@ def test_csv_roundtrip_with_extension_inference(spark, tmp_path):
         [(1, "x"), (2, "y"), (3, "z")]
 
 
+def test_csv_wkt_empty_geometries_read(spark, tmp_path):
+    """An EMPTY geometry has no first ring and no envelope: the derived
+    columns are null.  Indexing rings_xs[0] under ANSI failed the whole
+    read with INVALID_ARRAY_INDEX."""
+    p = tmp_path / "empty.csv"
+    p.write_text('gid,wkt\n1,POINT (2 3)\n2,POINT EMPTY\n'
+                 '3,LINESTRING EMPTY\n')
+    rows = {r["gid"]: r for r in drivers.open_dataset(spark, str(p)).collect()}
+    assert len(rows) == 3
+    assert rows[1]["xs"] == [2.0] and rows[1]["ymax"] == 3.0
+    for gid, t in ((2, "Point"), (3, "LineString")):
+        assert rows[gid]["geom_type"] == t and rows[gid]["rings_xs"] == []
+        assert all(rows[gid][c] is None
+                   for c in ("xs", "ys", "xmin", "ymin", "xmax", "ymax"))
+
+
 def test_encoding_fallback_iso_8859_1(spark, tmp_path):
     """Latin-1 bytes that are NOT valid UTF-8 must fall back, like the
     reference's shapefile rule (ogrext.pyx:940-983)."""

@@ -392,6 +392,23 @@ def test_ivf_drops_null_embedding(spark):
     assert dedup.kmeans_fit(emb, k=4, n_iter=1).shape == (4, 64)
 
 
+def test_ivf_drops_nan_embedding(spark):
+    """A vector holding a NaN has no bucket either: kept, it made its
+    training centroid NaN and argmin then sent every row to bucket 0."""
+    rng = np.random.default_rng(9)
+    vecs = [v.tolist() for v in rng.standard_normal((300, 64))]
+    vecs[42][5] = float("nan")
+    emb = spark.createDataFrame(
+        pd.DataFrame({"vec_id": range(300), "embedding": vecs}),
+        "vec_id long, embedding array<double>")
+    cents = dedup.ivf_index(emb, n_centroids=16)
+    assert not np.isnan(cents).any()
+    got = dedup.ivf_assign(emb, cents).toPandas()
+    assert len(got) == 299 and 42 not in set(got["vec_id"])
+    assert got["bucket"].nunique() > 1
+    assert not np.isnan(dedup.kmeans_fit(emb, k=4, n_iter=1)).any()
+
+
 def test_repetition_stats_match_pandas_oracle(spark):
     """Gopher-style repetition filters vs an eager pandas recompute."""
     from collections import Counter

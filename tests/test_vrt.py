@@ -177,6 +177,41 @@ def test_vrt_wkt_geometry_field(spark, tmp_path):
     assert rows[2]["xs"] == [5.0]
 
 
+def test_vrt_wkb_geometry_field(spark, tmp_path):
+    """A WKB field decodes to the ring layer; as in OGR a null or
+    malformed blob gives a null geometry, while any error other than
+    the codec's ValueError fails the read."""
+    import pandas as pd
+
+    from fiona_spark import wkb
+    square = wkb.encode({"type": "Polygon", "coordinates": [
+        [[0.0, 0.0], [2.0, 0.0], [2.0, 1.0], [0.0, 0.0]]]})
+    src = os.path.join(str(tmp_path), "blobs.parquet")
+    spark.createDataFrame(
+        pd.DataFrame({"id": [1, 2, 3], "shape": [square, None, square[:7]]}),
+        "id long, shape binary").write.parquet(src)
+    vrt = _write(tmp_path, "blobs.vrt", f"""
+<OGRVRTDataSource>
+  <OGRVRTLayer name="blobs">
+    <SrcDataSource>{src}</SrcDataSource>
+    <GeometryField encoding="WKB" field="shape"/>
+  </OGRVRTLayer>
+</OGRVRTDataSource>""")
+    rows = {r["id"]: r for r in read_vrt(spark, vrt).collect()}
+    assert rows[1]["geom_type"] == "Polygon"
+    assert rows[1]["xs"] == [0.0, 2.0, 2.0, 0.0] and rows[1]["xmax"] == 2.0
+    for i in (2, 3):
+        assert rows[i]["geom_type"] is None and rows[i]["rings_xs"] is None
+        assert rows[i]["xs"] is None and rows[i]["xmin"] is None
+
+    def not_a_codec(value):
+        raise TypeError("not a codec error")
+
+    df = spark.read.parquet(src).filter("id = 1")
+    with pytest.raises(Exception, match="not a codec error"):
+        drivers.decode_geometry_column(df, "shape", not_a_codec).collect()
+
+
 def test_vrt_listlayers_and_layer_select(spark, tmp_path):
     shp = ensure_canon_shp(spark)
     gpkg = ensure_canon_gpkg(spark)

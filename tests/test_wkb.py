@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from fiona_spark import wkb
+from fiona_spark import model, wkb
 
 # Canonical little-endian WKB hex from the WKB spec (independent ground
 # truth — not produced by this codec).
@@ -89,11 +89,54 @@ def test_truncated_and_trailing_raise():
         wkb.decode(good + b"\x00")
 
 
+_TRIANGLE = [[0.0, 0.0], [1.0, 0.0], [0.0, 1.0], [0.0, 0.0]]
+_NESTED = {
+    "Polygon": {"type": "Polygon", "coordinates": [_TRIANGLE]},
+    "MultiPolygon": {"type": "MultiPolygon", "coordinates": [[_TRIANGLE]]},
+    "GeometryCollection": {"type": "GeometryCollection", "geometries": [
+        {"type": "Point", "coordinates": [1.0, 2.0]}]}}
+
+
+@pytest.mark.parametrize("kind,k", [
+    (kind, k) for kind, g in _NESTED.items()
+    for k in range(len(wkb.encode(g)))])
+def test_every_prefix_raises_wkb_error(kind, k):
+    """Every strict prefix of a geometry with ring or part counts is a
+    WKBError: a count read past the end raised struct.error."""
+    with pytest.raises(wkb.WKBError):
+        wkb.decode(wkb.encode(_NESTED[kind])[:k])
+
+
 def test_to_rings_flattens_multipolygon():
-    g = RT_CASES[-1]
-    xs, ys = wkb.to_rings(g)
+    """read_wkb maps decoded WKB to rings with model.rings_from_geometry:
+    MultiPolygon parts and holes flatten into one ring list."""
+    t, xs, ys = model.rings_from_geometry(wkb.decode(wkb.encode(RT_CASES[-1])))
+    assert t == "MultiPolygon"
     assert len(xs) == 3   # part1 shell, part2 shell, part2 hole
     assert xs[0][0] == 0.0 and xs[1][0] == 5.0
+
+
+def test_read_wkb_null_empty_and_collection(spark):
+    """read_wkb takes the ring path every reader takes: a null blob is
+    a null geometry, EMPTY and GeometryCollection values decode, and
+    malformed bytes still raise WKBError."""
+    import pandas as pd
+    gc = {"type": "GeometryCollection", "geometries": [
+        {"type": "Point", "coordinates": [1.0, 2.0]},
+        {"type": "LineString", "coordinates": [[0.0, 0.0], [3.0, 1.0]]}]}
+    blobs = [wkb.encode(gc), None,
+             wkb.encode({"type": "LineString", "coordinates": []})]
+    df = spark.createDataFrame(pd.DataFrame({"gid": [1, 2, 3], "wkb": blobs}),
+                               "gid long, wkb binary")
+    rows = {r["gid"]: r for r in wkb.read_wkb(df).collect()}
+    assert rows[1]["geom_type"] == "GeometryCollection"
+    assert rows[1]["rings_xs"] == [[1.0], [0.0, 3.0]] and rows[1]["xmax"] == 3.0
+    assert rows[2]["geom_type"] is None and rows[2]["rings_xs"] is None
+    assert rows[3]["geom_type"] == "LineString" and rows[3]["rings_xs"] == []
+    assert rows[3]["xs"] is None and rows[3]["xmin"] is None
+    bad = spark.createDataFrame([(1, blobs[0][:7])], "gid long, wkb binary")
+    with pytest.raises(Exception, match="WKBError"):
+        wkb.read_wkb(bad).collect()
 
 
 def test_promote_multi():

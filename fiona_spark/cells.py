@@ -205,11 +205,6 @@ def disk(cell, r: int = 1) -> list[np.ndarray]:
     return out
 
 
-def cell_size_deg(res: int) -> tuple[float, float]:
-    """(width, height) of a cell in degrees at ``res``."""
-    return 360.0 / (1 << res), 180.0 / (1 << res)
-
-
 # ---------------------------------------------------------------------------
 # SQL forms — the same arithmetic, emitted as ANSI SQL that runs identically
 # in Spark SQL and DuckDB (floor/least/greatest/cast + * and + only), so the

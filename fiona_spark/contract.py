@@ -414,7 +414,7 @@ def q_crs_roundtrip(spark, sf_dir):
 
     @F.pandas_udf(T.StructType(fields))
     def rt(lng: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        from .functions.geometry import pair_fn
+        from .transform import pair_fn
         g = lng.to_numpy(np.float64)
         t = lat.to_numpy(np.float64)
         out = {}
@@ -1059,10 +1059,10 @@ def q_buffer_props(spark, sf_dir):
                 xs = np.asarray(r["xs"], np.float64)
                 ys = np.asarray(r["ys"], np.float64)
                 a0 = abs(geom.shoelace_area(xs, ys))
-                bx, by = geom.buffer_polygon(xs, ys, 0.02)
+                bx, by = geom.buffer_feature([xs], [ys], 0.02)
                 anet = sum(geom.shoelace_area(np.asarray(rx), np.asarray(ry))
                            for rx, ry in zip(bx, by))
-                ex, ey = geom.erode_polygon(xs, ys, 0.02)
+                ex, ey = geom.buffer_feature([xs], [ys], -0.02)
                 enet = sum(geom.shoelace_area(np.asarray(rx), np.asarray(ry))
                            for rx, ry in zip(ex, ey)) if ex else 0.0
                 er_in = all(
@@ -1100,13 +1100,14 @@ def q_geom_measures(spark, sf_dir):
     (engine: numpy kernels; oracle: DuckDB list arithmetic), both
     rounded to 5 decimals to absorb summation-order ulps."""
     from .functions import geometry as gf
+    from .schema import with_rings
     _, zon = _canon_paths()
-    zones = spark.read.parquet(zon)
+    zones = with_rings(spark.read.parquet(zon))
     return zones.select(
         "zone_id",
-        F.round(gf.area_udf()("xs", "ys"), 5).alias("area_r"),
-        F.round(gf.length_udf()("xs", "ys"), 5).alias("perim_r"),
-        F.size("xs").cast("long").alias("nv"))
+        F.round(gf.area_udf()(*gf.RING_ARGS), 5).alias("area_r"),
+        F.round(gf.length_udf()(*gf.RING_ARGS), 5).alias("perim_r"),
+        gf.vertex_count().alias("nv"))
 
 
 @register("caption_verify")

@@ -40,7 +40,6 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import tempfile
 
@@ -305,6 +304,7 @@ def cmd_map(args):
     from pyspark.sql import functions as F
 
     from . import snuggs
+    from .schema import with_ring_columns
     df = _read_stdin_df(_spark(args))
     if args.dump_parts:
         # explode multi-part geometries to one single-ring feature per
@@ -313,22 +313,21 @@ def cmd_map(args):
         # LineString etc.), matching the reference — not a blanket
         # Polygon stamp (r5 advice)
         df = (df.select("*", F.posexplode("rings_xs").alias("_i", "_rx"))
-              .withColumn("_ry", F.expr("rings_ys[_i]"))
-              .drop("rings_xs", "rings_ys", "xs", "ys", "_i")
-              .withColumnRenamed("_rx", "xs").withColumnRenamed("_ry", "ys")
-              .withColumn("geom_type", F.regexp_replace(
-                  F.coalesce(F.col("geom_type"), F.lit("Polygon")),
-                  "^Multi", "")))
-    col = snuggs.compile_expr(args.pipeline)
-    out = (df.withColumn("_g", col)
-           .drop("xs", "ys", "rings_xs", "rings_ys")
-           .withColumn("xs", F.col("_g.xs"))
-           .withColumn("ys", F.col("_g.ys")).drop("_g"))
-    if re.search(r"\(\s*buffer\b", args.pipeline):
-        # buffer is the one pipeline op that CONSTRUCTS polygon rings
-        # from any input type; everything else (identity, simplify,
-        # set_precision) preserves the input geometry type
-        out = out.withColumn("geom_type", F.lit("Polygon"))
+              .withColumns({
+                  "rings_xs": F.array("_rx"),
+                  "rings_ys": F.array(F.expr("rings_ys[_i]")),
+                  "geom_type": F.regexp_replace(F.coalesce(
+                      F.col("geom_type"), F.lit("Polygon")), "^Multi", "")})
+              .drop("_i", "_rx"))
+    g = snuggs.compile_expr(args.pipeline)
+    # the pipeline's struct(geom_type, rings_xs, rings_ys) replaces the
+    # geometry: every ring and part, and the type the function gives
+    # (a buffer is a Polygon or MultiPolygon, the rest keep the input's)
+    out = with_ring_columns(
+        df.withColumn("_g", g)
+        .withColumns({c: F.col(f"_g.{c}")
+                      for c in ("geom_type", "rings_xs", "rings_ys")})
+        .drop("_g"))
     feats = _rows_to_features(out)
     if args.raw:
         for f in feats:

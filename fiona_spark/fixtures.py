@@ -281,11 +281,6 @@ def gen_zones_multi_pdf(n: int) -> pd.DataFrame:
     return pd.DataFrame([gen_zone_multi(j) for j in range(n)])
 
 
-def zones_multi_df(spark, n: int):
-    return spark.createDataFrame(gen_zones_multi_pdf(n),
-                                 schema=ZONES_MULTI_SCHEMA)
-
-
 # Canonical correctness-scale fixtures, written as single parquet files
 # with plain pyarrow (no Spark needed) so BOTH the Spark queries and the
 # DuckDB oracle SQL can read the identical bytes.

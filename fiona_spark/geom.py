@@ -41,27 +41,6 @@ def bounds(xs: np.ndarray, ys: np.ndarray) -> tuple[float, float, float, float]:
     return float(np.min(xs)), float(np.min(ys)), float(np.max(xs)), float(np.max(ys))
 
 
-def bounds_many(xs_list, ys_list) -> np.ndarray:
-    """Per-row envelopes for a batch of variable-length coord arrays.
-
-    Returns (n, 4) float64 [xmin, ymin, xmax, ymax].
-    """
-    n = len(xs_list)
-    out = np.empty((n, 4), dtype=np.float64)
-    for i in range(n):
-        xs = np.asarray(xs_list[i], dtype=np.float64)
-        ys = np.asarray(ys_list[i], dtype=np.float64)
-        out[i, 0] = xs.min(); out[i, 1] = ys.min()
-        out[i, 2] = xs.max(); out[i, 3] = ys.max()
-    return out
-
-
-def bbox_intersects(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Row-wise envelope intersection test for (n,4) bbox arrays."""
-    return ((a[:, 2] >= b[:, 0]) & (a[:, 0] <= b[:, 2])
-            & (a[:, 3] >= b[:, 1]) & (a[:, 1] <= b[:, 3]))
-
-
 # ---------------------------------------------------------------------------
 # Point in polygon (ray casting), vectorized
 # ---------------------------------------------------------------------------
@@ -73,21 +52,6 @@ def _close_ring(xs: np.ndarray, ys: np.ndarray):
         xs = np.append(xs, xs[0])
         ys = np.append(ys, ys[0])
     return xs, ys
-
-
-def pack_rings(xs_list, ys_list):
-    """Pack ragged rings into flat arrays: (offs, flat_x, flat_y).
-
-    ``offs`` has n+1 entries; ring i occupies flat[offs[i]:offs[i+1]].
-    """
-    lens = np.fromiter((len(v) for v in xs_list), dtype=np.int64,
-                       count=len(xs_list))
-    offs = np.concatenate(([0], np.cumsum(lens)))
-    flat_x = np.concatenate([np.asarray(v, np.float64) for v in xs_list]) \
-        if len(xs_list) else np.empty(0)
-    flat_y = np.concatenate([np.asarray(v, np.float64) for v in ys_list]) \
-        if len(ys_list) else np.empty(0)
-    return offs, flat_x, flat_y
 
 
 def pack_feature_edges(rings_xs, rings_ys):
@@ -974,12 +938,6 @@ def douglas_peucker(xs: np.ndarray, ys: np.ndarray, tol: float) -> np.ndarray:
     return keep
 
 
-def buffer_point(x: float, y: float, dist: float, segs: int = 16):
-    """Point buffer -> regular polygon ring (xs, ys)."""
-    t = np.linspace(0.0, 2.0 * np.pi, segs, endpoint=False)
-    return x + dist * np.cos(t), y + dist * np.sin(t)
-
-
 def buffer_convex(xs: np.ndarray, ys: np.ndarray, dist: float):
     """Convex-polygon buffer: offset vertices radially from the centroid
     so that each edge moves out by >= dist (conservative Minkowski
@@ -1007,10 +965,11 @@ def _clean_open_ring(xs, ys):
 def _band_pieces(xs, ys, dist, segs):
     """Minkowski band pieces along ONE ring ORIENTED INTERIOR-ON-LEFT:
     a both-sides slab per edge plus an arc fan at every left-turn
-    vertex (the convex vertices of the region the ring bounds), fan
-    ends pinned to the slabs' EXACT corner floats so the union
-    stitcher matches endpoints bitwise.  Returns (piece_xs, piece_ys)
-    lists of single rings."""
+    vertex (the convex vertices of the region the ring bounds) and a
+    half-disk cap at every exact reversal (a spike tip, or the end of a
+    line walked there and back), fan ends pinned to the slabs' EXACT
+    corner floats so the union stitcher matches endpoints bitwise.
+    Returns (piece_xs, piece_ys) lists of single rings."""
     n = len(xs)
     px_l, py_l = [], []
     nx1 = np.roll(xs, -1); ny1 = np.roll(ys, -1)
@@ -1037,7 +996,7 @@ def _band_pieces(xs, ys, dist, segs):
     for i in range(n):
         j = (i - 1) % n          # incoming edge index for vertex i
         cross = ux[j] * uy[i] - uy[j] * ux[i]
-        if cross <= 0:
+        if cross < 0 or (cross == 0 and ux[j] * ux[i] + uy[j] * uy[i] > 0):
             continue             # right turn / straight: slabs cover
         t0, t1 = th[j], th[i]
         sweep = (t1 - t0) % (2.0 * np.pi)
@@ -1083,7 +1042,9 @@ def buffer_feature(rings_xs, rings_ys, dist: float, segs: int = 32):
     """EXACT-construction buffer of a MULTI-RING feature (holes
     included), positive or negative ``dist`` — the full semantics of
     the reference's GEOS buffer (`fiona/features.py:128-211`) up to
-    the inscribed-arc approximation both share.
+    the inscribed-arc approximation both share (``segs`` steps per full
+    circle; 32 = GEOS ``quad_segs=8``).  Raises UnionDegeneracyError
+    if the union kernel hits sub-eps degeneracy.
 
     dist > 0: union of the feature with Minkowski band pieces along
     every ring (outer rings grow, holes shrink, a hole narrower than
@@ -1148,60 +1109,32 @@ def buffer_feature(rings_xs, rings_ys, dist: float, segs: int = 32):
     return out_x, out_y
 
 
-def buffer_polygon(xs, ys, dist: float, segs: int = 32):
-    """EXACT-construction polygon buffer for ANY simple ring — concave
-    included (r3 verdict "what's missing" #1; the reference's `buffer`
-    is exact for any geometry via GEOS, `fiona/features.py:128-211`).
-
-    ``segs`` defaults to 32 segments per full circle = shapely/GEOS
-    ``quad_segs=8``, the reference's default arc resolution
-    (`fiona/features.py:80` wraps shapely.buffer).
-
-    Minkowski-sum construction unioned by the exact even-odd kernel:
-    the ring itself + one offset rectangle per edge (both sides — any
-    slab around a boundary edge is inside the true Minkowski sum) +
-    one arc fan per CONVEX vertex (inscribed, ``segs`` steps per full
-    circle — the same inside-approximation GEOS uses for arcs).  Fan
-    and rectangle pieces share exact endpoint floats, so the union's
-    collinear/stacked-border machinery stitches them without residue.
-
-    Returns (rings_xs, rings_ys) — holes possible (a C-shape can close
-    onto itself).  Negative ``dist`` delegates to
-    :func:`erode_polygon` (GEOS negative-buffer semantics).  Raises
-    UnionDegeneracyError if the union kernel hits sub-eps degeneracy.
-    """
-    if dist < 0:
-        # negative buffer = erosion (`fiona/features.py` buffer allows
-        # dist<0 via GEOS; same semantics here)
-        return erode_polygon(xs, ys, -dist, segs)
-    xs = np.asarray(xs, np.float64)
-    ys = np.asarray(ys, np.float64)
-    if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    if dist == 0 or len(xs) < 3:
-        return [xs.copy()], [ys.copy()]
-    return buffer_feature([xs], [ys], dist, segs)
-
-
-def erode_polygon(xs, ys, dist: float, segs: int = 32):
-    """Polygon EROSION (negative buffer) of a single ring: the set of
-    points whose distance-``dist`` disk stays inside it — delegates to
-    :func:`buffer_feature` with negative distance (complement-dilation
-    construction).  Straight edges move inward exactly; reflex corners
-    round with inscribed arcs (GEOS negative-buffer convention); a
-    neck narrower than 2*dist splits the output; full erosion returns
-    ([], [])."""
-    if dist < 0:
-        raise ValueError("erode_polygon needs dist >= 0")
-    xs = np.asarray(xs, np.float64)
-    ys = np.asarray(ys, np.float64)
-    if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    if len(xs) < 3:
+def buffer_lines(rings_xs, rings_ys, dist: float, segs: int = 32):
+    """Buffer of open lines, and of points given as one-vertex rings:
+    the union of each line walked there and back through
+    :func:`_band_pieces` (slabs on both sides, arc fans at the turns,
+    round caps at the ends) and of one ``segs``-gon per point.  A line
+    has no interior, so ``dist <= 0`` gives EMPTY."""
+    px, py = [], []
+    t = np.linspace(0.0, 2.0 * np.pi, segs, endpoint=False)
+    for rx, ry in zip(rings_xs, rings_ys):
+        xs, ys = np.asarray(rx, np.float64), np.asarray(ry, np.float64)
+        if dist <= 0 or not len(xs):
+            continue
+        keep = np.r_[True, (np.diff(xs) != 0) | (np.diff(ys) != 0)]
+        xs, ys = xs[keep], ys[keep]
+        if len(xs) == 1:
+            px.append(xs[0] + dist * np.cos(t))
+            py.append(ys[0] + dist * np.sin(t))
+            continue
+        bx, by = _band_pieces(np.concatenate([xs, xs[-2:0:-1]]),
+                              np.concatenate([ys, ys[-2:0:-1]]), dist, segs)
+        px += bx
+        py += by
+    if not px:
         return [], []
-    if dist == 0:
-        return [xs.copy()], [ys.copy()]
-    return buffer_feature([xs], [ys], -dist, segs)
+    return feature_union([[v] for v in px], [[v] for v in py])
+
 
 def convex_hull(px: np.ndarray, py: np.ndarray):
     """Andrew monotone chain; returns hull vertex arrays (ccw, open ring)."""
@@ -1223,11 +1156,6 @@ def convex_hull(px: np.ndarray, py: np.ndarray):
     upper = half(pts[::-1])
     hull = np.array(lower[:-1] + upper[:-1])
     return hull[:, 0], hull[:, 1]
-
-
-def vertex_count(xs_list) -> np.ndarray:
-    """Per-row vertex counts (fiona/features.py:103-125)."""
-    return np.array([len(v) for v in xs_list], dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -1258,18 +1186,6 @@ def _param_on(ex, ey, dx, dy, px, py):
     if abs(dx) >= abs(dy):
         return (px - ex) / dx if dx != 0 else None
     return (py - ey) / dy if dy != 0 else None
-
-
-def _canon_ring(xs: np.ndarray, ys: np.ndarray):
-    """Open the ring, orient CCW, rotate the lexicographically smallest
-    vertex first (so exact duplicates compare equal)."""
-    if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
-        xs, ys = xs[:-1], ys[:-1]
-    signed = np.sum(xs * np.roll(ys, -1) - np.roll(xs, -1) * ys) * 0.5
-    if signed < 0:
-        xs, ys = xs[::-1].copy(), ys[::-1].copy()
-    k = np.lexsort((ys, xs))[0]
-    return np.roll(xs, -k), np.roll(ys, -k)
 
 
 def polygon_union(polys_x, polys_y, max_edges: int = 200_000):

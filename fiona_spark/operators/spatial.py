@@ -41,6 +41,7 @@ import pyarrow.compute as pac
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .. import cells, geom
+from ..schema import read_rings, with_rings
 
 DEFAULT_RES = 7
 
@@ -143,34 +144,14 @@ def _check_zones(keys, bad):
                          "null or NaN vertex")
 
 
-def _pack_rings(tbl: pa.Table, key: str, ring_cols):
-    """Both ``pip_join`` lanes' ring packer: flat edges straight from the
-    Arrow list offsets (zero per-ring Python) and their vertex bounds,
-    checked by :func:`_check_zones` on column ``key``; feature i is row i."""
-
-    def _flat_rings(name):
-        """(flat_values, ring_lens, ring_nx, null-ring features) from an
-        Arrow list column; a null vertex reads as NaN."""
-        col = tbl.column(name).combine_chunks()
-        if ring_cols[0] == "rings_xs":
-            ring_nx = np.diff(col.offsets.to_numpy().astype(np.int64))
-            col = col.flatten()          # list<double> rings, in order
-            null_ring = np.repeat(np.arange(len(ring_nx)), ring_nx)[
-                col.is_null().to_numpy(zero_copy_only=False)]
-        else:
-            ring_nx = np.ones(len(col), dtype=np.int64)
-            null_ring = []
-        ring_lens = np.diff(col.offsets.to_numpy().astype(np.int64))
-        return (np.asarray(col.flatten().to_numpy(zero_copy_only=False),
-                           np.float64), ring_lens, ring_nx, null_ring)
-
-    fx = _flat_rings(ring_cols[0])
-    fy = _flat_rings(ring_cols[1])
-    null_ring = np.zeros(tbl.num_rows, dtype=bool)
-    null_ring[fx[3]] = True
-    null_ring[fy[3]] = True
-    _check_zones(tbl.column(key), null_ring)
-    edges = geom.pack_feature_edges_flat(fx[0], fy[0], fx[1], fx[2])
+def _pack_rings(tbl: pa.Table, key: str):
+    """Both ``pip_join`` lanes' ring packer: flat edges from the Arrow
+    ring columns (:func:`schema.read_rings`, zero per-ring Python) and
+    their vertex bounds, checked by :func:`_check_zones` on column
+    ``key``; feature i is row i."""
+    r = read_rings(tbl.column("rings_xs"), tbl.column("rings_ys"))
+    _check_zones(tbl.column(key), r.null_ring)
+    edges = geom.pack_feature_edges_flat(r.x, r.y, r.ring_lens, r.ring_nx)
     fbounds = geom.feature_vertex_bounds(edges)  # NaN from a null/NaN vertex
     _check_zones(tbl.column(key), np.isnan(fbounds[0]) | np.isnan(fbounds[1]))
     return edges, fbounds
@@ -229,7 +210,7 @@ MAX_BROADCAST_ZONES = 2_000_000
 PIP_BUCKET_ROWS = 1 << 20   # shuffled pip_join: candidates per bucket
 
 
-def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
+def _zone_prep(zones: DataFrame, zone_cols, res: int | None,
                row_guard: int | None = None):
     """Driver-side zone preparation for the fused PIP lane: collect the
     (small) zone layer once, enumerate covering cells (antimeridian wrap
@@ -242,7 +223,7 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
 
     Returns (zone_arrays, res, cov_ridx, cov_cell, edges, fbounds).
     """
-    sel = zones.select(*zone_cols, *ring_cols,
+    sel = zones.select(*zone_cols, "rings_xs", "rings_ys",
                        "xmin", "ymin", "xmax", "ymax")
     # r8: collect via Arrow (one toArrow job) — ring columns arrive as
     # list arrays (flat value buffer + offsets), so edge packing below
@@ -302,7 +283,7 @@ def _zone_prep(zones: DataFrame, zone_cols, ring_cols, res: int | None,
     cov_ridx = np.concatenate([p0 for p0, _ in parts]) if parts else np.empty(0, np.int64)
     cov_cell = np.concatenate([c for _, c in parts]) if parts else np.empty(0, np.int64)
 
-    edges, fbounds = _pack_rings(ztbl, zone_cols[0], ring_cols)
+    edges, fbounds = _pack_rings(ztbl, zone_cols[0])
     zone_arrays = [ztbl.column(c).combine_chunks() for c in zone_cols]
     return zone_arrays, res, cov_ridx, cov_cell, edges, fbounds
 
@@ -367,7 +348,7 @@ def _pip_matches(state, pxv, pyv):
                        zidx_sorted, pxv, pyv, edges, fbounds)
 
 
-def _pip_bucket_fn(npc: int, nzc: int, ring_cols, names):
+def _pip_bucket_fn(npc: int, nzc: int, names):
     """The shuffled ``pip_join`` lane's body, one call per (zone-key
     bucket, zone split): ``cand`` holds ``npc`` point columns, the zone
     key and float64 lng/lat; ``rings`` the ``nzc`` zone columns (key
@@ -377,7 +358,7 @@ def _pip_bucket_fn(npc: int, nzc: int, ring_cols, names):
     :func:`_pip_refine` tests it against EVERY zone row of its key."""
 
     def fn(cand: pa.Table, rings: pa.Table) -> pa.Table:
-        edges, fbounds = _pack_rings(rings, "_rkey", ring_cols)
+        edges, fbounds = _pack_rings(rings, "_rkey")
         keys = pac.unique(rings.column(0))
         rid = pac.index_in(rings.column(0), value_set=keys).to_numpy()
         order = np.argsort(rid, kind="stable")
@@ -406,16 +387,17 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     strictly inside the zone polygon.  Each point has exactly ONE cell,
     so candidate pairs are already unique — no dedup shuffle.
 
-    Geometry model: single-ring zones carry (xs, ys); multi-ring zones
-    (holes, MultiPolygon — `fiona/model.py:18-115` geometry normalization)
-    carry (rings_xs, rings_ys) as array<array<double>>; both lanes refine
-    through the one :func:`geom.points_in_features` call, so they treat
-    both identically.  An empty ring contains no point.  A null ring
-    column is a null geometry and contains no point (OGR's spatial
-    filter never returns a feature without one): those zones are dropped
-    in the plan.  A null ring inside ``rings_xs``, or a null or NaN
-    vertex, raises ``ValueError`` naming the zone key, on both lanes,
-    whether or not any point reaches that zone.
+    Geometry model: zones carry (rings_xs, rings_ys) as
+    array<array<double>> (holes, MultiPolygon — `fiona/model.py:18-115`
+    geometry normalization); a zone frame with only the first ring
+    (xs, ys) enters through :func:`schema.with_rings`.  Both lanes refine
+    through the one :func:`geom.points_in_features` call.  An empty ring
+    contains no point.  A null ring column is a null geometry and
+    contains no point (OGR's spatial filter never returns a feature
+    without one): those zones are dropped in the plan.  A null ring
+    inside ``rings_xs``, or a null or NaN vertex, raises ``ValueError``
+    naming the zone key, on both lanes, whether or not any point
+    reaches that zone.
 
     Two lanes, chosen by one row guard on the zone layer:
       * at most ``max_broadcast_zones`` rows: the FUSED lane.  The zone
@@ -441,10 +423,8 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     equi-join, hot zones split on the cogroup); 0 disables both.
     """
     spark = points.sparkSession
-    ring_cols = (("rings_xs", "rings_ys") if "rings_xs" in zones.columns
-                 else ("xs", "ys"))
-    zones = zones.dropna(subset=list(ring_cols))
-    prep = _zone_prep(zones, zone_cols, ring_cols, res,
+    zones = with_rings(zones).dropna(subset=["rings_xs", "rings_ys"])
+    prep = _zone_prep(zones, zone_cols, res,
                       row_guard=max_broadcast_zones)
     if prep is not None:
         # FUSED lane (why fused: see _pip_matches): no join, no shuffle
@@ -484,7 +464,7 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
     # Spark's ambiguous-self-join analysis
     bucket = F.pmod(F.xxhash64(zkey), F.lit(n_bucket)).alias("_b")
     rings = zones.select(F.col(zkey).alias("_rkey"), *zone_cols[1:],
-                         *ring_cols, bucket)
+                         "rings_xs", "rings_ys", bucket)
     join_keys, gcols, zsalt = ["cell"], ["_b"], []
     if n_salt > 0:
         # the cogroup has no AQE skew handling: a zone with more than
@@ -514,8 +494,7 @@ def pip_join(points: DataFrame, zones: DataFrame, res: int | None = None,
                     F.col(lat).cast("double"), *zsalt, bucket))
     schema = T.StructType([points.schema[c] for c in point_cols]
                           + [zones.schema[c] for c in zone_cols])
-    fn = _pip_bucket_fn(len(point_cols), len(zone_cols), ring_cols,
-                        schema.fieldNames())
+    fn = _pip_bucket_fn(len(point_cols), len(zone_cols), schema.fieldNames())
     return (cand.groupBy(*gcols).cogroup(rings.groupBy(*gcols))
             .applyInArrow(fn, schema))
 

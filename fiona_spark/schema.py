@@ -21,7 +21,11 @@ raise SchemaError like the reference's write-mode guard.
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pac
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from .errors import (GeometryTypeValidationError, SchemaError,
@@ -56,6 +60,78 @@ def with_ring_columns(df: DataFrame) -> DataFrame:
         "xmax": F.array_max(F.expr("transform(rings_xs, r -> array_max(r))")),
         "ymax": F.array_max(F.expr("transform(rings_ys, r -> array_max(r))")),
     })
+
+
+def with_rings(df: DataFrame) -> DataFrame:
+    """The one-ring adapter: a frame that carries only the first ring
+    (``xs``/``ys``, like ``fixtures.ZONES_SCHEMA`` and the canonical
+    zones parquet) gets ``rings_xs = [xs]``, ``rings_ys = [ys]`` (null
+    for a null ring) and, lacking one, ``geom_type = 'Polygon'``; a
+    frame with ring columns, or with no geometry, is returned
+    unchanged."""
+    if "rings_xs" in df.columns or "xs" not in df.columns:
+        return df
+    cols = {f"rings_{c}": F.when(F.col(c).isNotNull(), F.array(c))
+            for c in ("xs", "ys")}
+    if "geom_type" not in df.columns:
+        cols["geom_type"] = F.lit("Polygon")
+    return df.withColumns(cols)
+
+
+class FlatRings(NamedTuple):
+    """A batch of ring-model features as flat numpy buffers — the Arrow
+    ``list<list<double>>`` layout with the offsets turned into counts."""
+    x: np.ndarray          # every vertex, ring after ring (null -> NaN)
+    y: np.ndarray
+    ring_lens: np.ndarray  # vertices per ring
+    ring_nx: np.ndarray    # rings per feature (0 for a null or EMPTY one)
+    null: np.ndarray       # per feature: a null geometry
+    null_ring: np.ndarray  # per feature: holds a null ring
+
+
+def read_rings(rings_xs, rings_ys) -> FlatRings:
+    """The one reader of Arrow ``list<list<double>>`` ring columns (both
+    ``pip_join`` lanes and every geometry UDF): flat vertices, ring
+    lengths and per-feature ring counts with zero per-ring Python.  The
+    ring structure is read from ``rings_xs``; a null in either column
+    counts."""
+    def lengths(a):
+        return np.asarray(pac.list_value_length(a).fill_null(0)
+                          .to_numpy(zero_copy_only=False), np.int64)
+
+    def flat(col):
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        rings = col.flatten()
+        null_ring = np.zeros(len(col), dtype=bool)
+        null_ring[np.repeat(np.arange(len(col)), lengths(col))[
+            rings.is_null().to_numpy(zero_copy_only=False)]] = True
+        return (col, rings, null_ring, np.asarray(
+            rings.flatten().to_numpy(zero_copy_only=False), np.float64))
+
+    cx, rx, nrx, x = flat(rings_xs)
+    cy, _, nry, y = flat(rings_ys)
+    return FlatRings(x, y, lengths(rx), lengths(cx),
+                     pac.or_(cx.is_null(), cy.is_null()).to_numpy(
+                         zero_copy_only=False), nrx | nry)
+
+
+def rings_array(geom_type, x, y, ring_lens, ring_nx, null) -> pa.StructArray:
+    """The one emitter: flat buffers back to an Arrow struct typed
+    ``RINGS_STRUCT``; a ``null`` feature gives a null row."""
+    mask = pa.array(np.asarray(null, dtype=bool))
+
+    def offsets(counts):
+        return pa.array(np.concatenate(([0], np.cumsum(counts))), pa.int32())
+
+    def nest(v):
+        ring = pa.ListArray.from_arrays(offsets(ring_lens),
+                                        pa.array(v, pa.float64()))
+        return pa.ListArray.from_arrays(offsets(ring_nx), ring, mask=mask)
+
+    return pa.StructArray.from_arrays(
+        [pa.array(geom_type, pa.string()), nest(x), nest(y)],
+        names=RINGS_STRUCT.names, mask=mask)
 
 
 FIELD_TYPES_MAP = {

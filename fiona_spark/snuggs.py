@@ -11,8 +11,9 @@ Here the same expression compiles ONCE into a ``pyspark.sql.Column``
 tree that Catalyst constant-folds and codegens — the per-row parse cost
 the reference pays simply does not exist.  Property names resolve to
 DataFrame columns (the reference's ``(get f "NAME")``); geometry
-functions resolve to the engine's vectorized numpy kernels via pandas
-UDFs operating on the engine's (xs, ys) ring columns.
+functions resolve to the feature functions of ``functions.geometry``
+(Arrow UDFs and JVM expressions) over the whole geometry, the ring
+columns (geom_type, rings_xs, rings_ys).
 
 Grammar (minimal, matches what the reference's own tests exercise):
 
@@ -31,6 +32,8 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import Column, functions as F
+
+from .schema import with_rings
 
 _TOKEN = re.compile(r"""\s*(?:
     (?P<open>\() | (?P<close>\)) |
@@ -116,16 +119,17 @@ class Compiler:
 
     ``funcs``: extra name -> callable(Column...) -> Column, mirroring
     the reference's injectable ``func_map`` (`fiona/features.py:213-229`).
-    Geometry symbols: ``g`` resolves via geometry-aware functions that
-    expect the engine's ring columns (xs, ys) on the row.
+    Geometry symbols: ``g`` resolves via feature functions that expect
+    the ring columns (geom_type, rings_xs, rings_ys) on the row (see
+    :func:`filter_features` for a frame with only the first ring).
     """
 
     def __init__(self, funcs: dict | None = None):
         from .functions import geometry as gf
         self.funcs = {
-            "area": lambda: gf.area_udf()("xs", "ys"),
-            "length": lambda: gf.length_udf()("xs", "ys"),
-            "vertex_count": lambda: F.size("xs"),
+            "area": lambda: gf.area_udf()(*gf.RING_ARGS),
+            "length": lambda: gf.length_udf()(*gf.RING_ARGS),
+            "vertex_count": gf.vertex_count,
             "bounds_width": lambda: F.col("xmax") - F.col("xmin"),
             "distance": self._distance,
         }
@@ -309,7 +313,7 @@ class Compiler:
     def _constructive(self, op, args):
         """Geometry-returning functions with :kwarg support — simplify /
         buffer / set_precision (`fiona/features.py:128-211`), over the
-        engine's (xs, ys) ring columns; returns a struct(xs, ys)."""
+        ring columns; returns a struct(geom_type, rings_xs, rings_ys)."""
         from .functions import geometry as gf
         pos, kw = self._split_kwargs(
             [a for a in args if not (isinstance(a, tuple)
@@ -322,13 +326,14 @@ class Compiler:
 
         if op == "simplify":
             tol = lit_of(pos[0] if pos else kw.get("tolerance"), "tolerance")
-            return gf.simplify_udf(tol)("xs", "ys")
+            return gf.simplify_udf(tol)(*gf.RING_ARGS)
         if op == "buffer":
             dist = lit_of(pos[0] if pos else kw.get("distance"), "distance")
-            return gf.buffer_udf(dist)("xs", "ys")
+            return gf.buffer_udf(dist)(*gf.RING_ARGS)
         gs = lit_of(pos[0] if pos else kw.get("grid_size"), "grid_size")
-        return F.struct(gf.set_precision_expr(F.col("xs"), gs).alias("xs"),
-                        gf.set_precision_expr(F.col("ys"), gs).alias("ys"))
+        return F.struct(F.col("geom_type"), *(
+            F.transform(c, lambda r: gf.set_precision_expr(r, gs)).alias(c)
+            for c in ("rings_xs", "rings_ys")))
 
 
 def compile_expr(text: str, funcs: dict | None = None) -> Column:
@@ -338,8 +343,11 @@ def compile_expr(text: str, funcs: dict | None = None) -> Column:
 
 def filter_features(df, text: str):
     """``fio filter`` parity: keep rows where the expression is truthy
-    (`fiona/fio/features.py:106-191`), compiled once, codegen'd."""
-    return df.filter(compile_expr(text).cast("boolean"))
+    (`fiona/fio/features.py:106-191`), compiled once, codegen'd.  A
+    frame with only the first ring is read through
+    ``schema.with_rings``; the output keeps the input's columns."""
+    return (with_rings(df).filter(compile_expr(text).cast("boolean"))
+            .select(*df.columns))
 
 
 def calc_feature(df, name: str, text: str, overwrite: bool = False):
@@ -347,4 +355,5 @@ def calc_feature(df, name: str, text: str, overwrite: bool = False):
     property; refuses to overwrite unless asked, like the reference."""
     if name in df.columns and not overwrite:
         raise ExpressionError(f"property {name!r} exists (pass overwrite=True)")
-    return df.withColumn(name, compile_expr(text))
+    cols = df.columns if name in df.columns else [*df.columns, name]
+    return with_rings(df).withColumn(name, compile_expr(text)).select(*cols)

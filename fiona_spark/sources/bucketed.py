@@ -27,10 +27,6 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str,
     w.format("parquet").saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def colocated_join(spark: SparkSession, left_table: str, right_table: str,
                    on: str, how: str = "inner") -> DataFrame:
     """Join two same-bucketed tables on their bucket key.

@@ -49,14 +49,6 @@ def windowed_counts(events: DataFrame, ts_col: str = "ts",
                     "n", "vmin", "vmax"))
 
 
-def stream_tile_assign(images_stream: DataFrame, res: int) -> DataFrame:
-    """Stateless streaming tile assignment — the SAME batch operator
-    (`fiona_spark.operators.spatial.with_point_cell`) applied to a
-    stream; Catalyst plans it identically per micro-batch."""
-    from ..operators import spatial
-    return spatial.with_point_cell(images_stream, res).select("image_id", "cell")
-
-
 def run_foreach_batch(stream_df: DataFrame, batch_fn, out_dir: str,
                       trigger_once: bool = True):
     """Drive a stream through a batch function (`foreachBatch` reuse).

@@ -21,7 +21,7 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F
 
 from .schema import RINGS_STRUCT, with_ring_columns
 
@@ -339,33 +339,6 @@ def wkb_to_rings_udf() -> Column:
         rows = [(None, None, None) if raw is None
                 else rings_from_geometry(decode(bytes(raw))) for raw in b]
         return pd.DataFrame(rows, columns=RINGS_STRUCT.names)
-    return conv
-
-
-def rings_to_wkb_udf(geom_type: str = "Polygon") -> Column:
-    """pandas UDF factory: (rings_xs, rings_ys) -> WKB binary.
-
-    ``geom_type='Polygon'``: all rings become one polygon (shell +
-    holes); ``'MultiPolygon'``: each ring becomes a single-ring part.
-    Rings are closed on write (WKB polygons require first == last).
-    """
-    @F.pandas_udf(T.BinaryType())
-    def conv(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        out = []
-        for rx_list, ry_list in zip(xs, ys):
-            rings = []
-            for rx, ry in zip(rx_list, ry_list):
-                ring = [[float(x), float(y)] for x, y in zip(rx, ry)]
-                if ring and ring[0] != ring[-1]:
-                    ring.append(list(ring[0]))
-                rings.append(ring)
-            if geom_type == "Polygon":
-                g = {"type": "Polygon", "coordinates": rings}
-            else:
-                g = {"type": "MultiPolygon",
-                     "coordinates": [[r] for r in rings]}
-            out.append(encode(g))
-        return pd.Series(out)
     return conv
 
 

@@ -59,10 +59,10 @@ def test_snuggs_reduce_no_init_and_kwargs(spark, zdf):
     # :kwarg form reaches constructive functions
     simp = snuggs.calc_feature(zdf, "g2", '(simplify g :tolerance 0.5)')
     row = simp.filter("zone_id = 'a'").select("g2").collect()[0]["g2"]
-    assert len(row["xs"]) >= 3
+    assert len(row["rings_xs"][0]) >= 3
     snap = snuggs.calc_feature(zdf, "g3", '(set_precision g :grid_size 0.5)')
     row3 = snap.filter("zone_id = 'b'").select("g3").collect()[0]["g3"]
-    assert row3["xs"] == [1.0, 2.0, 3.0]
+    assert row3["rings_xs"] == [[1.0, 2.0, 3.0]]
 
 
 def test_snuggs_unknown_function_still_raises():

@@ -388,16 +388,18 @@ def test_transform_geom_cuts_for_any_geographic_dst(spark):
     """r6: WRAPDATELINE applies to ANY geographic destination
     (fiona/_transform.pyx:151-160), not just the 'EPSG:4326'
     spelling."""
-    from fiona_spark.functions.geometry import transform_geom_udf
+    from fiona_spark.functions.geometry import RING_ARGS, transform_geom_udf
     df = spark.createDataFrame(
-        [([[175.0, 185.0, 185.0, 175.0, 175.0]],
+        [("Polygon", [[175.0, 185.0, 185.0, 175.0, 175.0]],
           [[-5.0, -5.0, 5.0, 5.0, -5.0]])],
-        "rings_xs array<array<double>>, rings_ys array<array<double>>")
+        "geom_type string, rings_xs array<array<double>>, "
+        "rings_ys array<array<double>>")
     for dst in ("EPSG:4326", "+proj=longlat +datum=WGS84 +no_defs"):
         u = transform_geom_udf("EPSG:4326", dst)
-        row = df.select(u("rings_xs", "rings_ys").alias("t")).collect()[0]
+        row = df.select(u(*RING_ARGS).alias("t")).collect()[0]
         assert len(row["t"]["rings_xs"]) == 2, dst     # cut into 2 rings
+        assert row["t"]["geom_type"] == "MultiPolygon", dst
     # projected destination: no cutting
     u = transform_geom_udf("EPSG:4326", "EPSG:3857")
-    row = df.select(u("rings_xs", "rings_ys").alias("t")).collect()[0]
+    row = df.select(u(*RING_ARGS).alias("t")).collect()[0]
     assert len(row["t"]["rings_xs"]) == 1

@@ -196,6 +196,37 @@ def test_map_preserves_geometry_type(spark, capsys, monkeypatch):
     assert all(f["geometry"]["type"] == "Polygon" for f in got)
 
 
+def test_map_keeps_every_ring_and_part(spark, capsys, monkeypatch):
+    """The pipeline result replaces the whole geometry: both lines of a
+    MultiLineString survive set_precision, and a holed polygon's buffer
+    keeps its (shrunk) hole."""
+    mls = json.dumps({
+        "type": "Feature", "id": "m",
+        "geometry": {"type": "MultiLineString",
+                     "coordinates": [[[0.1, 0.1], [1.1, 1.1]],
+                                     [[5.1, 5.1], [6.1, 6.1]]]},
+        "properties": {}}) + "\n"
+    _, out = run_cli(["map", "(set_precision g 0.25)"], stdin_text=mls,
+                     capsys=capsys, monkeypatch=monkeypatch)
+    g = json.loads(out)["geometry"]
+    assert g == {"type": "MultiLineString",
+                 "coordinates": [[[0.0, 0.0], [1.0, 1.0]],
+                                 [[5.0, 5.0], [6.0, 6.0]]]}
+    holed = json.dumps({
+        "type": "Feature", "id": "h",
+        "geometry": {"type": "Polygon", "coordinates": [
+            [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
+            [[3, 3], [7, 3], [7, 7], [3, 7], [3, 3]]]},
+        "properties": {}}) + "\n"
+    _, out = run_cli(["map", "(buffer g 0.5)"], stdin_text=holed,
+                     capsys=capsys, monkeypatch=monkeypatch)
+    g = json.loads(out)["geometry"]
+    assert g["type"] == "Polygon" and len(g["coordinates"]) == 2
+    hole = g["coordinates"][1]
+    assert min(p[0] for p in hole) == pytest.approx(3.5)
+    assert max(p[0] for p in hole) == pytest.approx(6.5)
+
+
 def test_reduce_union_and_collect(spark, gpkg, capsys, monkeypatch):
     import fiona_spark
     _, seq = run_cli(["cat", gpkg], capsys=capsys)
@@ -330,9 +361,10 @@ def test_cat_cut_at_antimeridian(spark, tmp_path, capsys):
     _, out = run_cli(["cat", str(p), "--dst-crs", "EPSG:4326",
                       "--cut-at-antimeridian"], capsys=capsys)
     f = json.loads(out.splitlines()[0])
-    rings = f["geometry"]["coordinates"]
-    assert len(rings) == 2
-    allx = [pt[0] for ring in rings for pt in ring]
+    assert f["geometry"]["type"] == "MultiPolygon"
+    parts = f["geometry"]["coordinates"]
+    assert len(parts) == 2 and all(len(p) == 1 for p in parts)
+    allx = [pt[0] for part in parts for ring in part for pt in ring]
     assert max(allx) <= 180.0 and min(allx) >= -180.0
     # the wrapped east part sits at the -180 side
     assert min(allx) == -180.0

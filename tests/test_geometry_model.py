@@ -137,13 +137,13 @@ def test_transform_geom_udf_cuts_after_reprojection(spark):
     wxs, wys = geom.to_3857(np.array([175.0, 185.0, 185.0, 175.0]),
                             np.array([-3.0, -3.0, 3.0, 3.0]))
     df = spark.createDataFrame(pd.DataFrame({
-        "gid": [1],
+        "gid": [1], "geom_type": ["Polygon"],
         "rings_xs": [[wxs.tolist()]], "rings_ys": [[wys.tolist()]]}))
     out = df.select(
         "gid", fg.transform_geom_udf("EPSG:3857", "EPSG:4326")(
-            "rings_xs", "rings_ys").alias("g")).first()["g"]
+            *fg.RING_ARGS).alias("g")).first()["g"]
     rx, ry = out["rings_xs"], out["rings_ys"]
-    assert len(rx) == 2
+    assert len(rx) == 2 and out["geom_type"] == "MultiPolygon"
     allx = np.concatenate([np.asarray(r) for r in rx])
     assert allx.min() >= -180.0 and allx.max() <= 180.0
     area = sum(geom.shoelace_area(np.asarray(x), np.asarray(y))

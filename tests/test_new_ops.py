@@ -259,10 +259,12 @@ def test_snuggs_parse_errors():
 
 def test_geometry_udfs_match_kernels(spark, zones):
     from fiona_spark.functions import geometry as gf
-    out = (zones.select("zone_id", "xs", "ys",
-                        gf.area_udf()("xs", "ys").alias("a"),
-                        gf.length_udf()("xs", "ys").alias("l"),
-                        gf.vertex_count_udf()("xs").alias("nv"))
+    from fiona_spark.schema import with_rings
+    out = (with_rings(zones).select(
+               "zone_id", "xs", "ys",
+               gf.area_udf()(*gf.RING_ARGS).alias("a"),
+               gf.length_udf()(*gf.RING_ARGS).alias("l"),
+               gf.vertex_count().alias("nv"))
            .toPandas().set_index("zone_id"))
     zp = zones.toPandas().set_index("zone_id")
     for zid in ["z000001", "z000013"]:
@@ -286,21 +288,26 @@ def test_transform_udf_roundtrip(spark, images):
 
 def test_simplify_reduces_vertices(spark, zones):
     from fiona_spark.functions import geometry as gf
-    out = (zones.select(F.size("xs").alias("n0"),
-                        gf.simplify_udf(0.5)("xs", "ys").alias("s"))
-           .select("n0", F.size("s.xs").alias("n1")).toPandas())
+    from fiona_spark.schema import with_rings
+    out = (with_rings(zones)
+           .select(F.size("xs").alias("n0"),
+                   gf.simplify_udf(0.5)(*gf.RING_ARGS).alias("s"))
+           .select("n0", F.size(F.get("s.rings_xs", 0)).alias("n1"))
+           .toPandas())
     assert (out["n1"] <= out["n0"]).all()
     assert (out["n1"] >= 2).all()
 
 
 def test_register_all_sql(spark, zones):
     from fiona_spark.functions import geometry as gf
+    from fiona_spark.schema import with_rings
     gf.register_all(spark)
-    zones.createOrReplaceTempView("zones_v")
+    with_rings(zones).createOrReplaceTempView("zones_v")
     row = spark.sql(
-        "SELECT fs_area(xs, ys) AS a, fs_vertex_count(xs) AS nv "
+        "SELECT fs_area(geom_type, rings_xs, rings_ys) AS a, "
+        "fs_vertex_count(rings_xs) AS nv, size(xs) AS n "
         "FROM zones_v WHERE zone_id = 'z000001'").first()
-    assert row["a"] > 0 and row["nv"] >= 8
+    assert row["a"] > 0 and row["nv"] >= 8 and row["nv"] == row["n"]
 
 
 def test_slice_matches_python_semantics_including_negative_step(spark):

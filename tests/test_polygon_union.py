@@ -382,7 +382,7 @@ def _buffer_oracle_area(xs, ys, d, n=500):
 def test_buffer_polygon_concave_L_matches_dense_oracle():
     xs = np.array([0., 4., 4., 1., 1., 0.])
     ys = np.array([0., 0., 1., 1., 4., 4.])
-    rx, ry = geom.buffer_polygon(xs, ys, 0.5, segs=64)
+    rx, ry = geom.buffer_feature([xs], [ys], 0.5, segs=64)
     got = geom.union_area(rx, ry)
     want = _buffer_oracle_area(xs, ys, 0.5)
     assert abs(got - want) < 0.15          # grid + inscribed-arc error
@@ -393,11 +393,11 @@ def test_buffer_polygon_square_closed_form():
     """Square buffer area has a closed form: A + P*d + pi*d^2 (minus
     the inscribed-arc deficit, which vanishes as segs grows)."""
     xs = np.array([0., 2., 2., 0.]); ys = np.array([0., 0., 2., 2.])
-    rx, ry = geom.buffer_polygon(xs, ys, 1.0, segs=256)
+    rx, ry = geom.buffer_feature([xs], [ys], 1.0, segs=256)
     want = 4.0 + 8.0 * 1.0 + np.pi
     assert abs(geom.union_area(rx, ry) - want) < 0.01
     # orientation-independent
-    rx2, ry2 = geom.buffer_polygon(xs[::-1], ys[::-1], 1.0, segs=256)
+    rx2, ry2 = geom.buffer_feature([xs[::-1]], [ys[::-1]], 1.0, segs=256)
     assert geom.union_area(rx2, ry2) == geom.union_area(rx, ry)
 
 
@@ -407,7 +407,7 @@ def test_buffer_polygon_keyhole_closes_into_hole():
     case the single-ring convex approximation could never express."""
     xs = np.array([0., 8., 8., 4.5, 4.5, 6., 6., 2., 2., 3.5, 3.5, 0.])
     ys = np.array([0., 0., 8., 8., 5., 5., 1., 1., 5., 5., 8., 8.])
-    rx, ry = geom.buffer_polygon(xs, ys, 0.6, segs=32)
+    rx, ry = geom.buffer_feature([xs], [ys], 0.6, segs=32)
     signed = [0.5 * float(np.sum(np.asarray(a) * np.roll(np.asarray(b), -1)
                                  - np.roll(np.asarray(a), -1)
                                  * np.asarray(b)))
@@ -419,24 +419,21 @@ def test_buffer_polygon_keyhole_closes_into_hole():
 
 
 def test_buffer_udf_exact_on_concave(spark):
-    """The snuggs-exposed buffer UDF now runs the exact kernel: the
-    L-shape outer ring area matches the dense oracle (the convex
-    approximation was ~20% high on this fixture)."""
+    """The snuggs-exposed buffer UDF runs the exact kernel: the L-shape
+    buffer area matches the dense oracle (the convex fallback was ~20%
+    high on this fixture)."""
     import pandas as pd
     from fiona_spark.functions import geometry as gf
     xs = [0., 4., 4., 1., 1., 0.]
     ys = [0., 0., 1., 1., 4., 4.]
-    df = spark.createDataFrame(pd.DataFrame({"xs": [xs], "ys": [ys]}))
-    out = df.select(gf.buffer_rings_udf(0.5, segs=64)("xs", "ys")
+    df = spark.createDataFrame(pd.DataFrame({
+        "geom_type": ["Polygon"], "rings_xs": [[xs]], "rings_ys": [[ys]]}))
+    out = df.select(gf.buffer_udf(0.5, segs=64)(*gf.RING_ARGS)
                     .alias("b")).first()["b"]
-    assert out["exact"]
+    assert out["geom_type"] == "Polygon"
     got = geom.union_area(out["rings_xs"], out["rings_ys"])
     want = _buffer_oracle_area(np.array(xs), np.array(ys), 0.5)
     assert abs(got - want) < 0.15
-    single = df.select(gf.buffer_udf(0.5)("xs", "ys").alias("b")
-                       ).first()["b"]
-    outer = geom.union_area([single["xs"]], [single["ys"]])
-    assert abs(outer - want) < 0.15
 
 
 # -- r4: grid-snapped fuzz — maximally degenerate inputs (every contact
@@ -633,18 +630,15 @@ def _erosion_oracle_area(xs, ys, d, n=400):
 
 
 def test_erode_square_exact():
-    rx, ry = geom.erode_polygon([0., 4., 4., 0.], [0., 0., 4., 4.], 1.0)
+    rx, ry = geom.buffer_feature([[0., 4., 4., 0.]], [[0., 0., 4., 4.]], -1.0)
     assert len(rx) == 1
     assert geom.union_area(rx, ry) == pytest.approx(4.0)   # 2x2 core
-    # negative dist through buffer_polygon is the same thing
-    rx2, ry2 = geom.buffer_polygon([0., 4., 4., 0.], [0., 0., 4., 4.], -1.0)
-    assert geom.union_area(rx2, ry2) == pytest.approx(4.0)
 
 
 def test_erode_concave_L_matches_dense_oracle():
     xs = np.array([0., 6., 6., 2.5, 2.5, 0.])
     ys = np.array([0., 0., 2., 2., 6., 6.])
-    rx, ry = geom.erode_polygon(xs, ys, 0.5, segs=64)
+    rx, ry = geom.buffer_feature([xs], [ys], -0.5, segs=64)
     got = geom.union_area(rx, ry)
     want = _erosion_oracle_area(xs, ys, 0.5)
     assert abs(got - want) < 0.1
@@ -656,12 +650,12 @@ def test_erode_dumbbell_splits_and_vanishes():
     # two 4x4 lobes joined by a 2-long, 1-wide neck
     xs = np.array([0., 4., 4., 6., 6., 10., 10., 6., 6., 4., 4., 0.])
     ys = np.array([0., 0., 1.5, 1.5, 0., 0., 4., 4., 2.5, 2.5, 4., 4.])
-    rx, ry = geom.erode_polygon(xs, ys, 0.6, segs=32)
+    rx, ry = geom.buffer_feature([xs], [ys], -0.6, segs=32)
     assert len(rx) == 2
     want = _erosion_oracle_area(xs, ys, 0.6, n=600)
     assert abs(geom.union_area(rx, ry) - want) < 0.15
-    assert geom.erode_polygon([0., 2., 2., 0.], [0., 0., 2., 2.], 1.5) \
-        == ([], [])
+    assert geom.buffer_feature([[0., 2., 2., 0.]], [[0., 0., 2., 2.]],
+                               -1.5) == ([], [])
 
 
 def test_buffer_feature_donut_closed_forms():
@@ -731,7 +725,7 @@ def test_buffer_distance_sweep_no_degeneracy():
     sq = ([3., 7., 7., 3.], [3., 3., 7., 7.])
     for d in np.linspace(0.05, 3.0, 40):
         for segs in (16, 32):
-            rx, ry = geom.buffer_polygon(sq[0], sq[1], float(d),
+            rx, ry = geom.buffer_feature([sq[0]], [sq[1]], float(d),
                                          segs=segs)
             assert geom.union_area(rx, ry) > 16.0
     dx_ = [[0., 10., 10., 0.], [3., 7., 7., 3.]]
@@ -787,7 +781,7 @@ def test_buffer_random_polygon_fuzz():
             np.array(xs) * np.roll(np.array(ys), -1)
             - np.roll(np.array(xs), -1) * np.array(ys))))
         try:
-            rx, ry = geom.buffer_polygon(xs, ys, d, segs=segs)
+            rx, ry = geom.buffer_feature([xs], [ys], d, segs=segs)
         except geom.UnionDegeneracyError:
             assert not simple, \
                 f"trial {trial}: raise on a SIMPLE ring (d={d})"

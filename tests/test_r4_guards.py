@@ -184,13 +184,14 @@ def test_buffer_feature_udf_donut(spark):
     from fiona_spark import geom
     from fiona_spark.functions import geometry as gf
     pdf = pd.DataFrame({
+        "geom_type": ["Polygon"],
         "rings_xs": [[[0., 8., 8., 0.], [2., 6., 6., 2.]]],
         "rings_ys": [[[0., 0., 8., 8.], [2., 2., 6., 6.]]]})
     df = spark.createDataFrame(pdf)
     for d in (1.0, -0.5):
-        row = df.select(gf.buffer_feature_udf(d, segs=32)(
-            "rings_xs", "rings_ys").alias("b")).first()["b"]
-        assert row["exact"]
+        row = df.select(gf.buffer_udf(d, segs=32)(*gf.RING_ARGS)
+                        .alias("b")).first()["b"]
+        assert row["geom_type"] == "Polygon"
         want_x, want_y = geom.buffer_feature(
             pdf["rings_xs"][0], pdf["rings_ys"][0], d, segs=32)
         assert geom.union_area(row["rings_xs"], row["rings_ys"]) == \

@@ -325,8 +325,9 @@ def transform_rings(fn, geom_type, rings_xs, rings_ys, cut: bool,
     Arrow ring columns.  ``fn`` maps the flat vertex buffer once.  With
     ``cut`` (a geographic destination), the rings whose extent crosses
     +/-180 are WRAPDATELINE-cut by ``geom.cut_dateline_rings`` within
-    ``offset`` degrees, and a feature that gains rings is promoted to
-    its Multi* type like OGR does; Point and MultiPoint are never cut.
+    ``offset`` degrees (lines as open polylines), and a feature that
+    gains rings is promoted to its Multi* type like OGR does; Point and
+    MultiPoint are never cut.
     ``precision >= 0`` rounds every coordinate.  Returns the Arrow
     struct of :func:`schema.rings_array`: null rows stay null, EMPTY
     rows EMPTY."""
@@ -342,11 +343,13 @@ def transform_rings(fn, geom_type, rings_xs, rings_ys, cut: bool,
                     | (np.minimum.reduceat(x, s) < -180.0))
         over &= ~_of_type(geom_type, _POINTS)[ring_feat]
     if over.any():
+        line = _of_type(geom_type, _LINES)[ring_feat]
         vs, cnt = _starts(lens), np.ones(len(lens), dtype=np.int64)
         px, py, pieces, prev = [], [], [], 0
         for j in np.flatnonzero(over):
             s, e = vs[j], vs[j] + lens[j]
-            cx, cy, _ = geom.cut_dateline_rings([x[s:e]], [y[s:e]], offset)
+            cx, cy, _ = geom.cut_dateline_rings([x[s:e]], [y[s:e]], offset,
+                                                closed=not line[j])
             px += [x[prev:s], *cx]
             py += [y[prev:s], *cy]
             pieces += [len(v) for v in cx]

@@ -1569,7 +1569,31 @@ def _clip_halfplane(xs: np.ndarray, ys: np.ndarray, bound: float,
     return out_x, out_y
 
 
-def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0):
+def _split_polyline(xs: np.ndarray, ys: np.ndarray, bound: float):
+    """Open-polyline twin of the two :func:`_clip_halfplane` calls of
+    :func:`cut_dateline_rings`: the runs of one line on either side of
+    x = ``bound`` (+/-180) in traversal order, each crossing point ending
+    one run and starting the next (once, when a vertex lies on the
+    bound), the far runs shifted back by 360.  Returns (xs, ys) pieces
+    of at least 2 vertices."""
+    far = xs > bound if bound > 0 else xs < bound
+    cut = np.flatnonzero(far[1:] != far[:-1]) + 1   # first vertex of a run
+    t = (bound - xs[cut - 1]) / (xs[cut] - xs[cut - 1])
+    cy = ys[cut - 1] + t * (ys[cut] - ys[cut - 1])
+    pieces = []
+    for j, (s, e) in enumerate(zip(np.r_[0, cut], np.r_[cut, len(xs)])):
+        px, py = xs[s:e], ys[s:e]
+        if j and xs[s] != bound:
+            px, py = np.r_[bound, px], np.r_[cy[j - 1], py]
+        if j < len(cut) and xs[e - 1] != bound:
+            px, py = np.r_[px, bound], np.r_[py, cy[j]]
+        if len(px) >= 2:
+            pieces.append((px - 2.0 * bound * far[s], py))
+    return pieces
+
+
+def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0,
+                       closed: bool = True):
     """Cut geometry RINGS at the antimeridian — the geometry-level
     analogue of :func:`cut_antimeridian_bbox` and of the reference's
     WRAPDATELINE/DATELINEOFFSET transform option
@@ -1585,7 +1609,9 @@ def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0):
     are treated as malformed and returned unchanged, mirroring OGR's
     DATELINEOFFSET window).  Concave rings may come back as one ring
     with bridge edges ON the cut meridian — even-odd parity downstream
-    is unaffected.  Returns (rings_xs, rings_ys, was_cut).
+    is unaffected.  ``closed=False`` cuts the rings as open lines
+    (:func:`_split_polyline`): no closing edge, one piece per run on
+    either side.  Returns (rings_xs, rings_ys, was_cut).
     """
     out_xs, out_ys, was_cut = [], [], False
     for rx, ry in zip(rings_xs, rings_ys):
@@ -1593,25 +1619,19 @@ def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0):
         ys = np.asarray(ry, np.float64)
         xmax = xs.max() if len(xs) else 0.0
         xmin = xs.min() if len(xs) else 0.0
-        if xmax > 180.0 + offset or xmin < -180.0 - offset:
-            out_xs.append(xs); out_ys.append(ys)      # outside the window
+        if ((xmax <= 180.0 and xmin >= -180.0)
+                or xmax > 180.0 + offset or xmin < -180.0 - offset):
+            out_xs.append(xs); out_ys.append(ys)      # no cut, or malformed
             continue
-        if xmax > 180.0:
-            w = _clip_halfplane(xs, ys, 180.0, keep_le=True)
-            e = _clip_halfplane(xs, ys, 180.0, keep_le=False)
-            was_cut = True
-            if len(w[0]) >= 3:
-                out_xs.append(w[0]); out_ys.append(w[1])
-            if len(e[0]) >= 3:
-                out_xs.append(e[0] - 360.0); out_ys.append(e[1])
-        elif xmin < -180.0:
-            e = _clip_halfplane(xs, ys, -180.0, keep_le=False)
-            w = _clip_halfplane(xs, ys, -180.0, keep_le=True)
-            was_cut = True
-            if len(e[0]) >= 3:
-                out_xs.append(e[0]); out_ys.append(e[1])
-            if len(w[0]) >= 3:
-                out_xs.append(w[0] + 360.0); out_ys.append(w[1])
+        b = 180.0 if xmax > 180.0 else -180.0
+        was_cut = True
+        if closed:
+            near = _clip_halfplane(xs, ys, b, keep_le=b > 0)
+            far = _clip_halfplane(xs, ys, b, keep_le=b < 0)
+            pieces = [p for p in (near, (far[0] - 2.0 * b, far[1]))
+                      if len(p[0]) >= 3]
         else:
-            out_xs.append(xs); out_ys.append(ys)
+            pieces = _split_polyline(xs, ys, b)
+        out_xs += [p[0] for p in pieces]
+        out_ys += [p[1] for p in pieces]
     return out_xs, out_ys, was_cut

@@ -25,8 +25,8 @@ Scale design notes (10^12-row table, 1000 executors):
  * dedup of multi-cell candidates uses the reference-point trick (the
    pair is kept only in the cell containing the intersection's
    lower-left corner) — no ``distinct`` shuffle.
- * kNN is a multi-resolution cell-disk cascade: a disk probe at a
-   density-chosen resolution answers ~all images; the provably
+ * kNN is a multi-resolution cell-disk cascade: a disk probe at the
+   cost-chosen start resolution answers most images; the provably
    unfinished remainder (cell-ring bound: kth-distance <= r *
    cell_height) retries coarser and finally falls back to an exact
    scan of the full zone set.  One kernel (:func:`_knn_cascade`) runs it
@@ -549,22 +549,36 @@ def range_join(a: DataFrame, b: DataFrame, res: int = DEFAULT_RES,
 # kNN join (two-phase cell-disk + exact fallback)
 # ---------------------------------------------------------------------------
 
-def knn_res_for(n_zones: int, k: int) -> int:
-    """Resolution whose finish-guarantee radius covers the expected kth
-    neighbor distance with ~1.8x margin.
+def knn_res_for(n_zones: int, k: int, bbox, levels: int = 3) -> int:
+    """Start resolution of the kNN cascade with the least expected
+    candidate count (zone distances ranked) per point.
 
-    With zone density rho (per deg^2), the kth-neighbor distance
-    concentrates around sqrt(k / (pi * rho)); a point is provably
-    finished at disk radius r0=1 only when its kth distance <=
-    cell_height(res), so cell_height must exceed that typical distance —
-    otherwise the expensive exact fallback swallows the dataset.
+    Zones are taken as spread evenly over their centroid bbox
+    ``(xmin, ymin, xmax, ymax)`` at rho per deg^2 (each side floored at
+    the finest cell height, so a zero-area extent stays finite).  At a
+    level of cell height h an unfinished point ranks the zones of its
+    cell's disk(1), min(nz, 9 * rho * 2h * h), and finishes when k of
+    them lie closer than h: P(Poisson(rho * pi * h^2) >= k).  A point no
+    level finishes pays the exact scan, nz.  Start r walks the levels
+    the cascade runs, ``range(r, 0, -2)[:levels]``; the output does not
+    depend on the pick, only the work does.
     """
-    rho = max(n_zones, 1) / (360.0 * 180.0)
-    r_k = float(np.sqrt(k / (np.pi * rho)))
-    for res in range(MAX_KNN_RES, 0, -1):
-        if 180.0 / (1 << res) >= 1.8 * r_k:
-            return res
-    return 1
+    nz, kk = n_zones, min(k, n_zones)
+    x0, y0, x1, y1 = bbox if nz else (0.0,) * 4
+    h_min = 180.0 / (1 << MAX_KNN_RES)
+    rho = max(nz, 1) / (max(x1 - x0, h_min) * max(y1 - y0, h_min))
+    i = np.arange(kk)
+    log_fact = np.concatenate(([0.0], np.cumsum(np.log(i[1:]))))
+
+    def cost(r):
+        total, left = 0.0, 1.0
+        for h in (180.0 / (1 << q) for q in range(r, 0, -2)[:levels]):
+            lam = rho * np.pi * h * h
+            total += left * min(nz, 18.0 * rho * h * h)
+            # P(Poisson(lam) < kk), each term in log space: no overflow
+            left *= min(1.0, np.exp(i * np.log(lam) - lam - log_fact).sum())
+        return total + left * nz
+    return min(range(1, MAX_KNN_RES + 1), key=cost)
 
 
 MAX_KNN_RES = 14
@@ -723,7 +737,9 @@ def _knn_join_fused(points: DataFrame, zones: DataFrame, k: int,
         return None
     nz = ztbl.num_rows
     if res is None:
-        res = knn_res_for(nz, k)
+        (x0, x1), (y0, y1) = (pac.min_max(ztbl.column(c)).as_py().values()
+                              for c in (1, 2))
+        res = knn_res_for(nz, k, (x0, y0, x1, y1), levels)
     ztbl, zx, zy, lts = _knn_zones(ztbl, res, levels)
     bc = points.sparkSession.sparkContext.broadcast(
         (zx, zy, lts, [ztbl.column(0).combine_chunks()]))
@@ -801,10 +817,10 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
         because a zone outside disk(1) can sit at exactly cell_height
         and win the (dist, zone_key) tiebreak.
       * unfinished points (sparse regions — e.g. beyond the data's
-        latitude band) retry at a 4x coarser level; each level's
-        remainder shrinks by the density argument in
-        :func:`knn_res_for` (a single level sent the sparse tail, 857M
-        pairs at sf0.5, to the exact fallback).
+        latitude band) retry at a 4x coarser level (a single level sent
+        the sparse tail, 857M pairs at sf0.5, to the exact fallback);
+        ``res=None`` starts at the level of least expected work,
+        :func:`knn_res_for`.  Any start gives the same rows.
       * whatever survives all levels (~0 rows) is ranked exactly
         against all zones.
 
@@ -829,14 +845,19 @@ def knn_join(points: DataFrame, zones: DataFrame, k: int = 3,
     if out is not None:
         return out
 
-    # one pass counts both sides; no cell can be hot unless the whole
-    # point set is, so only then does the per-cell aggregate run
-    n_all, nz = (points.select(F.lit(0).alias("_z"))
-                 .union(zones.select(F.lit(1).alias("_z")))
-                 .agg(F.count("_z"), F.sum("_z")).first())
+    # one pass counts both sides and takes the centroid bbox; no cell can
+    # be hot unless the whole point set is, so only then does the
+    # per-cell aggregate run
+    nil = F.lit(None).cast("double")
+    n_all, nz, *bbox = (
+        points.select(F.lit(0).alias("_z"), nil.alias("_x"), nil.alias("_y"))
+        .union(zones.select(F.lit(1), F.col(zone_lng).cast("double"),
+                            F.col(zone_lat).cast("double")))
+        .agg(F.count("_z"), F.sum("_z"), *(f(c) for f in (F.min, F.max)
+                                           for c in ("_x", "_y"))).first())
     nz = nz or 0
     if res is None:
-        res = knn_res_for(nz, k)
+        res = knn_res_for(nz, k, bbox, levels)
     r_min = min(range(res, 0, -2)[:levels], default=res)
     zc = zones.select(zone_key, F.col(zone_lng).alias("_zlng"),
                       F.col(zone_lat).alias("_zlat"))

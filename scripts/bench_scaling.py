@@ -168,7 +168,6 @@ zones = spark.read.parquet(zone_path).cache()
 images.count(); pts.count(); zones.count()
 spark.range(1000).select(F.sum("id")).collect()
 
-n_zones = zones.count()
 # resolution selection is a tiny untimed metadata job (its cost is
 # independent of data scale); compute once so the timed section holds
 # only the scale-dependent work
@@ -194,8 +193,7 @@ def spatial_shuffled_job():
                             max_broadcast_zones=0).count()
 
 def knn_job():
-    return spatial.knn_join(pts, zones, k=3,
-                            res=spatial.knn_res_for(n_zones, 3)).count()
+    return spatial.knn_join(pts, zones, k=3).count()
 
 def knn_reset():
     # the fused knn lane caches nothing (past the guard it materializes

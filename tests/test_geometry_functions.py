@@ -177,6 +177,28 @@ def test_executor_cut_matches_driver(spark):
     assert len(got[0]["rings_xs"]) == 2 and got[2]["rings_xs"][0][0] > 180
 
 
+def test_line_cut_at_dateline_stays_open():
+    """A line across +-180 splits into open runs: no closing segment
+    along the meridian, a vertex on the meridian is not doubled, and a
+    line that crosses back gives three runs in traversal order.  A
+    polygon ring is still clipped closed."""
+    g = transform.transform_geom(
+        "EPSG:4326", "EPSG:4326",
+        {"type": "LineString", "coordinates": [[170, 0], [190, 0]]},
+        antimeridian_cutting=True)
+    assert g["type"] == "MultiLineString"
+    assert g["coordinates"] == [[[170, 0], [180, 0]], [[-180, 0], [-170, 0]]]
+    xs, ys, cut = geom.cut_dateline_rings(
+        [[170., 180., 190., 170.], [-170., -190.]],
+        [[0., 0., 0., 2.], [1., 1.]], closed=False)
+    assert cut
+    assert [list(zip(x, y)) for x, y in zip(xs, ys)] == [
+        [(170, 0), (180, 0)], [(-180, 0), (-170, 0), (-180, 1)],
+        [(180, 1), (170, 2)], [(-170, 1), (-180, 1)], [(180, 1), (170, 1)]]
+    xs, _, _ = geom.cut_dateline_rings([[170., 190., 190.]], [[0., 0., 4.]])
+    assert [list(x) for x in xs] == [[170, 180, 180], [-180, -170, -170, -180]]
+
+
 def _flat(c):
     return [v for x in c for v in _flat(x)] if isinstance(c, list) else [c]
 

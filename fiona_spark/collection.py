@@ -252,7 +252,7 @@ class Collection:
                 kw["layer"] = self._layer
             self._df = fiona_spark.open(self._spark, self.path, mode="r",
                                         driver=self._driver, **kw)
-        except Exception:
+        except DriverError:
             self._df = df   # driver without read support: best effort
         self._buffer = []
         if self.mode == "w":

@@ -44,10 +44,8 @@ DT_RX = (r"(\d{4})(-)?(\d{2})(-)?(\d{2})(T)?(\d{2})(:)?(\d{2})(:)?"
 # fiona/rfc3339.py pattern_time (groups shifted: no date part)
 TIME_RX = (r"(\d{2})(:)?(\d{2})(:)?(\d{2})?(\.\d+)?"
            r"([Zz]|([+-])?(\d{2})?(:)?(\d{2}))?")
-DATE_RX = r"(\d{4})(-)?(\d{2})(-)?(\d{2})"
 
 TZ_UNKNOWN_CODE = 0
-TZ_GMT_CODE = 100
 
 
 def _int_g(col, rx: str, i: int, default: int | None = 0) -> Column:

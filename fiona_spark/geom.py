@@ -1289,14 +1289,14 @@ def _ring_interior_point(xs, ys):
 
 def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
     """Exact even-odd union of MULTI-RING features (holes included):
-    the general form behind :func:`polygon_union`, also consumed by the
-    two-stage exact ``dissolve_union`` (whose partial results carry
-    holes).  ``feat_rings_xs[i]`` is the ring list of feature i.  Ring
-    roles derive from NESTING DEPTH within the feature (even = outer,
-    odd = hole) and rings are oriented interior-on-left (outer CCW,
-    hole CW) so the exterior-side probe of the fragment keep rule works
-    unchanged.  Returns (rings_xs, rings_ys) with the same orientation
-    convention.
+    the general form behind :func:`polygon_union`, and the union of
+    every dissolve stage (``operators.aggregates._dissolve``, whose
+    partial results carry holes).  ``feat_rings_xs[i]`` is the ring
+    list of feature i.  Ring roles derive from NESTING DEPTH within the
+    feature (even = outer, odd = hole) and rings are oriented
+    interior-on-left (outer CCW, hole CW) so the exterior-side probe of
+    the fragment keep rule works unchanged.  Returns (rings_xs,
+    rings_ys) with the same orientation convention.
 
     Inputs larger than ``max_edges`` DIVIDE-AND-CONQUER (r4): features
     split by bbox-center x-median, halves union recursively, the two
@@ -1592,6 +1592,11 @@ def _split_polyline(xs: np.ndarray, ys: np.ndarray, bound: float):
     return pieces
 
 
+#: How far past +/-180 a ring may reach (float noise from a
+#: reprojection) and still pass :func:`cut_dateline_rings` uncut.
+_DATELINE_EPS = 1e-9
+
+
 def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0,
                        closed: bool = True):
     """Cut geometry RINGS at the antimeridian — the geometry-level
@@ -1611,25 +1616,31 @@ def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0,
     with bridge edges ON the cut meridian — even-odd parity downstream
     is unaffected.  ``closed=False`` cuts the rings as open lines
     (:func:`_split_polyline`): no closing edge, one piece per run on
-    either side.  Returns (rings_xs, rings_ys, was_cut).
+    either side.  A closed input ring (last vertex repeating the first)
+    gives closed pieces.  Returns (rings_xs, rings_ys, was_cut).
     """
     out_xs, out_ys, was_cut = [], [], False
+    east, west = 180.0 + _DATELINE_EPS, -180.0 - _DATELINE_EPS
     for rx, ry in zip(rings_xs, rings_ys):
         xs = np.asarray(rx, np.float64)
         ys = np.asarray(ry, np.float64)
         xmax = xs.max() if len(xs) else 0.0
         xmin = xs.min() if len(xs) else 0.0
-        if ((xmax <= 180.0 and xmin >= -180.0)
+        if ((xmax <= east and xmin >= west)
                 or xmax > 180.0 + offset or xmin < -180.0 - offset):
             out_xs.append(xs); out_ys.append(ys)      # no cut, or malformed
             continue
-        b = 180.0 if xmax > 180.0 else -180.0
+        b = 180.0 if xmax > east else -180.0
         was_cut = True
         if closed:
             near = _clip_halfplane(xs, ys, b, keep_le=b > 0)
             far = _clip_halfplane(xs, ys, b, keep_le=b < 0)
             pieces = [p for p in (near, (far[0] - 2.0 * b, far[1]))
                       if len(p[0]) >= 3]
+            if len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1]:
+                pieces = [(px, py) if px[0] == px[-1] and py[0] == py[-1]
+                          else (np.r_[px, px[0]], np.r_[py, py[0]])
+                          for px, py in pieces]
         else:
             pieces = _split_polyline(xs, ys, b)
         out_xs += [p[0] for p in pieces]

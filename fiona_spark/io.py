@@ -47,7 +47,7 @@ def materialize_via_opener(path: str, opener) -> str:
             for cand in (stem_remote + ext, stem_remote + ext.upper()):
                 try:
                     side = _opener_read(opener, cand)
-                except Exception:
+                except OSError:          # no such sidecar
                     continue
                 with open(stem_local + ext, "wb") as out:
                     out.write(side)

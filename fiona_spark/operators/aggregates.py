@@ -15,11 +15,15 @@ capability fast paths (`fiona/ogrext.pyx:56-71`).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pac
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .. import geom
+from .. import geom, schema
 from ..errors import ReduceError
 
 
@@ -62,119 +66,105 @@ def info(df: DataFrame, bbox_cols=("xmin", "ymin", "xmax", "ymax")) -> dict:
             "schema": {f.name: f.dataType.simpleString() for f in df.schema.fields}}
 
 
-def dissolve_union(df: DataFrame, xs: str = "xs", ys: str = "ys") -> tuple:
-    """``fio reduce '(unary_union c)'`` equivalent: dissolve all polygons
-    to one (multi-ring) geometry — EXACT via the boundary-fragment
-    union kernel.
+#: The row every dissolve stage emits (plus the carried group key).
+_DISSOLVED = ("rings_xs array<array<double>>, rings_ys array<array<double>>, "
+              "n_members long, exact boolean")
 
-    Two-stage hierarchical union (the treeAggregate shape from
-    SURVEY.md section 2.4): each partition unions its polygons with
-    :func:`geom.feature_union` (executor-side numpy, output bounded by
-    the partition's union boundary, not its row count), then the driver
-    unions the few partial multi-ring results.  A partition or the
-    final stage that hits a union degeneracy (pinch contact) degrades
-    to the convex hull, reported in the third return element.  Returns
-    ``(rings_xs, rings_ys, exact)`` — outer rings CCW, holes CW.
-    Raises ReduceError on empty input, mirroring the single-value
-    contract (`fiona/features.py:282-316`).
+
+def _members(*cols) -> list:
+    """``cols`` plus ``n_members`` 1 and ``exact`` true: each feature as
+    a one-member dissolve input."""
+    return [*cols, F.lit(1).cast("long").alias("n_members"),
+            F.lit(True).alias("exact")]
+
+
+def _dissolve(tbl: pa.Table) -> pa.Table:
+    """The one union body of both dissolves, at every stage: the
+    features of ``tbl`` (``rings_xs``/``rings_ys``, ``n_members``,
+    ``exact``; any other column is a group key, carried from the first
+    row) become one row.  Whole features union exactly through
+    :func:`geom.feature_union`, holes and parts included; a union
+    degeneracy takes the convex hull of every vertex instead.
+    ``n_members`` sums, and ``exact`` holds only if every input was
+    exact and the union succeeded."""
+    def runs(v, counts):        # consecutive runs of `counts` items
+        return [v[e - n:e] for e, n in zip(np.cumsum(counts), counts)]
+
+    fr = schema.read_rings(tbl["rings_xs"], tbl["rings_ys"])
+    try:
+        uxs, uys = geom.feature_union(
+            runs(runs(fr.x, fr.ring_lens), fr.ring_nx),
+            runs(runs(fr.y, fr.ring_lens), fr.ring_nx))
+        exact = pac.all(tbl["exact"]).as_py()
+    except geom.UnionDegeneracyError:
+        hx, hy = geom.convex_hull(fr.x, fr.y)
+        uxs, uys, exact = [hx], [hy], False
+    out = schema.rings_array([None], np.concatenate(uxs), np.concatenate(uys),
+                             [len(r) for r in uxs], [len(uxs)], [False])
+    keys = [c for c in tbl.column_names if c not in
+            ("rings_xs", "rings_ys", "n_members", "exact")]
+    return pa.table({**{c: tbl[c].slice(0, 1) for c in keys},
+                     "rings_xs": out.field("rings_xs"),
+                     "rings_ys": out.field("rings_ys"),
+                     "n_members": pa.array([pac.sum(tbl["n_members"]).as_py()],
+                                           pa.int64()),
+                     "exact": [exact]})
+
+
+def _dissolve_partition(batches):
+    """``mapInArrow`` body: one :func:`_dissolve` row per partition."""
+    batches = [b for b in batches if b.num_rows]
+    if batches:
+        yield from _dissolve(pa.Table.from_batches(batches)).to_batches()
+
+
+def dissolve_union(df: DataFrame) -> tuple:
+    """``fio reduce '(unary_union c)'`` equivalent: dissolve every
+    feature, holes and parts included, to one multi-ring geometry —
+    EXACT via the boundary-fragment union kernel.
+
+    Hierarchical union (the treeAggregate shape from SURVEY.md section
+    2.4), :func:`_dissolve` at every stage: per partition (output
+    bounded by the partition's union boundary, not its row count), in
+    distributed rounds of ``fanin`` until at most ``fanin`` partials
+    remain, then at the driver.  Rows with no ring (null or EMPTY) are
+    dropped in the plan.  Returns ``(rings_xs, rings_ys, exact)`` —
+    outer rings CCW, holes CW.  Raises ReduceError when no feature has
+    a ring (`fiona/features.py:282-316`).  A frame with only
+    ``xs``/``ys`` enters through :func:`schema.with_rings`.
     """
-    def partial(batches):
-        acc_x: list = []
-        acc_y: list = []
-        for pdf in batches:
-            acc_x.extend([np.asarray(v, np.float64) for v in pdf[xs]])
-            acc_y.extend([np.asarray(v, np.float64) for v in pdf[ys]])
-        if not acc_x:
-            return
-        try:
-            uxs, uys = geom.feature_union([[x] for x in acc_x],
-                                          [[y] for y in acc_y])
-            exact = True
-        except geom.UnionDegeneracyError:
-            hx, hy = geom.convex_hull(np.concatenate(acc_x),
-                                      np.concatenate(acc_y))
-            uxs, uys, exact = [hx], [hy], False
-        yield pd.DataFrame({
-            "rings_xs": [[r.tolist() for r in uxs]],
-            "rings_ys": [[r.tolist() for r in uys]],
-            "exact": [exact]})
-
-    _PART_SCHEMA = ("rings_xs array<array<double>>, "
-                    "rings_ys array<array<double>>, exact boolean")
-
-    def partial_feats(batches):
-        """Union a partition of PARTIAL multi-ring features (the tree-
-        reduce inner node: same keep-rule, inputs already unions)."""
-        fx: list = []
-        fy: list = []
-        ok = True
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                fx.append([np.asarray(v, np.float64) for v in r.rings_xs])
-                fy.append([np.asarray(v, np.float64) for v in r.rings_ys])
-                ok = ok and bool(r.exact)
-        if not fx:
-            return
-        try:
-            uxs, uys = geom.feature_union(fx, fy)
-            exact = ok
-        except geom.UnionDegeneracyError:
-            px_ = np.concatenate([r for f in fx for r in f])
-            py_ = np.concatenate([r for f in fy for r in f])
-            hx, hy = geom.convex_hull(px_, py_)
-            uxs, uys, exact = [hx], [hy], False
-        yield pd.DataFrame({
-            "rings_xs": [[np.asarray(r).tolist() for r in uxs]],
-            "rings_ys": [[np.asarray(r).tolist() for r in uys]],
-            "exact": [exact]})
-
-    import math
-
-    parts_df = df.select(xs, ys).mapInPandas(partial, _PART_SCHEMA)
-    # TREE reduce (r4): fold partials in distributed rounds of `fanin`
-    # until at most `fanin` remain — at 10^5 input partitions the
-    # driver-final union would otherwise absorb every partition's
-    # boundary serially.  Each level has at most 1 row per partition,
-    # so round r handles ceil(p / fanin^r) rows.
+    parts = (schema.with_rings(df).filter(F.size("rings_xs") > 0)
+             .select(*_members("rings_xs", "rings_ys"))
+             .mapInArrow(_dissolve_partition, _DISSOLVED))
+    # at 10^5 input partitions the driver final would otherwise absorb
+    # every partition's boundary serially; each round has at most one
+    # row per partition, so round r handles ceil(p / fanin^r) rows
     fanin = 32
     p = max(df.rdd.getNumPartitions(), 1)
     while p > fanin:
         p = math.ceil(p / fanin)
-        parts_df = parts_df.repartition(p).mapInPandas(
-            partial_feats, _PART_SCHEMA)
-    parts = parts_df.collect()
-    if not parts:
+        parts = parts.repartition(p).mapInArrow(_dissolve_partition,
+                                                _DISSOLVED)
+    tbl = parts.toArrow()
+    if not tbl.num_rows:
         raise ReduceError("reduce over empty collection")
-    feat_xs = [list(r["rings_xs"]) for r in parts]
-    feat_ys = [list(r["rings_ys"]) for r in parts]
-    exact = all(r["exact"] for r in parts)
-    if exact:
-        try:
-            uxs, uys = geom.feature_union(feat_xs, feat_ys)
-            return uxs, uys, True
-        except geom.UnionDegeneracyError:
-            pass
-    px = np.concatenate([np.asarray(r, np.float64)
-                         for f in feat_xs for r in f])
-    py = np.concatenate([np.asarray(r, np.float64)
-                         for f in feat_ys for r in f])
-    hx, hy = geom.convex_hull(px, py)
-    return [hx], [hy], False
+    row = _dissolve(tbl).to_pylist()[0]
+    return row["rings_xs"], row["rings_ys"], row["exact"]
 
 
-def dissolve_components(df: DataFrame, id_col: str, xs: str = "xs",
-                        ys: str = "ys", max_pairs: int = 2_000_000) -> DataFrame:
+def dissolve_components(df: DataFrame, id_col: str,
+                        max_pairs: int = 2_000_000) -> DataFrame:
     """Connected-component dissolve with EXACT even-odd union per
-    component: features whose envelopes touch are grouped into
-    connected components (distributed range join for candidate edges),
-    then each component dissolves independently.  Singletons keep their
-    exact rings untouched; multi-member components run the exact
-    boundary union (``geom.polygon_union`` — shared and collinear
-    parcel borders included) and fall back to the component's convex
-    hull ONLY on pinch degeneracy, flagged per row in ``exact``.
-    `fio reduce '(unary_union c)'` semantics
+    component: features whose envelopes (over every ring) touch are
+    grouped into connected components (distributed range join for
+    candidate edges), then each component dissolves independently
+    through :func:`_dissolve` — holes and parts included, the convex
+    hull ONLY on a union degeneracy, flagged per row in ``exact``.
+    Singletons, and rows with no ring (null stays null), keep their
+    rings untouched.  `fio reduce '(unary_union c)'` semantics
     (fiona/features.py:282-316).  Output: one row per component
-    (component, rings_xs, rings_ys, n_members, exact).
+    (component, rings_xs, rings_ys, n_members, exact).  A frame with
+    only ``xs``/``ys`` enters through :func:`schema.with_rings`.
 
     Scale shape: the edge list of a dissolve is bounded by the overlap
     degree, not the table size.  ``max_pairs`` is a driver FAST-LANE
@@ -184,11 +174,9 @@ def dissolve_components(df: DataFrame, id_col: str, xs: str = "xs",
     """
     from . import dedup, spatial
 
-    env = (df.select(id_col, xs, ys)
-           .withColumn("xmin", F.array_min(xs))
-           .withColumn("ymin", F.array_min(ys))
-           .withColumn("xmax", F.array_max(xs))
-           .withColumn("ymax", F.array_max(ys)))
+    base = schema.with_rings(df).select(id_col, *[
+        F.col(c).cast("array<array<double>>") for c in ("rings_xs", "rings_ys")])
+    env = schema.with_ring_columns(base)
     a = env.select(F.col(id_col).alias("ida"), "xmin", "ymin", "xmax", "ymax")
     b = env.select(F.col(id_col).alias("idb"), "xmin", "ymin", "xmax", "ymax")
     pairs_df = (spatial.range_join(a, b, a_cols=("ida",), b_cols=("idb",),
@@ -202,13 +190,8 @@ def dissolve_components(df: DataFrame, id_col: str, xs: str = "xs",
     pairs = pairs_df.limit(max_pairs + 1).collect()
     spark = df.sparkSession
 
-    id_is_str = isinstance(df.schema[id_col].dataType, T.StringType)
-    schema = ("component string, rings_xs array<array<double>>, "
-              "rings_ys array<array<double>>, n_members long, exact boolean")
-    if not id_is_str:
-        schema = schema.replace("component string", "component long")
-
-    base = df.select(id_col, xs, ys)
+    comp_t = ("string" if isinstance(df.schema[id_col].dataType, T.StringType)
+              else "long")
     singles = base
     multi_out = None
     comp_df = None
@@ -254,50 +237,17 @@ def dissolve_components(df: DataFrame, id_col: str, xs: str = "xs",
         singles = base.join(
             F.broadcast(grouped_ids) if bcast_ok else grouped_ids,
             id_col, "left_anti")
-
-        def union_component(pdf: pd.DataFrame) -> pd.DataFrame:
-            cid = pdf["component"].iloc[0]
-            if len(pdf) == 1:
-                return pd.DataFrame({
-                    "component": [cid],
-                    "rings_xs": [[list(map(float, pdf[xs].iloc[0]))]],
-                    "rings_ys": [[list(map(float, pdf[ys].iloc[0]))]],
-                    "n_members": [1], "exact": [True]})
-            # exact even-odd boundary union (fio reduce '(unary_union c)'
-            # parity, fiona/features.py:282-316); inputs not in general
-            # position (collinear shared edges, pinch vertices) fall
-            # back to the convex hull, flagged exact=False
-            try:
-                uxs, uys = geom.polygon_union(
-                    [np.asarray(v, np.float64) for v in pdf[xs]],
-                    [np.asarray(v, np.float64) for v in pdf[ys]])
-                return pd.DataFrame({
-                    "component": [cid],
-                    "rings_xs": [[r.tolist() for r in uxs]],
-                    "rings_ys": [[r.tolist() for r in uys]],
-                    "n_members": [len(pdf)], "exact": [True]})
-            except geom.UnionDegeneracyError:
-                pass
-            px = np.concatenate([np.asarray(v, np.float64) for v in pdf[xs]])
-            py = np.concatenate([np.asarray(v, np.float64) for v in pdf[ys]])
-            hx, hy = geom.convex_hull(px, py)
-            return pd.DataFrame({
-                "component": [cid], "rings_xs": [[hx.tolist()]],
-                "rings_ys": [[hy.tolist()]],
-                "n_members": [len(pdf)], "exact": [False]})
-
-        joined = base.join(
-            F.broadcast(comp_df) if bcast_ok else comp_df, id_col)
-        multi_out = joined.groupBy("component").applyInPandas(
-            union_component, schema)
+        # every component comes from an edge: at least 2 members
+        multi_out = (base.join(F.broadcast(comp_df) if bcast_ok else comp_df,
+                               id_col)
+                     .select(*_members(F.col("component").cast(comp_t),
+                                       "rings_xs", "rings_ys"))
+                     .groupBy("component")
+                     .applyInArrow(_dissolve, f"component {comp_t}, {_DISSOLVED}"))
 
     # singletons: pure column ops — no grouping, no Python, no driver
-    single_out = singles.select(
-        F.col(id_col).alias("component"),
-        F.array(F.col(xs).cast("array<double>")).alias("rings_xs"),
-        F.array(F.col(ys).cast("array<double>")).alias("rings_ys"),
-        F.lit(1).cast("long").alias("n_members"),
-        F.lit(True).alias("exact"))
+    single_out = singles.select(*_members(
+        F.col(id_col).cast(comp_t).alias("component"), "rings_xs", "rings_ys"))
     if multi_out is None:
         return single_out
     return multi_out.unionByName(single_out)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from .. import geom
@@ -49,7 +50,7 @@ def filter_where(df: DataFrame, where: str) -> DataFrame:
     try:
         cond = F.expr(where)
         return df.filter(cond)
-    except Exception as exc:  # Spark raises ParseException subclasses
+    except AnalysisException as exc:   # ParseException is a subclass
         raise AttributeFilterError(f"invalid where clause: {where!r}: {exc}") from exc
 
 

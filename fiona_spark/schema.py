@@ -152,8 +152,6 @@ FIELD_TYPES_MAP = {
     "datetime": T.TimestampType(),
 }
 
-DEFAULT_STR_WIDTH = 80   # fiona/__init__.py:587-611
-
 _TYPE_RE = re.compile(r"^(?P<base>[A-Za-z0-9\[\]]+)"
                       r"(?::(?P<width>\d+)(?:\.(?P<prec>\d+))?)?$")
 

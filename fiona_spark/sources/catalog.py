@@ -133,7 +133,7 @@ def open_any(spark, table_path: str, layer: str | None = None):
     from . import drivers
     try:
         drv = drivers.driver_from_extension(table_path)
-    except Exception:
+    except DriverError:
         drv = "parquet"
     if drv == "parquet" and os.path.isdir(os.path.join(table_path, "_snapshots")):
         # iceberg_like table root: the manifest dir is not parquet data —
@@ -178,7 +178,7 @@ def info(spark, table_path: str, layer: str | None = None) -> dict:
     try:
         from . import iceberg_like
         crs = iceberg_like.table_crs(table_path)
-    except Exception:
+    except FileNotFoundError:          # not an iceberg_like table root
         crs = None
     rec["crs"] = str(crs) if crs else "EPSG:4326"
     return rec

@@ -69,7 +69,6 @@ from ..schema import with_ring_columns
 
 __all__ = ["read_s57", "listlayers_s57"]
 
-_FT = 0x1E   # ISO 8211 field terminator
 _UT = 0x1F   # unit (subfield) terminator
 
 

@@ -249,6 +249,25 @@ def test_reduce_union_and_collect(spark, gpkg, capsys, monkeypatch):
     assert len(g["geometries"]) == n_in
 
 
+def test_reduce_union_keeps_hole(spark, capsys, monkeypatch):
+    """``(unary_union c)`` unions whole features: the hole of a holed
+    square survives a union with a square over its east edge."""
+    seq = "".join(json.dumps({
+        "type": "Feature", "id": str(i), "properties": {},
+        "geometry": {"type": "Polygon", "coordinates": rings}}) + "\n"
+        for i, rings in enumerate([
+            [[[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
+             [[3, 3], [7, 3], [7, 7], [3, 7], [3, 3]]],
+            [[[8, 2], [12, 2], [12, 4], [8, 4], [8, 2]]]]))
+    _, out = run_cli(["reduce", "(unary_union c)"], stdin_text=seq,
+                     capsys=capsys, monkeypatch=monkeypatch)
+    g = json.loads(out)["geometry"]
+    assert g["type"] == "Polygon" and len(g["coordinates"]) == 2
+    hole = g["coordinates"][1]
+    assert sorted({p[0] for p in hole}) == [3, 7]
+    assert sorted({p[1] for p in hole}) == [3, 7]
+
+
 def test_load_roundtrip(spark, gpkg, tmp_path, capsys, monkeypatch):
     _, seq = run_cli(["cat", gpkg], capsys=capsys)
     out_path = str(tmp_path / "loaded.geojsons")

@@ -199,6 +199,28 @@ def test_line_cut_at_dateline_stays_open():
     assert [list(x) for x in xs] == [[170, 180, 180], [-180, -170, -170, -180]]
 
 
+def test_polygon_cut_pieces_closed_and_float_noise_not_cut():
+    """Both pieces of a cut closed ring come back closed, and a feature
+    reaching past +-180 by float noise only (at most 1e-9) stays one
+    part: a polygon and a line to 180.000000000001."""
+    sq = [[170, 0], [190, 0], [190, 5], [170, 5], [170, 0]]
+    g = transform.transform_geom(
+        "EPSG:4326", "EPSG:4326", {"type": "Polygon", "coordinates": [sq]},
+        antimeridian_cutting=True)
+    assert g["coordinates"] == [
+        [[[170, 0], [180, 0], [180, 5], [170, 5], [170, 0]]],
+        [[[-180, 0], [-170, 0], [-170, 5], [-180, 5], [-180, 0]]]]
+    x = 180.000000000001
+    for geometry in (
+            {"type": "Polygon",
+             "coordinates": [[[170, 0], [x, 0], [x, 5], [170, 5], [170, 0]]]},
+            {"type": "LineString", "coordinates": [[170, 0], [x, 0]]}):
+        g = transform.transform_geom("EPSG:4326", "EPSG:4326", geometry,
+                                     antimeridian_cutting=True)
+        assert g["type"] == geometry["type"]
+        assert g["coordinates"] == geometry["coordinates"]
+
+
 def _flat(c):
     return [v for x in c for v in _flat(x)] if isinstance(c, list) else [c]
 

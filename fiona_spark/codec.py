@@ -148,8 +148,10 @@ def encode_core(imgs: np.ndarray, fmt: str):
 def _rle_runs(flat: np.ndarray):
     """RLE of each row of an (m, n) uint8 matrix: runs break at value
     changes and at image starts, runs over 255 split into 255s plus the
-    remainder.  The int64 per-run arrays are the encoder's peak memory,
-    so they are updated in place."""
+    remainder.  When no run is over 255 (the common case) every run is
+    one (length, value) pair and the split is skipped; both ways give
+    the same bytes.  The int64 per-run arrays are the encoder's peak
+    memory, so they are updated in place."""
     m, n = flat.shape
     if flat.size == 0:
         return np.empty(0, np.uint8), np.zeros(m + 1, np.int64)
@@ -160,6 +162,12 @@ def _rle_runs(flat: np.ndarray):
     brk[::n] = True
     starts = np.flatnonzero(brk)
     lengths = np.diff(starts, append=v.size)
+    first = np.searchsorted(starts, np.arange(m + 1) * n)
+    if lengths.max() <= 255:
+        pairs = np.empty((len(starts), 2), np.uint8)
+        pairs[:, 0] = lengths
+        pairs[:, 1] = v[starts]
+        return pairs.reshape(-1), 2 * first
     reps = lengths + 254
     reps //= 255
     last = np.cumsum(reps)
@@ -168,7 +176,6 @@ def _rle_runs(flat: np.ndarray):
     lengths -= 255 * (reps - 1)         # the last piece of each run
     pairs[last - 1, 0] = lengths
     pairs[:, 1] = np.repeat(v[starts], reps)
-    first = np.searchsorted(starts, np.arange(m + 1) * n)
     offs = 2 * np.concatenate(([0], last))[first]
     return pairs.reshape(-1), offs
 
@@ -191,15 +198,24 @@ def phash_batch(imgs: np.ndarray) -> np.ndarray:
     (77R + 150G + 29B) >> 8, exact block sums over an 8x8 grid (image
     dims are multiples of 8 in the fixtures; general dims use trimmed
     equal blocks), bit i set when block i > median.
+
+    The gray is built plane-wise in ``uint16``: each channel plane is
+    widened before its multiply (numpy's value-based casting would keep
+    ``plane * 77`` in uint8), and the weighted sum is at most
+    (77 + 150 + 29) * 255 = 65,280, so it cannot wrap.  Block sums are
+    two reductions, along each block row, then down each block column,
+    so neither runs over a strided 2-axis window; integer sums are the
+    same in any order.
     """
     m, h, w = imgs.shape[:3]
     bh, bw = h // 8, w // 8
     px = imgs[:, : bh * 8, : bw * 8]
-    gray = (77 * px[..., 0].astype(np.uint32)
-            + 150 * px[..., 1].astype(np.uint32)
-            + 29 * px[..., 2].astype(np.uint32)) >> 8
-    means = gray.reshape(m, 8, bh, 8, bw).sum(axis=(2, 4), dtype=np.int64)
-    means = means.reshape(m, 64)
+    gray = np.multiply(px[..., 0], 77, dtype=np.uint16)
+    gray += np.multiply(px[..., 1], 150, dtype=np.uint16)
+    gray += np.multiply(px[..., 2], 29, dtype=np.uint16)
+    gray >>= 8
+    rows = gray.reshape(m, 8, bh, 8, bw).sum(axis=4, dtype=np.uint32)
+    means = rows.sum(axis=2, dtype=np.int64).reshape(m, 64)
     bits = means > np.median(means, axis=1)[:, None]
     # bit i -> bit i of a little-endian uint64, read as two's complement
     return np.packbits(bits, axis=1, bitorder="little").view("<i8")[:, 0]
@@ -238,11 +254,7 @@ def phash64(img: np.ndarray) -> int:
 
 
 def hamming64(a, b) -> np.ndarray:
-    """Vectorized Hamming distance between int64 phashes."""
-    x = (np.asarray(a, dtype=np.int64) ^ np.asarray(b, dtype=np.int64)).astype(np.uint64)
-    x = x.copy()
-    cnt = np.zeros(x.shape, dtype=np.int64)
-    for _ in range(64):
-        cnt += (x & np.uint64(1)).astype(np.int64)
-        x >>= np.uint64(1)
-    return cnt
+    """Vectorized Hamming distance between int64 phashes: a popcount of
+    the XOR's eight bytes."""
+    x = (np.asarray(a, dtype=np.int64) ^ np.asarray(b, dtype=np.int64))[..., None]
+    return np.unpackbits(x.view(np.uint8), axis=-1).sum(axis=-1, dtype=np.int64)

@@ -1305,7 +1305,16 @@ def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
     no longer hard-fails at the pairwise kernel's O(E^2) budget.  Only
     a near-fractal boundary that stays over budget at 2 features (or a
     single oversized feature) still raises.
+
+    An empty or null ring bounds nothing and is skipped; a feature left
+    with no ring adds nothing, and no feature at all unions to no ring.
     """
+    kept = [[k for k, r in enumerate(fx) if r is not None and len(r)]
+            for fx in feat_rings_xs]
+    feat_rings_xs = [[fx[k] for k in ks]
+                     for fx, ks in zip(feat_rings_xs, kept) if ks]
+    feat_rings_ys = [[fy[k] for k in ks]
+                     for fy, ks in zip(feat_rings_ys, kept) if ks]
     n_edges = sum(len(r) for f in feat_rings_xs for r in f)
     if n_edges > max_edges and len(feat_rings_xs) > 2:
         centers = np.array([
@@ -1342,8 +1351,9 @@ def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
                            for xs, ys in oriented))
         feats[key] = oriented
     polys = list(feats.values())
-    if len(polys) == 1:
-        return [r[0] for r in polys[0]], [r[1] for r in polys[0]]
+    if len(polys) < 2:
+        return ([r[0] for p in polys for r in p],
+                [r[1] for p in polys for r in p])
 
     owner_l, x0_l, y0_l, ring_lens = [], [], [], []
     for i, feat_rings in enumerate(polys):

@@ -86,11 +86,14 @@ def _dissolve(tbl: pa.Table) -> pa.Table:
     :func:`geom.feature_union`, holes and parts included; a union
     degeneracy takes the convex hull of every vertex instead.
     ``n_members`` sums, and ``exact`` holds only if every input was
-    exact and the union succeeded."""
+    exact and the union succeeded.  Empty and null rings add nothing; a
+    non-finite vertex raises ``ValueError`` before the union runs."""
     def runs(v, counts):        # consecutive runs of `counts` items
         return [v[e - n:e] for e, n in zip(np.cumsum(counts), counts)]
 
     fr = schema.read_rings(tbl["rings_xs"], tbl["rings_ys"])
+    if not (np.isfinite(fr.x).all() and np.isfinite(fr.y).all()):
+        raise ValueError("dissolve input has a non-finite vertex")
     try:
         uxs, uys = geom.feature_union(
             runs(runs(fr.x, fr.ring_lens), fr.ring_nx),
@@ -99,7 +102,8 @@ def _dissolve(tbl: pa.Table) -> pa.Table:
     except geom.UnionDegeneracyError:
         hx, hy = geom.convex_hull(fr.x, fr.y)
         uxs, uys, exact = [hx], [hy], False
-    out = schema.rings_array([None], np.concatenate(uxs), np.concatenate(uys),
+    out = schema.rings_array([None], np.concatenate(uxs or [[]]),
+                             np.concatenate(uys or [[]]),
                              [len(r) for r in uxs], [len(uxs)], [False])
     keys = [c for c in tbl.column_names if c not in
             ("rings_xs", "rings_ys", "n_members", "exact")]
@@ -127,13 +131,15 @@ def dissolve_union(df: DataFrame) -> tuple:
     2.4), :func:`_dissolve` at every stage: per partition (output
     bounded by the partition's union boundary, not its row count), in
     distributed rounds of ``fanin`` until at most ``fanin`` partials
-    remain, then at the driver.  Rows with no ring (null or EMPTY) are
-    dropped in the plan.  Returns ``(rings_xs, rings_ys, exact)`` —
-    outer rings CCW, holes CW.  Raises ReduceError when no feature has
-    a ring (`fiona/features.py:282-316`).  A frame with only
-    ``xs``/``ys`` enters through :func:`schema.with_rings`.
+    remain, then at the driver.  Rows with no non-empty ring (null,
+    EMPTY, or only empty or null rings) are dropped in the plan.
+    Returns ``(rings_xs, rings_ys, exact)`` — outer rings CCW, holes
+    CW.  Raises ReduceError when no feature has a ring
+    (`fiona/features.py:282-316`).  A frame with only ``xs``/``ys``
+    enters through :func:`schema.with_rings`.
     """
-    parts = (schema.with_rings(df).filter(F.size("rings_xs") > 0)
+    parts = (schema.with_rings(df)
+             .filter(F.exists("rings_xs", lambda r: F.size(r) > 0))
              .select(*_members("rings_xs", "rings_ys"))
              .mapInArrow(_dissolve_partition, _DISSOLVED))
     # at 10^5 input partitions the driver final would otherwise absorb

@@ -913,7 +913,7 @@ def block_tiles(images: DataFrame, res: int, block: int = 8) -> DataFrame:
     with a null payload, fmt, w or h are dropped in the plan, before
     the Python boundary.
     """
-    from .images import decoded_chunks, emit_batch
+    from .images import decoded_chunks, emit_batch, plane_sum
 
     out_schema = ("image_id string, bx int, by int, cell long, mean_lum double")
 
@@ -928,11 +928,10 @@ def block_tiles(images: DataFrame, res: int, block: int = 8) -> DataFrame:
                 if nbx == 0 or nby == 0:
                     continue
                 m = len(rows)
-                # grayscale: uint16 channel sum + one float64 divide
-                # is BIT-identical to float64 mean (sums <= 765 are
-                # exact) and skips the 8x-size float64 image copy
-                g = (imgs[:, : nby * block, : nbx * block]
-                     .sum(axis=3, dtype=np.uint16) / 3.0)
+                # grayscale: the exact uint16 plane sum + one float64
+                # divide is BIT-identical to the float64 channel mean
+                # and skips the 8x-size float64 image copy
+                g = plane_sum(imgs[:, : nby * block, : nbx * block]) / 3.0
                 means = g.reshape(m, nby, block, nbx, block).mean(axis=(2, 4))
                 # tile centers in geography (row 0 = north edge)
                 xmn, xmx, ymn, ymx = (bbox[c][rows][:, None] for c in

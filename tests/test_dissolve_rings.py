@@ -9,10 +9,14 @@ when it is inside any feature.  Every coordinate is a whole number, so
 quarter-cell centers decide membership exactly.
 """
 
+import math
+
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from fiona_spark import geom
+from fiona_spark.errors import ReduceError
 from fiona_spark.operators import aggregates
 
 from .test_kernels import _pip_reference
@@ -100,3 +104,53 @@ def test_dissolve_components_rings(layer, max_pairs):
     px, py = _grid()
     assert (_inside_any(px, py, [merged])
             == _inside_any(px, py, [MULTI, BAR])).all()
+
+
+def _members_table(rings):
+    """A ``_dissolve`` input: one member row per (rings_xs, rings_ys)."""
+    t = pa.list_(pa.list_(pa.float64()))
+    return pa.table({"rings_xs": pa.array([r[0] for r in rings], t),
+                     "rings_ys": pa.array([r[1] for r in rings], t),
+                     "n_members": pa.array([1] * len(rings), pa.int64()),
+                     "exact": [True] * len(rings)})
+
+
+UNIT = _feature(_box(0., 0., 1., 1.))
+NAN_RING = ([[math.nan, 1., 1.]], [[0., 0., 1.]])
+
+
+def test_dissolve_skips_empty_and_null_rings():
+    """An empty or null ring adds nothing; a feature left with no ring
+    adds nothing (it failed the union with an IndexError)."""
+    row = aggregates._dissolve(_members_table(
+        [UNIT, ([[]], [[]]), ([None, [5., 6., 6.]], [None, [0., 0., 1.]])]
+    )).to_pylist()[0]
+    assert row["n_members"] == 3 and row["exact"]
+    assert geom.union_area(row["rings_xs"], row["rings_ys"]) == 1.5
+    row = aggregates._dissolve(_members_table([UNIT, ([[]], [[]])])).to_pylist()[0]
+    assert (row["rings_xs"], row["rings_ys"], row["exact"]) == (
+        [[0., 1., 1., 0.]], [[0., 0., 1., 1.]], True)
+    empty = aggregates._dissolve(_members_table([([[]], [[]])])).to_pylist()[0]
+    assert (empty["rings_xs"], empty["rings_ys"]) == ([], [])
+
+
+def test_dissolve_union_no_ring_left_raises(spark):
+    """Rows whose every ring is empty or null are dropped in the plan
+    like null and EMPTY rows, so a layer of only such rows has nothing
+    to reduce."""
+    df = spark.createDataFrame([(0, "Polygon", [[]], [[]]),
+                                (1, "Polygon", [None], [None]),
+                                (2, None, None, None)], RINGS)
+    with pytest.raises(ReduceError):
+        aggregates.dissolve_union(df)
+
+
+def test_dissolve_rejects_non_finite_vertex(spark):
+    """A NaN vertex fails loudly before the union; it came back inside
+    a convex hull flagged only ``exact=False``."""
+    with pytest.raises(ValueError, match="non-finite vertex"):
+        aggregates._dissolve(_members_table([UNIT, NAN_RING]))
+    df = spark.createDataFrame([(0, "Polygon", *UNIT), (1, "Polygon", *NAN_RING)],
+                               RINGS)
+    with pytest.raises(Exception, match="dissolve input has a non-finite vertex"):
+        aggregates.dissolve_union(df)

@@ -525,7 +525,10 @@ def test_codec_matches_scalar_references():
     """decode, decode_batch, encode and phash64 equal the scalar spec
     references with ``==`` for every format on square, odd, 1x1 and
     one-row shapes (q6/q4 partial bit groups), RLE runs over 255 and
-    two identical adjacent images (runs meeting at an image boundary)."""
+    two identical adjacent images (runs meeting at an image boundary).
+    RLE also gets runs of exactly 255 (no split) and 256 (one split),
+    and a stack whose 255-runs end exactly at an image boundary where
+    the next image starts with the same value, encoded as one batch."""
     rng = np.random.default_rng(7)
     for fmt in ("raw", "rle", "q6", "q4"):
         for (w, h) in ((16, 16), (37, 23), (3, 5), (1, 1), (7, 1)):
@@ -534,6 +537,19 @@ def test_codec_matches_scalar_references():
             imgs.append(np.full((h, w, 3), 9, np.uint8))   # runs > 255
             imgs.append(imgs[-1].copy())                    # identical pair
             imgs.append((rng.integers(0, 2, (h, w, 3)) * 200).astype(np.uint8))
+            n = 3 * w * h
+            if n > 300:
+                for run in (255, 256):
+                    flat = rng.integers(0, 8, n).astype(np.uint8)
+                    flat[9], flat[10:10 + run], flat[10 + run] = 8, 9, 8
+                    imgs.append(flat.reshape(h, w, 3))
+                flat = rng.integers(0, 8, n).astype(np.uint8)
+                flat[0], flat[1], flat[-256], flat[-255:] = 9, 8, 8, 9
+                edge = np.stack([flat.reshape(h, w, 3)] * 2)
+                buf, offs = codec.encode_core(edge, fmt)
+                want = [_encode_reference(im, fmt) for im in edge]
+                assert buf.tobytes() == b"".join(want)
+                assert offs.tolist() == [0, len(want[0]), 2 * len(want[0])]
             datas = [codec.encode(im, fmt) for im in imgs]
             assert datas == [_encode_reference(im, fmt) for im in imgs]
             want = np.stack([_decode_reference(d, fmt, w, h) for d in datas])

@@ -121,6 +121,45 @@ def test_decode_stats_matches_pandas(spark, images, images_pdf):
         assert tuple(g[["n_px", "mean_r", "mean_g", "mean_b", "lum_p50"]]) == want
 
 
+ODD_SHAPE_SCHEMA = ("image_id string, bytes binary, fmt string, w int, h int, "
+                    "xmin double, ymin double, xmax double, ymax double")
+
+
+def odd_shape_images(spark):
+    """Shapes the fixture never produces (1x1, 3x5, 37x23, 7x9: odd
+    pixel counts, partial blocks, no whole block), each in raw, rle and
+    q6, mixed in ONE partition so one Arrow batch holds every format.
+    Returns (frame, rows)."""
+    rng = np.random.default_rng(11)
+    rows = []
+    for w, h in ((1, 1), (3, 5), (37, 23), (7, 9)):
+        for fmt in ("raw", "rle", "q6"):
+            for k in range(2):
+                img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+                if k:       # long runs, so rle splits at 255
+                    img[: h // 2] = 200
+                x0, y0 = rng.uniform(-170, 160), rng.uniform(-80, 70)
+                rows.append((f"{w}x{h}_{fmt}_{k}", codec.encode(img, fmt), fmt,
+                             w, h, x0, y0, x0 + 1.5, y0 + 0.75))
+    return spark.createDataFrame(rows, ODD_SHAPE_SCHEMA).coalesce(1), rows
+
+
+def test_decode_stats_odd_shapes_mixed_formats(spark):
+    """Odd ``n_px`` (the single middle rank of the median) on shapes the
+    fixture lacks, raw/rle/q6 in one batch: every stat ``==`` the
+    float64 per-image formulas over the scalar spec decode."""
+    from fiona_spark.operators import images as iops
+    df, rows = odd_shape_images(spark)
+    got = iops.decode_stats(df).toPandas().set_index("image_id")
+    assert len(got) == len(rows)
+    for iid, data, fmt, w, h, *_ in rows:
+        f = _decode_reference(data, fmt, w, h).astype(np.float64)
+        want = (w * h, f[:, :, 0].mean(), f[:, :, 1].mean(),
+                f[:, :, 2].mean(), float(np.median(f.mean(axis=2))))
+        g = got.loc[iid]
+        assert tuple(g[["n_px", "mean_r", "mean_g", "mean_b", "lum_p50"]]) == want
+
+
 @pytest.mark.parametrize("fmt", ["raw", "rle", "q6", "q4"])
 def test_decode_stats_rejects_truncated_payload(spark, fmt):
     """A payload one byte short fails the Spark job with the codec's

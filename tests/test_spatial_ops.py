@@ -389,6 +389,34 @@ def test_block_tiles_matches_scalar_reference(spark, images, images_pdf):
     assert len(got) == n_exp
 
 
+def test_block_tiles_odd_shapes_mixed_formats(spark):
+    """Trimmed edges on shapes the fixture lacks: 37x23 keeps its 4x2
+    whole blocks, 7x9 and smaller images have no whole block and emit
+    nothing; raw/rle/q6 in one batch.  Every tile's cell and mean_lum
+    ``==`` a per-image reference over the scalar spec decode (float64
+    channel mean, block means summed in the operator's axis order)."""
+    from .test_kernels import _decode_reference
+    from .test_new_ops import odd_shape_images
+
+    df, rows = odd_shape_images(spark)
+    got = {(r.image_id, r.bx, r.by): (r.cell, r.mean_lum)
+           for r in spatial.block_tiles(df, res=12, block=8).collect()}
+    want = {}
+    for iid, data, fmt, w, h, xmin, ymin, xmax, ymax in rows:
+        nbx, nby = w // 8, h // 8
+        g = _decode_reference(data, fmt, w, h).astype(np.float64).mean(axis=2)
+        lum = g[: nby * 8, : nbx * 8].reshape(nby, 8, nbx, 8).mean(axis=(1, 3))
+        for by in range(nby):
+            for bx in range(nbx):
+                cxv = xmin + (bx + 0.5) / nbx * (xmax - xmin)
+                cyv = ymax - (by + 0.5) / nby * (ymax - ymin)
+                want[(iid, bx, by)] = (
+                    int(cells.cell_id(np.array([cxv]), np.array([cyv]), 12)[0]),
+                    lum[by, bx])
+    assert len(want) == 3 * 2 * 4 * 2
+    assert got == want
+
+
 def test_block_tiles_drops_null_rows(spark, images):
     """Rows with a null payload, fmt, w or h are dropped before the
     Python boundary: the tiles equal those of the remaining rows."""

@@ -880,27 +880,6 @@ def kernel_from_proj4(p4):
     return None
 
 
-def cut_antimeridian_bbox(xmin, ymin, xmax, ymax):
-    """Split bboxes that wrap past +/-180 into up to two boxes.
-
-    Wrap convention: a bbox with xmin > xmax crosses the antimeridian
-    (semantics per fiona/_transform.pyx:131-183 DATELINEOFFSET cutting).
-    Returns list of (xmin, ymin, xmax, ymax) per row.
-    """
-    out = []
-    xmin = np.atleast_1d(np.asarray(xmin, np.float64))
-    xmax = np.atleast_1d(np.asarray(xmax, np.float64))
-    ymin = np.atleast_1d(np.asarray(ymin, np.float64))
-    ymax = np.atleast_1d(np.asarray(ymax, np.float64))
-    for i in range(len(xmin)):
-        if xmin[i] > xmax[i]:
-            out.append([(xmin[i], ymin[i], 180.0, ymax[i]),
-                        (-180.0, ymin[i], xmax[i], ymax[i])])
-        else:
-            out.append([(xmin[i], ymin[i], xmax[i], ymax[i])])
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Simplify / buffer (fiona/features.py wrappers -> numpy)
 # ---------------------------------------------------------------------------
@@ -1188,40 +1167,6 @@ def _param_on(ex, ey, dx, dy, px, py):
     return (py - ey) / dy if dy != 0 else None
 
 
-def polygon_union(polys_x, polys_y, max_edges: int = 200_000):
-    """Exact boolean union of simple single-ring polygons — the
-    one-ring-per-feature convenience wrapper over
-    :func:`feature_union`.  Returns (rings_xs, rings_ys): the union
-    boundary — outer rings CCW, holes CW, so the SIGNED shoelace sum is
-    the exact union area and the rings drop straight into the engine's
-    even-odd PIP kernels.
-
-    Boundary-fragment algorithm, all numpy:
-      1. split every edge at its proper intersections with edges of
-         other polygons (intersection points computed once per pair, so
-         both owners share bit-identical split coordinates); COLLINEAR
-         overlapping edges — shared parcel borders, the common dissolve
-         input — split at each other's exact endpoints instead of
-         raising;
-      2. keep a fragment iff a probe just off its EXTERIOR side (right
-         of the CCW direction, eps = 1e-9 x component diagonal) is
-         outside the union of all polygons (even-odd, packed-edge
-         kernel) — this drops interior shared borders and keeps one
-         copy of stacked boundary segments;
-      3. stitch kept fragments end-to-start (exact float matching) into
-         closed rings; pinch vertices (checkerboard corner contacts,
-         several kept fragments leaving one point) resolve via
-         clockwise face traversal — each lobe closes as its own ring
-         (r4: no longer a raise).
-    Residual degeneracies (geometry closer than eps to another
-    boundary, open/re-entrant chains) raise
-    :class:`UnionDegeneracyError`.  Exact duplicate rings are
-    deduplicated up-front.
-    """
-    return feature_union([[rx] for rx in polys_x],
-                         [[ry] for ry in polys_y], max_edges)
-
-
 def _on_ring_boundary(px: float, py: float, xs, ys) -> bool:
     """True when point (px, py) lies EXACTLY on an edge of the ring
     (collinear and inside the edge's bbox).  Used to reject nesting
@@ -1289,9 +1234,8 @@ def _ring_interior_point(xs, ys):
 
 def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
     """Exact even-odd union of MULTI-RING features (holes included):
-    the general form behind :func:`polygon_union`, and the union of
-    every dissolve stage (``operators.aggregates._dissolve``, whose
-    partial results carry holes).  ``feat_rings_xs[i]`` is the ring
+    the union of every dissolve stage (``operators.aggregates._dissolve``,
+    whose partial results carry holes).  ``feat_rings_xs[i]`` is the ring
     list of feature i.  Ring roles derive from NESTING DEPTH within the
     feature (even = outer, odd = hole) and rings are oriented
     interior-on-left (outer CCW, hole CW) so the exterior-side probe of
@@ -1542,16 +1486,6 @@ def feature_union(feat_rings_xs, feat_rings_ys, max_edges: int = 200_000):
     return out_xs, out_ys
 
 
-def union_area(rings_xs, rings_ys) -> float:
-    """SIGNED shoelace sum over :func:`polygon_union` output rings
-    (outer CCW positive, holes CW negative) = exact union area."""
-    tot = 0.0
-    for xs, ys in zip(rings_xs, rings_ys):
-        xs = np.asarray(xs, np.float64); ys = np.asarray(ys, np.float64)
-        tot += float(np.sum(xs * np.roll(ys, -1) - np.roll(xs, -1) * ys)) * 0.5
-    return tot
-
-
 def _clip_halfplane(xs: np.ndarray, ys: np.ndarray, bound: float,
                     keep_le: bool):
     """Sutherland-Hodgman clip of one closed ring against x <= bound
@@ -1609,8 +1543,7 @@ _DATELINE_EPS = 1e-9
 
 def cut_dateline_rings(rings_xs, rings_ys, offset: float = 10.0,
                        closed: bool = True):
-    """Cut geometry RINGS at the antimeridian — the geometry-level
-    analogue of :func:`cut_antimeridian_bbox` and of the reference's
+    """Cut geometry RINGS at the antimeridian — the reference's
     WRAPDATELINE/DATELINEOFFSET transform option
     (`fiona/_transform.pyx:151-160`; OGR default offset 10 deg).
 

@@ -19,11 +19,10 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 
 def read_arcgen(spark, path: str) -> DataFrame:
@@ -72,5 +71,4 @@ def read_arcgen(spark, path: str) -> DataFrame:
                      "rings_xs": [xs], "rings_ys": [ys]})
     if not rows:
         raise DriverError(f"no features in generate file {path!r}")
-    return with_ring_columns(spark.createDataFrame(
-        pd.DataFrame(rows, dtype=object)))
+    return rows_frame(spark, rows, {"fid": T.LongType()})

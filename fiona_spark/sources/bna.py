@@ -23,10 +23,10 @@ Coordinates may be packed several per line; the parser tokenizes the
 record tail and consumes ``2*|count|`` floats, which handles every
 layout the spec allows.
 
-Driver-side parse + ``createDataFrame`` (line-oriented single file,
-same convention as the other r4/r5 text drivers); the writer streams
-``toLocalIterator`` — driver-serial single-file encode, route bulk
-exports through parquet/iceberg_like.
+Driver-side parse into one typed frame (``drivers.rows_frame``; the
+``id1``..``idN`` header fields are strings), like the other text
+drivers; the writer streams ``toLocalIterator`` — driver-serial
+single-file encode, route bulk exports through parquet/iceberg_like.
 """
 
 from __future__ import annotations
@@ -34,11 +34,11 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
+from .drivers import rows_frame
 
 _HEADER = re.compile(r'^\s*"')
 
@@ -61,6 +61,7 @@ def read_bna(spark, path: str) -> DataFrame:
     with open(path, encoding="utf-8", errors="replace") as f:
         lines = [ln.rstrip("\n") for ln in f]
     rows, i, n = [], 0, len(lines)
+    fields = {"fid": T.LongType()}
     while i < n:
         line = lines[i]
         if not line.strip():
@@ -96,15 +97,13 @@ def read_bna(spark, path: str) -> DataFrame:
             gt, rxs, rys = "LineString", [xs], [ys]
         else:
             gt, rxs, rys = "Polygon", [xs], [ys]
-        row = {"fid": len(rows), "geom_type": gt,
-               "rings_xs": rxs, "rings_ys": rys}
-        for k, v in enumerate(ids):
-            row[f"id{k + 1}"] = v
-        rows.append(row)
+        ids = {f"id{k + 1}": v for k, v in enumerate(ids)}
+        fields.update(dict.fromkeys(ids, T.StringType()))
+        rows.append({"fid": len(rows), "geom_type": gt,
+                     "rings_xs": rxs, "rings_ys": rys, **ids})
     if not rows:
         raise DriverError(f"no BNA records in {path!r}")
-    return with_ring_columns(spark.createDataFrame(
-        pd.DataFrame(rows, dtype=object)))
+    return rows_frame(spark, rows, fields)
 
 
 def write_bna(df: DataFrame, path: str) -> None:

@@ -36,11 +36,10 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 __all__ = ["read_dgn"]
 
@@ -183,10 +182,8 @@ def read_dgn(spark, path: str) -> DataFrame:
 
     if not rows:
         raise DriverError(f"no elements in DGN file {path!r}")
-    pdf = pd.DataFrame(rows)
-    schema = ("fid bigint, Type int, Level int, GraphicGroup int, "
-              "ColorIndex int, Weight int, Style int, Text string, "
-              "geom_type string, rings_xs array<array<double>>, "
-              "rings_ys array<array<double>>")
-    df = spark.createDataFrame(pdf, schema=schema)
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, {
+        "fid": T.LongType(),
+        **dict.fromkeys(("Type", "Level", "GraphicGroup", "ColorIndex",
+                         "Weight", "Style"), T.IntegerType()),
+        "Text": T.StringType()})

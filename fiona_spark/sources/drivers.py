@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
 from ..schema import RINGS_STRUCT, with_ring_columns
@@ -184,7 +184,6 @@ def decode_geometry_column(df: DataFrame, col: str, decode) -> DataFrame:
     ``WKBError``, both ``ValueError``s.  Any other error fails the
     read."""
     import pandas as pd
-    from pyspark.sql import types as T
 
     from .. import model
 
@@ -205,6 +204,30 @@ def decode_geometry_column(df: DataFrame, col: str, decode) -> DataFrame:
 
     return with_ring_columns(df.mapInPandas(
         run, T.StructType(df.schema.fields + RINGS_STRUCT.fields)))
+
+
+def ring_schema(fields: dict) -> T.StructType:
+    """A reader's declared columns, ``fields`` (name -> Spark type, in
+    column order), followed by the ``RINGS_STRUCT`` columns."""
+    return T.StructType([T.StructField(n, t) for n, t in fields.items()]
+                        + RINGS_STRUCT.fields)
+
+
+def rows_frame(spark, rows: list[dict], fields: dict) -> DataFrame:
+    """The one frame builder of the driver-side readers: ``rows`` (one
+    dict per feature) against ``ring_schema(fields)``, as one Arrow
+    table.  No type is ever inferred: a key a row lacks is null (so is
+    a ring column of a row without geometry; an EMPTY one is ``[]``),
+    and a value that does not convert to its declared type raises.
+    A naive ``datetime`` is session-local time, as Spark reads it from
+    pandas."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = ring_schema(fields)
+    table = pa.Table.from_pylist(
+        rows, to_arrow_schema(schema, timestamp_utc=False))
+    return with_ring_columns(spark.createDataFrame(table, schema))
 
 
 def _write_csv(df: DataFrame, path, mode="overwrite", **opts):

@@ -21,17 +21,17 @@ surface short of HATCH, so multi-ring polygons flatten to one entity
 per ring; single-ring polygons round trip exactly).  Coordinates
 print via ``repr`` — bit-exact round trips, the engine-wide rule.
 
-Driver-side parse + ``createDataFrame``; the writer streams
+Driver-side parse into one typed frame (``drivers.rows_frame``;
+``layer`` and ``entity`` are strings); the writer streams
 ``toLocalIterator`` (single text file = driver-serial encode).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 
 def _pairs(path: str):
@@ -128,7 +128,8 @@ def read_dxf(spark, path: str) -> DataFrame:
     flush()
     if not rows:
         raise DriverError(f"no supported entities in {path!r}")
-    return with_ring_columns(spark.createDataFrame(pd.DataFrame(rows)))
+    return rows_frame(spark, rows, {"fid": T.LongType(), **dict.fromkeys(
+        ("layer", "entity"), T.StringType())})
 
 
 def write_dxf(df: DataFrame, path: str) -> None:

@@ -32,10 +32,11 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
 from ..schema import RING_COLS, with_ring_columns
+from .drivers import ring_schema
 
 MAGIC = b"fgb\x03fgb\x00"
 
@@ -57,12 +58,13 @@ _CT_STRUCT = {CT_BYTE: "<b", CT_UBYTE: "<B", CT_BOOL: "<B",
               CT_SHORT: "<h", CT_USHORT: "<H", CT_INT: "<i",
               CT_UINT: "<I", CT_LONG: "<q", CT_ULONG: "<Q",
               CT_FLOAT: "<f", CT_DOUBLE: "<d"}
-_CT_SPARK = {CT_BYTE: "int", CT_UBYTE: "int", CT_BOOL: "boolean",
-             CT_SHORT: "int", CT_USHORT: "int", CT_INT: "int",
-             CT_UINT: "long", CT_LONG: "long", CT_ULONG: "long",
-             CT_FLOAT: "float", CT_DOUBLE: "double",
-             CT_STRING: "string", CT_JSON: "string",
-             CT_DATETIME: "string", CT_BINARY: "binary"}
+_I, _L, _S = T.IntegerType(), T.LongType(), T.StringType()
+_CT_SPARK = {CT_BYTE: _I, CT_UBYTE: _I, CT_BOOL: T.BooleanType(),
+             CT_SHORT: _I, CT_USHORT: _I, CT_INT: _I,
+             CT_UINT: _L, CT_LONG: _L, CT_ULONG: _L,
+             CT_FLOAT: T.FloatType(), CT_DOUBLE: T.DoubleType(),
+             CT_STRING: _S, CT_JSON: _S, CT_DATETIME: _S,
+             CT_BINARY: T.BinaryType()}
 _SPARK_CT = {"string": CT_STRING, "long": CT_LONG, "bigint": CT_LONG,
              "int": CT_INT, "smallint": CT_SHORT, "tinyint": CT_BYTE,
              "double": CT_DOUBLE, "float": CT_FLOAT,
@@ -514,12 +516,8 @@ def read_flatgeobuf(spark, path: str, bbox=None) -> DataFrame:
                         "fgb0body": blobs})
     # explicit schema: inference fails on an empty (0-feature) file
     src = spark.createDataFrame(pdf, schema="fid long, fgb0body binary")
-    prop_schema = ", ".join(
-        f"`{cname}` {_CT_SPARK[ct]}" for cname, ct in cols)
-    out_schema = ("fid bigint, "
-                  + (prop_schema + ", " if prop_schema else "")
-                  + "geom_type string, rings_xs array<array<double>>, "
-                    "rings_ys array<array<double>>")
+    out_schema = ring_schema(
+        {"fid": T.LongType(), **{c: _CT_SPARK[ct] for c, ct in cols}})
     col_names = [c for c, _t in cols]
 
     def run(batches):

@@ -21,11 +21,11 @@ from __future__ import annotations
 import sqlite3
 import struct
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
+from .sqlite_db import layer_frame
 
 _ENV_DOUBLES = {0: 0, 1: 4, 2: 6, 3: 6, 4: 8}
 
@@ -109,41 +109,8 @@ def read_geopackage(spark, path: str, layer: str | None = None,
                 (bbox[2], bbox[0], bbox[3], bbox[1]))
         else:
             cur = con.execute(f'SELECT * FROM "{layer}"')
-        cols = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-    pdf = pd.DataFrame(rows, columns=cols)
-    pdf[geom_col] = pdf[geom_col].map(
-        lambda b: bytes(b) if b is not None else None)
-    src = spark.createDataFrame(pdf).withColumnRenamed(geom_col, "gpkg0blob")
-
-    out_schema = (", ".join(f"`{c}` {t}" for c, t in zip(
-        src.schema.names, [f.dataType.simpleString()
-                           for f in src.schema.fields])
-        if c != "gpkg0blob")
-        + ", geom_type string, rings_xs array<array<double>>, "
-          "rings_ys array<array<double>>")
-
-    def run(batches):
-        from .. import model, wkb
-        for b in batches:
-            recs = []
-            for d in b.to_dict("records"):
-                blob = d.pop("gpkg0blob")
-                if blob is None:
-                    d.update(geom_type=None, rings_xs=None, rings_ys=None)
-                else:
-                    wkb_bytes, _srs = parse_gpkg_blob(blob)
-                    if wkb_bytes is None:
-                        d.update(geom_type=None, rings_xs=None,
-                                 rings_ys=None)
-                    else:
-                        g = wkb.decode(wkb_bytes)
-                        t, rxs, rys = model.rings_from_geometry(g)
-                        d.update(geom_type=t, rings_xs=rxs, rings_ys=rys)
-                recs.append(d)
-            yield pd.DataFrame(recs)
-
-    out = with_ring_columns(src.mapInPandas(run, out_schema))
+        out = layer_frame(spark, con, layer, cur, geom_col,
+                          lambda blob: parse_gpkg_blob(blob)[0])
     if bbox is not None:
         out = out.filter((F.col("xmin") <= bbox[2])
                          & (F.col("xmax") >= bbox[0])

@@ -15,7 +15,8 @@ MultiPolygon -> MultiPolygon, MultiPoint.
 
 Spark shape: XML has no record framing Spark can split on, so the
 document parses on the driver (like TopoJSON); the resulting feature
-list lands in one ``createDataFrame``.  Convert to parquet for bulk.
+list lands in one typed frame (``drivers.rows_frame``; every property
+a string column, in first-seen order).  Convert to parquet for bulk.
 """
 
 from __future__ import annotations
@@ -24,12 +25,12 @@ import os
 import xml.etree.ElementTree as ET
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
 from ..wkb import _linearize_arcs
+from .drivers import rows_frame
 
 
 def _local(tag: str) -> str:
@@ -169,6 +170,7 @@ def read_gml(spark, path: str) -> DataFrame:
     """Open a GML FeatureCollection as a ring-model DataFrame."""
     root = ET.parse(path).getroot()
     rows = []
+    fields = {"fid": T.LongType()}
     for member in root:
         if _local(member.tag) not in ("featureMember", "member"):
             continue
@@ -185,12 +187,12 @@ def read_gml(spark, path: str) -> DataFrame:
                     continue
                 if ch.text and ch.text.strip():
                     props[_local(ch.tag)] = ch.text.strip()
+            fields.update(dict.fromkeys(props, T.StringType()))
             rows.append({"fid": len(rows), "geom_type": t,
                          "rings_xs": rxs, "rings_ys": rys, **props})
     if not rows:
         raise DriverError(f"no featureMember elements in {path!r}")
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, fields)
 
 
 # ---------------------------------------------------------------------------

@@ -40,14 +40,14 @@ records) and patches counts + bounds.
 from __future__ import annotations
 
 import datetime as _dt
+import math
 import os
 import struct
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 __all__ = ["read_gtm", "write_gtm", "append_gtm", "LAYERS"]
 
@@ -163,10 +163,9 @@ def read_gtm(spark, path: str, layer: str = "waypoints") -> DataFrame:
                 "rings_xs": [[w["lon"]]], "rings_ys": [[w["lat"]]],
                 "name": w["name"], "comment": w["comment"],
                 "icon": w["icon"], "time": _wdate_to_ts(w["wdate"])})
-        schema = ("fid long, geom_type string, "
-                  "rings_xs array<array<double>>, "
-                  "rings_ys array<array<double>>, "
-                  "name string, comment string, icon int, time timestamp")
+        fields = {"fid": T.LongType(), "name": T.StringType(),
+                  "comment": T.StringType(), "icon": T.IntegerType(),
+                  "time": T.TimestampType()}
     else:
         # split trackpoints into runs at start flags; header i -> run i
         runs, cur = [], None
@@ -185,18 +184,13 @@ def read_gtm(spark, path: str, layer: str = "waypoints") -> DataFrame:
                 "rings_ys": [[p["lat"] for p in run]],
                 "name": hdr["name"], "type": hdr["type"],
                 "color": hdr["color"]})
-        schema = ("fid long, geom_type string, "
-                  "rings_xs array<array<double>>, "
-                  "rings_ys array<array<double>>, "
-                  "name string, type int, color int")
-    df = spark.createDataFrame(pd.DataFrame(
-        rows, columns=[f.split()[0] for f in schema.split(", ")]),
-        schema=schema)
-    return with_ring_columns(df)
+        fields = {"fid": T.LongType(), "name": T.StringType(),
+                  "type": T.IntegerType(), "color": T.IntegerType()}
+    return rows_frame(spark, rows, fields)
 
 
 def _ts_to_wdate(val) -> int:
-    if val is None or (isinstance(val, float) and pd.isna(val)):
+    if val is None or (isinstance(val, float) and math.isnan(val)):
         return 0
     if isinstance(val, str):
         val = _dt.datetime.fromisoformat(val.replace("Z", "+00:00"))

@@ -5,7 +5,7 @@ MultiLineString of its trksegs), ``track_points`` (flattened trkpt
 rows), ``routes``/``route_points`` (rte/rtept) — mirrored here.
 
 Stdlib ``xml.etree`` parse on the driver (XML has no splittable
-framing), one ``createDataFrame`` per layer.
+framing), one typed frame per layer (``drivers.rows_frame``).
 """
 
 from __future__ import annotations
@@ -13,13 +13,13 @@ from __future__ import annotations
 import os
 import xml.etree.ElementTree as ET
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 LAYERS = ("waypoints", "tracks", "track_points", "routes", "route_points")
+_S, _L = T.StringType(), T.LongType()
 
 
 def _local(tag: str) -> str:
@@ -49,6 +49,7 @@ def read_gpx(spark, path: str, layer: str = "waypoints") -> DataFrame:
     root = ET.parse(path).getroot()
     rows = []
     if layer == "waypoints":
+        fields = {"fid": _L, "name": _S, "ele": _S, "time": _S}
         for el in root:
             if _local(el.tag) != "wpt":
                 continue
@@ -60,6 +61,7 @@ def read_gpx(spark, path: str, layer: str = "waypoints") -> DataFrame:
                 "ele": _child_text(el, "ele"),
                 "time": _child_text(el, "time")})
     elif layer in ("tracks", "routes"):
+        fields = {"fid": _L, "name": _S}
         holder, seg_tag, pt_tag = (
             ("trk", "trkseg", "trkpt") if layer == "tracks"
             else ("rte", None, "rtept"))
@@ -87,6 +89,8 @@ def read_gpx(spark, path: str, layer: str = "waypoints") -> DataFrame:
                 "rings_ys": [[p[1] for p in part] for part in parts],
                 "name": _child_text(el, "name")})
     else:                                     # track_points/route_points
+        fields = {"fid": _L, "track_fid": _L, "track_seg_id": _L,
+                  "ele": T.DoubleType(), "time": _S}
         holder, seg_tag, pt_tag = (
             ("trk", "trkseg", "trkpt") if layer == "track_points"
             else ("rte", None, "rtept"))
@@ -102,8 +106,7 @@ def read_gpx(spark, path: str, layer: str = "waypoints") -> DataFrame:
                         "ele": float(ele) if ele else None, "time": time})
     if not rows:
         raise DriverError(f"no {layer!r} features in {path!r}")
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, fields)
 
 
 # ---------------------------------------------------------------------------

@@ -4,8 +4,9 @@ features: ``name``/``description`` and ``ExtendedData`` SimpleData/Data
 entries are properties; Point/LineString/LinearRing/Polygon/MultiGeometry
 coordinates parse from the KML ``lon,lat[,alt]`` tuple text.
 
-Stdlib ``xml.etree`` parse on the driver (single-document XML), one
-``createDataFrame`` — the same shape as the GML/GPX sources.
+Stdlib ``xml.etree`` parse on the driver (single-document XML) into
+one typed frame (``drivers.rows_frame``), like the GML/GPX sources:
+every property is a string column, in first-seen order.
 """
 
 from __future__ import annotations
@@ -13,11 +14,11 @@ from __future__ import annotations
 import os
 import xml.etree.ElementTree as ET
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
+from .drivers import rows_frame
 
 
 def _local(tag: str) -> str:
@@ -95,6 +96,7 @@ def read_kml(spark, path: str) -> DataFrame:
     """Open a KML document's Placemarks as a ring-model DataFrame."""
     root = ET.parse(path).getroot()
     rows = []
+    fields = {"fid": T.LongType()}
 
     def walk(el):
         for ch in el:
@@ -123,12 +125,12 @@ def read_kml(spark, path: str) -> DataFrame:
                             val = v_el.text if v_el is not None else None
                         if key and val is not None:
                             props[key] = val.strip()
+        fields.update(dict.fromkeys(props, T.StringType()))
         rows.append({"fid": len(rows), "geom_type": t,
                      "rings_xs": rxs, "rings_ys": rys, **props})
     if not rows:
         raise DriverError(f"no Placemark elements in {path!r}")
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, fields)
 
 
 # ---------------------------------------------------------------------------

@@ -17,17 +17,18 @@ published spec, no GDAL):
   (strings quoted), aligned with the MIF record order.
 
 Column types map Char->string, Integer/Smallint->long, Float/Decimal->
-double, Logical->boolean, Date->string.  Coordinates round trip
-bit-exactly (written via ``repr``); no winding or closure
-normalization anywhere (the engine-wide format rule).
+double, Logical->boolean, Date->string; the COLUMNS block declares
+them, so a column with no value in any row keeps its type.
+Coordinates round trip bit-exactly (written via ``repr``); no winding
+or closure normalization anywhere (the engine-wide format rule).
 
 Modes: r / w / a ("raw", like the reference row).  Append validates
 the existing COLUMNS block matches the frame schema, then extends both
 files — MIF has no trailer, so appending is pure concatenation.
 
-Driver-side parse + ``createDataFrame``; writer streams
-``toLocalIterator`` (single-file driver-serial encode; bulk exports
-belong in parquet/iceberg_like).
+Driver-side parse into one typed frame (``drivers.rows_frame``);
+writer streams ``toLocalIterator`` (single-file driver-serial encode;
+bulk exports belong in parquet/iceberg_like).
 """
 
 from __future__ import annotations
@@ -37,11 +38,11 @@ import io
 import os
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
+from .drivers import rows_frame
 
 _STYLE = ("SYMBOL", "PEN", "BRUSH", "CENTER", "SMOOTH", "FONT")
 
@@ -76,17 +77,12 @@ def _parse_header(lines: list[str]):
     raise DriverError("MIF file has no DATA section")
 
 
-def _coerce(val: str, miftype: str):
-    t = miftype.split("(")[0].strip().lower()
-    if val == "":
-        return None
-    if t in ("integer", "smallint"):
-        return int(val)
-    if t in ("float", "decimal"):
-        return float(val)
-    if t == "logical":
-        return val.strip().upper() in ("T", "TRUE", "1")
-    return val
+#: MIF column type -> (Spark type, value parser); any other is a string
+_TYPES = {"integer": (T.LongType(), int), "smallint": (T.LongType(), int),
+          "float": (T.DoubleType(), float),
+          "decimal": (T.DoubleType(), float),
+          "logical": (T.BooleanType(),
+                      lambda v: v.strip().upper() in ("T", "TRUE", "1"))}
 
 
 def read_mapinfo(spark, path: str) -> DataFrame:
@@ -160,21 +156,20 @@ def read_mapinfo(spark, path: str) -> DataFrame:
         with open(mid, encoding="utf-8", errors="replace") as f:
             rdr = csv.reader(f, delimiter=delim, quotechar='"')
             attrs = [row for row in rdr if row]
+    specs = [(nm, *_TYPES.get(tp.split("(")[0].strip().lower(),
+                              (T.StringType(), str))) for nm, tp in columns]
     rows = []
     for k, (gt, rxs, rys) in enumerate(geoms):
         row = {"fid": k, "geom_type": gt,
                "rings_xs": rxs, "rings_ys": rys}
         vals = attrs[k] if k < len(attrs) else []
-        for c, (nm, tp) in enumerate(columns):
-            row[nm] = _coerce(vals[c] if c < len(vals) else "", tp)
+        for c, (nm, _t, parse) in enumerate(specs):
+            row[nm] = parse(vals[c]) if c < len(vals) and vals[c] else None
         rows.append(row)
     if not rows:
         raise DriverError(f"no MIF records in {path!r}")
-    # dtype=object keeps nullable numeric properties as None (a plain
-    # DataFrame would coerce float columns to NaN, which Spark stores
-    # as NaN, not NULL)
-    return with_ring_columns(spark.createDataFrame(
-        pd.DataFrame(rows, dtype=object)))
+    return rows_frame(spark, rows, {
+        "fid": T.LongType(), **{nm: t for nm, t, _p in specs}})
 
 
 def _mif_type(spark_t: str) -> str:

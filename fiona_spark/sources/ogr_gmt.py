@@ -27,20 +27,22 @@ exactly how the PIP kernel consumes them).  Round trips are bit-exact
 (coordinates print via ``repr``); no winding or closure normalization
 anywhere on the path.
 
-Driver-side parse + ``createDataFrame``; the writer streams
-``toLocalIterator`` (single text file = driver-serial encode — bulk
-exports belong in parquet/iceberg_like).
+Driver-side parse into one typed frame (``drivers.rows_frame``; the
+@T line declares the column types, so a column with no value in any
+row keeps its type); the writer streams ``toLocalIterator`` (single
+text file = driver-serial encode — bulk exports belong in
+parquet/iceberg_like).
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS
+from .drivers import rows_frame
 
 _GTYPES = {
     "POINT": "Point", "MULTIPOINT": "MultiPoint",
@@ -67,14 +69,14 @@ def _split_d(payload: str) -> list[str]:
     return out
 
 
+#: @T type -> (Spark type, value parser); any other is a string
+_TYPES = {**dict.fromkeys(("double", "float"), (T.DoubleType(), float)),
+          **dict.fromkeys(("integer", "int", "long"), (T.LongType(), int))}
+_STRING = (T.StringType(), str)
+
+
 def _coerce(val: str, typ: str):
-    if val == "":
-        return None
-    if typ in ("double", "float"):
-        return float(val)
-    if typ in ("integer", "int", "long"):
-        return int(val)
-    return val
+    return None if val == "" else _TYPES.get(typ, _STRING)[1](val)
 
 
 def read_gmt(spark, path: str) -> DataFrame:
@@ -163,15 +165,11 @@ def read_gmt(spark, path: str) -> DataFrame:
         raise DriverError(f"no GMT features in {path!r}")
     if gtype is None:
         gtype = "LineString"
-    rows = []
-    for i, ft in enumerate(feats):
-        row = {"fid": i, "geom_type": gtype,
-               "rings_xs": ft.pop("rings_xs"),
-               "rings_ys": ft.pop("rings_ys")}
-        row.update(ft)
-        rows.append(row)
-    return with_ring_columns(spark.createDataFrame(
-        pd.DataFrame(rows, dtype=object)))
+    rows = [{"fid": i, "geom_type": gtype, **ft}
+            for i, ft in enumerate(feats)]
+    return rows_frame(spark, rows, {"fid": T.LongType(), **{
+        nm: _TYPES.get(t, _STRING)[0]
+        for nm, t in zip(names, types + ["string"] * len(names))}})
 
 
 def write_gmt(df: DataFrame, path: str) -> None:

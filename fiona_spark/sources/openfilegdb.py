@@ -40,20 +40,22 @@ import uuid as _uuid
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
 from ..schema import RING_COLS, with_ring_columns
+from .drivers import ring_schema
 
 FT_INT16, FT_INT32, FT_FLOAT32, FT_FLOAT64, FT_STRING = 0, 1, 2, 3, 4
 FT_DATETIME, FT_OBJECTID, FT_GEOMETRY, FT_BINARY, FT_RASTER = 5, 6, 7, 8, 9
 FT_UUID, FT_GLOBALID, FT_XML = 10, 11, 12
 
-_FT_SPARK = {FT_INT16: "int", FT_INT32: "int", FT_FLOAT32: "float",
-             FT_FLOAT64: "double", FT_STRING: "string",
-             FT_DATETIME: "string", FT_OBJECTID: "long",
-             FT_BINARY: "binary", FT_UUID: "string",
-             FT_GLOBALID: "string", FT_XML: "string"}
+_S = T.StringType()
+_FT_SPARK = {FT_INT16: T.IntegerType(), FT_INT32: T.IntegerType(),
+             FT_FLOAT32: T.FloatType(), FT_FLOAT64: T.DoubleType(),
+             FT_STRING: _S, FT_DATETIME: _S, FT_OBJECTID: T.LongType(),
+             FT_BINARY: T.BinaryType(), FT_UUID: _S, FT_GLOBALID: _S,
+             FT_XML: _S}
 
 # extended shapefile enum inside geometry blobs -> (name, has_z, has_m)
 _SHAPES = {0: (None, False, False),
@@ -376,12 +378,9 @@ def read_openfilegdb(spark, path: str, layer: str | None = None) -> DataFrame:
                         "gdb0body": [r[1] for r in rows]})
     # explicit schema: inference fails on an empty (0-row) layer
     src = spark.createDataFrame(pdf, schema="fid long, gdb0body binary")
-    prop_cols = [(f["name"], _FT_SPARK[f["ftype"]]) for f in fields
-                 if f["ftype"] != FT_GEOMETRY]
-    out_schema = ("fid bigint, "
-                  + "".join(f"`{n}` {t}, " for n, t in prop_cols)
-                  + "geom_type string, rings_xs array<array<double>>, "
-                    "rings_ys array<array<double>>")
+    out_schema = ring_schema({"fid": T.LongType(), **{
+        f["name"]: _FT_SPARK[f["ftype"]] for f in fields
+        if f["ftype"] != FT_GEOMETRY}})
 
     def run(batches):
         for b in batches:

@@ -52,20 +52,19 @@ a cell whose DDR declares non-standard layouts raises rather than
 misparses (the ENC product spec mandates exactly these layouts, so
 real cells conform).
 
-Single-file format -> r4 convention: bytes parse on the driver, one
-``createDataFrame``; distributed decode is pointless below the ~MB
-cell sizes the format is specified for.
+Single-file format -> r4 convention: bytes parse on the driver into one
+typed frame (``drivers.rows_frame``); distributed decode is pointless
+below the ~MB cell sizes the format is specified for.
 """
 
 from __future__ import annotations
 
 import struct
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 __all__ = ["read_s57", "listlayers_s57"]
 
@@ -366,12 +365,7 @@ def read_s57(spark, path: str, layer: str | None = None) -> DataFrame:
         for code in attl_codes:
             row[f"ATTL_{code}"] = f["attrs"].get(code)
         rows.append(row)
-    attr_schema = "".join(f", `ATTL_{c}` string" for c in attl_codes)
-    schema = ("fid long, objl int, prim int, geom_type string, "
-              "rings_xs array<array<double>>, "
-              "rings_ys array<array<double>>" + attr_schema)
-    cols = ["fid", "objl", "prim", "geom_type", "rings_xs", "rings_ys"] + \
-        [f"ATTL_{c}" for c in attl_codes]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=cols),
-                               schema=schema)
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, {
+        "fid": T.LongType(), "objl": T.IntegerType(),
+        "prim": T.IntegerType(),
+        **{f"ATTL_{c}": T.StringType() for c in attl_codes}})

@@ -26,11 +26,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 __all__ = ["read_segy"]
 
@@ -125,12 +124,9 @@ def read_segy(spark, path: str) -> DataFrame:
 
     if not rows:
         raise DriverError(f"no traces in SEG-Y file {path!r}")
-    pdf = pd.DataFrame(rows)
-    schema = ("fid bigint, TRACE_NUMBER int, ENSEMBLE_NUMBER int, "
-              "COORDINATE_SCALAR int, SOURCE_X bigint, SOURCE_Y bigint, "
-              "SAMPLES_COUNT int, SAMPLE_INTERVAL int, "
-              "SAMPLES array<double>, geom_type string, "
-              "rings_xs array<array<double>>, "
-              "rings_ys array<array<double>>")
-    df = spark.createDataFrame(pdf, schema=schema)
-    return with_ring_columns(df)
+    i32, i64 = T.IntegerType(), T.LongType()
+    return rows_frame(spark, rows, {
+        "fid": i64, "TRACE_NUMBER": i32, "ENSEMBLE_NUMBER": i32,
+        "COORDINATE_SCALAR": i32, "SOURCE_X": i64, "SOURCE_Y": i64,
+        "SAMPLES_COUNT": i32, "SAMPLE_INTERVAL": i32,
+        "SAMPLES": T.ArrayType(T.DoubleType())})

@@ -28,11 +28,12 @@ import struct
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from .. import geom
 from ..errors import DriverError
 from ..schema import RING_COLS, with_ring_columns
+from .drivers import ring_schema
 
 SHP_NULL = 0
 SHP_POINT = 1
@@ -80,9 +81,16 @@ def _decode_record(body: bytes):
     return t, rxs, rys
 
 
-def _read_dbf(path: str, encoding: str | None = None) -> pd.DataFrame:
-    """dBase III attribute table -> pandas (numpy fixed-width slicing,
-    no per-row Python parse)."""
+#: dBase field type -> Spark type (N with no decimals: bigint; C and
+#: any other: string)
+_DBF_TYPES = {"N": T.DoubleType(), "F": T.DoubleType(),
+              "L": T.BooleanType(), "D": T.DateType()}
+
+
+def _read_dbf(path: str, encoding: str | None = None):
+    """dBase III attribute table -> (pandas frame, name -> the Spark
+    type its field descriptor declares); numpy fixed-width slicing, no
+    per-row Python parse."""
     with open(path, "rb") as fh:
         head = fh.read(32)
         n_rec = struct.unpack("<i", head[4:8])[0]
@@ -129,7 +137,10 @@ def _read_dbf(path: str, encoding: str | None = None) -> pd.DataFrame:
         else:
             out[name] = txt
         off += flen
-    return pd.DataFrame(out)
+    return pd.DataFrame(out), {
+        name: T.LongType() if (ftype, fdec) == ("N", 0)
+        else _DBF_TYPES.get(ftype, T.StringType())
+        for name, ftype, _flen, fdec in fields}
 
 
 def read_shapefile(spark, path: str, encoding: str | None = None) -> DataFrame:
@@ -155,19 +166,18 @@ def read_shapefile(spark, path: str, encoding: str | None = None) -> DataFrame:
         # encoding tests drive behavior through it)
         with open(base + ".cpg") as fh:
             encoding = fh.read().strip() or None
-    props = None
-    if os.path.exists(base + ".dbf"):
-        props = _read_dbf(base + ".dbf", encoding)
     pdf = pd.DataFrame({"fid": [b[0] for b in blobs],
                         "shp0body": [bytes(b[1]) for b in blobs]})
-    if props is not None and len(props) == len(pdf):
-        pdf = pd.concat([pdf, props], axis=1)
-    src = spark.createDataFrame(pdf)
-    out_schema = (", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in src.schema.fields if f.name != "shp0body")
-        + ", geom_type string, rings_xs array<array<double>>, "
-          "rings_ys array<array<double>>")
+    fields = {"fid": T.LongType(), "shp0body": T.BinaryType()}
+    if os.path.exists(base + ".dbf"):
+        props, types = _read_dbf(base + ".dbf", encoding)
+        if len(props) == len(pdf):
+            pdf = pd.concat([pdf, props], axis=1)
+            fields.update(types)
+    src = spark.createDataFrame(pdf, T.StructType(
+        [T.StructField(n, t) for n, t in fields.items()]))
+    del fields["shp0body"]
+    out_schema = ring_schema(fields)
 
     def run(batches):
         for b in batches:

@@ -28,10 +28,11 @@ from __future__ import annotations
 import sqlite3
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
 from ..schema import RING_COLS, with_ring_columns
+from .drivers import ring_schema
 
 _OGR_GEOM_CODE = {"Point": 1, "LineString": 2, "Polygon": 3,
                   "MultiPoint": 4, "MultiLineString": 5,
@@ -68,40 +69,59 @@ def read_sqlite(spark, path: str, layer: str | None = None) -> DataFrame:
         gc = con.execute(
             "SELECT f_geometry_column FROM geometry_columns "
             "WHERE f_table_name = ?", (layer,)).fetchone()
-        geom_col = gc[0]
-        cur = con.execute(f'SELECT * FROM "{layer}"')
-        cols = [d[0] for d in cur.description]
-        rows = cur.fetchall()
-    pdf = pd.DataFrame(rows, columns=cols)
+        return layer_frame(spark, con, layer,
+                           con.execute(f'SELECT * FROM "{layer}"'),
+                           gc[0], bytes)
+
+
+def _affinity(decl: str) -> T.DataType:
+    """SQLite's affinity of a declared column type as a Spark type: INT
+    -> bigint, REAL/FLOA/DOUB -> double, BLOB -> binary, else string."""
+    d = decl.upper()
+    if "INT" in d:
+        return T.LongType()
+    if any(k in d for k in ("REAL", "FLOA", "DOUB")):
+        return T.DoubleType()
+    return T.BinaryType() if "BLOB" in d else T.StringType()
+
+
+def layer_frame(spark, con, layer: str, cur, geom_col: str,
+                to_wkb) -> DataFrame:
+    """One SQLite feature table (rows of ``cur``, fetched on the driver)
+    as a ring-model frame, for the SQLite and GeoPackage readers;
+    ``to_wkb`` maps a ``geom_col`` blob to WKB (``None``: EMPTY) in one
+    distributed ``mapInPandas`` decode.  A column NULL in every row
+    takes its declared affinity (``PRAGMA table_info``)."""
+    pdf = pd.DataFrame(cur.fetchall(), columns=[d[0] for d in cur.description])
     pdf[geom_col] = pdf[geom_col].map(
         lambda b: bytes(b) if b is not None else None)
-    src = spark.createDataFrame(pdf).withColumnRenamed(geom_col,
-                                                       "sq0blob")
-    out_schema = (", ".join(
-        f"`{c}` {f.dataType.simpleString()}"
-        for c, f in zip(src.schema.names, src.schema.fields)
-        if c != "sq0blob")
-        + ", geom_type string, rings_xs array<array<double>>, "
-          "rings_ys array<array<double>>")
+    decl = {r[1]: r[2] for r in con.execute(f'PRAGMA table_info("{layer}")')}
+    decl[geom_col] = "BLOB"
+    src = spark.createDataFrame(pdf)
+    src = src.withColumns({
+        f.name: F.lit(None).cast(_affinity(decl.get(f.name) or ""))
+        for f in src.schema.fields if isinstance(f.dataType, T.NullType)})
+    out_schema = ring_schema({f.name: f.dataType for f in src.schema.fields
+                              if f.name != geom_col})
 
     def run(batches):
         from .. import model, wkb
         for b in batches:
             recs = []
             for d in b.to_dict("records"):
-                blob = d.pop("sq0blob")
-                if blob is None:
+                blob = d.pop(geom_col)
+                wkb_bytes = None if blob is None else to_wkb(blob)
+                if wkb_bytes is None:
                     d.update(geom_type=None, rings_xs=None,
                              rings_ys=None)
                 else:
-                    g = wkb.decode(blob)
-                    t, rxs, rys = model.rings_from_geometry(g)
+                    t, rxs, rys = model.rings_from_geometry(
+                        wkb.decode(wkb_bytes))
                     d.update(geom_type=t, rings_xs=rxs, rings_ys=rys)
                 recs.append(d)
             yield pd.DataFrame(recs)
 
-    out = src.mapInPandas(run, out_schema)
-    return with_ring_columns(out)
+    return with_ring_columns(src.mapInPandas(run, out_schema))
 
 
 def write_sqlite(df: DataFrame, path: str, layer: str = "features",

@@ -24,11 +24,10 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import with_ring_columns
+from .drivers import rows_frame
 
 __all__ = ["read_sua"]
 
@@ -173,10 +172,7 @@ def read_sua(spark, path: str) -> DataFrame:
 
     if not rows:
         raise DriverError(f"no airspace blocks in SUA file {path!r}")
-    pdf = pd.DataFrame(rows)
-    schema = ("fid bigint, TYPE string, CLASS string, TITLE string, "
-              "TOPS string, BASE string, geom_type string, "
-              "rings_xs array<array<double>>, "
-              "rings_ys array<array<double>>")
-    df = spark.createDataFrame(pdf, schema=schema)
-    return with_ring_columns(df)
+    return rows_frame(spark, rows, {
+        "fid": T.LongType(),
+        **dict.fromkeys(("TYPE", "CLASS", "TITLE", "TOPS", "BASE"),
+                        T.StringType())})

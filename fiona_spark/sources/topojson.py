@@ -20,14 +20,14 @@ import json
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..schema import with_ring_columns
+from .drivers import ring_schema
 
-_OUT_SCHEMA = ("object string, fid long, geom_type string, "
-               "rings_xs array<array<double>>, "
-               "rings_ys array<array<double>>, "
-               "properties map<string,string>")
+_OUT_SCHEMA = ring_schema({
+    "object": T.StringType(), "fid": T.LongType(),
+    "properties": T.MapType(T.StringType(), T.StringType())})
 
 
 def decode_arcs(topo: dict) -> list:
@@ -115,18 +115,18 @@ def read_topojson(spark, path: str) -> DataFrame:
     def run(batches):
         arcs = arcs_b.value
         for pdf in batches:
-            rows = []
+            recs = []
             for r in pdf.itertuples(index=False):
                 g = json.loads(r.g)
                 t, rings = _geom_rings(g, arcs, tr)
                 props = {k: v if isinstance(v, str) else json.dumps(v)
                          for k, v in (g.get("properties") or {}).items()}
-                rows.append({
+                recs.append({
                     "object": r.object, "fid": r.fid, "geom_type": t,
                     "rings_xs": [ring[:, 0].tolist() for ring in rings],
                     "rings_ys": [ring[:, 1].tolist() for ring in rings],
                     "properties": props})
-            yield pd.DataFrame(rows)
+            yield pd.DataFrame(recs)
 
     out = src.mapInPandas(run, _OUT_SCHEMA)
     return with_ring_columns(out)

@@ -12,6 +12,8 @@ from fiona_spark.functions import geometry as gf
 from fiona_spark.operators import aggregates
 from fiona_spark.sources import drivers, iceberg_like
 
+from .test_kernels import union_area
+
 
 @pytest.fixture(scope="module")
 def zdf(spark):
@@ -226,8 +228,7 @@ def test_dissolve_components_exact_for_disjoint(spark):
     assert merged["exact"]
     hx = merged["rings_xs"][0]
     assert min(hx) == 29.0 and max(hx) == 32.0
-    from fiona_spark import geom
-    assert geom.union_area(merged["rings_xs"], merged["rings_ys"]) == 6.0
+    assert union_area(merged["rings_xs"], merged["rings_ys"]) == 6.0
 
 
 def test_driver_mode_gating(spark, tmp_path):

@@ -19,7 +19,7 @@ from fiona_spark import geom
 from fiona_spark.errors import ReduceError
 from fiona_spark.operators import aggregates
 
-from .test_kernels import _pip_reference
+from .test_kernels import _pip_reference, union_area
 
 RINGS = ("fid long, geom_type string, rings_xs array<array<double>>, "
          "rings_ys array<array<double>>")
@@ -81,7 +81,7 @@ def test_dissolve_union_keeps_holes_and_parts(layer):
     want = _inside_any(px, py, [HOLED, MULTI, BAR])
     assert (geom.points_in_rings(px, py, rx, ry) == want).all()
     assert want.sum() * 0.0625 == 180.0
-    assert geom.union_area(rx, ry) == 180.0
+    assert union_area(rx, ry) == 180.0
 
 
 @pytest.mark.parametrize("max_pairs", [2_000_000, 0],
@@ -100,7 +100,7 @@ def test_dissolve_components_rings(layer, max_pairs):
     assert {c: _area([(r["rings_xs"] or [], r["rings_ys"] or [])])
             for c, r in out.items()} == {0: 96.0, 1: 84.0, 3: 0.0, 4: 0.0}
     merged = (out[1]["rings_xs"], out[1]["rings_ys"])
-    assert geom.union_area(*merged) == 84.0
+    assert union_area(*merged) == 84.0
     px, py = _grid()
     assert (_inside_any(px, py, [merged])
             == _inside_any(px, py, [MULTI, BAR])).all()
@@ -126,7 +126,7 @@ def test_dissolve_skips_empty_and_null_rings():
         [UNIT, ([[]], [[]]), ([None, [5., 6., 6.]], [None, [0., 0., 1.]])]
     )).to_pylist()[0]
     assert row["n_members"] == 3 and row["exact"]
-    assert geom.union_area(row["rings_xs"], row["rings_ys"]) == 1.5
+    assert union_area(row["rings_xs"], row["rings_ys"]) == 1.5
     row = aggregates._dissolve(_members_table([UNIT, ([[]], [[]])])).to_pylist()[0]
     assert (row["rings_xs"], row["rings_ys"], row["exact"]) == (
         [[0., 1., 1., 0.]], [[0., 0., 1., 1.]], True)

@@ -13,7 +13,7 @@ import pytest
 
 from fiona_spark import geom
 
-from .test_kernels import _pip_reference
+from .test_kernels import _pip_reference, polygon_union, union_area
 
 
 def _sweep_union_area(polys, n_guard: int = 200):
@@ -93,8 +93,8 @@ def _membership_diff(polys, rings, n=120):
 
 
 def _check(polys, expect_area=None, expect_rings=None):
-    rings = geom.polygon_union([p[0] for p in polys], [p[1] for p in polys])
-    area = geom.union_area(*rings)
+    rings = polygon_union([p[0] for p in polys], [p[1] for p in polys])
+    area = union_area(*rings)
     oracle = expect_area if expect_area is not None \
         else _sweep_union_area(polys)
     assert area == pytest.approx(oracle, rel=1e-12, abs=1e-12)
@@ -188,11 +188,11 @@ def test_random_convex_fuzz():
 def test_shared_edge_parcels_exact():
     """Adjacent parcels sharing a full border (THE canonical dissolve
     input) union exactly: interior shared edge dropped, area additive."""
-    rings = geom.polygon_union(
+    rings = polygon_union(
         [[0, 2, 2, 0], [2, 4, 4, 2]],     # shared vertical edge x=2
         [[0, 0, 2, 2], [0, 0, 2, 2]])
     assert len(rings[0]) == 1
-    assert geom.union_area(*rings) == 8.0
+    assert union_area(*rings) == 8.0
     allx = np.concatenate(rings[0])
     # no stray vertex chain along the dissolved border
     assert sorted(set(allx)) == [0.0, 2.0, 4.0]
@@ -206,9 +206,9 @@ def test_parcel_grid_3x3_exact():
         for j in range(3):
             xs.append([i, i + 1, i + 1, i])
             ys.append([j, j, j + 1, j + 1])
-    rings = geom.polygon_union(xs, ys)
+    rings = polygon_union(xs, ys)
     assert len(rings[0]) == 1
-    assert geom.union_area(*rings) == 9.0
+    assert union_area(*rings) == 9.0
     want, got = _membership_diff(list(zip(xs, ys)), rings)
     assert (want == got).all()
 
@@ -218,9 +218,9 @@ def test_partial_shared_border_exact():
     heights) still dissolve exactly."""
     polys = [([0, 2, 2, 0], [0, 0, 3, 3]),
              ([2, 4, 4, 2], [1, 1, 2, 2])]    # shares x=2 for y in [1,2]
-    rings = geom.polygon_union([p[0] for p in polys],
+    rings = polygon_union([p[0] for p in polys],
                                [p[1] for p in polys])
-    assert geom.union_area(*rings) == 6.0 + 2.0
+    assert union_area(*rings) == 6.0 + 2.0
     want, got = _membership_diff(polys, rings)
     assert (want == got).all()
 
@@ -230,10 +230,10 @@ def test_stacked_overlap_with_shared_boundary_segment():
     boundary copies dedupe, union == A."""
     polys = [([0, 4, 4, 0], [0, 0, 4, 4]),
              ([1, 3, 3, 1], [0, 0, 2, 2])]    # B's bottom edge on A's
-    rings = geom.polygon_union([p[0] for p in polys],
+    rings = polygon_union([p[0] for p in polys],
                                [p[1] for p in polys])
     assert len(rings[0]) == 1
-    assert geom.union_area(*rings) == 16.0
+    assert union_area(*rings) == 16.0
 
 
 def test_checkerboard_corner_pinch_exact():
@@ -241,11 +241,11 @@ def test_checkerboard_corner_pinch_exact():
     diagonal) now union EXACTLY: the stitcher's clockwise face
     traversal pairs the four fragments at the pinch into two touching
     rings (r3 verdict 'next round' #2 — was a raise -> hull)."""
-    rx, ry = geom.polygon_union(
+    rx, ry = polygon_union(
         [[0, 2, 2, 0], [2, 4, 4, 2]],
         [[0, 0, 2, 2], [2, 2, 4, 4]])     # touch only at (2, 2)
     assert len(rx) == 2
-    assert geom.union_area(rx, ry) == pytest.approx(8.0)
+    assert union_area(rx, ry) == pytest.approx(8.0)
     # each lobe closes as its own simple ring (no figure-8 pairing)
     areas = sorted(abs(0.5 * float(np.sum(
         np.asarray(xs) * np.roll(np.asarray(ys), -1)
@@ -260,10 +260,10 @@ def test_checkerboard_2x2_full_cover_exact():
     def sq(x, y):
         return ([x, x + 1.0, x + 1.0, x], [y, y, y + 1.0, y + 1.0])
     polys = [sq(0, 0), sq(1, 1), sq(1, 0), sq(0, 1)]
-    rx, ry = geom.polygon_union([p[0] for p in polys],
+    rx, ry = polygon_union([p[0] for p in polys],
                                 [p[1] for p in polys])
     assert len(rx) == 1
-    assert geom.union_area(rx, ry) == pytest.approx(4.0)
+    assert union_area(rx, ry) == pytest.approx(4.0)
 
 
 def test_pinch_chain_three_squares_exact():
@@ -272,10 +272,10 @@ def test_pinch_chain_three_squares_exact():
     def sq(x, y):
         return ([x, x + 1.0, x + 1.0, x], [y, y, y + 1.0, y + 1.0])
     polys = [sq(0, 0), sq(1, 1), sq(2, 2)]
-    rx, ry = geom.polygon_union([p[0] for p in polys],
+    rx, ry = polygon_union([p[0] for p in polys],
                                 [p[1] for p in polys])
     assert len(rx) == 3
-    assert geom.union_area(rx, ry) == pytest.approx(3.0)
+    assert union_area(rx, ry) == pytest.approx(3.0)
 
 
 def test_dissolve_components_exact_union(spark):
@@ -294,7 +294,7 @@ def test_dissolve_components_exact_union(spark):
     assert len(out) == 2
     assert out["exact"].all()
     merged = out[out["n_members"] == 2].iloc[0]
-    got_area = geom.union_area(merged["rings_xs"], merged["rings_ys"])
+    got_area = union_area(merged["rings_xs"], merged["rings_ys"])
     want = _sweep_union_area(polys[:2])
     assert got_area == pytest.approx(want, rel=1e-12)
 
@@ -311,7 +311,7 @@ def test_dissolve_corner_pinch_now_exact(spark):
     out = aggregates.dissolve_components(df, "fid").toPandas()
     assert len(out) == 1 and out["exact"].iloc[0]
     assert len(out["rings_xs"].iloc[0]) == 2
-    assert geom.union_area(out["rings_xs"].iloc[0],
+    assert union_area(out["rings_xs"].iloc[0],
                            out["rings_ys"].iloc[0]) == pytest.approx(8.0)
 
 
@@ -326,7 +326,7 @@ def test_dissolve_shared_edge_parcels_now_exact(spark):
         "ys": [[-1.0, -1.0, 1.0, 1.0], [-1.0, -1.0, 1.0, 1.0]]}))
     out = aggregates.dissolve_components(df, "fid").toPandas()
     assert len(out) == 1 and out["exact"].iloc[0]
-    assert geom.union_area(out["rings_xs"].iloc[0],
+    assert union_area(out["rings_xs"].iloc[0],
                            out["rings_ys"].iloc[0]) == 6.0
 
 
@@ -383,7 +383,7 @@ def test_buffer_polygon_concave_L_matches_dense_oracle():
     xs = np.array([0., 4., 4., 1., 1., 0.])
     ys = np.array([0., 0., 1., 1., 4., 4.])
     rx, ry = geom.buffer_feature([xs], [ys], 0.5, segs=64)
-    got = geom.union_area(rx, ry)
+    got = union_area(rx, ry)
     want = _buffer_oracle_area(xs, ys, 0.5)
     assert abs(got - want) < 0.15          # grid + inscribed-arc error
     assert len(rx) == 1
@@ -395,10 +395,10 @@ def test_buffer_polygon_square_closed_form():
     xs = np.array([0., 2., 2., 0.]); ys = np.array([0., 0., 2., 2.])
     rx, ry = geom.buffer_feature([xs], [ys], 1.0, segs=256)
     want = 4.0 + 8.0 * 1.0 + np.pi
-    assert abs(geom.union_area(rx, ry) - want) < 0.01
+    assert abs(union_area(rx, ry) - want) < 0.01
     # orientation-independent
     rx2, ry2 = geom.buffer_feature([xs[::-1]], [ys[::-1]], 1.0, segs=256)
-    assert geom.union_area(rx2, ry2) == geom.union_area(rx, ry)
+    assert union_area(rx2, ry2) == union_area(rx, ry)
 
 
 def test_buffer_polygon_keyhole_closes_into_hole():
@@ -415,7 +415,7 @@ def test_buffer_polygon_keyhole_closes_into_hole():
     assert len(rx) == 2
     assert min(signed) < 0 < max(signed)
     want = _buffer_oracle_area(xs, ys, 0.6, n=700)
-    assert abs(geom.union_area(rx, ry) - want) < 0.4
+    assert abs(union_area(rx, ry) - want) < 0.4
 
 
 def test_buffer_udf_exact_on_concave(spark):
@@ -431,7 +431,7 @@ def test_buffer_udf_exact_on_concave(spark):
     out = df.select(gf.buffer_udf(0.5, segs=64)(*gf.RING_ARGS)
                     .alias("b")).first()["b"]
     assert out["geom_type"] == "Polygon"
-    got = geom.union_area(out["rings_xs"], out["rings_ys"])
+    got = union_area(out["rings_xs"], out["rings_ys"])
     want = _buffer_oracle_area(np.array(xs), np.array(ys), 0.5)
     assert abs(got - want) < 0.15
 
@@ -465,12 +465,12 @@ def test_integer_grid_rect_union_fuzz():
             polys.append((
                 [float(x0), float(x0 + w), float(x0 + w), float(x0)],
                 [float(y0), float(y0), float(y0 + h), float(y0 + h)]))
-        rings = geom.polygon_union([p[0] for p in polys],
+        rings = polygon_union([p[0] for p in polys],
                                    [p[1] for p in polys])
         want = set()
         for p in polys:
             want |= _grid_cells_covered(*p)
-        assert geom.union_area(*rings) == pytest.approx(
+        assert union_area(*rings) == pytest.approx(
             float(len(want)), abs=1e-9), f"trial {trial}: {polys}"
 
 
@@ -502,12 +502,12 @@ def test_integer_grid_concave_union_fuzz():
 
     for trial in range(60):
         polys = [mk_L() for _ in range(rng.integers(2, 6))]
-        rings = geom.polygon_union([p[0] for p in polys],
+        rings = polygon_union([p[0] for p in polys],
                                    [p[1] for p in polys])
         want = set()
         for p in polys:
             want |= _grid_cells_covered(*p)
-        assert geom.union_area(*rings) == pytest.approx(
+        assert union_area(*rings) == pytest.approx(
             float(len(want)), abs=1e-9), f"trial {trial}: {polys}"
 
 
@@ -529,7 +529,7 @@ def test_feature_union_donuts_exact():
         rings = geom.feature_union([f[0] for f in feats],
                                    [f[1] for f in feats])
         assert len(rings[0]) == want_rings
-        assert geom.union_area(*rings) == pytest.approx(want_area)
+        assert union_area(*rings) == pytest.approx(want_area)
 
 
 def test_grid_donut_union_fuzz():
@@ -603,7 +603,7 @@ def test_dissolve_union_two_stage_grid_fuzz(spark):
             "ys": [p[1] for p in polys]})).repartition(4)
         rx, ry, exact = aggregates.dissolve_union(df)
         assert exact, f"trial {trial} degraded to hull"
-        assert geom.union_area(rx, ry) == pytest.approx(
+        assert union_area(rx, ry) == pytest.approx(
             float(len(cov)), abs=1e-9), f"trial {trial}"
 
 
@@ -632,14 +632,14 @@ def _erosion_oracle_area(xs, ys, d, n=400):
 def test_erode_square_exact():
     rx, ry = geom.buffer_feature([[0., 4., 4., 0.]], [[0., 0., 4., 4.]], -1.0)
     assert len(rx) == 1
-    assert geom.union_area(rx, ry) == pytest.approx(4.0)   # 2x2 core
+    assert union_area(rx, ry) == pytest.approx(4.0)   # 2x2 core
 
 
 def test_erode_concave_L_matches_dense_oracle():
     xs = np.array([0., 6., 6., 2.5, 2.5, 0.])
     ys = np.array([0., 0., 2., 2., 6., 6.])
     rx, ry = geom.buffer_feature([xs], [ys], -0.5, segs=64)
-    got = geom.union_area(rx, ry)
+    got = union_area(rx, ry)
     want = _erosion_oracle_area(xs, ys, 0.5)
     assert abs(got - want) < 0.1
 
@@ -653,7 +653,7 @@ def test_erode_dumbbell_splits_and_vanishes():
     rx, ry = geom.buffer_feature([xs], [ys], -0.6, segs=32)
     assert len(rx) == 2
     want = _erosion_oracle_area(xs, ys, 0.6, n=600)
-    assert abs(geom.union_area(rx, ry) - want) < 0.15
+    assert abs(union_area(rx, ry) - want) < 0.15
     assert geom.buffer_feature([[0., 2., 2., 0.]], [[0., 0., 2., 2.]],
                                -1.5) == ([], [])
 
@@ -665,14 +665,14 @@ def test_buffer_feature_donut_closed_forms():
     dy_ = [[0., 0., 8., 8.], [2., 2., 6., 6.]]
     rx, ry = geom.buffer_feature(dx_, dy_, 1.0, segs=256)
     assert len(rx) == 2        # grown outer + shrunk hole
-    assert abs(geom.union_area(rx, ry) - (64 + 32 + np.pi - 4)) < 0.01
+    assert abs(union_area(rx, ry) - (64 + 32 + np.pi - 4)) < 0.01
     rx, ry = geom.buffer_feature(dx_, dy_, 2.0, segs=256)
     assert len(rx) == 1        # hole narrower than 2*dist closes
-    assert abs(geom.union_area(rx, ry) - (64 + 64 + 4 * np.pi)) < 0.01
+    assert abs(union_area(rx, ry) - (64 + 64 + 4 * np.pi)) < 0.01
     rx, ry = geom.buffer_feature(dx_, dy_, -0.5, segs=256)
     assert len(rx) == 2        # outer shrinks, hole grows (rounded)
     want = 49 - (25 - (1 - np.pi / 4))
-    assert abs(geom.union_area(rx, ry) - want) < 0.01
+    assert abs(union_area(rx, ry) - want) < 0.01
 
 
 def test_divide_and_conquer_union_over_budget():
@@ -684,9 +684,9 @@ def test_divide_and_conquer_union_over_budget():
         for j in range(20):
             px.append([float(i), float(i + 1), float(i + 1), float(i)])
             py.append([float(j), float(j), float(j + 1), float(j + 1)])
-    rx, ry = geom.polygon_union(px, py, max_edges=300)   # 1600 edges in
+    rx, ry = polygon_union(px, py, max_edges=300)   # 1600 edges in
     assert len(rx) == 1
-    assert geom.union_area(rx, ry) == pytest.approx(400.0)
+    assert union_area(rx, ry) == pytest.approx(400.0)
     # two oversized overlapping features can't subdivide further and
     # still raise (no silent truncation of the pairwise budget)
     big = np.linspace(0, 2 * np.pi, 500, endpoint=False)
@@ -713,7 +713,7 @@ def test_dissolve_union_tree_reduce_parity(spark):
         "ys": [p[1] for p in polys]})).repartition(200)
     rx, ry, exact = aggregates.dissolve_union(df)
     assert exact and len(rx) == 1
-    assert geom.union_area(rx, ry) == pytest.approx(144.0)
+    assert union_area(rx, ry) == pytest.approx(144.0)
 
 
 def test_buffer_distance_sweep_no_degeneracy():
@@ -727,14 +727,14 @@ def test_buffer_distance_sweep_no_degeneracy():
         for segs in (16, 32):
             rx, ry = geom.buffer_feature([sq[0]], [sq[1]], float(d),
                                          segs=segs)
-            assert geom.union_area(rx, ry) > 16.0
+            assert union_area(rx, ry) > 16.0
     dx_ = [[0., 10., 10., 0.], [3., 7., 7., 3.]]
     dy_ = [[0., 0., 10., 10.], [3., 3., 7., 7.]]
     for d in np.linspace(0.1, 2.2, 24):
         if abs(float(d) - 1.5) < 1e-9:
             continue                    # exact zero-width-wall tangency
         rx, ry = geom.buffer_feature(dx_, dy_, -float(d), segs=32)
-        assert geom.union_area(rx, ry) >= 0.0
+        assert union_area(rx, ry) >= 0.0
     # the EXACT tangency (erode 1.5 leaves zero-width walls) is
     # measure-zero degenerate: a loud raise is the contract
     with pytest.raises(geom.UnionDegeneracyError):
@@ -786,7 +786,7 @@ def test_buffer_random_polygon_fuzz():
             assert not simple, \
                 f"trial {trial}: raise on a SIMPLE ring (d={d})"
             continue
-        a = geom.union_area(rx, ry)
+        a = union_area(rx, ry)
         if simple:
             if d > 0:
                 assert a > orig - 1e-9, f"trial {trial} dilation shrank"

@@ -11,7 +11,7 @@ import pytest
 from fiona_spark import geom
 from fiona_spark.operators import dedup, media
 
-from .test_kernels import _pip_reference
+from .test_kernels import _pip_reference, union_area
 
 
 def test_pack_feature_edges_skips_empty_rings():
@@ -194,8 +194,8 @@ def test_buffer_feature_udf_donut(spark):
         assert row["geom_type"] == "Polygon"
         want_x, want_y = geom.buffer_feature(
             pdf["rings_xs"][0], pdf["rings_ys"][0], d, segs=32)
-        assert geom.union_area(row["rings_xs"], row["rings_ys"]) == \
-            pytest.approx(geom.union_area(want_x, want_y))
+        assert union_area(row["rings_xs"], row["rings_ys"]) == \
+            pytest.approx(union_area(want_x, want_y))
         assert len(row["rings_xs"]) == 2
 
 
@@ -206,7 +206,6 @@ def test_dissolve_distributed_lane_integration(spark):
     to its 6x6 square, singletons pass through untouched."""
     import pandas as pd
 
-    from fiona_spark import geom
     from fiona_spark.operators import aggregates
     rows = []
     fid = 0
@@ -230,5 +229,5 @@ def test_dissolve_distributed_lane_integration(spark):
     multi = out[out.n_members > 1]
     assert len(multi) == 8 and set(multi.n_members) == {36}
     for r in multi.itertuples():
-        assert geom.union_area(r.rings_xs, r.rings_ys) == \
+        assert union_area(r.rings_xs, r.rings_ys) == \
             pytest.approx(36.0)

@@ -254,12 +254,33 @@ def test_vfs_parse_paths_reference_shapes():
     assert vfs.is_remote("s3") and not vfs.is_remote("zip")
 
 
-def test_vfs_open_zipped_shapefile(spark):
+def _coutwildrnp_zip(spark, tmp_path) -> str:
+    """The reference's coutwildrnp.zip shape, built in ``tmp_path``: 67
+    polygons with NAME and AGBUR columns, written by the engine's
+    shapefile writer and zipped with their sidecars."""
+    import zipfile
+    from fiona_spark.sources import shapefile
+    rows = [("Polygon", [[i, i + 1.0, i + 1.0, i, i]],
+             [[0.0, 0.0, 1.0, 1.0, 0.0]], f"wild {i}", "FS")
+            for i in map(float, range(67))]
+    shp_dir = tmp_path / "coutwildrnp"
+    shp_dir.mkdir()
+    shapefile.write_shapefile(spark.createDataFrame(
+        rows, "geom_type string, rings_xs array<array<double>>, "
+              "rings_ys array<array<double>>, NAME string, AGBUR string"),
+        str(shp_dir / "coutwildrnp.shp"))
+    archive = str(tmp_path / "coutwildrnp.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        for f in sorted(shp_dir.iterdir()):
+            zf.write(f, arcname=f.name)
+    return archive
+
+
+def test_vfs_open_zipped_shapefile(spark, tmp_path):
     """The reference's canonical zip:// case: fiona.open over the
     zipped coutwildrnp shapefile, sidecars extracted alongside."""
     import fiona_spark as fs
-    uri = ("zip:///root/reference/tests/data/coutwildrnp.zip"
-           "!coutwildrnp.shp")
+    uri = f"zip://{_coutwildrnp_zip(spark, tmp_path)}!coutwildrnp.shp"
     df = fs.open(spark, uri)
     assert df.count() == 67
     assert "NAME" in df.columns and df.first()["geom_type"] == "Polygon"
@@ -284,14 +305,19 @@ def test_vfs_open_tar_and_gzip_members(spark, tmp_path):
     assert df2.first()["gid"] == 5
 
 
-def test_vfs_errors():
+def test_vfs_errors(tmp_path):
+    import zipfile
+
     import pytest as _pytest
     from fiona_spark import vfs
     from fiona_spark.errors import DriverError
     with _pytest.raises(DriverError, match="no archive"):
         vfs.resolve("zip:///nope/missing.zip!a.shp")
+    archive = str(tmp_path / "a.zip")
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("a.txt", "member")
     with _pytest.raises(DriverError, match="needs '!member'"):
-        vfs.resolve("zip:///root/reference/tests/data/coutwildrnp.zip")
+        vfs.resolve(f"zip://{archive}")
 
 
 # ---------------------------------------------------------------------------
@@ -413,13 +439,13 @@ class _ZipFS:
             return _io.BytesIO(zf.read(path.lstrip("/")))
 
 
-def test_opener_zip_fs_shapefile(spark):
+def test_opener_zip_fs_shapefile(spark, tmp_path):
     """Zip-filesystem opener over the reference's zipped coutwildrnp
     shapefile (test_opener_fsspec_zip_fs shape): sidecars must be
     fetched through the same opener."""
     import fiona_spark as fs
 
-    fsys = _ZipFS("/root/reference/tests/data/coutwildrnp.zip")
+    fsys = _ZipFS(_coutwildrnp_zip(spark, tmp_path))
     df = fs.open(spark, "coutwildrnp.shp", opener=fsys)
     assert df.count() == 67
     assert "AGBUR" in df.columns and df.first()["geom_type"] == "Polygon"

@@ -8,7 +8,7 @@ import pytest
 from fiona_spark import cells, fixtures, geom
 from fiona_spark.operators import aggregates, filters, spatial
 
-from .test_kernels import _pip_reference
+from .test_kernels import _pip_reference, polygon_union, union_area
 
 N_IMG = 400
 N_ZONES = 45
@@ -569,10 +569,10 @@ def test_dissolve_union_exact_two_stage(spark):
     df = spark.createDataFrame(pdf).repartition(16)
     rxs, rys, exact = aggregates.dissolve_union(df)
     assert exact
-    direct_x, direct_y = geom.polygon_union(
+    direct_x, direct_y = polygon_union(
         [r["xs"] for r in rows], [r["ys"] for r in rows])
-    assert geom.union_area(rxs, rys) == pytest.approx(
-        geom.union_area(direct_x, direct_y), rel=1e-12)
+    assert union_area(rxs, rys) == pytest.approx(
+        union_area(direct_x, direct_y), rel=1e-12)
 
 
 def test_fixture_phash_recomputable(spark, images):

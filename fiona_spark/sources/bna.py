@@ -25,8 +25,9 @@ layout the spec allows.
 
 Driver-side parse into one typed frame (``drivers.rows_frame``; the
 ``id1``..``idN`` header fields are strings), like the other text
-drivers; the writer streams ``toLocalIterator`` — driver-serial
-single-file encode, route bulk exports through parquet/iceberg_like.
+drivers; the writer encodes ``drivers.feature_rows`` into
+``drivers.atomic_file`` — driver-serial single-file encode, route bulk
+exports through parquet/iceberg_like.
 """
 
 from __future__ import annotations
@@ -37,8 +38,7 @@ import re
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 _HEADER = re.compile(r'^\s*"')
 
@@ -107,22 +107,19 @@ def read_bna(spark, path: str) -> DataFrame:
 
 
 def write_bna(df: DataFrame, path: str) -> None:
-    """Single-file BNA sink.  ``id1``/``id2``/... columns (or any
-    string columns, in schema order, max 4) become the quoted header
-    fields.  Geometry restrictions are the format's own: Point,
-    LineString, and SINGLE-RING Polygon records exist in BNA; anything
-    else raises.
+    """Single-file BNA sink over ``drivers.feature_rows``.  The first
+    four string property columns (``id1``/``id2``/... as ``read_bna``
+    names them), in schema order, become the quoted header fields.
+    Geometry restrictions are the format's own: Point, LineString, and
+    SINGLE-RING Polygon records exist in BNA; anything else raises.
 
     THROUGHPUT CEILING: one text file = driver-serial encode; bulk
     exports belong in parquet/iceberg_like.
     """
-    id_cols = [c for c, t in df.dtypes if c not in RING_COLS
-               and c != "fid" and t == "string"][:4]
-    if not id_cols:
-        id_cols = []
-    with open(path, "w", encoding="utf-8") as f:
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
+    props, rows = feature_rows(df)
+    id_cols = [c for c, t in props if t == "string"][:4]
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as f:
+        for d in rows:
             rxs, rys = d.get("rings_xs"), d.get("rings_ys")
             gt = d.get("geom_type")
             if not rxs or gt is None:

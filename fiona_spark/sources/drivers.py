@@ -16,12 +16,13 @@ Unknown extensions raise DriverError, mirroring the reference's
 
 from __future__ import annotations
 
+import contextlib
 import os
 
-from pyspark.sql import DataFrame, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
-from ..schema import RINGS_STRUCT, with_ring_columns
+from ..schema import RING_COLS, RINGS_STRUCT, with_ring_columns, with_rings
 
 # name -> (reader, writer, modes)
 _REGISTRY: dict = {}
@@ -225,9 +226,71 @@ def rows_frame(spark, rows: list[dict], fields: dict) -> DataFrame:
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = ring_schema(fields)
+    # Arrow truncates a float given for an integer column (1.5 -> 1)
+    ints = [n for n, t in fields.items() if isinstance(t, T.IntegralType)]
+    for r in rows:
+        for n in ints:
+            v = r.get(n)
+            if isinstance(v, float) and not v.is_integer():
+                raise DriverError(
+                    f"column {n!r}: cannot convert {v!r} to an integer")
     table = pa.Table.from_pylist(
         rows, to_arrow_schema(schema, timestamp_utc=False))
     return with_ring_columns(spark.createDataFrame(table, schema))
+
+
+def feature_rows(df: DataFrame):
+    """The one row stream of the driver-side writers: ``(props, rows)``.
+
+    The frame enters through ``schema.with_rings`` (a frame with only
+    ``xs``/``ys`` is a one-ring Polygon) and, when it has ring columns,
+    through ``with_ring_columns``, so ``xs``/``ys`` and ``xmin..ymax``
+    are always those of ``rings_xs``/``rings_ys``.  ``props`` lists the
+    property columns as ``(name, type)`` pairs (``DataFrame.dtypes``
+    form): every column but the ring columns and ``fid``.  ``rows``
+    yields one ``Row.asDict(recursive=True)`` per feature, streamed to
+    the driver a partition at a time (single-file formats encode
+    driver-serially; bulk exports belong in parquet)."""
+    df = with_rings(df)
+    if "rings_xs" in df.columns:
+        df = with_ring_columns(df)
+    props = [(c, t) for c, t in df.dtypes
+             if c not in RING_COLS and c != "fid"]
+
+    def rows():
+        for row in df.toLocalIterator():
+            yield row.asDict(recursive=True)
+
+    return props, rows()
+
+
+def first_geom_type(df: DataFrame):
+    """The first non-null ``geom_type`` of the frame as ``feature_rows``
+    streams it (a layer type for the writers that declare one up
+    front); None when there is none."""
+    df = with_rings(df)
+    if "geom_type" not in df.columns:
+        return None
+    hit = (df.select("geom_type").filter(F.col("geom_type").isNotNull())
+           .limit(1).collect())
+    return hit[0][0] if hit else None
+
+
+@contextlib.contextmanager
+def atomic_file(path: str):
+    """The one file sink of the single-file writers in ``w`` mode:
+    yields a temp path next to ``path`` and ``os.replace``s it onto
+    ``path`` when the body succeeds.  On any exception the temp file is
+    removed and the exception re-raised, so a failed write leaves
+    neither a partial target nor a temp file."""
+    tmp = path + ".tmp"
+    try:
+        yield tmp
+    except BaseException:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
+    os.replace(tmp, path)
 
 
 def _write_csv(df: DataFrame, path, mode="overwrite", **opts):

@@ -22,8 +22,9 @@ per ring; single-ring polygons round trip exactly).  Coordinates
 print via ``repr`` — bit-exact round trips, the engine-wide rule.
 
 Driver-side parse into one typed frame (``drivers.rows_frame``;
-``layer`` and ``entity`` are strings); the writer streams
-``toLocalIterator`` (single text file = driver-serial encode).
+``layer`` and ``entity`` are strings); the writer encodes
+``drivers.feature_rows`` into ``drivers.atomic_file`` (single text
+file = driver-serial encode).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 
 def _pairs(path: str):
@@ -133,35 +134,31 @@ def read_dxf(spark, path: str) -> DataFrame:
 
 
 def write_dxf(df: DataFrame, path: str) -> None:
-    """Single-file DXF sink (minimal ENTITIES-only document).
+    """Single-file DXF sink (minimal ENTITIES-only document) over
+    ``drivers.feature_rows``.
 
     A ``layer`` string column maps to the entity's CAD layer (code 8,
     default ``"0"``).  THROUGHPUT CEILING: driver-serial single-file
     encode; bulk exports belong in parquet/iceberg_like.
     """
-    with open(path, "w", encoding="utf-8") as f:
+    _props, rows = feature_rows(df)
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as f:
         f.write("0\nSECTION\n2\nENTITIES\n")
-        cols = set(df.columns)
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
+        for d in rows:
             gt = d.get("geom_type")
             rxs, rys = d.get("rings_xs"), d.get("rings_ys")
             if gt is None or not rxs:
                 raise DriverError("DXF cannot store null geometries")
-            layer = (d.get("layer") if "layer" in cols else None) or "0"
+            layer = d.get("layer") or "0"
             if gt == "Point":
                 f.write(f"0\nPOINT\n8\n{layer}\n"
                         f"10\n{rxs[0][0]!r}\n20\n{rys[0][0]!r}\n")
-            elif gt in ("LineString", "MultiLineString"):
+            elif gt in ("LineString", "MultiLineString",
+                        "Polygon", "MultiPolygon"):
+                closed = int(gt.endswith("Polygon"))
                 for xs, ys in zip(rxs, rys):
                     f.write(f"0\nLWPOLYLINE\n8\n{layer}\n"
-                            f"90\n{len(xs)}\n70\n0\n")
-                    for x, y in zip(xs, ys):
-                        f.write(f"10\n{x!r}\n20\n{y!r}\n")
-            elif gt in ("Polygon", "MultiPolygon"):
-                for xs, ys in zip(rxs, rys):
-                    f.write(f"0\nLWPOLYLINE\n8\n{layer}\n"
-                            f"90\n{len(xs)}\n70\n1\n")
+                            f"90\n{len(xs)}\n70\n{closed}\n")
                     for x, y in zip(xs, ys):
                         f.write(f"10\n{x!r}\n20\n{y!r}\n")
             else:

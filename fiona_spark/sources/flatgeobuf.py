@@ -19,8 +19,8 @@ header.fbs / feature.fbs tables.
 Spark shape: the driver slices the byte stream into per-feature blobs
 (cheap — size prefixes only); GEOMETRY + PROPERTY decode runs
 DISTRIBUTED in one ``mapInPandas`` over the blob column, the same
-convention as the shapefile/GeoPackage sources.  The writer is a
-driver-serial single-file stream (``toLocalIterator``) — same
+convention as the shapefile/GeoPackage sources.  The writer encodes
+``drivers.feature_rows`` driver-serially into one file — same
 throughput ceiling as every single-file sink; bulk exports belong in
 parquet.
 """
@@ -29,14 +29,15 @@ from __future__ import annotations
 
 import os
 import struct
+import tempfile
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
-from .drivers import ring_schema
+from ..schema import with_ring_columns
+from .drivers import atomic_file, feature_rows, ring_schema
 
 MAGIC = b"fgb\x03fgb\x00"
 
@@ -582,15 +583,10 @@ def _encode_geometry(bld: _Builder, gt: str, rxs, rys) -> int:
     return bld.table(fields)
 
 
-def _encode_feature(d: dict, cols: list, cols_set: set):
-    """One row dict -> (size-prefixed Feature blob, bbox | None)."""
-    if d.get("rings_xs") is not None:
-        gt, rxs, rys = (d.get("geom_type"), d["rings_xs"], d["rings_ys"])
-    elif "xs" in cols_set and d.get("xs") is not None:
-        gt, rxs, rys = (d.get("geom_type") or "Polygon",
-                        [d["xs"]], [d["ys"]])
-    else:
-        gt, rxs, rys = None, None, None
+def _encode_feature(d: dict, cols: list):
+    """One ``feature_rows`` row -> (size-prefixed Feature blob, its
+    ``xmin, ymin, xmax, ymax`` | None)."""
+    gt, rxs, rys = d.get("geom_type"), d.get("rings_xs"), d.get("rings_ys")
     fb = _Builder()
     prop_blob = bytearray()
     for ci, (cname, ct) in enumerate(cols):
@@ -608,8 +604,8 @@ def _encode_feature(d: dict, cols: list, cols_set: set):
     bbox = None
     if gt is not None and rxs:
         ffields.append((0, "uoffset", _encode_geometry(fb, gt, rxs, rys)))
-        bbox = (min(min(r) for r in rxs), min(min(r) for r in rys),
-                max(max(r) for r in rxs), max(max(r) for r in rys))
+        if d["xmin"] is not None:
+            bbox = (d["xmin"], d["ymin"], d["xmax"], d["ymax"])
     if prop_blob:
         ffields.append((1, "uoffset", fb.vector_bytes(bytes(prop_blob))))
     return fb.finish_size_prefixed(fb.table(ffields)), bbox
@@ -652,89 +648,72 @@ def write_flatgeobuf(df: DataFrame, path: str, name: str = "layer",
     features index at the envelope's min corner and never match bbox
     queries narrower than it).
 
-    Rows stream through ``toLocalIterator`` (features spool to a side
-    file before assembly in the indexed mode) — driver-serial
-    single-file encode; bulk exports belong in parquet.  Coordinates
-    are raw ``<f8`` copies (bit-exact round-trip).
+    Encodes ``drivers.feature_rows`` into ``drivers.atomic_file``
+    (features spool to an anonymous temp file before assembly in the
+    indexed mode) — driver-serial single-file encode; bulk exports
+    belong in parquet.  Coordinates are raw ``<f8`` copies (bit-exact
+    round-trip).
     """
-    props = [f for f in df.schema.fields
-             if f.name not in RING_COLS and f.name != "fid"]
+    props, rows = feature_rows(df)
     cols = []
-    for f_ in props:
-        t = f_.dataType.simpleString()
+    for c, t in props:
         if t not in _SPARK_CT:
             raise DriverError(
-                f"column {f_.name!r}: no FlatGeobuf type for {t!r}")
-        cols.append((f_.name, _SPARK_CT[t]))
+                f"column {c!r}: no FlatGeobuf type for {t!r}")
+        cols.append((c, _SPARK_CT[t]))
     gt_code = _GT_CODE.get(geometry_type, GT_UNKNOWN)
-    cols_set = set(df.columns)
-    tmp = path + ".tmp"
+    empty = MAGIC + _encode_header(name, gt_code, cols, 0, 0)
 
     if index_node_size == 0:
-        header = _encode_header(name, gt_code, cols, 0, 0)
-        with open(tmp, "wb") as fh:
-            fh.write(MAGIC)
-            fh.write(header)
-            for row in df.toLocalIterator():
-                blob, _bbox = _encode_feature(
-                    row.asDict(recursive=True), cols, cols_set)
-                fh.write(blob)
-        os.replace(tmp, path)
+        with atomic_file(path) as tmp, open(tmp, "wb") as fh:
+            fh.write(empty)
+            for d in rows:
+                fh.write(_encode_feature(d, cols)[0])
         return
 
     # indexed mode: spool feature blobs, then assemble hilbert-sorted
-    spool = path + ".feat.tmp"
-    sizes, boxes = [], []
-    with open(spool, "wb") as sf:
-        for row in df.toLocalIterator():
-            blob, bbox = _encode_feature(
-                row.asDict(recursive=True), cols, cols_set)
+    with tempfile.TemporaryFile(
+            dir=os.path.dirname(os.path.abspath(path))) as sf, \
+            atomic_file(path) as tmp, open(tmp, "wb") as fh:
+        sizes, boxes = [], []
+        for d in rows:
+            blob, bbox = _encode_feature(d, cols)
             sf.write(blob)
             sizes.append(len(blob))
-            boxes.append(bbox if bbox is not None
-                         else (np.nan,) * 4)
-    n = len(sizes)
-    if n == 0:
-        # empty dataset: an R-tree over zero items is meaningless (and
-        # _hilbert_order/_level_num_nodes assume n >= 1) — emit the
-        # canonical empty unindexed file (features_count=0,
-        # index_node_size=0), which the reader already handles.
-        os.remove(spool)
-        header = _encode_header(name, gt_code, cols, 0, 0)
-        with open(tmp, "wb") as fh:
-            fh.write(MAGIC)
-            fh.write(header)
-        os.replace(tmp, path)
-        return
-    sizes = np.asarray(sizes, np.int64)
-    boxes = np.asarray(boxes, np.float64).reshape(n, 4)
-    has_geom = ~np.isnan(boxes[:, 0])
-    if has_geom.any():
-        envelope = (float(np.nanmin(boxes[:, 0])),
-                    float(np.nanmin(boxes[:, 1])),
-                    float(np.nanmax(boxes[:, 2])),
-                    float(np.nanmax(boxes[:, 3])))
-    else:
-        envelope = (0.0, 0.0, 0.0, 0.0)
-    # null-geometry features: degenerate bbox at the envelope min
-    # corner (valid tree; excluded from narrower bbox queries)
-    boxes[~has_geom] = [envelope[0], envelope[1],
-                        envelope[0], envelope[1]]
-    order = _hilbert_order(boxes)
-    sboxes = boxes[order]
-    ssizes = sizes[order]
-    feat_offsets = np.concatenate([[0], np.cumsum(ssizes)[:-1]])
-    nodes = _build_index(sboxes, feat_offsets.astype(np.uint64),
-                         max(int(index_node_size), 2))
-    src_offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
-    header = _encode_header(name, gt_code, cols, n,
-                            max(int(index_node_size), 2), envelope)
-    with open(tmp, "wb") as fh, open(spool, "rb") as sf:
+            boxes.append(bbox if bbox is not None else (np.nan,) * 4)
+        n = len(sizes)
+        if n == 0:
+            # empty dataset: an R-tree over zero items is meaningless
+            # (and _hilbert_order/_level_num_nodes assume n >= 1) — emit
+            # the canonical empty unindexed file (features_count=0,
+            # index_node_size=0), which the reader already handles.
+            fh.write(empty)
+            return
+        sizes = np.asarray(sizes, np.int64)
+        boxes = np.asarray(boxes, np.float64).reshape(n, 4)
+        has_geom = ~np.isnan(boxes[:, 0])
+        if has_geom.any():
+            envelope = (float(np.nanmin(boxes[:, 0])),
+                        float(np.nanmin(boxes[:, 1])),
+                        float(np.nanmax(boxes[:, 2])),
+                        float(np.nanmax(boxes[:, 3])))
+        else:
+            envelope = (0.0, 0.0, 0.0, 0.0)
+        # null-geometry features: degenerate bbox at the envelope min
+        # corner (valid tree; excluded from narrower bbox queries)
+        boxes[~has_geom] = [envelope[0], envelope[1],
+                            envelope[0], envelope[1]]
+        order = _hilbert_order(boxes)
+        sboxes = boxes[order]
+        ssizes = sizes[order]
+        feat_offsets = np.concatenate([[0], np.cumsum(ssizes)[:-1]])
+        nodes = _build_index(sboxes, feat_offsets.astype(np.uint64),
+                             max(int(index_node_size), 2))
+        src_offsets = np.concatenate([[0], np.cumsum(sizes)[:-1]])
         fh.write(MAGIC)
-        fh.write(header)
+        fh.write(_encode_header(name, gt_code, cols, n,
+                                max(int(index_node_size), 2), envelope))
         fh.write(nodes.tobytes())
         for i in order:
             sf.seek(src_offsets[i])
             fh.write(sf.read(sizes[i]))
-    os.remove(spool)
-    os.replace(tmp, path)

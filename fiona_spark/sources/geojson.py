@@ -11,59 +11,34 @@ Maps Fiona's three GeoJSON shapes onto DataFrames:
   * ``fio distrib``— FeatureCollection -> feature rows, stamping
     ``parent`` metadata (`fiona/fio/distrib.py:16-35`)
 
-A feature row carries ``id``, geometry ring columns (xs, ys + envelope),
-and one column per property (SURVEY.md section 1.1 mapping).  The JSON
-codec is Spark's native to_json/from_json (JVM, codegen); nothing is
-parsed per row in Python.
+A feature row carries ``id``, the ring columns (``geom_type``,
+``rings_xs``/``rings_ys`` and their derivations) and one column per
+property (SURVEY.md section 1.1 mapping).  Reading is Spark's native
+from_json (JVM, codegen); nothing is parsed per row in Python.  The
+writers encode each feature exactly from the ring model.
 """
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import DataFrame, functions as F
 
-from ..schema import RING_COLS, with_ring_columns
+from ..schema import RING_COLS, with_ring_columns, with_rings
 
 RS = "\x1e"   # ASCII record separator, as in fio --rs output
 
 
-def feature_struct(df: DataFrame, id_col: str = "id",
-                   geom_type: str = "Polygon",
-                   prop_cols: list[str] | None = None) -> DataFrame:
-    """Assemble GeoJSON-shaped feature structs from ring columns.
-
-    Geometry coordinates come from (xs, ys); properties from
-    ``prop_cols`` (default: everything else).  Output column:
-    ``feature`` struct mirroring `fiona/model.py:296-391` Feature.
-    """
-    skip = {id_col, *RING_COLS}
-    props = prop_cols or [c for c in df.columns if c not in skip]
-    coords = F.expr("transform(xs, (x, i) -> array(x, ys[i]))")
-    if geom_type == "Polygon":
-        coords = F.array(coords)   # one outer ring
-    return df.withColumn("feature", F.struct(
-        F.lit("Feature").alias("type"),
-        F.col(id_col).cast("string").alias("id"),
-        F.struct(F.lit(geom_type).alias("type"),
-                 coords.alias("coordinates")).alias("geometry"),
-        F.struct(*[F.col(c).alias(c) for c in props]).alias("properties")))
-
-
-def _feature_lines(df: DataFrame, id_col: str, geom_type: str) -> DataFrame:
+def _feature_lines(df: DataFrame, id_col: str) -> DataFrame:
     """One GeoJSON feature JSON string per row, column ``value``.
 
-    Frames carrying the full ring model (``geom_type``/``rings_xs``/
-    ``rings_ys``) serialize EXACTLY — per-row geometry type, holes,
-    MultiPolygon part nesting rebuilt by ``model.geometry_from_rings``
-    — via one distributed mapInPandas (Arrow-batched; GeoJSON text
-    export is a slow-path format anyway).  Legacy (xs, ys)-only frames
-    keep the all-JVM to_json path.
+    The frame enters through ``schema.with_rings`` (a frame with only
+    ``xs``/``ys`` is a one-ring Polygon), and the ring model
+    (``geom_type``/``rings_xs``/``rings_ys``) serializes EXACTLY —
+    per-row geometry type, holes, MultiPolygon part nesting rebuilt by
+    ``model.geometry_from_rings`` — via one distributed mapInPandas
+    (Arrow-batched; GeoJSON text export is a slow-path format anyway).
+    ``id_col`` (else ``fid``) is the feature id when the frame has it.
     """
-    if "rings_xs" not in df.columns:
-        feats = feature_struct(df, id_col, geom_type)
-        return feats.select(F.to_json(F.col("feature")).alias("value"))
-
+    df = with_rings(df)
     cols = list(df.columns)
     idc = id_col if id_col in cols else ("fid" if "fid" in cols else None)
 
@@ -79,8 +54,8 @@ def _feature_lines(df: DataFrame, id_col: str, geom_type: str) -> DataFrame:
             # non-identifier property names positionally
             for rec in pdf.to_dict("records"):
                 geometry = geometry_from_rings(
-                    rec.get("geom_type") or geom_type,
-                    rec["rings_xs"], rec["rings_ys"])
+                    rec.get("geom_type") or "Polygon",
+                    rec.get("rings_xs"), rec.get("rings_ys"))
                 props = {k: v for k, v in rec.items()
                          if k not in RING_COLS and k != idc}
                 feat = {"type": "Feature",
@@ -93,7 +68,6 @@ def _feature_lines(df: DataFrame, id_col: str, geom_type: str) -> DataFrame:
 
 
 def write_feature_seq(df: DataFrame, path: str, id_col: str = "id",
-                      geom_type: str = "Polygon",
                       use_rs: bool = False, mode: str = "overwrite") -> None:
     """``fio cat`` sink: one GeoJSON feature per line (RS-optional).
 
@@ -103,12 +77,11 @@ def write_feature_seq(df: DataFrame, path: str, id_col: str = "id",
     line = F.col("value")
     if use_rs:
         line = F.concat(F.lit(RS), line)
-    (_feature_lines(df, id_col, geom_type)
+    (_feature_lines(df, id_col)
      .select(line.alias("value")).write.mode(mode).text(path))
 
 
-def write_collection(df: DataFrame, path: str, id_col: str = "id",
-                     geom_type: str = "Polygon") -> None:
+def write_collection(df: DataFrame, path: str, id_col: str = "id") -> None:
     """``fio collect`` sink: ONE FeatureCollection JSON document.
 
     The reference streams into a single doc on one process
@@ -116,8 +89,7 @@ def write_collection(df: DataFrame, path: str, id_col: str = "id",
     an explicitly driver-ish operation, only sane for result sets that
     fit one file (as in the reference).
     """
-    feats = _feature_lines(df, id_col, geom_type).select(
-        F.col("value").alias("j"))
+    feats = _feature_lines(df, id_col).select(F.col("value").alias("j"))
     (feats.coalesce(1)
      .agg(F.concat(F.lit('{"type": "FeatureCollection", "features": ['),
                    F.concat_ws(", ", F.collect_list("j")),

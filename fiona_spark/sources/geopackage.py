@@ -11,9 +11,10 @@ srs_id) followed by standard WKB (GeoPackage spec section 2.1.3).
 Spark shape: SQLite is a single-file random-access format, so the ROW
 FETCH happens on the driver through stdlib ``sqlite3`` (no GDAL); the
 per-feature GEOMETRY DECODE — GP header parse + WKB -> ring model via
-the engine's codec — runs DISTRIBUTED in one ``mapInPandas`` over the
-blob column.  For cluster-scale data, convert once to parquet with
-``write_dataset``; this source exists for parity and ingest.
+the engine's codec — runs DISTRIBUTED in one ``mapInArrow`` over the
+blob column (``sqlite_db.layer_frame``).  For cluster-scale data,
+convert once to parquet with ``write_dataset``; this source exists for
+parity and ingest.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import struct
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import DriverError
-from ..schema import RING_COLS
+from .drivers import feature_rows
 from .sqlite_db import layer_frame
 
 _ENV_DOUBLES = {0: 0, 1: 4, 2: 6, 3: 6, 4: 8}
@@ -131,7 +132,7 @@ def write_geopackage(df: DataFrame, path: str, layer: str = "features",
     """Single-file GeoPackage sink (the reference's GPKG 'raw' modes).
 
     A .gpkg is one SQLite file, so this is a driver-side writer by
-    nature — rows stream through ``toLocalIterator`` (one partition in
+    nature — it encodes ``drivers.feature_rows`` (one partition in
     memory at a time, never the whole table; the same shape as a
     coalesce(1) single-file write).  Ring-model geometry columns
     encode through the engine's WKB codec into GeoPackageBinary blobs
@@ -151,7 +152,7 @@ def write_geopackage(df: DataFrame, path: str, layer: str = "features",
     """
     from .. import model, wkb
 
-    props = [f for f in df.schema.fields if f.name not in RING_COLS]
+    props, rows = feature_rows(df)
     con = sqlite3.connect(path)
     try:
         if mode == "w":
@@ -169,9 +170,8 @@ def write_geopackage(df: DataFrame, path: str, layer: str = "features",
                 table_name TEXT, column_name TEXT,
                 geometry_type_name TEXT, srs_id INTEGER,
                 z TINYINT, m TINYINT)""")
-            cols = ", ".join(
-                f'"{f.name}" {_SQLITE_T.get(f.dataType.simpleString(), "TEXT")}'
-                for f in props)
+            cols = ", ".join(f'"{c}" {_SQLITE_T.get(t, "TEXT")}'
+                             for c, t in props)
             con.execute(f'DROP TABLE IF EXISTS "{layer}"')
             con.execute(f'CREATE TABLE "{layer}" '
                         f'(fid INTEGER PRIMARY KEY AUTOINCREMENT, '
@@ -224,34 +224,22 @@ def write_geopackage(df: DataFrame, path: str, layer: str = "features",
                     (fid,
                      min(min(r) for r in bxs), max(max(r) for r in bxs),
                      min(min(r) for r in bys), max(max(r) for r in bys)))
-        names = [f.name for f in props]
+        names = [c for c, _t in props]
         ph = ", ".join(["?"] * (len(names) + 1))
         collist = ", ".join(["geom"] + [f'"{n}"' for n in names])
         insert = f'INSERT INTO "{layer}" ({collist}) VALUES ({ph})'
-        cols_set = set(df.columns)
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            if d.get("rings_xs") is not None:
-                rxs, rys = d["rings_xs"], d["rings_ys"]
-                g = model.geometry_from_rings(
-                    d.get("geom_type") or "Polygon", rxs, rys)
-            elif "xs" in cols_set and d.get("xs") is not None:
-                rxs, rys = [d["xs"]], [d["ys"]]
-                g = model.geometry_from_rings(
-                    d.get("geom_type") or "Polygon", rxs, rys)
-            else:
-                rxs = rys = g = None
-            if g is None:
-                blob = build_gpkg_blob(None, srs_id)
-            else:
-                blob = build_gpkg_blob(wkb.encode(dict(g)), srs_id)
+        for d in rows:
+            g = model.geometry_from_rings(d.get("geom_type") or "Polygon",
+                                          d.get("rings_xs"),
+                                          d.get("rings_ys"))
+            blob = build_gpkg_blob(
+                None if g is None else wkb.encode(dict(g)), srs_id)
             cur = con.execute(insert, [blob] + [d.get(n) for n in names])
-            if has_rtree and rxs:
+            if has_rtree and d.get("xmin") is not None:
                 con.execute(
                     f'INSERT INTO "{rtree}" VALUES (?, ?, ?, ?, ?)',
                     (cur.lastrowid,
-                     min(min(r) for r in rxs), max(max(r) for r in rxs),
-                     min(min(r) for r in rys), max(max(r) for r in rys)))
+                     d["xmin"], d["xmax"], d["ymin"], d["ymax"]))
         con.commit()
     finally:
         con.close()

@@ -21,16 +21,14 @@ a string column, in first-seen order).  Convert to parquet for bulk.
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
 
 import numpy as np
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS
 from ..wkb import _linearize_arcs
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 
 def _local(tag: str) -> str:
@@ -261,38 +259,29 @@ def write_gml(df: DataFrame, path: str,
     """Single-file GML FeatureCollection sink (reference mode parity:
     GML is "rw", `fiona/drvsupport.py:69`).
 
-    Rows stream through ``toLocalIterator`` (driver-serial encode —
-    the single-file sink throughput ceiling; bulk exports belong in
-    parquet).  Property columns emit as child elements with escaped
-    text; geometry emits GML 3 markup ``read_gml`` decodes back, with
-    ``repr`` doubles so coordinates round-trip bit-exactly.
+    Encodes ``drivers.feature_rows`` into ``drivers.atomic_file``
+    (driver-serial encode — the single-file sink throughput ceiling;
+    bulk exports belong in parquet).  Property columns emit as child
+    elements with escaped text; geometry emits GML 3 markup
+    ``read_gml`` decodes back, with ``repr`` doubles so coordinates
+    round-trip bit-exactly.
     """
     from xml.sax.saxutils import escape
 
-    props = [f.name for f in df.schema.fields
-             if f.name not in RING_COLS and f.name != "fid"]
-    cols_set = set(df.columns)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
+    props, rows = feature_rows(df)
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as fh:
         fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
         fh.write('<gml:FeatureCollection '
                  'xmlns:gml="http://www.opengis.net/gml" '
                  'xmlns:fs="urn:fiona-spark">\n')
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            if d.get("rings_xs") is not None:
-                gt, rxs, rys = d.get("geom_type"), d["rings_xs"], d["rings_ys"]
-            elif "xs" in cols_set and d.get("xs") is not None:
-                gt, rxs, rys = (d.get("geom_type") or "Polygon",
-                                [d["xs"]], [d["ys"]])
-            else:
-                gt, rxs, rys = None, None, None
+        for d in rows:
+            gt, rxs, rys = (d.get("geom_type"), d.get("rings_xs"),
+                            d.get("rings_ys"))
             fh.write(f"<gml:featureMember><fs:{feature_name}>")
-            for p in props:
+            for p, _t in props:
                 v = d.get(p)
                 if v is not None:
                     fh.write(f"<fs:{p}>{escape(str(v))}</fs:{p}>")
             fh.write(_gml_geometry_xml(gt, rxs, rys))
             fh.write(f"</fs:{feature_name}></gml:featureMember>\n")
         fh.write("</gml:FeatureCollection>\n")
-    os.replace(tmp, path)

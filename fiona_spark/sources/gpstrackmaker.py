@@ -31,8 +31,8 @@ the public format description the GDAL ``gtm`` driver reads:
 
 Layers mirror GDAL: ``waypoints`` (Point; name/comment/icon/time) and
 ``tracks`` (LineString; name/type/color).  Single-file format → r4
-convention: bytes parse on the driver, writers stream
-``toLocalIterator``; bulk exports belong in parquet.  Append re-uses
+convention: bytes parse on the driver, writers encode
+``drivers.feature_rows``; bulk exports belong in parquet.  Append re-uses
 the existing section byte ranges verbatim (no decode/re-encode of old
 records) and patches counts + bounds.
 """
@@ -41,13 +41,12 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
-import os
 import struct
 
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 __all__ = ["read_gtm", "write_gtm", "append_gtm", "LAYERS"]
 
@@ -208,27 +207,20 @@ def _ts_to_wdate(val) -> int:
 
 
 def _enc_waypoint(row: dict) -> bytes:
-    xs, ys = row.get("xs"), row.get("ys")
-    if not xs:
-        xs = row["rings_xs"][0]
-        ys = row["rings_ys"][0]
     name = str(row.get("name") or "")[:10].ljust(10).encode(
         "ascii", "replace")
     comment = str(row.get("comment") or "").encode("utf-8")
     icon = row.get("icon")
     icon = 48 if icon is None else int(icon)       # reference default
     wdate = _ts_to_wdate(row.get("time"))
-    return (struct.pack("<dd", float(ys[0]), float(xs[0]))
+    return (struct.pack("<dd", float(row["rings_ys"][0][0]),
+                        float(row["rings_xs"][0][0]))
             + name
             + struct.pack("<H", len(comment)) + comment
             + struct.pack("<HBiHfH", icon, 0, wdate, 0, 0.0, 0))
 
 
-def _enc_track(row: dict):
-    xs, ys = row.get("xs"), row.get("ys")
-    if not xs:
-        xs = row["rings_xs"][0]
-        ys = row["rings_ys"][0]
+def _enc_track(row: dict, xs, ys):
     pts = b"".join(
         struct.pack("<ddiBf", float(y), float(x), 0,
                     1 if i == 0 else 0, 0.0)
@@ -252,51 +244,44 @@ def _emit(path: str, wpt_bytes: bytes, nwpts: int, tck_bytes: bytes,
     struct.pack_into("<4f", header, _OFF_BOUNDS, *bounds)
     struct.pack_into("<i", header, _OFF_NMAPS, 0)
     struct.pack_into("<i", header, _OFF_NTK, ntk)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as fh:
+    with atomic_file(path) as tmp, open(tmp, "wb") as fh:
         fh.write(bytes(header))
         fh.write(struct.pack("<HHHH", 0, 0, 0, 0))   # empty tail strings
         fh.write(wpt_bytes)
         fh.write(tck_bytes)
         fh.write(tk_bytes)
-    os.replace(tmp, path)
 
 
 def _encode_rows(df: DataFrame):
-    """Stream the frame once (driver-serial single-file encode) into
-    (waypoint bytes, n, trackpoint bytes, n, header bytes, n, bounds)."""
+    """Encode ``drivers.feature_rows`` once (driver-serial single-file
+    encode) into (waypoint bytes, n, trackpoint bytes, n, header bytes,
+    n, bounds); rows without a vertex are skipped, and the bounds
+    cover every part of every written row."""
     wpt, tck, tk = bytearray(), bytearray(), bytearray()
     nwpts = ntcks = ntk = 0
     lo_x = lo_y = float("inf")
     hi_x = hi_y = float("-inf")
-    cols = df.columns
-    for row in df.toLocalIterator():
-        d = {c: row[c] for c in cols}
-        gt = (d.get("geom_type") or "Point").lower()
-        xs = d.get("xs") or (d.get("rings_xs") or [[None]])[0]
-        ys = d.get("ys") or (d.get("rings_ys") or [[None]])[0]
-        if not xs or xs[0] is None:
+    _props, rows = feature_rows(df)
+    for d in rows:
+        if d.get("xmin") is None:
             continue
-        lo_x = min(lo_x, *xs)
-        hi_x = max(hi_x, *xs)
-        lo_y = min(lo_y, *ys)
-        hi_y = max(hi_y, *ys)
-        if gt == "point":
+        gt = d.get("geom_type")
+        if gt == "Point":
             wpt += _enc_waypoint(d)
             nwpts += 1
-        elif gt in ("linestring", "multilinestring"):
-            rings = (d.get("rings_xs"), d.get("rings_ys")) \
-                if gt == "multilinestring" else ([xs], [ys])
-            for rxs, rys in zip(*rings):
-                pts, hdr, n = _enc_track({**d, "xs": rxs, "ys": rys})
+        elif gt in ("LineString", "MultiLineString"):
+            for rxs, rys in zip(d["rings_xs"], d["rings_ys"]):
+                pts, hdr, n = _enc_track(d, rxs, rys)
                 tck += pts
                 tk += hdr
                 ntcks += n
                 ntk += 1
         else:
             raise DriverError(
-                f"GTM cannot store geometry type {d.get('geom_type')!r} "
+                f"GTM cannot store geometry type {gt!r} "
                 "(points and line strings only)")
+        lo_x, lo_y = min(lo_x, d["xmin"]), min(lo_y, d["ymin"])
+        hi_x, hi_y = max(hi_x, d["xmax"]), max(hi_y, d["ymax"])
     if nwpts == 0 and ntcks == 0:
         lo_x = lo_y = hi_x = hi_y = 0.0
     return wpt, nwpts, tck, ntcks, tk, ntk, (lo_x, hi_x, lo_y, hi_y)

@@ -10,13 +10,12 @@ framing), one typed frame per layer (``drivers.rows_frame``).
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 LAYERS = ("waypoints", "tracks", "track_points", "routes", "route_points")
 _S, _L = T.StringType(), T.LongType()
@@ -127,9 +126,10 @@ def write_gpx(df: DataFrame, path: str) -> None:
     ``name``/``ele``/``time`` columns map to the spec's child
     elements; other property columns are out of the GPX schema and
     are skipped (the reference's GDAL driver drops them too unless
-    GPX_USE_EXTENSIONS is set).  Streams ``toLocalIterator`` —
-    driver-serial single-file encode; bulk exports belong in parquet.
-    Coordinates emit ``repr`` doubles (bit-exact round-trip).
+    GPX_USE_EXTENSIONS is set).  Rows without geometry are skipped.
+    Encodes ``drivers.feature_rows`` — driver-serial single-file
+    encode; bulk exports belong in parquet.  Coordinates emit ``repr``
+    doubles (bit-exact round-trip).
     """
     from xml.sax.saxutils import escape, quoteattr
 
@@ -147,27 +147,21 @@ def write_gpx(df: DataFrame, path: str) -> None:
         return (f'<{tag} lat={quoteattr(repr(float(y)))} '
                 f'lon={quoteattr(repr(float(x)))}/>')
 
-    cols = set(df.columns)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
+    _props, rows = feature_rows(df)
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as fh:
         fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
         fh.write('<gpx version="1.1" creator="fiona_spark" '
                  'xmlns="http://www.topografix.com/GPX/1/1">\n')
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
+        for d in rows:
             gt = d.get("geom_type")
             rxs, rys = d.get("rings_xs"), d.get("rings_ys")
-            if rxs is None and "xs" in cols and d.get("xs") is not None:
-                rxs, rys = [d["xs"]], [d["ys"]]
             if gt is None or rxs is None:
                 continue
             name = d.get("name")
             name_xml = f"<name>{escape(str(name))}</name>" if name else ""
             if gt == "Point":
-                fh.write(pt("wpt", rxs[0][0], rys[0][0],
-                            d.get("ele") if "ele" in cols else None,
-                            d.get("time") if "time" in cols else None,
-                            name))
+                fh.write(pt("wpt", rxs[0][0], rys[0][0], d.get("ele"),
+                            d.get("time"), name))
                 fh.write("\n")
             elif gt == "LineString":
                 pts = "".join(pt("rtept", x, y)
@@ -185,4 +179,3 @@ def write_gpx(df: DataFrame, path: str) -> None:
                     f"geometry type {gt!r} has no GPX element "
                     "(Point/LineString/MultiLineString only)")
         fh.write("</gpx>\n")
-    os.replace(tmp, path)

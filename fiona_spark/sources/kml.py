@@ -11,14 +11,12 @@ every property is a string column, in first-seen order.
 
 from __future__ import annotations
 
-import os
 import xml.etree.ElementTree as ET
 
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 
 def _local(tag: str) -> str:
@@ -194,32 +192,23 @@ def write_kml(df: DataFrame, path: str) -> None:
     to the KML elements of the same name, every other property column
     lands in ``<ExtendedData><Data name=..><value>..`` (the shape
     ``read_kml`` parses back), geometry emits the KML coordinate
-    syntax with ``repr`` doubles (bit-exact round-trip).  Streams
-    ``toLocalIterator`` — driver-serial single-file encode; bulk
-    exports belong in parquet.
+    syntax with ``repr`` doubles (bit-exact round-trip).  Encodes
+    ``drivers.feature_rows`` into ``drivers.atomic_file`` —
+    driver-serial single-file encode; bulk exports belong in parquet.
     """
     from xml.sax.saxutils import escape, quoteattr
 
-    props = [f.name for f in df.schema.fields
-             if f.name not in RING_COLS and f.name != "fid"]
-    cols_set = set(df.columns)
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
+    props, rows = feature_rows(df)
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as fh:
         fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
         fh.write('<kml xmlns="http://www.opengis.net/kml/2.2">'
                  '<Document>\n')
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            if d.get("rings_xs") is not None:
-                gt, rxs, rys = d.get("geom_type"), d["rings_xs"], d["rings_ys"]
-            elif "xs" in cols_set and d.get("xs") is not None:
-                gt, rxs, rys = (d.get("geom_type") or "Polygon",
-                                [d["xs"]], [d["ys"]])
-            else:
-                gt, rxs, rys = None, None, None
+        for d in rows:
+            gt, rxs, rys = (d.get("geom_type"), d.get("rings_xs"),
+                            d.get("rings_ys"))
             fh.write("<Placemark>")
             ext = []
-            for p in props:
+            for p, _t in props:
                 v = d.get(p)
                 if v is None:
                     continue
@@ -233,4 +222,3 @@ def write_kml(df: DataFrame, path: str) -> None:
             fh.write(_kml_geometry_xml(gt, rxs, rys))
             fh.write("</Placemark>\n")
         fh.write("</Document></kml>\n")
-    os.replace(tmp, path)

@@ -27,7 +27,7 @@ the existing COLUMNS block matches the frame schema, then extends both
 files — MIF has no trailer, so appending is pure concatenation.
 
 Driver-side parse into one typed frame (``drivers.rows_frame``);
-writer streams ``toLocalIterator`` (single-file driver-serial encode;
+writer encodes ``drivers.feature_rows`` (single-file driver-serial encode;
 bulk exports belong in parquet/iceberg_like).
 """
 
@@ -41,8 +41,7 @@ import re
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, rows_frame
 
 _STYLE = ("SYMBOL", "PEN", "BRUSH", "CENTER", "SMOOTH", "FONT")
 
@@ -211,13 +210,14 @@ def _geom_record(gt, rxs, rys) -> str:
 
 def write_mapinfo(df: DataFrame, path: str, mode: str = "w",
                   delimiter: str = ",") -> None:
-    """MIF/MID pair sink; ``mode='a'`` appends (COLUMNS must match).
+    """MIF/MID pair sink over ``drivers.feature_rows``; ``mode='a'``
+    appends (COLUMNS must match), ``mode='w'`` writes both files
+    through ``drivers.atomic_file``.
 
     THROUGHPUT CEILING: one text-file pair = driver-serial encode;
     bulk exports belong in parquet/iceberg_like.
     """
-    props = [(c, t) for c, t in df.dtypes
-             if c not in RING_COLS and c != "fid"]
+    props, rows = feature_rows(df)
     mid = _mid_path(path)
     if mode == "a":
         with open(path, encoding="utf-8", errors="replace") as f:
@@ -228,41 +228,43 @@ def write_mapinfo(df: DataFrame, path: str, mode: str = "w",
                 f"append schema mismatch: file has "
                 f"{[c for c, _ in columns]}, frame has "
                 f"{[c for c, _ in props]}")
-        delimiter = delim
-        fm, fa = open(path, "a", encoding="utf-8"), open(
-            mid, "a", encoding="utf-8", newline="")
+        with open(path, "a", encoding="utf-8") as fm, \
+                open(mid, "a", encoding="utf-8", newline="") as fa:
+            _write_records(fm, fa, props, rows, delim)
     elif mode == "w":
-        fm = open(path, "w", encoding="utf-8")
-        fm.write("VERSION 300\nCharset \"Neutral\"\n")
-        fm.write(f'DELIMITER "{delimiter}"\n')
-        fm.write(f"COLUMNS {len(props)}\n")
-        for c, t in props:
-            fm.write(f"  {c} {_mif_type(t)}\n")
-        fm.write("DATA\n")
-        fa = open(mid, "w", encoding="utf-8", newline="")
+        with atomic_file(path) as tm, atomic_file(mid) as ta, \
+                open(tm, "w", encoding="utf-8") as fm, \
+                open(ta, "w", encoding="utf-8", newline="") as fa:
+            fm.write("VERSION 300\nCharset \"Neutral\"\n")
+            fm.write(f'DELIMITER "{delimiter}"\n')
+            fm.write(f"COLUMNS {len(props)}\n")
+            for c, t in props:
+                fm.write(f"  {c} {_mif_type(t)}\n")
+            fm.write("DATA\n")
+            _write_records(fm, fa, props, rows, delimiter)
     else:
         raise DriverError(f"unsupported mode {mode!r}")
-    try:
-        w = csv.writer(fa, delimiter=delimiter, quotechar='"',
-                       quoting=csv.QUOTE_NONNUMERIC, lineterminator="\n")
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            fm.write(_geom_record(d.get("geom_type"),
-                                  d.get("rings_xs"), d.get("rings_ys")))
-            vals = []
-            for c, t in props:
-                v = d.get(c)
-                if v is None:
-                    vals.append("")
-                elif t == "boolean":
-                    vals.append("T" if v else "F")
-                elif isinstance(v, float):
-                    vals.append(v)
-                elif t in ("bigint", "int", "smallint", "tinyint"):
-                    vals.append(v)
-                else:
-                    vals.append(str(v))
-            if props:
-                w.writerow(vals)
-    finally:
-        fm.close(); fa.close()
+
+
+def _write_records(fm, fa, props, rows, delimiter: str) -> None:
+    """One MIF geometry record and one MID attribute row per feature."""
+    w = csv.writer(fa, delimiter=delimiter, quotechar='"',
+                   quoting=csv.QUOTE_NONNUMERIC, lineterminator="\n")
+    for d in rows:
+        fm.write(_geom_record(d.get("geom_type"),
+                              d.get("rings_xs"), d.get("rings_ys")))
+        vals = []
+        for c, t in props:
+            v = d.get(c)
+            if v is None:
+                vals.append("")
+            elif t == "boolean":
+                vals.append("T" if v else "F")
+            elif isinstance(v, float):
+                vals.append(v)
+            elif t in ("bigint", "int", "smallint", "tinyint"):
+                vals.append(v)
+            else:
+                vals.append(str(v))
+        if props:
+            w.writerow(vals)

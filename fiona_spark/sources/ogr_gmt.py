@@ -29,20 +29,19 @@ anywhere on the path.
 
 Driver-side parse into one typed frame (``drivers.rows_frame``; the
 @T line declares the column types, so a column with no value in any
-row keeps its type); the writer streams ``toLocalIterator`` (single
-text file = driver-serial encode — bulk exports belong in
-parquet/iceberg_like).
+row keeps its type); the writer encodes ``drivers.feature_rows`` into
+``drivers.atomic_file`` (single text file = driver-serial encode —
+bulk exports belong in parquet/iceberg_like).
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS
-from .drivers import rows_frame
+from .drivers import atomic_file, feature_rows, first_geom_type, rows_frame
 
 _GTYPES = {
     "POINT": "Point", "MULTIPOINT": "MultiPoint",
@@ -173,18 +172,15 @@ def read_gmt(spark, path: str) -> DataFrame:
 
 
 def write_gmt(df: DataFrame, path: str) -> None:
-    """Single-file OGR-GMT sink (reference mode parity: GMT is "rw").
+    """Single-file OGR-GMT sink (reference mode parity: GMT is "rw")
+    over ``drivers.feature_rows``.
 
     Property columns become @N/@T header declarations (double /
     integer / string); every feature writes ``>`` + ``# @D`` + its
     rings, later rings marked ``# @H`` so multi-ring polygons round
     trip.  THROUGHPUT CEILING: driver-serial single-file encode.
     """
-    props = [(c, t) for c, t in df.dtypes
-             if c not in RING_COLS and c != "fid"]
-    gtype_rows = (df.select("geom_type").filter(
-        F.col("geom_type").isNotNull()).limit(1).collect())
-    gtype = gtype_rows[0][0] if gtype_rows else "LineString"
+    gtype = first_geom_type(df) or "LineString"
     code = _WRITE_G.get(gtype)
     if code is None:
         raise DriverError(f"GMT cannot store {gtype!r}")
@@ -196,14 +192,14 @@ def write_gmt(df: DataFrame, path: str) -> None:
             return "integer"
         return "string"
 
-    with open(path, "w", encoding="utf-8") as f:
+    props, rows = feature_rows(df)
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as f:
         f.write(f"# @VGMT1.0 @G{code}\n")
         if props:
             f.write("# @N" + "|".join(c for c, _ in props) + "\n")
             f.write("# @T" + "|".join(_t(t) for _, t in props) + "\n")
         f.write("# FEATURE_DATA\n")
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
+        for d in rows:
             rxs, rys = d.get("rings_xs") or [], d.get("rings_ys") or []
             f.write(">\n")
             if props:

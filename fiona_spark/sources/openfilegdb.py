@@ -34,6 +34,7 @@ convention.
 from __future__ import annotations
 
 import datetime as _dt
+import math
 import os
 import struct
 import uuid as _uuid
@@ -43,8 +44,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
-from .drivers import ring_schema
+from ..schema import with_ring_columns
+from .drivers import feature_rows, ring_schema
 
 FT_INT16, FT_INT32, FT_FLOAT32, FT_FLOAT64, FT_STRING = 0, 1, 2, 3, 4
 FT_DATETIME, FT_OBJECTID, FT_GEOMETRY, FT_BINARY, FT_RASTER = 5, 6, 7, 8, 9
@@ -732,28 +733,41 @@ def _layer_geom_byte(rows) -> int:
 
 
 def _collect_rows(df: DataFrame):
-    """DataFrame -> (prop fields from the schema, row dicts streamed
-    driver-side — single-file formats are driver-serial by design, the
-    same toLocalIterator convention as shapefile/gpkg)."""
-    props = []
-    for f in df.schema.fields:
-        if f.name in RING_COLS or f.name == "fid":
-            continue
-        t = f.dataType.simpleString()
+    """DataFrame -> (prop field descriptors, ``drivers.feature_rows``
+    rows as a list: a table is assembled whole)."""
+    props, rows = feature_rows(df)
+    fields = []
+    for c, t in props:
         if t not in _SPARK_FT:
-            raise DriverError(f"no FGDB mapping for column {f.name!r} "
+            raise DriverError(f"no FGDB mapping for column {c!r} "
                               f"of type {t}")
-        props.append({"name": f.name, "ftype": _SPARK_FT[t],
-                      "nullable": True})
-    cols = set(df.columns)
-    rows = []
-    for row in df.toLocalIterator():
-        d = row.asDict(recursive=True)
-        if d.get("rings_xs") is None and "xs" in cols \
-                and d.get("xs") is not None:
-            d["rings_xs"], d["rings_ys"] = [d["xs"]], [d["ys"]]
-        rows.append(d)
-    return props, rows
+        fields.append({"name": c, "ftype": _SPARK_FT[t], "nullable": True})
+    return fields, list(rows)
+
+
+def _extent(rows):
+    """(xmin, ymin, xmax, ymax) over the rows' own envelopes; None when
+    no row has a vertex."""
+    boxes = np.asarray([(r["xmin"], r["ymin"], r["xmax"], r["ymax"])
+                        for r in rows if r.get("xmin") is not None])
+    if not len(boxes):
+        return None
+    return (*boxes[:, :2].min(0).tolist(), *boxes[:, 2:].max(0).tolist())
+
+
+def _new_layer_fields(props, rows, srs: str):
+    """(layer geometry byte, field descriptors) of a new feature table:
+    SHAPE on a grid whose origin covers the rows' extent, OBJECTID,
+    then the property fields."""
+    ext = _extent(rows) or (0.0, 0.0, 0.0, 0.0)
+    gfield = {"name": "SHAPE", "ftype": FT_GEOMETRY, "nullable": True,
+              "srs": srs,
+              "xorigin": min(-400.0, math.floor(ext[0]) - 1.0),
+              "yorigin": min(-400.0, math.floor(ext[1]) - 1.0),
+              "xyscale": _DEF_XYSCALE, "extent": ext}
+    return _layer_geom_byte(rows), [
+        gfield, {"name": "OBJECTID", "ftype": FT_OBJECTID,
+                 "nullable": False}] + props
 
 
 def write_openfilegdb(df: DataFrame, path: str, layer: str = "layer",
@@ -796,22 +810,7 @@ def write_openfilegdb(df: DataFrame, path: str, layer: str = "layer",
                                   or f.endswith(".gdbtablx")):
             os.remove(os.path.join(path, f))
 
-    lg = _layer_geom_byte(rows)
-    allx = [x for r in rows for ring in (r.get("rings_xs") or [])
-            for x in ring]
-    ally = [y for r in rows for ring in (r.get("rings_ys") or [])
-            for y in ring]
-    ext = ((min(allx), min(ally), max(allx), max(ally)) if allx
-           else (0.0, 0.0, 0.0, 0.0))
-    import math
-    gfield = {"name": "SHAPE", "ftype": FT_GEOMETRY, "nullable": True,
-              "srs": srs or _DEF_SRS,
-              "xorigin": min(-400.0, math.floor(ext[0]) - 1.0),
-              "yorigin": min(-400.0, math.floor(ext[1]) - 1.0),
-              "xyscale": _DEF_XYSCALE, "extent": ext}
-    fields = [gfield,
-              {"name": "OBJECTID", "ftype": FT_OBJECTID,
-               "nullable": False}] + props
+    lg, fields = _new_layer_fields(props, rows, srs or _DEF_SRS)
     sec = _encode_fields(lg, fields, feature_table=True)
     bodies = [_encode_row(r, fields) for r in rows]
     _write_table_files(path, 2, sec, bodies)
@@ -825,21 +824,7 @@ def _append_openfilegdb(df: DataFrame, path: str, layer: str) -> None:
         # NEW layer in an existing gdb: next free table number
         props, rows = _collect_rows(df)
         tno = max(cat) + 1
-        lg = _layer_geom_byte(rows)
-        allx = [x for r in rows for ring in (r.get("rings_xs") or [])
-                for x in ring]
-        ally = [y for r in rows for ring in (r.get("rings_ys") or [])
-                for y in ring]
-        ext = ((min(allx), min(ally), max(allx), max(ally)) if allx
-               else (0.0, 0.0, 0.0, 0.0))
-        import math
-        gfield = {"name": "SHAPE", "ftype": FT_GEOMETRY, "nullable": True,
-                  "srs": _DEF_SRS,
-                  "xorigin": min(-400.0, math.floor(ext[0]) - 1.0),
-                  "yorigin": min(-400.0, math.floor(ext[1]) - 1.0),
-                  "xyscale": _DEF_XYSCALE, "extent": ext}
-        fields = [gfield, {"name": "OBJECTID", "ftype": FT_OBJECTID,
-                           "nullable": False}] + props
+        lg, fields = _new_layer_fields(props, rows, _DEF_SRS)
         sec = _encode_fields(lg, fields, feature_table=True)
         _write_table_files(path, tno, sec,
                            [_encode_row(r, fields) for r in rows])
@@ -872,21 +857,14 @@ def _append_openfilegdb(df: DataFrame, path: str, layer: str) -> None:
     struct.pack_into("<i", d, 8, u3)
     struct.pack_into("<q", d, 24, len(d) + len(new))
     # patch the layer extent doubles in place (fixed-size section)
-    if gf is not None and "_extent_off" in gf and rows:
-        allx = [x for r in rows for ring in (r.get("rings_xs") or [])
-                for x in ring]
-        ally = [y for r in rows for ring in (r.get("rings_ys") or [])
-                for y in ring]
-        if allx:
-            eo = gf["_extent_off"]
-            cur = list(struct.unpack_from("<4d", d, eo))
-            if cur == [0.0, 0.0, 0.0, 0.0] and \
-                    struct.unpack("<i", bytes(d[4:8]))[0] == len(bodies):
-                cur = [min(allx), min(ally), max(allx), max(ally)]
-            else:
-                cur = [min(cur[0], *allx), min(cur[1], *ally),
-                       max(cur[2], *allx), max(cur[3], *ally)]
-            struct.pack_into("<4d", d, eo, *cur)
+    ext = _extent(rows)
+    if gf is not None and "_extent_off" in gf and ext is not None:
+        eo = gf["_extent_off"]
+        cur = struct.unpack_from("<4d", d, eo)
+        if cur != (0.0, 0.0, 0.0, 0.0) or n_valid != len(bodies):
+            ext = (min(cur[0], ext[0]), min(cur[1], ext[1]),
+                   max(cur[2], ext[2]), max(cur[3], ext[3]))
+        struct.pack_into("<4d", d, eo, *ext)
     with open(os.path.join(_gdb_dir(path), f"a{tno:08x}.gdbtable"),
               "wb") as fh:
         fh.write(bytes(d) + bytes(new))

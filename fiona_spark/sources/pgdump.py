@@ -30,8 +30,9 @@ at the top level only, the PostGIS convention).  COPY text escaping
 follows the PostgreSQL spec: ``\\N`` for NULL, backslash/tab/newline
 escaped.
 
-Single-file sink -> r4 convention: streams ``toLocalIterator``
-(driver-serial ceiling documented; bulk exports belong in parquet).
+Single-file sink -> r4 convention: encodes ``drivers.feature_rows``
+into ``drivers.atomic_file`` (driver-serial ceiling documented; bulk
+exports belong in parquet).
 Write-only like the reference driver — opening a ``.sql`` for read
 raises ``DriverError``.
 """
@@ -45,7 +46,8 @@ from pyspark.sql import DataFrame
 
 from .. import model, wkb as wkbmod
 from ..errors import DriverError
-from ..schema import RING_COLS
+from ..schema import with_rings
+from .drivers import atomic_file, feature_rows
 
 __all__ = ["write_pgdump"]
 
@@ -135,16 +137,16 @@ def write_pgdump(df: DataFrame, path: str, layer: str | None = None,
     the file stem.
     """
     layer = layer or os.path.splitext(os.path.basename(path))[0]
-    has_geom = "rings_xs" in df.columns and "geom_type" in df.columns
-    props = [(f.name, f.dataType.simpleString())
-             for f in df.schema.fields if f.name not in RING_COLS]
+    frame = with_rings(df)
+    has_geom = "rings_xs" in frame.columns and "geom_type" in frame.columns
+    props, rows = feature_rows(df)
     pg_cols = [(name, _pg_type(t)) for name, t in props]
 
     # layer geometry type: the distinct geom_type values, or GEOMETRY
     gtype = "GEOMETRY"
     if has_geom:
         kinds = {(r[0] or "").lower() for r in
-                 df.select("geom_type").distinct().collect()}
+                 frame.select("geom_type").distinct().collect()}
         kinds.discard("")
         mapped = {_PG_GEOM.get(k) for k in kinds}
         if None in mapped:
@@ -157,8 +159,7 @@ def write_pgdump(df: DataFrame, path: str, layer: str | None = None,
     qlayer = f'"{schema}"."{layer}"'
     copy_cols = ([f'"{geometry_name}"'] if has_geom else []) + \
         [f'"{n}"' for n, _t in pg_cols]
-    tmp = path + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as fh:
+    with atomic_file(path) as tmp, open(tmp, "w", encoding="utf-8") as fh:
         w = fh.write
         w("SET standard_conforming_strings = ON;\n")
         w(f'DROP TABLE IF EXISTS {qlayer} CASCADE;\n')
@@ -174,19 +175,13 @@ def write_pgdump(df: DataFrame, path: str, layer: str | None = None,
         for name, pg_t in pg_cols:
             w(f'ALTER TABLE {qlayer} ADD COLUMN "{name}" {pg_t};\n')
         w(f'COPY {qlayer} ({", ".join(copy_cols)}) FROM STDIN;\n')
-        for row in df.toLocalIterator():
+        for d in rows:
             vals = []
             if has_geom:
-                gt = row["geom_type"]
-                if gt is None or row["rings_xs"] is None:
-                    vals.append("\\N")
-                else:
-                    vals.append(_ewkb_hex(gt, row["rings_xs"],
-                                          row["rings_ys"], srid))
-            for name, _pg_t in pg_cols:
-                spark_t = dict(props)[name]
-                vals.append(_copy_value(row[name], spark_t))
+                gt, rxs = d["geom_type"], d["rings_xs"]
+                vals.append("\\N" if gt is None or rxs is None else
+                            _ewkb_hex(gt, rxs, d["rings_ys"], srid))
+            vals += [_copy_value(d[n], t) for n, t in props]
             w("\t".join(vals) + "\n")
         w("\\.\n")
         w("COMMIT;\n")
-    os.replace(tmp, path)

@@ -17,7 +17,7 @@ per-record blobs (one pass over the index/record headers — cheap) and
 parses the fixed-width ``.dbf`` with numpy; the per-record GEOMETRY
 decode runs DISTRIBUTED in one ``mapInPandas`` over the blob column,
 like the GeoPackage source.  Single-file formats write driver-side,
-streaming ``toLocalIterator``.
+encoding ``drivers.feature_rows``.
 """
 
 from __future__ import annotations
@@ -32,8 +32,8 @@ from pyspark.sql import DataFrame, types as T
 
 from .. import geom
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
-from .drivers import ring_schema
+from ..schema import with_ring_columns
+from .drivers import atomic_file, feature_rows, ring_schema
 
 SHP_NULL = 0
 SHP_POINT = 1
@@ -288,22 +288,12 @@ def _dbf_value_bytes(v, name: str, ftype: str, flen: int, fdec: int,
     return str(v).encode(encoding)[:flen].ljust(flen)
 
 
-def _row_geometry(d: dict, cols_set: set):
-    """Row dict -> (geom_type, rings_xs, rings_ys) with the xs/ys
-    single-ring fallback (shared by writer and appender)."""
-    if d.get("rings_xs") is not None:
-        return d.get("geom_type"), d["rings_xs"], d["rings_ys"]
-    if "xs" in cols_set and d.get("xs") is not None:
-        return d.get("geom_type") or "Polygon", [d["xs"]], [d["ys"]]
-    return None, None, None
-
-
 def write_shapefile(df: DataFrame, path: str,
                     encoding: str = "utf-8", epsg: int = 4326) -> None:
     """Write ``layer.shp`` / ``.shx`` / ``.dbf`` (+ ``.prj`` / ``.cpg``
     sidecars: CRS WKT and the dbf codepage — the reference writes CRS
-    with every collection) from a ring-model DataFrame, streaming rows
-    through ``toLocalIterator``.
+    with every collection) from a ring-model DataFrame, encoding
+    ``drivers.feature_rows``.
 
     THROUGHPUT CEILING: a .shp is one file, so encoding is inherently
     driver-serial (~single-core; the reference writes through one GDAL
@@ -315,45 +305,39 @@ def write_shapefile(df: DataFrame, path: str,
     CW, holes CCW) so GDAL/fiona readers classify shells correctly.
     """
     base, _ = os.path.splitext(path)
-    props = [f for f in df.schema.fields
-             if f.name not in RING_COLS and f.name != "fid"]
+    props, rows = feature_rows(df)
     # dbf descriptors: strings C:80, ints N:18, floats N:20.6, bool L
     descs = []
-    for f in props:
-        t = f.dataType.simpleString()
+    for c, t in props:
         if t in ("bigint", "long", "int", "smallint"):
-            descs.append((f.name[:10], "N", 18, 0))
+            descs.append((c[:10], "N", 18, 0))
         elif t in ("double", "float"):
-            descs.append((f.name[:10], "N", 20, 6))
+            descs.append((c[:10], "N", 20, 6))
         elif t == "boolean":
-            descs.append((f.name[:10], "L", 1, 0))
+            descs.append((c[:10], "L", 1, 0))
         elif t == "date":
-            descs.append((f.name[:10], "D", 8, 0))
+            descs.append((c[:10], "D", 8, 0))
         else:
-            descs.append((f.name[:10], "C", 80, 0))
+            descs.append((c[:10], "C", 80, 0))
     rec_size = 1 + sum(d[2] for d in descs)
-    cols_set = set(df.columns)
 
     shp_records = []
     dbf_records = []
     gxmin = gymin = np.inf
     gxmax = gymax = -np.inf
     shape_type = SHP_NULL
-    for row in df.toLocalIterator():
-        d = row.asDict(recursive=True)
-        gt, rxs, rys = _row_geometry(d, cols_set)
-        body = _encode_record(gt, rxs, rys)
+    for d in rows:
+        body = _encode_record(d.get("geom_type"), d.get("rings_xs"),
+                              d.get("rings_ys"))
         st = struct.unpack("<i", body[:4])[0]
         if st != SHP_NULL:
             shape_type = st
-            allx = [x for r in rxs for x in r]
-            ally = [y for r in rys for y in r]
-            gxmin = min(gxmin, *allx); gymin = min(gymin, *ally)
-            gxmax = max(gxmax, *allx); gymax = max(gymax, *ally)
+            gxmin, gymin = min(gxmin, d["xmin"]), min(gymin, d["ymin"])
+            gxmax, gymax = max(gxmax, d["xmax"]), max(gymax, d["ymax"])
         shp_records.append(body)
         rec = b" "
-        for (name, ftype, flen, fdec), f in zip(descs, props):
-            rec += _dbf_value_bytes(d.get(f.name), name, ftype, flen,
+        for (name, ftype, flen, fdec), (c, _t) in zip(descs, props):
+            rec += _dbf_value_bytes(d.get(c), name, ftype, flen,
                                     fdec, encoding)
         dbf_records.append(rec)
 
@@ -445,7 +429,7 @@ def append_shapefile(df: DataFrame, path: str,
     if dbf and dbf[-1] == 0x1A:                 # strip the terminator
         del dbf[-1]
 
-    cols_set = set(df.columns)
+    _props, rows = feature_rows(df)
     new_shp = bytearray()
     new_shx = bytearray()
     new_dbf = bytearray()
@@ -453,10 +437,9 @@ def append_shapefile(df: DataFrame, path: str,
     rec_no = n_existing
     n_new = 0
     base_existing = _BASE_OF.get(shape_type, shape_type)
-    for row in df.toLocalIterator():
-        d = row.asDict(recursive=True)
-        gt, rxs, rys = _row_geometry(d, cols_set)
-        body = _encode_record(gt, rxs, rys)
+    for d in rows:
+        body = _encode_record(d.get("geom_type"), d.get("rings_xs"),
+                              d.get("rings_ys"))
         st = struct.unpack("<i", body[:4])[0]
         if st != SHP_NULL:
             if shape_type == SHP_NULL:
@@ -466,10 +449,8 @@ def append_shapefile(df: DataFrame, path: str,
                 raise DriverError(
                     f"append geometry type {st} incompatible with "
                     f"existing shape type {shape_type}")
-            allx = [x for r in rxs for x in r]
-            ally = [y for r in rys for y in r]
-            gxmin = min(gxmin, *allx); gymin = min(gymin, *ally)
-            gxmax = max(gxmax, *allx); gymax = max(gymax, *ally)
+            gxmin, gymin = min(gxmin, d["xmin"]), min(gymin, d["ymin"])
+            gxmax, gymax = max(gxmax, d["xmax"]), max(gymax, d["ymax"])
         rec_no += 1
         n_new += 1
         new_shp += struct.pack(">2i", rec_no, len(body) // 2) + body
@@ -492,7 +473,5 @@ def append_shapefile(df: DataFrame, path: str,
     dbf[4:8] = struct.pack("<i", n_rec_old + n_new)
     dbf += new_dbf + b"\x1a"
     for suffix, buf in ((".shp", shp), (".shx", shx), (".dbf", dbf)):
-        tmp = base + suffix + ".tmp"
-        with open(tmp, "wb") as fh:
+        with atomic_file(base + suffix) as tmp, open(tmp, "wb") as fh:
             fh.write(buf)
-        os.replace(tmp, base + suffix)

@@ -13,9 +13,9 @@ codec (`fiona_spark/wkb.py`), so round trips are bit-exact.
 
 Read path: layer rows fetch on the driver (one SQLite file has no
 splittable framing), geometry DECODE runs distributed via one
-``mapInPandas`` over the blob column — the r4 single-file-format
-convention (see README module notes).  Writer/appender stream
-``toLocalIterator``.
+``mapInArrow`` over the blob column — the r4 single-file-format
+convention (see README module notes).  Writer/appender encode
+``drivers.feature_rows``.
 
 Modes: r / w / a ("raw", matching the reference row).
 
@@ -31,8 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..errors import DriverError
-from ..schema import RING_COLS, with_ring_columns
-from .drivers import ring_schema
+from ..schema import RINGS_STRUCT, with_ring_columns
+from .drivers import feature_rows, first_geom_type, ring_schema
 
 _OGR_GEOM_CODE = {"Point": 1, "LineString": 2, "Polygon": 3,
                   "MultiPoint": 4, "MultiLineString": 5,
@@ -90,13 +90,27 @@ def layer_frame(spark, con, layer: str, cur, geom_col: str,
     """One SQLite feature table (rows of ``cur``, fetched on the driver)
     as a ring-model frame, for the SQLite and GeoPackage readers;
     ``to_wkb`` maps a ``geom_col`` blob to WKB (``None``: EMPTY) in one
-    distributed ``mapInPandas`` decode.  A column NULL in every row
-    takes its declared affinity (``PRAGMA table_info``)."""
-    pdf = pd.DataFrame(cur.fetchall(), columns=[d[0] for d in cur.description])
-    pdf[geom_col] = pdf[geom_col].map(
-        lambda b: bytes(b) if b is not None else None)
+    distributed ``mapInArrow`` decode that passes the other columns
+    through untouched.  A column of INTEGER affinity
+    (``PRAGMA table_info``) reads as bigint with its exact values, NULLs
+    or not, and raises on a value that is not an integer; a column NULL
+    in every row takes its declared affinity."""
+    names = [d[0] for d in cur.description]
     decl = {r[1]: r[2] for r in con.execute(f'PRAGMA table_info("{layer}")')}
     decl[geom_col] = "BLOB"
+    data = cur.fetchall()
+    pdf = pd.DataFrame(data, columns=names)
+    for i, c in enumerate(names):
+        if isinstance(_affinity(decl.get(c) or ""), T.LongType):
+            vals = [r[i] for r in data]
+            bad = [v for v in vals if v is not None
+                   and not isinstance(v, int)]
+            if bad:
+                raise DriverError(f"{layer}.{c}: INTEGER column holds "
+                                  f"the non-integer {bad[0]!r}")
+            pdf[c] = pd.array(vals, dtype="Int64")
+    pdf[geom_col] = pdf[geom_col].map(
+        lambda b: bytes(b) if b is not None else None)
     src = spark.createDataFrame(pdf)
     src = src.withColumns({
         f.name: F.lit(None).cast(_affinity(decl.get(f.name) or ""))
@@ -104,24 +118,27 @@ def layer_frame(spark, con, layer: str, cur, geom_col: str,
     out_schema = ring_schema({f.name: f.dataType for f in src.schema.fields
                               if f.name != geom_col})
 
-    def run(batches):
-        from .. import model, wkb
-        for b in batches:
-            recs = []
-            for d in b.to_dict("records"):
-                blob = d.pop(geom_col)
-                wkb_bytes = None if blob is None else to_wkb(blob)
-                if wkb_bytes is None:
-                    d.update(geom_type=None, rings_xs=None,
-                             rings_ys=None)
-                else:
-                    t, rxs, rys = model.rings_from_geometry(
-                        wkb.decode(wkb_bytes))
-                    d.update(geom_type=t, rings_xs=rxs, rings_ys=rys)
-                recs.append(d)
-            yield pd.DataFrame(recs)
+    keep = [n for n in out_schema.names if n not in RINGS_STRUCT.names]
 
-    return with_ring_columns(src.mapInPandas(run, out_schema))
+    def run(batches):
+        import pyarrow as pa
+
+        from .. import model, wkb
+        ring_t = pa.list_(pa.list_(pa.float64()))
+        for b in batches:
+            geo = []
+            for blob in b.column(geom_col).to_pylist():
+                wkb_bytes = None if blob is None else to_wkb(blob)
+                geo.append((None, None, None) if wkb_bytes is None else
+                           model.rings_from_geometry(wkb.decode(wkb_bytes)))
+            t, rxs, rys = (list(c) for c in zip(*geo)) if geo \
+                else ([], [], [])
+            yield pa.RecordBatch.from_arrays(
+                [b.column(n) for n in keep]
+                + [pa.array(t, pa.string()), pa.array(rxs, ring_t),
+                   pa.array(rys, ring_t)], names=out_schema.names)
+
+    return with_ring_columns(src.mapInArrow(run, out_schema))
 
 
 def write_sqlite(df: DataFrame, path: str, layer: str = "features",
@@ -130,11 +147,8 @@ def write_sqlite(df: DataFrame, path: str, layer: str = "features",
     layer (property columns must already exist)."""
     from .. import model, wkb
 
-    props = [f for f in df.schema.fields
-             if f.name not in RING_COLS and f.name != "fid"]
-    gt_rows = (df.select("geom_type").filter(
-        F.col("geom_type").isNotNull()).limit(1).collect())
-    gcode = _OGR_GEOM_CODE.get(gt_rows[0][0], 0) if gt_rows else 0
+    gcode = _OGR_GEOM_CODE.get(first_geom_type(df), 0)
+    props, rows = feature_rows(df)
     con = sqlite3.connect(path)
     try:
         if mode == "w":
@@ -142,10 +156,8 @@ def write_sqlite(df: DataFrame, path: str, layer: str = "features",
                 f_table_name VARCHAR, f_geometry_column VARCHAR,
                 geometry_type INTEGER, coord_dimension INTEGER,
                 srid INTEGER, geometry_format VARCHAR)""")
-            cols = ", ".join(
-                f'"{f.name}" '
-                f'{_SQLITE_T.get(f.dataType.simpleString(), "VARCHAR")}'
-                for f in props)
+            cols = ", ".join(f'"{c}" {_SQLITE_T.get(t, "VARCHAR")}'
+                             for c, t in props)
             con.execute(f'DROP TABLE IF EXISTS "{layer}"')
             con.execute(
                 f'CREATE TABLE "{layer}" (OGC_FID INTEGER PRIMARY KEY '
@@ -165,23 +177,14 @@ def write_sqlite(df: DataFrame, path: str, layer: str = "features",
                                   f"does not exist in {path!r}")
         else:
             raise DriverError(f"unsupported mode {mode!r}")
-        names = [f.name for f in props]
+        names = [c for c, _t in props]
         ph = ", ".join(["?"] * (len(names) + 1))
         collist = ", ".join(["GEOMETRY"] + [f'"{n}"' for n in names])
         insert = f'INSERT INTO "{layer}" ({collist}) VALUES ({ph})'
-        cols_set = set(df.columns)
-        for row in df.toLocalIterator():
-            d = row.asDict(recursive=True)
-            if d.get("rings_xs") is not None:
-                g = model.geometry_from_rings(
-                    d.get("geom_type") or "Polygon",
-                    d["rings_xs"], d["rings_ys"])
-            elif "xs" in cols_set and d.get("xs") is not None:
-                g = model.geometry_from_rings(
-                    d.get("geom_type") or "Polygon",
-                    [d["xs"]], [d["ys"]])
-            else:
-                g = None
+        for d in rows:
+            g = model.geometry_from_rings(d.get("geom_type") or "Polygon",
+                                          d.get("rings_xs"),
+                                          d.get("rings_ys"))
             blob = wkb.encode(dict(g)) if g is not None else None
             con.execute(insert, [blob] + [d.get(n) for n in names])
         con.commit()

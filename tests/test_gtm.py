@@ -96,6 +96,21 @@ def test_gtm_mixed_frame_and_append(spark, tmp_path):
     assert struct.unpack_from("<4f", data, 47) == (0.0, 9.0, 0.0, 9.0)
 
 
+def test_gtm_header_bounds_cover_every_part(spark, tmp_path):
+    df = spark.createDataFrame(
+        [("MultiLineString", [[0.0, 1.0], [10.0, 11.0]],
+          [[0.0, 1.0], [20.0, 21.0]], "two")],
+        schema="geom_type string, rings_xs array<array<double>>, "
+               "rings_ys array<array<double>>, name string")
+    p = str(tmp_path / "parts.gtm")
+    write_gtm(df, p)
+    with open(p, "rb") as fh:
+        data = fh.read()
+    # (minlon, maxlon, minlat, maxlat) over both parts
+    assert struct.unpack_from("<4f", data, 47) == (0.0, 11.0, 0.0, 21.0)
+    assert len(read_gtm(spark, p, "tracks").collect()) == 2
+
+
 def test_gtm_reader_against_independent_bytes(spark, tmp_path):
     """Author the file with raw struct packing (no engine writer)."""
     name = b"peak      "

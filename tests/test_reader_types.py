@@ -14,6 +14,7 @@ import struct
 import pytest
 from pyspark.sql import types as T
 
+from fiona_spark.errors import DriverError
 from fiona_spark.schema import RINGS_STRUCT, from_spark_schema
 from fiona_spark.sources import (drivers, geopackage, gml, gpx, kml,
                                  mapinfo, ogr_gmt, shapefile, sqlite_db)
@@ -219,6 +220,31 @@ def test_sqlite_all_null_columns_take_their_affinity(spark, tmp_path, fmt):
     assert back.first()["rings_xs"] == [[1.0]]
 
 
+@pytest.mark.parametrize("fmt", ["sqlite", "geopackage"])
+def test_sqlite_integer_column_reads_exact(spark, tmp_path, fmt):
+    """An INTEGER column holding a NULL reads as bigint, past 2^53 too;
+    a non-integer value in it raises, naming the column."""
+    df = spark.createDataFrame(
+        [("Point", [[1.0]], [[2.0]], v) for v in (1, None, 2**53 + 1)],
+        "geom_type string, rings_xs array<array<double>>, "
+        "rings_ys array<array<double>>, n bigint")
+    p = str(tmp_path / f"t.{fmt}")
+    if fmt == "sqlite":
+        sqlite_db.write_sqlite(df, p, "layer")
+        read, fid = sqlite_db.read_sqlite, "OGC_FID"
+    else:
+        geopackage.write_geopackage(df, p, "layer")
+        read, fid = geopackage.read_geopackage, "fid"
+    back = read(spark, p, "layer")
+    assert back.schema["n"].dataType == L
+    assert [r["n"] for r in back.orderBy(fid).collect()] == \
+        [1, None, 2**53 + 1]
+    with sqlite3.connect(p) as con:
+        con.execute("UPDATE layer SET n = 1.5 WHERE n IS NULL")
+    with pytest.raises(DriverError, match="layer.n"):
+        read(spark, p, "layer")
+
+
 def test_sqlite_affinity_of_hand_made_table(spark, tmp_path):
     """A table with no row holding a value (geometry included)."""
     p = str(tmp_path / "hand.sqlite")
@@ -241,6 +267,11 @@ def test_rows_frame_never_infers(spark):
     assert_typed(df, {"v": D})
     with pytest.raises(ValueError, match="convert"):
         drivers.rows_frame(spark, [{"fid": 0, "v": "1.5"}], fields)
+    # Arrow alone would truncate 1.5 to 1 in an integer column
+    with pytest.raises(DriverError, match="'n'"):
+        drivers.rows_frame(spark, [{"fid": 0, "n": 1.5}], {"fid": L, "n": L})
+    assert drivers.rows_frame(spark, [{"fid": 0, "n": 2.0}],
+                              {"fid": L, "n": L}).first()["n"] == 2
 
 
 def test_rows_frame_naive_datetime_is_session_local(spark):

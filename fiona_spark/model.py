@@ -14,6 +14,9 @@ boundary by design; bulk paths use the columnar sources instead.
 
 from __future__ import annotations
 
+import base64
+import datetime
+import decimal
 import json
 from collections.abc import Mapping
 
@@ -162,11 +165,19 @@ class Feature(Object):
 
 
 class ObjectEncoder(json.JSONEncoder):
-    """JSON encoder aware of the model objects and numpy scalars."""
+    """JSON encoder aware of the model objects, numpy scalars and the
+    Python values of Spark's date, timestamp, decimal and binary
+    columns (ISO 8601 text, exact decimal text, base64)."""
 
     def default(self, o):
         if isinstance(o, Object):
             return dict(o)
+        if isinstance(o, (datetime.date, datetime.datetime)):
+            return o.isoformat()
+        if isinstance(o, decimal.Decimal):
+            return str(o)
+        if isinstance(o, (bytes, bytearray)):
+            return base64.b64encode(o).decode("ascii")
         if isinstance(o, (np.integer,)):
             return int(o)
         if isinstance(o, (np.floating,)):

@@ -244,16 +244,17 @@ def feature_rows(df: DataFrame):
 
     The frame enters through ``schema.with_rings`` (a frame with only
     ``xs``/``ys`` is a one-ring Polygon) and, when it has ring columns,
-    through ``with_ring_columns``, so ``xs``/``ys`` and ``xmin..ymax``
-    are always those of ``rings_xs``/``rings_ys``.  ``props`` lists the
-    property columns as ``(name, type)`` pairs (``DataFrame.dtypes``
-    form): every column but the ring columns and ``fid``.  ``rows``
-    yields one ``Row.asDict(recursive=True)`` per feature, streamed to
-    the driver a partition at a time (single-file formats encode
-    driver-serially; bulk exports belong in parquet)."""
+    through ``with_ring_columns``, so ``xmin..ymax`` are always those
+    of ``rings_xs``/``rings_ys``; ``xs``/``ys`` (a copy of ring 0) are
+    not streamed.  ``props`` lists the property columns as
+    ``(name, type)`` pairs (``DataFrame.dtypes`` form): every column but
+    the ring columns and ``fid``.  ``rows`` yields one
+    ``Row.asDict(recursive=True)`` per feature, streamed to the driver a
+    partition at a time (single-file formats encode driver-serially;
+    bulk exports belong in parquet)."""
     df = with_rings(df)
     if "rings_xs" in df.columns:
-        df = with_ring_columns(df)
+        df = with_ring_columns(df).drop("xs", "ys")
     props = [(c, t) for c, t in df.dtypes
              if c not in RING_COLS and c != "fid"]
 

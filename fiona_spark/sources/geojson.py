@@ -20,7 +20,7 @@ writers encode each feature exactly from the ring model.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..schema import RING_COLS, with_ring_columns, with_rings
 
@@ -34,25 +34,31 @@ def _feature_lines(df: DataFrame, id_col: str) -> DataFrame:
     ``xs``/``ys`` is a one-ring Polygon), and the ring model
     (``geom_type``/``rings_xs``/``rings_ys``) serializes EXACTLY —
     per-row geometry type, holes, MultiPolygon part nesting rebuilt by
-    ``model.geometry_from_rings`` — via one distributed mapInPandas
-    (Arrow-batched; GeoJSON text export is a slow-path format anyway).
+    ``model.geometry_from_rings`` — via one distributed mapInArrow.
+    Properties leave Arrow as Python values (``RecordBatch.to_pylist``):
+    a NULL stays ``null`` and a bigint stays an exact integer.
     ``id_col`` (else ``fid``) is the feature id when the frame has it.
     """
-    df = with_rings(df)
+    # only the columns a feature carries cross into Python
+    df = with_rings(df).drop("xs", "ys", "xmin", "ymin", "xmax", "ymax")
     cols = list(df.columns)
     idc = id_col if id_col in cols else ("fid" if "fid" in cols else None)
+    # Arrow hands a map value over as (key, value) pairs
+    maps = [f.name for f in df.schema.fields
+            if isinstance(f.dataType, T.MapType)]
 
     def encode(batches):
         import json as _json
 
-        import pandas as pd
+        import pyarrow as pa
 
         from ..model import ObjectEncoder, geometry_from_rings
-        for pdf in batches:
+        for batch in batches:
             lines = []
-            # to_dict("records"), never itertuples: namedtuples mangle
-            # non-identifier property names positionally
-            for rec in pdf.to_dict("records"):
+            for rec in batch.to_pylist():
+                for k in maps:
+                    if rec[k] is not None:
+                        rec[k] = dict(rec[k])
                 geometry = geometry_from_rings(
                     rec.get("geom_type") or "Polygon",
                     rec.get("rings_xs"), rec.get("rings_ys"))
@@ -62,9 +68,10 @@ def _feature_lines(df: DataFrame, id_col: str) -> DataFrame:
                         "id": rec.get(idc) if idc else None,
                         "geometry": geometry, "properties": props}
                 lines.append(_json.dumps(feat, cls=ObjectEncoder))
-            yield pd.DataFrame({"value": lines})
+            yield pa.RecordBatch.from_pydict(
+                {"value": pa.array(lines, pa.string())})
 
-    return df.mapInPandas(encode, "value string")
+    return df.mapInArrow(encode, "value string")
 
 
 def write_feature_seq(df: DataFrame, path: str, id_col: str = "id",
@@ -149,8 +156,6 @@ def read_collection(spark, path: str) -> DataFrame:
 
 
 def _features_to_rows(js: DataFrame) -> DataFrame:
-    from pyspark.sql import types as T
-
     # The JSON-inferred type of geometry.coordinates depends on the
     # geometry kind actually present (Point: array<double>, LineString:
     # 2-deep, Polygon: 3-deep, MultiPolygon: 4-deep); a CASE across
@@ -178,7 +183,6 @@ def _features_to_rows(js: DataFrame) -> DataFrame:
                     "x -> array(CAST(x AS DOUBLE)))")
         ry = F.expr("transform(slice(geometry.coordinates, 2, 1), "
                     "y -> array(CAST(y AS DOUBLE)))")
-    from pyspark.sql import types as T2
     names = {f.name: f.dataType for f in js.schema.fields}
     sel = [F.col("id") if "id" in names
            else F.lit(None).cast("string").alias("id"),
@@ -186,7 +190,7 @@ def _features_to_rows(js: DataFrame) -> DataFrame:
            rx.alias("rings_xs"), ry.alias("rings_ys")]
     # features without a properties object (reference rmnp.geojson) or
     # with null-typed properties have nothing to expand
-    if isinstance(names.get("properties"), T2.StructType):
+    if isinstance(names.get("properties"), T.StructType):
         sel.append(F.col("properties.*"))
     out = js.select(*sel)
     return with_ring_columns(out)

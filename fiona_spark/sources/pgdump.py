@@ -137,9 +137,9 @@ def write_pgdump(df: DataFrame, path: str, layer: str | None = None,
     the file stem.
     """
     layer = layer or os.path.splitext(os.path.basename(path))[0]
-    frame = with_rings(df)
+    frame = with_rings(df)   # once: feature_rows passes it through
     has_geom = "rings_xs" in frame.columns and "geom_type" in frame.columns
-    props, rows = feature_rows(df)
+    props, rows = feature_rows(frame)
     pg_cols = [(name, _pg_type(t)) for name, t in props]
 
     # layer geometry type: the distinct geom_type values, or GEOMETRY

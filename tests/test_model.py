@@ -55,6 +55,22 @@ def test_feature_from_dict_and_encoder():
     assert back["f"]["properties"]["v"] == 3 and back["n"] == 4
 
 
+def test_object_encoder_spark_column_values():
+    """The Python values of Spark date, timestamp, decimal and binary
+    columns encode as ISO 8601, exact decimal text and base64."""
+    import datetime
+    import decimal
+
+    from fiona_spark import model
+    utc = datetime.timezone.utc
+    vals = [datetime.date(2020, 1, 2),
+            datetime.datetime(2020, 1, 2, 3, 4, 5, tzinfo=utc),
+            decimal.Decimal("12345678901234567890.50"), b"ab"]
+    assert json.loads(json.dumps(vals, cls=model.ObjectEncoder)) == [
+        "2020-01-02", "2020-01-02T03:04:05+00:00",
+        "12345678901234567890.50", "YWI="]
+
+
 def test_decode_object_shapes():
     assert isinstance(model.decode_object(
         {"type": "Feature", "properties": {}}), model.Feature)

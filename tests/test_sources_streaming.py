@@ -76,6 +76,36 @@ def test_geojson_geometry_valid(spark, zones, tmp_path):
     assert feat["properties"]["NAME"]
 
 
+def test_xs_only_frame_writes_dates_and_exact_bigints(spark, tmp_path):
+    # an xs/ys-only frame (the ZONES_SCHEMA shape) with a date column, a
+    # bigint column holding a NULL and a value past 2^53, and a map
+    import datetime
+    big = 2 ** 53 + 1
+    frame = spark.createDataFrame(
+        [("a", [0.0, 1.0, 0.0], [0.0, 0.0, 1.0], datetime.date(2020, 1, 2),
+          1, {"k": 1}),
+         ("b", [2.0, 3.0, 2.0], [0.0, 0.0, 1.0], None, None, None),
+         ("c", [4.0, 5.0, 4.0], [0.0, 0.0, 1.0], None, big, None)],
+        "id string, xs array<double>, ys array<double>, d date, n bigint, "
+        "m map<string, int>")
+    path = str(tmp_path / "typed")
+    geojson.write_feature_seq(frame, path)
+    lines = [ln for f in sorted(glob.glob(f"{path}/part-*"))
+             for ln in open(f).read().splitlines() if ln]
+    def strict(line):   # a bare NaN/Infinity token is not JSON
+        return json.loads(line, parse_constant=lambda c: pytest.fail(c))
+
+    feats = {f["id"]: f for f in map(strict, lines)}
+    assert {k: f["properties"] for k, f in feats.items()} == {
+        "a": {"d": "2020-01-02", "n": 1, "m": {"k": 1}},
+        "b": {"d": None, "n": None, "m": None},
+        "c": {"d": None, "n": big, "m": None}}
+    assert type(feats["a"]["properties"]["n"]) is int
+    assert feats["a"]["geometry"] == {
+        "type": "Polygon", "coordinates": [[[0.0, 0.0], [1.0, 0.0],
+                                            [0.0, 1.0]]]}
+
+
 # ---------------------------------------------------------------------------
 # catalog
 # ---------------------------------------------------------------------------

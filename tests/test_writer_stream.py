@@ -96,9 +96,8 @@ def test_null_geometry_row_keeps_format_outcome(spark, tmp_path, name):
 @pytest.mark.parametrize("name", sorted(set(WRITERS) - NOT_ATOMIC))
 def test_failed_write_leaves_no_file(spark, tmp_path, name):
     # the second row fails inside the stream, after the first is encoded
-    frame = spark.createDataFrame(
-        [(*POINT, "a"), ("Point", [[3.0]], [[4.0]], "b")], RINGS)
-    assert frame.rdd.getNumPartitions() > 1
+    frame = spark.createDataFrame(spark.sparkContext.parallelize(
+        [(*POINT, "a"), ("Point", [[3.0]], [[4.0]], "b")], 2), RINGS)
     failing = frame.withColumn("name", F.when(
         F.col("name") == "b", F.raise_error(F.lit("planted failure")))
         .otherwise(F.col("name")))
